@@ -1,0 +1,1 @@
+"""Benchmark of the engine: three workloads, end-to-end and per-layer metrics (see README.md)."""
