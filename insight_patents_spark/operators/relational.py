@@ -2371,14 +2371,6 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# Fixed-width layout for the synthesized customer export:
-# custkey 10 chars zero-padded | name 18 left-padded-with-spaces |
-# nation 3 zero-padded | acctbal 12 (cents, zero-padded, sign as
-# leading 0/1 flag digit) | segment 10 space-right-padded.
-_FW_SPEC = (("custkey", 1, 10), ("name", 11, 18), ("nation", 29, 3),
-            ("balflag", 32, 1), ("balcents", 33, 11), ("segment", 44, 10))
-
-
 @query(
     "scan_text_fixed_width",
     # Fixed-width (COBOL-copybook-style) ingest: rows serialize to a

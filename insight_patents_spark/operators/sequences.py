@@ -1892,8 +1892,6 @@ def time_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Channel bit positions (alphabetical over the non-conversion types).
-_SHAP_CHANNELS = ("click", "error", "signup", "view")
 # 12*w(|S|) for |S| = 0..3 with n = 4 channels: w = |S|!(n-1-|S|)!/n!
 # = [1/4, 1/12, 1/12, 1/4] — scaled by 12 they are EXACT integers, so
 # the whole Shapley numerator stays int64.

@@ -5,10 +5,10 @@ Scale design:
 - All pairwise work is blocked by `label` (the natural IVF-style cell:
   at 100 TB you'd cluster into cells and search within cells) — never an
   unblocked cross join.
-- Dot products are sequential index-order folds over doubles
-  (`aggregate(zip_with(...))`), which matches DuckDB's
-  `list_dot_product(DOUBLE[], DOUBLE[])` accumulation bit-for-bit
-  (probe-verified), so cosine scores hash-match without rounding slack.
+- Dot products are sequential index-order folds over doubles — on the
+  JVM `aggregate(zip_with(...))` (`_dot`), in NumPy `_fold_dots` — which
+  match DuckDB's `list_dot_product(DOUBLE[], DOUBLE[])` accumulation
+  bit-for-bit, so cosine scores hash-match without rounding slack.
 - Brute-force within-block top-k is the exact baseline; the LSH/IVF
   scale path reuses the same verify stage with a coarser blocking key.
 """
@@ -19,6 +19,7 @@ import os
 
 from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,143 +83,141 @@ def _cent_array(
     return cents.agg(F.collect_list(F.struct(*fields)).alias("ca"))
 
 
+def _rank_cmp(mode: str) -> str:
+    """The one ranking comparator of the vector family: (round(score, 9)
+    DESC for ``dot_desc`` | ASC for ``d2_asc``, cid ASC), as an
+    array_sort lambda over struct<score, cid> elements. Comparator
+    doubles compare with IEEE semantics (-0.0 == 0.0), matching the
+    window sort's normalized keys."""
+    flip = {"dot_desc": ">", "d2_asc": "<"}.get(mode)
+    if flip is None:  # pragma: no cover - internal contract
+        raise ValueError(mode)
+    l, r = "round(l.score, 9)", "round(r.score, 9)"
+    return (
+        f"(l, r) -> CASE WHEN {l} {flip} {r} THEN -1 "
+        f"WHEN {l} <> {r} THEN 1 "
+        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 ELSE 0 END"
+    )
+
+
+def _topk_expr(arr_sql: str, k: int, mode: str) -> F.Column:
+    """The first ``k`` elements of the struct<score, cid> array
+    ``arr_sql`` under `_rank_cmp` order."""
+    return F.expr(f"slice(array_sort({arr_sql}, {_rank_cmp(mode)}), 1, {k})")
+
+
 def _inrow_topk(v_col: str, k: int, mode: str) -> F.Column:
     """Top-``k`` centroids of the broadcast ``ca`` array for one row's
     vector ``v_col``: array<struct<score, cid>>, ordered exactly like the
-    window form it replaces — (round(score, 9) DESC|ASC, cid ASC) via an
-    array_sort comparator, so the score fold runs ONCE per candidate
-    (the d2 identity additionally hoists v.v to a ``vv`` column and reads
-    the precomputed c.cc — same expression tree as the per-pair form,
-    hence bit-identical doubles). Comparator doubles compare with IEEE
-    semantics (-0.0 == 0.0), matching the window sort's normalized keys."""
+    window form it replaces (`_rank_cmp`), so the score fold runs ONCE
+    per candidate (the d2 identity additionally hoists v.v to a ``vv``
+    column and reads the precomputed c.cc — same expression tree as the
+    per-pair form, hence bit-identical doubles)."""
     dot = (
         f"aggregate(zip_with({v_col}, c.cv, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
     )
-    if mode == "dot_desc":
-        score, flip = dot, ">"
-    elif mode == "d2_asc":
-        score, flip = f"(vv - 2 * {dot} + c.cc)", "<"
-    else:  # pragma: no cover - internal contract
-        raise ValueError(mode)
-    return F.expr(
-        f"slice(array_sort(transform(ca, c -> "
-        f"struct({score} AS score, c.cid AS cid)), "
-        f"(l, r) -> CASE "
-        f"WHEN round(l.score, 9) {flip} round(r.score, 9) THEN -1 "
-        "WHEN round(l.score, 9) <> round(r.score, 9) THEN 1 "
-        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 "
-        f"ELSE 0 END), 1, {k})"
+    score = f"(vv - 2 * {dot} + c.cc)" if mode == "d2_asc" else dot
+    return _topk_expr(
+        f"transform(ca, c -> struct({score} AS score, c.cid AS cid))", k, mode
     )
 
 
 # Measured r4 (sf0.1, interleaved A/B on the dedup_embed_cosine pair
 # workload, 2.5M pairs): warm interpreted-HOF fold 0.9-1.2 s vs an
-# Arrow-batched numpy cumsum pandas_udf 2.2-5.2 s — the Arrow transfer
-# of BOTH 64-double vectors per PAIR row is O(pairs x dim) and dominates,
-# so pairwise scoring stays on the JVM-side `_dot` fold. The numpy path
+# Arrow-batched NumPy pandas_udf 2.2-5.2 s — the Arrow transfer of BOTH
+# 64-double vectors per PAIR row is O(pairs x dim) and dominates, so
+# pairwise scoring stays on the JVM-side `_dot` fold. NumPy (`_fold_dots`)
 # wins only where transfer is O(N x dim), i.e. the per-vector bucket
-# assignment below (`_bucket_assign_udf`), and (r14) the broadcast-
-# candidate scoring below (`_np_cand_scores`), where each vector crosses
-# the boundary ONCE and is scored against the whole candidate set in
-# one vectorized pass — the interpreted fold costs ~70 us per 64-dim
-# candidate (measured via cpu_probe: vec_cell_kmeans 37 s CPU,
-# vec_ann_nsw ~35 s CPU, dominated by fold counts), vs ~microseconds
-# vectorized.
+# assignments and (r14) the collected-candidate shortlists below, where
+# each vector crosses the boundary ONCE and is scored against the whole
+# candidate set in one vectorized pass — the interpreted fold costs
+# ~70 us per 64-dim candidate (measured via cpu_probe: vec_cell_kmeans
+# 37 s CPU, vec_ann_nsw ~35 s CPU, dominated by fold counts), vs
+# ~microseconds vectorized.
+
+# A candidate whose RAW score is within this of the raw k-th best may
+# enter the 9dp-ROUNDED top-k; nothing further away can. Load-bearing:
+# it must stay >= 2 x 5e-10 (the |round(x, 9) - x| bound), see
+# `_band_shortlist`.
+_SHORTLIST_BAND = 2e-9
+# Score-matrix cells (float64) one `_band_shortlist` chunk may hold:
+# bounds a Python worker's temporaries at a few MB whatever the Arrow
+# batch size or candidate-block width.
+_SHORTLIST_CELLS = 1 << 18
 
 
-def _np_cand_shortlist(spark: SparkSession, cents: list, mode: str, k: int):
-    """Arrow-batched top-k SHORTLIST of each row's vector against a
-    bounded COLLECTED candidate set: returns a
-    pandas_udf(array<struct<score, cid>>) emitting, per row, every
-    candidate whose RAW score is within 2e-9 of the raw k-th best —
-    a provable superset of the 9dp-ROUNDED top-k (|round(x,9) - x| <=
-    5e-10, so no candidate outside the band can enter the rounded
-    order's top-k), cid-ascending. The exact (round(score, 9), cid)
-    ranking happens on the JVM over this tiny list (`_np_topk_expr`);
-    a full interpreted-comparator sort of ALL candidates was measured
-    at ~12 s CPU for 80 x 2000 candidates — the shortlist keeps the
-    comparator work O(k).
+def _fold_dots(X, C, rowwise: bool = False):
+    """Fold-order-exact dot products in NumPy: ``(n, D) x (m, D) -> (n, m)``
+    (``rowwise``: two ``(n, D)`` arrays -> the ``(n,)`` dots of matching
+    rows, e.g. self-dots).
 
-    Ships the same bytes as the former one-row-broadcast candidate
-    array (`_cent_array`) — the memory ceiling is unchanged, the set
-    rides a SparkContext broadcast — and the score folds run vectorized
-    instead of ~70 us/candidate in the interpreted HOF.
+    Bit-exactness proof — the one every NumPy scorer of the vector family
+    relies on. Each output cell starts at 0.0 and adds x_d * c_d for
+    d = 0..D-1 in index order, one vectorized elementwise multiply and
+    one add per dimension. That is, operation for operation, the
+    interpreted ``aggregate(zip_with(x, c, (x, y) -> CAST(x AS DOUBLE) *
+    CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)`` fold (`_dot`) and
+    DuckDB's sequential ``list_dot_product`` over DOUBLE[]: IEEE multiply
+    and add are correctly rounded, so the same operands in the same order
+    give the same bits. float32 inputs are widened to float64 first, which
+    is exact, like the fold's CAST(x AS DOUBLE). No reduction that may
+    reorder the sum (``@``/BLAS, ``np.sum``'s pairwise sum, ``einsum``) is
+    used. Derived scores compose from these dots as the SQL does (the d2
+    identity is ((vv - 2 * dot) + cc)), so they match too; the 9dp
+    rounding and all ordering stay JVM expressions (`_rank_cmp`)."""
+    X = np.asarray(X, dtype=np.float64)
+    C = np.asarray(C, dtype=np.float64)
+    if not rowwise:
+        X, C = X[:, None, :], C[None, :, :]
+    acc = np.zeros(np.broadcast_shapes(X.shape[:-1], C.shape[:-1]))
+    for d in range(X.shape[-1]):
+        acc += X[..., d] * C[..., d]
+    return acc
 
-    Bit-exactness contract (the `_bucket_assign_udf` argument, judged
-    r4, re-verified value-exact on 6000 rows in the r13 ivf A/B): every
-    accumulation below is a SEQUENTIAL loop over the dimension axis of
-    vectorized elementwise ops, so each row's additions happen in the
-    exact index order of the interpreted ``aggregate(zip_with(...))``
-    fold (seed 0.0, acc + x_d*y_d for d = 0..D-1) and of DuckDB's
-    list_dot_product; the d2 identity composes as the identical
-    ((vv - 2*dot) + cc) tree. float32 inputs widen exactly, like the
-    fold's CAST(x AS DOUBLE). No Python float-formatting is ever
-    involved in ordering. ``cents``: list of (cid, vector) rows."""
-    import numpy as np
 
-    C = np.array([list(c[1]) for c in cents], dtype=np.float64)  # (kc, D)
-    cids = np.array([int(c[0]) for c in cents], dtype=np.int64)
-    order = np.argsort(cids, kind="stable")
-    C, cids = C[order], cids[order]  # cid-ascending output for free
-    cc = np.zeros(C.shape[0])
-    for d in range(C.shape[1]):  # sequential self-dot, fold order
-        cc = cc + C[:, d] * C[:, d]
-    bc = spark.sparkContext.broadcast((C, cids, cc))
+def _band_shortlist(X, C, cids, k: int, mode: str, cc=None) -> list:
+    """Per row of ``X``, the candidates of ``C`` (rows cid-ascending, ids
+    ``cids``) whose RAW `_fold_dots` score is within `_SHORTLIST_BAND` of
+    that row's raw k-th best, as a cid-ascending list of
+    {"score", "cid"} dicts. ``mode`` is `_rank_cmp`'s; ``d2_asc`` scores
+    are ((x.x - 2 x.c) + ``cc``) with ``cc`` the candidates' self-dots.
+
+    This is a provable superset of the rounded top-k: rounding is
+    monotone and moves a score by at most 5e-10, so a candidate more
+    than 1e-9 worse than the raw k-th best rounds strictly worse than
+    the k candidates at or above it, and can never enter the
+    (round(score, 9), cid) top-k. The exact ranking then runs on the JVM
+    over this short list (`_topk_expr`), keeping the interpreted
+    comparator work O(k) per row instead of O(candidates) (a full sort
+    of 80 x 2000 candidates measured ~12 s CPU).
+
+    Rows are scored in chunks of at most `_SHORTLIST_CELLS` score cells,
+    so memory is bounded by the candidate-block width, not by the Arrow
+    batch size."""
     want_d2 = mode == "d2_asc"
-    if not want_d2 and mode != "dot_desc":  # pragma: no cover
-        raise ValueError(mode)
-
-    @F.pandas_udf("array<struct<score:double,cid:bigint>>")
-    def shortlist(v: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        Cm, cid_a, ccv = bc.value
-        kc = Cm.shape[0]
-        if not len(v):  # zero-row Arrow batch: keep the 2-D shape math out
-            return pd.Series([], dtype=object)
-        X = _np.array(v.tolist(), dtype=_np.float64)  # (n, D)
-        acc = _np.zeros((X.shape[0], kc))
-        for d in range(Cm.shape[1]):  # sequential fold order per pair
-            acc += X[:, d : d + 1] * Cm[None, :, d]
+    step = max(1, _SHORTLIST_CELLS // max(1, len(C)))
+    out = []
+    for lo in range(0, len(X), step):
+        Xc = np.asarray(X[lo : lo + step], dtype=np.float64)
+        acc = _fold_dots(Xc, C)
         if want_d2:
-            vv = _np.zeros(X.shape[0])
-            for d in range(X.shape[1]):
-                vv = vv + X[:, d] * X[:, d]
-            acc = (vv[:, None] - 2 * acc) + ccv[None, :]
+            acc = (_fold_dots(Xc, Xc, rowwise=True)[:, None] - 2 * acc) + cc[None, :]
         sgn = acc if want_d2 else -acc  # ascending = preferred first
-        if kc > k:
-            kth = _np.partition(sgn, k - 1, axis=1)[:, k - 1]
-            keep = sgn <= kth[:, None] + 2e-9
+        if len(C) > k:
+            kth = np.partition(sgn, k - 1, axis=1)[:, k - 1]
+            keep = sgn <= kth[:, None] + _SHORTLIST_BAND
         else:
-            keep = _np.ones(sgn.shape, dtype=bool)
-        return pd.Series(
+            keep = np.ones(sgn.shape, dtype=bool)
+        out.extend(
             [
-                [
-                    {"score": float(s), "cid": int(c)}
-                    for s, c in zip(acc[i][keep[i]], cid_a[keep[i]])
-                ]
-                for i in range(X.shape[0])
+                {"score": float(s), "cid": int(c)}
+                for s, c in zip(acc[i][keep[i]], cids[keep[i]])
             ]
+            for i in range(len(Xc))
         )
-
-    return shortlist
-
-
-def _np_topk_expr(short_col: str, k: int, mode: str) -> F.Column:
-    """Top-``k`` of a `_np_cand_shortlist` array: sort the shortlist
-    with the EXACT `_inrow_topk` comparator — (round(score, 9)
-    DESC|ASC, cid ASC) — on the JVM and slice k."""
-    flip = "<" if mode == "d2_asc" else ">"
-    return F.expr(
-        f"slice(array_sort({short_col}, "
-        f"(l, r) -> CASE "
-        f"WHEN round(l.score, 9) {flip} round(r.score, 9) THEN -1 "
-        "WHEN round(l.score, 9) <> round(r.score, 9) THEN 1 "
-        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 "
-        f"ELSE 0 END), 1, {k})"
-    )
+    return out
 
 
 def _np_inrow_topk(
@@ -234,15 +233,30 @@ def _np_inrow_topk(
 ) -> DataFrame:
     """`df` + column ``alias`` = top-k array<struct<score, cid>> of the
     candidate table for each row's ``v_col`` — the `_inrow_topk` shape
-    with the score folds vectorized and the candidate field pre-pruned
-    to a provable superset shortlist (see `_np_cand_shortlist`). The
-    candidate collect is the same bounded set the former one-row
-    broadcast shipped (ceiling unchanged; evaluated once here instead
-    of once per downstream broadcast)."""
-    cents = [(r[0], r[1]) for r in cents_df.select(id_col, vec_col).collect()]
-    scorer = _np_cand_shortlist(spark, cents, mode, k)
-    return df.withColumn("_cs", scorer(F.col(v_col))).withColumn(
-        alias, _np_topk_expr("_cs", k, mode)
+    with the score folds vectorized: an Arrow-batched `_band_shortlist`
+    of each row against the COLLECTED candidates, ranked exactly by
+    `_topk_expr` on the JVM. The candidate collect is the same bounded
+    set the former one-row broadcast (`_cent_array`) shipped — the
+    memory ceiling is unchanged, the set rides a SparkContext broadcast,
+    evaluated once here instead of once per downstream broadcast — and
+    the score folds run vectorized instead of ~70 us/candidate in the
+    interpreted HOF."""
+    cents = cents_df.select(id_col, vec_col).collect()
+    C = np.array([list(r[1]) for r in cents], dtype=np.float64)  # (kc, D)
+    cids = np.array([int(r[0]) for r in cents], dtype=np.int64)
+    order = np.argsort(cids, kind="stable")
+    C, cids = C[order], cids[order]  # cid-ascending output for free
+    bc = spark.sparkContext.broadcast((C, cids, _fold_dots(C, C, rowwise=True)))
+
+    @F.pandas_udf("array<struct<score:double,cid:bigint>>")
+    def shortlist(v: pd.Series) -> pd.Series:
+        Cm, cid_a, cc = bc.value
+        return pd.Series(
+            _band_shortlist(v.tolist(), Cm, cid_a, k, mode, cc), dtype=object
+        )
+
+    return df.withColumn("_cs", shortlist(F.col(v_col))).withColumn(
+        alias, _topk_expr("_cs", k, mode)
     ).drop("_cs")
 
 
@@ -270,28 +284,21 @@ def _materialized(
 
 def _bucket_assign_udf(plane_sets: list[list[list[float]]]):
     """Vectorized LSH bucket assignment: ALL tables' plane dot products
-    in one Arrow-batched numpy pass, returning one bucket int per table.
-
-    Bit-exactness contract: per-plane dots are elementwise products
-    followed by a sequential cumsum over the dimension axis — the exact
-    addition order of the interpreted `aggregate(zip_with(...))` fold
-    and of DuckDB's list_dot_product — so the sign (and hence every
-    bucket bit) matches the oracle exactly, with no near-zero-margin
-    gamble. Replaces the r3 hot spot where L×P interpreted HOF folds ran
-    per plan branch (5 exchanges re-derived them in vec_ann_lsh_multi)."""
-    import numpy as np
-
+    in one Arrow-batched NumPy pass (`_fold_dots`, so every dot's sign —
+    and hence every bucket bit — matches the oracle exactly, with no
+    near-zero-margin gamble), returning one bucket int per table.
+    Replaces the r3 hot spot where L×P interpreted HOF folds ran per
+    plan branch (5 exchanges re-derived them in vec_ann_lsh_multi)."""
     mats = [np.array(planes, dtype=np.float64) for planes in plane_sets]  # (P, D)
     powers = [np.int64(1) << np.arange(m.shape[0], dtype=np.int64) for m in mats]
 
     @F.pandas_udf("array<bigint>")
     def assign(v: pd.Series) -> pd.Series:
         x = np.array(v.tolist(), dtype=np.float64)  # (n, D)
-        per_table = []
-        for w, pw in zip(mats, powers):
-            prod = x[:, None, :] * w[None, :, :]  # (n, P, D)
-            dots = np.cumsum(prod, axis=2)[:, :, -1]  # sequential fold
-            per_table.append(((dots > 0) * pw).sum(axis=1))
+        per_table = [
+            ((_fold_dots(x, w) > 0) * pw).sum(axis=1)
+            for w, pw in zip(mats, powers)
+        ]
         return pd.Series(np.stack(per_table, axis=1).tolist())
 
     return assign
@@ -318,23 +325,22 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rounded score with vec_id tiebreak keeps order cross-engine
     deterministic.
 
-    Physical form (r14): the label-blocked `_np_cand_shortlist` shape —
-    the corpus ships ONCE as per-label candidate matrices on a
-    SparkContext broadcast (the same bytes/memory ceiling as the former
-    F.broadcast(b) build side), each probe partition scores its rows
-    against their own label's matrix with the sequential
-    per-dimension accumulation (bit-identical raw dots — the
-    `_bucket_assign_udf` contract), and only the 2e-9 band superset of
-    the rounded top-3 leaves the kernel; the exact
-    (round(score, 9) DESC, cid) ranking is the JVM `_np_topk_expr`
-    comparator. Replaces ~400k interpreted 64-dim `_dot` folds through
-    the broadcast join + a 400k-row window exchange (measured
-    15-17 s executor CPU at sf0.1 -> ~1 s; guide §4.2). Zero shuffles
-    beyond the probe fan-out."""
-    import numpy as np
-
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").alias("v")
+    Physical form (r14): the corpus ships ONCE as per-label candidate
+    matrices on a SparkContext broadcast (the same bytes/memory ceiling
+    as the former F.broadcast(b) build side); each probe partition takes
+    its rows' per-label `_band_shortlist` of the top-4 with self
+    included, and the JVM drops self before the exact `_topk_expr`
+    ranking. That stays a superset of the rounded top-3: the 4th-best raw
+    score of S ∪ {self} is never above the 3rd-best of S. Replaces ~400k
+    interpreted 64-dim `_dot` folds through the broadcast join + a
+    400k-row window exchange (measured 15-17 s executor CPU at sf0.1 ->
+    ~1 s; guide §4.2). Zero shuffles beyond the probe fan-out. A NULL
+    label matches nothing under the oracle's equi-join, so those rows
+    leave both the candidates and the probes."""
+    e = (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("label").isNotNull())
+        .select("vec_id", "label", F.col("embedding").alias("v"))
     )
     # bounded candidate collect: the same rows the former build-side
     # broadcast shipped, grouped by label, vec_id-ascending so kernel
@@ -354,54 +360,26 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast(cands)
 
     @F.pandas_udf("array<struct<score:double,cid:bigint>>")
-    def shortlist(vid_s: pd.Series, lab_s: pd.Series, v_s: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        B = bc.value
-        n = len(v_s)
-        if not n:  # zero-row Arrow batch
-            return pd.Series([], dtype=object)
-        out = [None] * n
-        pdf = pd.DataFrame(
-            {
-                "i": _np.arange(n),
-                "vid": vid_s.to_numpy(),
-                "lab": lab_s.to_numpy(),
-                "v": v_s,
-            }
-        )
-        for lab, grp in pdf.groupby("lab", sort=False):
-            ids, C = B[int(lab)]
-            X = _np.array(grp["v"].tolist(), dtype=_np.float64)
-            acc = _np.zeros((X.shape[0], C.shape[0]))
-            for d in range(C.shape[1]):  # sequential fold order per pair
-                acc += X[:, d : d + 1] * C[None, :, d]
-            sgn = -acc  # ascending = preferred first
-            self_mask = ids[None, :] == grp["vid"].to_numpy()[:, None]
-            sgn[self_mask] = _np.inf  # self never ranks
-            if sgn.shape[1] > 3:
-                kth = _np.partition(sgn, 2, axis=1)[:, 2]
-                keep = sgn <= kth[:, None] + 2e-9
-            else:
-                keep = _np.ones(sgn.shape, dtype=bool)
-            keep &= ~self_mask
-            for r_i, bi in enumerate(grp["i"]):
-                sel = _np.nonzero(keep[r_i])[0]
-                out[bi] = [
-                    {"score": float(acc[r_i, j]), "cid": int(ids[j])}
-                    for j in sel
-                ]
-        return pd.Series(out)
+    def shortlist(lab_s: pd.Series, v_s: pd.Series) -> pd.Series:
+        out = [None] * len(v_s)
+        for lab, rows in lab_s.groupby(lab_s).indices.items():  # positions
+            ids, C = bc.value[int(lab)]
+            block = v_s.iloc[rows].tolist()
+            for i, sl in zip(rows, _band_shortlist(block, C, ids, 4, "dot_desc")):
+                out[i] = sl
+        return pd.Series(out, dtype=object)
 
     # Probe side repartitioned (the parquet ships as one input split —
     # without this the per-row scoring runs on ONE core).
     a = e.repartition(spark.sparkContext.defaultParallelism)
     return (
-        a.withColumn("_cs", shortlist("vec_id", "label", "v"))
+        a.withColumn("_cs", shortlist("label", "v"))
         .select(
             "vec_id",
             "label",
-            F.explode(_np_topk_expr("_cs", 3, "dot_desc")).alias("t"),
+            F.explode(
+                _topk_expr("filter(_cs, c -> c.cid <> vec_id)", 3, "dot_desc")
+            ).alias("t"),
         )
         .select(
             "vec_id",
@@ -941,11 +919,10 @@ def _nsw_build_sims(spark: SparkSession, nodes: DataFrame) -> DataFrame:
         F.col("vec_id").alias("cell_id"), F.col("v").alias("cv")
     )
     # Every node picks its top-_NSW_BUILD_PROBES cells against the
-    # bounded seed set via the vectorized `_np_cand_scores` kernel
-    # (fold-order-exact dots, same (round(dot, 9) DESC, cell_id) JVM
-    # comparator as the former in-row array_sort — r14: the interpreted
-    # N x n_list fold cost ~13.6 s CPU at sf0.1/32 cores, the kernel
-    # ~0.1 s; the collected seed set is the same bytes the one-row
+    # bounded seed set via the vectorized `_np_inrow_topk` kernel (same
+    # `_rank_cmp` order as the former in-row array_sort — r14: the
+    # interpreted N x n_list fold cost ~13.6 s CPU at sf0.1/32 cores, the
+    # kernel ~0.1 s; the collected seed set is the same bytes the one-row
     # broadcast shipped, ceiling unchanged).
     cells = (
         _np_inrow_topk(
@@ -977,11 +954,10 @@ def _nsw_build_sims(spark: SparkSession, nodes: DataFrame) -> DataFrame:
     # the one-way probe->assign set stays.)
     # The per-pair scoring runs as ONE grouped Arrow kernel per cell
     # (r14): probe and assign rows union with a side tag, group by
-    # cell_id, and each group's probes x members dot matrix accumulates
-    # one dimension at a time — the sequential index-order fold of
-    # `_dot` (the _score_bucket_pdf contract), so every RAW dot is
-    # bit-identical; the 9dp rounding stays a JVM expression. Transfer
-    # is O(N x probes x dim) vector rows in, skinny (src, dst, sim)
+    # cell_id, and each group's probes x members dot matrix is one
+    # `_fold_dots` call, so every RAW dot is bit-identical; the 9dp
+    # rounding stays a JVM expression. Transfer is
+    # O(N x probes x dim) vector rows in, skinny (src, dst, sim)
     # rows out — never a vector per PAIR (the regime where r4 measured
     # Arrow losing). Replaces 150k interpreted folds through the
     # cell_id equi-join: build-sims stage 15.3 -> ~2 s CPU at sf0.1.
@@ -1000,8 +976,6 @@ def _nsw_build_sims(spark: SparkSession, nodes: DataFrame) -> DataFrame:
     )
 
     def cell_sims(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         pr = pdf[pdf["side"] == 0]
         asg = pdf[pdf["side"] == 1]
         if pr.empty or asg.empty:
@@ -1012,13 +986,9 @@ def _nsw_build_sims(spark: SparkSession, nodes: DataFrame) -> DataFrame:
                     "sim": pd.Series(dtype="float64"),
                 }
             )
-        P = np.array(pr["v"].tolist(), dtype=np.float64)
-        A = np.array(asg["v"].tolist(), dtype=np.float64)
-        acc = np.zeros((P.shape[0], A.shape[0]))
-        for d in range(P.shape[1]):  # sequential fold order per pair
-            acc += P[:, d : d + 1] * A[None, :, d]
-        src = np.repeat(pr["vid"].to_numpy(), A.shape[0])
-        dst = np.tile(asg["vid"].to_numpy(), P.shape[0])
+        acc = _fold_dots(pr["v"].tolist(), asg["v"].tolist())
+        src = np.repeat(pr["vid"].to_numpy(), len(asg))
+        dst = np.tile(asg["vid"].to_numpy(), len(pr))
         keep = src != dst
         return pd.DataFrame(
             {"src": src[keep], "dst": dst[keep], "sim": acc.ravel()[keep]}
@@ -1347,11 +1317,10 @@ def vec_ann_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground-truth arm, SCALE.md §4 posture: test-SF exhibit; the node
     # set ships to the workers once, the same bytes the former
     # `F.broadcast(nodes)` moved). Vectorized top-2 per query via the
-    # `_np_cand_scores` kernel (fold-order-exact dots, the former
-    # (round(dot,9) DESC, cand_id) order — r14: the per-pair fold +
-    # window cost ~8 s CPU at sf0.1/32 cores); self is excluded AFTER
-    # ranking — the best non-self candidate is rank 1 or 2 overall, so
-    # filter(top2)[0] IS the exact neighbor.
+    # `_np_inrow_topk` kernel (the former `_rank_cmp` order — r14: the
+    # per-pair fold + window cost ~8 s CPU at sf0.1/32 cores); self is
+    # excluded AFTER ranking — the best non-self candidate is rank 1 or 2
+    # overall, so filter(top2)[0] IS the exact neighbor.
     cands = base.select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
     )
@@ -1394,12 +1363,8 @@ def _score_bucket_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-bucket fused candidate+exact-cosine scorer (one Arrow batch per
     (table, bucket) group; shared by vec_ann_lsh_multi and vec_ann_lsh_cp).
     Transfer is O(N·L·dim) per-VECTOR rows, never per-pair; within a
-    bucket the M×M cosine matrix accumulates one dimension at a time (64
-    vectorized outer-product adds), which IS the sequential index-order
-    fold of `_dot` and of DuckDB's list_dot_product, so every cosine stays
-    bit-identical to the oracle."""
-    import numpy as np
-
+    bucket the M×M cosine matrix is one `_fold_dots` call, so every
+    cosine stays bit-identical to the oracle."""
     m = len(pdf)
     if m < 2:
         return pd.DataFrame(
@@ -1409,9 +1374,7 @@ def _score_bucket_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
         )
     ids = pdf["vec_id"].to_numpy()
     v = np.array(pdf["v"].tolist(), dtype=np.float64)  # (M, D)
-    acc = np.zeros((m, m))
-    for j in range(v.shape[1]):  # sequential over dims = _dot's fold
-        acc += np.outer(v[:, j], v[:, j])
+    acc = _fold_dots(v, v)
     a = np.repeat(np.arange(m), m)
     c = np.tile(np.arange(m), m)
     keep = a != c
@@ -1569,15 +1532,12 @@ def _cp_rotations() -> list[list[list[float]]]:
 
 def _cp_assign_udf(rot_sets: list[list[list[float]]]):
     """Cross-polytope bucket assignment, one Arrow/numpy pass for all L
-    rotations: project x through each D×D rotation (the per-coordinate
-    dot accumulates SEQUENTIALLY over the dimension axis — the exact
-    fold order of `_dot` and DuckDB's list_dot_product, so the argmax
-    coordinate and its sign match the oracle bit-for-bit), then hash to
-    the dominant signed axis: bucket = 2·argmax_j |proj_j| + (proj>0).
-    numpy argmax takes the FIRST max, which is the oracle's j-ASC
-    tiebreak (bit-equal |proj| across axes is measure-zero anyway)."""
-    import numpy as np
-
+    rotations: project x through each D×D rotation (`_fold_dots`, so the
+    argmax coordinate and its sign match the oracle bit-for-bit), then
+    hash to the dominant signed axis: bucket = 2·argmax_j |proj_j| +
+    (proj>0). numpy argmax takes the FIRST max, which is the oracle's
+    j-ASC tiebreak (bit-equal |proj| across axes is measure-zero
+    anyway)."""
     mats = [np.array(r, dtype=np.float64) for r in rot_sets]  # (D, D)
 
     @F.pandas_udf("array<bigint>")
@@ -1585,11 +1545,7 @@ def _cp_assign_udf(rot_sets: list[list[list[float]]]):
         x = np.array(v.tolist(), dtype=np.float64)  # (n, D)
         per_table = []
         for w in mats:
-            # sequential fold over input dims, O(n·D) temp per step (a
-            # (n, D, D) cumsum tensor would be 32 KB/row at D=64)
-            acc = np.zeros((len(x), w.shape[0]))
-            for i in range(w.shape[1]):
-                acc += x[:, i : i + 1] * w[None, :, i]
+            acc = _fold_dots(x, w)
             j = np.argmax(np.abs(acc), axis=1)
             sgn = (acc[np.arange(len(x)), j] > 0).astype(np.int64)
             per_table.append(2 * j.astype(np.int64) + sgn)

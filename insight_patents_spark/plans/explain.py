@@ -23,10 +23,3 @@ def assert_in_plan(df: DataFrame, *needles: str) -> None:
     missing = [n for n in needles if n not in plan]
     if missing:
         raise AssertionError(f"plan is missing {missing}\n--- plan ---\n{plan}")
-
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = formatted_plan(df)
-    present = [n for n in needles if n in plan]
-    if present:
-        raise AssertionError(f"plan unexpectedly contains {present}\n{plan}")

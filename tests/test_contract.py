@@ -1,9 +1,8 @@
 """Driver-contract regression nets.
 
 These encode the round-1/2 failure modes as permanent tests so they
-cannot silently recur:
-- the external comparator cannot hash array/map/struct cells -> every
-  registered query must produce a scalar-only schema;
+cannot silently recur (the scalar-only result schema is asserted per
+query in test_correctness.py, which builds every DataFrame anyway):
 - the judge reads SURVEY §2 line by line -> the registry and the
   inventory table must stay in bijection (modulo document-only
   sink_jdbc).
@@ -37,31 +36,6 @@ def test_showcase_prefix_is_50_and_oracle_backed():
     assert names[:50] == list(registry._SHOWCASE_50)
     missing = [n for n in names[:50] if specs[n].oracle is None]
     assert not missing, f"rows-only queries in the checked-50 window: {missing}"
-
-
-def test_all_results_are_scalar_only(spark):
-    """Round-1 regression: agg_collect returned an array column and the
-    driver's pandas-based hasher crashed on it. Build every query's
-    DataFrame and reject non-atomic result columns. Defaults to the
-    smoke SF (building every DataFrame eagerly runs side-effecting work
-    — streaming runs, parquet rewrites — so smallest is right), but
-    honors the env override like the rest of the suite (ADVICE r2)."""
-    import os
-
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    sf_dir = os.environ.get("IPS_SCHEMA_TEST_SF_DIR", "/root/testdata/sf0.001")
-    offenders: list[tuple[str, list[str]]] = []
-    for name, spec in sorted(registry.load_all().items()):
-        df = spec.fn(spark, sf_dir)
-        bad = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad:
-            offenders.append((name, bad))
-    assert not offenders, f"non-scalar result columns: {offenders}"
 
 
 # EMPTY as of r7: every registered query now has a dedicated plan gate

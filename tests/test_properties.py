@@ -13,6 +13,7 @@ import os
 import sys
 from pathlib import Path
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -9903,3 +9904,233 @@ def test_dedup_store_replay_of_uncommitted_batch_recomputes(
         map(tuple, spark.read.parquet(store).collect())
     ) == rows_full, "replay of an uncommitted batch lost its winners"
     assert rows_full != rows_committed  # batch 1 really contributed rows
+
+
+# --- the vector family's shared NumPy scoring kernel (operators/vector.py:
+# _fold_dots, _band_shortlist, _rank_cmp) pinned directly -----------------
+
+
+@pytest.mark.parametrize("D", [1, 63, 64])
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_fold_dots_bit_identical_to_spark_fold_and_duckdb(
+    spark, monkeypatch, D, dtype
+):
+    """`_fold_dots` is the NumPy twin of the `_dot` fold: every pair dot
+    (and every row-wise self-dot) must be bitwise == to Spark's
+    aggregate(zip_with) fold and to DuckDB's list_dot_product over the
+    oracle's CAST(... AS DOUBLE[]). `_band_shortlist` scores the same
+    bits when its row chunks split the batch."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from insight_patents_spark.operators import vector as V
+
+    # seeded terms spanning eight decades of magnitude, so a dot's value
+    # depends on the order its terms are added in
+    rng = np.random.default_rng(D)
+    X, C = (
+        (rng.standard_normal((n, D)) * 10.0 ** rng.uniform(-4, 4, (n, D)))
+        .astype(dtype)
+        .astype(np.float64)  # float32 widens exactly
+        for n in (9, 7)
+    )
+    got = V._fold_dots(X, C)
+    assert got.shape == (len(X), len(C))
+    elem = "float" if dtype == "float32" else "double"
+    pairs = [
+        (i, j, X[i].tolist(), C[j].tolist())
+        for i in range(len(X))
+        for j in range(len(C))
+    ] + [(i, -1, X[i].tolist(), X[i].tolist()) for i in range(len(X))]
+    want = {(i, j): got[i, j] for i in range(len(X)) for j in range(len(C))}
+    self_dots = V._fold_dots(X, X, rowwise=True)
+    want.update({(i, -1): self_dots[i] for i in range(len(X))})
+
+    sdf = spark.createDataFrame(
+        pairs, f"i int, j int, x array<{elem}>, c array<{elem}>"
+    )
+    spark_dots = {
+        (r.i, r.j): r.d
+        for r in sdf.select("i", "j", V._dot("x", "c").alias("d")).collect()
+    }
+    assert spark_dots == want  # float ==, not approx
+
+    arrow_t = pa.list_(pa.float32() if dtype == "float32" else pa.float64())
+    tbl = pa.table(
+        {
+            "i": [p[0] for p in pairs],
+            "j": [p[1] for p in pairs],
+            "x": pa.array([p[2] for p in pairs], type=arrow_t),
+            "c": pa.array([p[3] for p in pairs], type=arrow_t),
+        }
+    )
+    con = duckdb.connect()
+    con.register("t", tbl)
+    duck_dots = {
+        (i, j): d
+        for i, j, d in con.execute(
+            "SELECT i, j, list_dot_product(CAST(x AS DOUBLE[]), "
+            "CAST(c AS DOUBLE[])) FROM t"
+        ).fetchall()
+    }
+    con.close()
+    assert duck_dots == want
+
+    # row chunks of 2 (the cell budget forced below one matrix): keeping
+    # every candidate, each emitted score is the unchunked fold's bits
+    monkeypatch.setattr(V, "_SHORTLIST_CELLS", 2 * len(C) + 1)
+    cids = np.arange(len(C), dtype=np.int64)
+    short = V._band_shortlist(X, C, cids, len(C), "dot_desc")
+    assert [[(e["cid"], e["score"]) for e in row] for row in short] == [
+        [(j, got[i, j]) for j in range(len(C))] for i in range(len(X))
+    ]
+
+
+def test_bucket_assign_matches_cumsum_reference_on_signed_zero_dots(spark):
+    """`_bucket_assign_udf` moved from a (n, P, D) product tensor summed
+    with np.cumsum to `_fold_dots`. The cumsum starts at the first
+    product, the fold at 0.0, so an all-(-0.0) dot is -0.0 in one and
+    +0.0 in the other: the bucket bit (dot > 0) must not see it."""
+    import numpy as np
+    import pandas as pd
+
+    from insight_patents_spark.operators.vector import (
+        _DIM,
+        _bucket_assign_udf,
+        _fold_dots,
+        _multi_table_planes,
+    )
+
+    plane_sets = _multi_table_planes(6)
+    w0 = np.array(plane_sets[0][0])
+    rng = np.random.default_rng(7)
+    rows = list(rng.standard_normal((40, _DIM)).astype(np.float32).astype(float))
+    ortho = np.zeros(_DIM)
+    ortho[0], ortho[1] = w0[1], -w0[0]  # x . w0 == 0.0 exactly
+    neg_zero = np.copysign(0.0, -w0)  # every x_d * w0_d is -0.0
+    rows += [np.zeros(_DIM), neg_zero, -neg_zero, ortho, -ortho]
+    x = np.array(rows, dtype=np.float64)
+
+    got = _bucket_assign_udf(plane_sets).func(pd.Series(rows)).tolist()
+    per_table, signed_zero_seen = [], False
+    for planes in plane_sets:
+        w = np.array(planes, dtype=np.float64)
+        prod = x[:, None, :] * w[None, :, :]  # the former (n, P, D) form
+        dots = np.cumsum(prod, axis=2)[:, :, -1]
+        pw = np.int64(1) << np.arange(w.shape[0], dtype=np.int64)
+        per_table.append(((dots > 0) * pw).sum(axis=1))
+        fold = _fold_dots(x, w)
+        assert ((dots == 0) == (fold == 0)).all()
+        signed_zero_seen |= bool(
+            ((dots == 0) & (np.signbit(dots) != np.signbit(fold))).any()
+        )
+    assert got == np.stack(per_table, axis=1).tolist()
+    assert signed_zero_seen  # the -0.0 vs +0.0 case really occurred
+
+
+@pytest.mark.parametrize("mode", ["dot_desc", "d2_asc"])
+def test_band_shortlist_is_superset_of_rounded_topk_on_near_ties(
+    spark, monkeypatch, mode
+):
+    """Scores 1e-10 apart straddling a 9dp rounding boundary, plus exact
+    ties: for every k, `_band_shortlist` keeps every candidate that can
+    enter the (round(score, 9), cid) top-k — under both half-even and
+    half-up rounding, and everything within 1e-9 of the raw k-th best —
+    and the JVM `_topk_expr` over the shortlist equals the one over the
+    full candidate list."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from insight_patents_spark.operators import vector as V
+
+    rng = np.random.default_rng(3)
+    near = 0.7000000005 + 1e-10 * np.arange(-12, 13)
+    vals = np.concatenate([near, near[:5], [0.69, 0.71, -0.2, 0.3]])
+    cids = rng.permutation(len(vals)).astype(np.int64)
+    order = np.argsort(cids)
+    C, cids = vals[order][:, None], cids[order]  # (m, 1), cid-ascending
+    X = np.array([[1.0], [0.5], [2.0], [-1.0], [1.0000000001]])
+    cc = V._fold_dots(C, C, rowwise=True)
+    monkeypatch.setattr(V, "_SHORTLIST_CELLS", 2 * len(C))  # 2-row chunks
+
+    full = V._band_shortlist(X, C, cids, len(C), mode, cc)  # keeps all
+    sign = -1 if mode == "dot_desc" else 1
+    roundings = (
+        lambda s: round(s, 9),
+        lambda s: float(
+            Decimal(repr(s)).quantize(Decimal("1e-9"), ROUND_HALF_UP)
+        ),
+    )
+    shorts = {}
+    for k in (1, 2, 3, 4, 6):
+        shorts[k] = V._band_shortlist(X, C, cids, k, mode, cc)
+        for row_full, row_short in zip(full, shorts[k]):
+            kept = {e["cid"] for e in row_short}
+            for rnd in roundings:
+                top = sorted(
+                    row_full, key=lambda e: (sign * rnd(e["score"]), e["cid"])
+                )
+                assert {e["cid"] for e in top[:k]} <= kept
+            raw = sorted(sign * e["score"] for e in row_full)
+            near_kth = {
+                e["cid"]
+                for e in row_full
+                if sign * e["score"] <= raw[k - 1] + 1e-9
+            }
+            assert near_kth <= kept
+            assert [e["cid"] for e in row_short] == sorted(kept)  # cid-ascending
+            assert len(kept) < len(row_full)  # the band really prunes
+
+    rows = [
+        (k, r, full[r], short[r])
+        for k, short in shorts.items()
+        for r in range(len(X))
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "k int, r int, full array<struct<score:double,cid:bigint>>, "
+        "short array<struct<score:double,cid:bigint>>",
+    )
+    for k in shorts:
+        sub = df.filter(F.col("k") == k).select(
+            "r",
+            V._topk_expr("full", k, mode).alias("a"),
+            V._topk_expr("short", k, mode).alias("b"),
+        )
+        for row in sub.collect():
+            assert row.a == row.b, (k, row.r)
+
+
+def test_cosine_topk_drops_null_labels_like_oracle(spark, sf_dir, tmp_path):
+    """A NULL label joins nothing in the oracle's a.label = b.label, so a
+    NULL-label embedding is neither a probe nor a neighbor. Before the
+    fix the driver-side candidate grouping ran int(None) and raised."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from insight_patents_spark import registry
+    from insight_patents_spark.operators.vector import vec_cosine_topk
+    from tools.check import compare
+
+    src = pq.read_table(Path(sf_dir).with_name("sf0.001") / "embeddings.parquet")
+    null_ids = [10**9, 10**9 + 1]  # copies of two real embeddings
+    extra = src.slice(0, 2).to_pydict()
+    extra["vec_id"] = null_ids
+    extra["label"] = [None, None]
+    tbl = pa.concat_tables([src, pa.Table.from_pydict(extra, schema=src.schema)])
+    pq.write_table(tbl, tmp_path / "embeddings.parquet")
+
+    got = vec_cosine_topk(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
+    )
+    want = con.execute(registry.load_all()["vec_cosine_topk"].oracle).df()
+    con.close()
+    assert not set(null_ids) & (set(got["vec_id"]) | set(got["neighbor_id"]))
+    problems = compare("vec_cosine_topk", got, want)
+    assert not problems, "; ".join(problems)
