@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..runtime import register_shared_cache
-from ..sources.tables import load, src_stamp
+from ..runtime import shared
+from ..sources.tables import load
 
 MIN_SUPPORT = 2
 PAGERANK_ITERS = 10
@@ -65,11 +65,6 @@ _EDGES_CTE = f"""
 """
 
 
-_PAIR_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 def _edge_partitions(spark: SparkSession, n_fact_rows: int) -> int:
     """Partition count for the materialized edge tables: scales with the
     fact-table size feeding the pair build (edges are a bounded multiple
@@ -88,12 +83,8 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join that builds it dominates every graph query, and all seven
     share it — the graph-snapshot pattern (build the edge table once,
     traverse many times)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "lineitem"),
-    )
-    if key not in _PAIR_CACHE:
+
+    def build() -> DataFrame:
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         n_parts = _edge_partitions(spark, li.count())
         # Join-free pair generation: one shuffle groups parts per order,
@@ -121,7 +112,7 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        _PAIR_CACHE[key] = (
+        return (
             parts.select(F.explode(pair_structs).alias("p"))
             .filter(F.col("p.pa") < F.col("p.pb"))
             .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
@@ -133,12 +124,8 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(n_parts)
             .localCheckpoint()
         )
-    return _PAIR_CACHE[key]
 
-
-_EDGE_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
+    return shared(spark, sf_dir, "lineitem", "graph_pairs", build)
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,16 +136,12 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join) dominates any single traversal, and all graph operators
     share it. Partition count mirrors the pair cache (scales with source
     size, capped by parallelism)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "lineitem"),
-    )
-    if key not in _EDGE_CACHE:
+
+    def build() -> DataFrame:
         p = _pairs(spark, sf_dir)  # already checkpointed
         # Materialized too: iterative queries touch edges ~20 times per
         # run; a cached right-sized table beats re-unioning every round.
-        _EDGE_CACHE[key] = (
+        return (
             p.select(F.col("pa").alias("src"), F.col("pb").alias("dst"), "w")
             .unionByName(
                 p.select(F.col("pb").alias("src"), F.col("pa").alias("dst"), "w")
@@ -166,7 +149,8 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .coalesce(max(4, p.rdd.getNumPartitions()))
             .localCheckpoint()
         )
-    return _EDGE_CACHE[key]
+
+    return shared(spark, sf_dir, "lineitem", "graph_edges", build)
 
 
 @query(
@@ -901,24 +885,18 @@ def _lpa_oracle() -> str:
     return _lpa_cte() + "SELECT node, community FROM lpa"
 
 
-_LPA_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous LPA communities, fixed LPA_ITERS rounds (see
-    graph_label_prop for semantics). Cached per (session, sf, stamp)
-    like _PAIR_CACHE: graph_modularity consumes the same assignment, and
-    recomputing an iterative loop inside a downstream query is the
-    r3-verdict anti-pattern (vec_rerank_stub's original sin)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "lineitem"),
+    graph_label_prop for semantics). Shared like the pair table:
+    graph_modularity consumes the same assignment, and recomputing an
+    iterative loop inside a downstream query is the r3-verdict
+    anti-pattern (vec_rerank_stub's original sin)."""
+    return shared(
+        spark, sf_dir, "lineitem", "lpa_labels", lambda: _lpa_run(spark, sf_dir)
     )
-    if key in _LPA_CACHE:
-        return _LPA_CACHE[key]
+
+
+def _lpa_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _edges(spark, sf_dir)
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -936,9 +914,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node", "label")
             .localCheckpoint()
         )
-    out = labels.select("node", F.col("label").cast("bigint").alias("community"))
-    _LPA_CACHE[key] = out
-    return out
+    return labels.select("node", F.col("label").cast("bigint").alias("community"))
 
 
 @query("graph_label_prop", oracle=_lpa_oracle())

@@ -30,13 +30,10 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources.tables import load
+from .text import _tokens
 
 _LR_BUCKETS = 16  # hashed feature width (production: 2^18+)
 _LR_BIAS_CENTI = -20  # intercept, in 1/100 units like the weights
-
-
-def _tokens() -> F.Column:
-    return F.split(F.col("text"), " ")
 
 
 def _lr_bucket() -> F.Column:

@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..runtime import register_shared_cache
-from ..sources.tables import load, src_stamp
+from ..runtime import shared
+from ..sources.tables import load
 
 # Inline fixtures (FIXTURES.md §5): defined identically in both engines.
 LEXICON = [  # (token, integer weight) — integer so group sums are exact
@@ -314,25 +314,6 @@ def _jaccard_docs_cte(threshold: float) -> str:
     """
 
 
-# (app, sf, stamp) -> (classes, ids): the threshold-INDEPENDENT half of
-# the dense-domain Jaccard join — the token-set class table (sig, n,
-# 63-bit mask) and the doc_id -> sig map. text_jaccard_tokens (J>=0.9)
-# and dedup_eval's truth arm (J>=0.7) build the identical tables; at
-# 100 TB the class table is written once and every threshold query
-# reads it (the verified_pairs contract). First touch stays charged to
-# whichever query the rotation runs first.
-_JACCARD_CLASS_CACHE: dict[
-    tuple[str, str, str], tuple[DataFrame, DataFrame]
-] = register_shared_cache({})
-
-# (app, sf, stamp) -> (vocab_size, n_classes): the strategy-probe pair
-# both adaptive Jaccard operators collect before choosing the bitmask
-# vs PPJoin path — two bounded driver scalars, same for both.
-_JACCARD_PROBE_CACHE: dict[tuple[str, str, str], tuple[int, int]] = (
-    register_shared_cache({})
-)
-
-
 def _jaccard_probe(
     spark: SparkSession, sf_dir: str, d: DataFrame
 ) -> tuple[int, int]:
@@ -341,15 +322,12 @@ def _jaccard_probe(
     the vocab (the decision only asks "fits 63 bits?"), and the class
     count read off the shared checkpointed class table that every
     dense-path consumer builds next anyway (never a full token-stream
-    pass per scalar, never a 2-column Expand multi-distinct). Cached
-    per (app, sf, stamp) so the second consumer pays no driver
-    round-trips."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key not in _JACCARD_PROBE_CACHE:
+    pass per scalar, never a 2-column Expand multi-distinct). Both
+    adaptive Jaccard operators collect this pair before choosing the
+    bitmask vs PPJoin path, so it is shared: the second consumer pays no
+    driver round-trips."""
+
+    def build() -> tuple[int, int]:
         toks = F.array_distinct(_tokens())
         # Bounded vocab probe (r13): the strategy only asks "<= 63?",
         # so collect at most 64 distinct tokens in ONE job instead of a
@@ -377,63 +355,61 @@ def _jaccard_probe(
             # PPJoin path: the cap conjunct is short-circuited by
             # vocab_size > 63; carry an over-cap sentinel.
             n_classes = _JACCARD_CLASS_CAP + 1
-        _evict_stale(_JACCARD_PROBE_CACHE, key)
-        _JACCARD_PROBE_CACHE[key] = (vocab_size, n_classes)
-    return _JACCARD_PROBE_CACHE[key]
+        return vocab_size, n_classes
+
+    return shared(spark, sf_dir, "documents", "jaccard_probe", build)
 
 
 def _jaccard_class_tables(
     spark: SparkSession, sf_dir: str, d: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """The (classes, ids) pair backing :func:`_jaccard_bitmask`, built
-    once per (app, sf, stamp): classes = (sig, n, mask) checkpointed,
-    ids = (doc_id, sig) checkpointed (it feeds two expansion joins per
-    consumer — without the checkpoint the per-doc md5 scan re-runs for
-    each)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _JACCARD_CLASS_CACHE:
-        return _JACCARD_CLASS_CACHE[key]
-    toks = F.array_distinct(F.split(F.col("text"), " "))
-    docs = d.select(
-        "doc_id",
-        toks.alias("toks"),
-        F.size(toks).cast("bigint").alias("n"),
-        F.md5(F.array_join(F.sort_array(toks), "|")).alias("sig"),
-    )
-    # global vocab index (driver-side: ≤63 entries by construction)
-    vocab = sorted(
-        r["t"] for r in d.select(F.explode(toks).alias("t")).distinct().collect()
-    )
-    bit = {t: i for i, t in enumerate(vocab)}
-    mask_expr = F.aggregate(
-        F.transform(
-            F.col("toks"),
-            lambda t: F.element_at(
-                F.map_from_arrays(
-                    F.array(*[F.lit(t2) for t2 in vocab]),
-                    F.array(*[F.lit(1 << bit[t2]).cast("long") for t2 in vocab]),
+    """The (classes, ids) pair backing :func:`_jaccard_bitmask`: the
+    threshold-INDEPENDENT half of the dense-domain Jaccard join, shared
+    by text_jaccard_tokens (J>=0.9) and dedup_eval's truth arm (J>=0.7);
+    at 100 TB the class table is written once and every threshold query
+    reads it (the verified_pairs contract). classes = (sig, n, mask)
+    checkpointed, ids = (doc_id, sig) checkpointed (it feeds two
+    expansion joins per consumer — without the checkpoint the per-doc
+    md5 scan re-runs for each)."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        toks = F.array_distinct(F.split(F.col("text"), " "))
+        docs = d.select(
+            "doc_id",
+            toks.alias("toks"),
+            F.size(toks).cast("bigint").alias("n"),
+            F.md5(F.array_join(F.sort_array(toks), "|")).alias("sig"),
+        )
+        # global vocab index (driver-side: ≤63 entries by construction)
+        vocab = sorted(
+            r["t"] for r in d.select(F.explode(toks).alias("t")).distinct().collect()
+        )
+        bit = {t: i for i, t in enumerate(vocab)}
+        mask_expr = F.aggregate(
+            F.transform(
+                F.col("toks"),
+                lambda t: F.element_at(
+                    F.map_from_arrays(
+                        F.array(*[F.lit(t2) for t2 in vocab]),
+                        F.array(*[F.lit(1 << bit[t2]).cast("long") for t2 in vocab]),
+                    ),
+                    t,
                 ),
-                t,
             ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    classes = (
-        docs.groupBy("sig")
-        .agg(F.first("toks").alias("toks"), F.first("n").alias("n"))
-        .withColumn("mask", mask_expr)
-        .select("sig", "n", "mask")
-        .localCheckpoint()
-    )
-    ids = docs.select("doc_id", "sig").localCheckpoint()
-    _evict_stale(_JACCARD_CLASS_CACHE, key)
-    _JACCARD_CLASS_CACHE[key] = (classes, ids)
-    return classes, ids
+            F.lit(0).cast("long"),
+            lambda acc, x: acc.bitwiseOR(x),
+        )
+        classes = (
+            docs.groupBy("sig")
+            .agg(F.first("toks").alias("toks"), F.first("n").alias("n"))
+            .withColumn("mask", mask_expr)
+            .select("sig", "n", "mask")
+            .localCheckpoint()
+        )
+        ids = docs.select("doc_id", "sig").localCheckpoint()
+        return classes, ids
+
+    return shared(spark, sf_dir, "documents", "jaccard_classes", build)
 
 
 def _jaccard_bitmask(
@@ -625,41 +601,26 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly equal to the naive (doc, seed, token) expansion. The
     signature is emitted '|'-joined (scalar-only results for the
     driver's hasher)."""
-    return _doc_sig_mask(spark, sf_dir).select(
+    return _doc_sig_mask(spark, sf_dir)[0].select(
         "doc_id", F.concat_ws("|", "signature").alias("signature")
     )
 
 
-def _doc_sig_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _doc_sig_mask_chunks(spark, sf_dir)[0]
-
-
-# (session, sf) -> (checkpointed signature table, n_chunks). The sig table
-# feeds a SELF-join in dedup_minhash_pairs; without materialization Spark
-# rebuilds the whole scan->vocab->aggregate pipeline on BOTH join sides
-# (verified in the r1 physical plan: duplicated subtrees). At cluster
-# scale this is "write signatures to a table, then LSH over the table" —
-# localCheckpoint is the single-node equivalent.
-_SIG_CACHE: dict[tuple[str, str, str], tuple[DataFrame, int]] = (
-    register_shared_cache({})
-)
-
-
-def _evict_stale(cache: dict, key: tuple[str, str, str]) -> None:
-    """Bound the (app, sf_dir, stamp)-keyed checkpoint caches (ADVICE
-    r9): before inserting ``key``, drop entries owned by a DIFFERENT
-    application (their SparkContext is gone — the pinned checkpoint
-    RDDs are unreclaimable garbage) and entries for the SAME (app,
-    sf_dir) under a superseded source stamp (the driver regenerated the
-    data; nothing can cache-hit the old stamp again). Live entries for
-    other sf_dirs in the same app stay — concurrent multi-SF use is
-    legitimate."""
-    for k in [
-        k
-        for k in cache
-        if k[0] != key[0] or (k[1] == key[1] and k[2] != key[2])
-    ]:
-        del cache[k]
+def _doc_sig_mask(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(signature table, n_chunks) of :func:`_doc_sig_mask_chunks`,
+    shared across queries. The sig table feeds a SELF-join in
+    dedup_minhash_pairs; without materialization Spark rebuilds the whole
+    scan->vocab->aggregate pipeline on BOTH join sides (verified in the
+    r1 physical plan: duplicated subtrees). At cluster scale this is
+    "write signatures to a table, then LSH over the table" —
+    localCheckpoint is the single-node equivalent."""
+    return shared(
+        spark,
+        sf_dir,
+        "documents",
+        "minhash_sigs",
+        lambda: _doc_sig_mask_chunks(spark, sf_dir),
+    )
 
 
 def _doc_sig_mask_chunks(
@@ -679,16 +640,6 @@ def _doc_sig_mask_chunks(
     bitset degrades gracefully back to sorted-int-array intersection;
     the signature path (broadcast of per-token hash rows) is unchanged
     because it only ever ships |vocab| rows, not |docs|."""
-    # applicationId (not id(spark): reusable after GC) + source stamp (the
-    # driver regenerates testdata; an in-process regen must not serve a
-    # stale checkpointed signature table).
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
     # ONE corpus tokenization for the whole minhash family (r14,
     # VERDICT r13 #2): the shared (doc, token, tf) table's rows ARE the
     # distinct (doc, token) pairs, so signatures + bitsets build from
@@ -737,8 +688,6 @@ def _doc_sig_mask_chunks(
         F.array(*[f"m{c}" for c in range(n_chunks)]).alias("mask"),
         "n",
     ).localCheckpoint()
-    _evict_stale(_SIG_CACHE, key)
-    _SIG_CACHE[key] = (out, n_chunks)
     return out, n_chunks
 
 
@@ -832,7 +781,7 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_pairs filters it by Jaccard, text_minhash_containment
     by containment — same candidates, different verify metric."""
     n_bands = len(MINHASH_SEEDS) // 4
-    sm, n_chunks = _doc_sig_mask_chunks(spark, sf_dir)
+    sm, n_chunks = _doc_sig_mask(spark, sf_dir)
     bands = sm.select(
         "doc_id",
         "n",
@@ -960,37 +909,28 @@ def text_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (app, sf, stamp) -> checkpointed (doc_id, token, tf) counts: the
-# token-frequency table BOTH weighted-minhash variants build signatures
-# from (integer copy-replication for dedup_minhash_weighted, sublinear
-# 1+ln(tf) weights for dedup_minhash_icws) — built once per session,
-# every consumer reads it (the verified_pairs contract; first touch
-# charged to whichever query runs first). At 100 TB this is "write the
-# tf table, sign over the table".
-_TF_CACHE: dict[tuple[str, str, str], DataFrame] = register_shared_cache({})
-
-
 def _doc_token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
+    """Checkpointed (doc_id, token, tf) counts: the token-frequency
+    table BOTH weighted-minhash variants build signatures from (integer
+    copy-replication for dedup_minhash_weighted, sublinear 1+ln(tf)
+    weights for dedup_minhash_icws) — shared, every consumer reads it
+    (the verified_pairs contract; first touch charged to whichever query
+    runs first). At 100 TB this is "write the tf table, sign over the
+    table"."""
+    return shared(
+        spark,
         sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _TF_CACHE:
-        return _TF_CACHE[key]
-    tf = (
-        load(spark, sf_dir, "documents")
+        "documents",
+        "token_tf",
+        lambda: load(spark, sf_dir, "documents")
         # fan the explode + partial count out of the single input split
         # (guide §2.5; a real corpus scan has many splits)
         .repartition(sh_parts(spark))
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+        .localCheckpoint(),
     )
-    _evict_stale(_TF_CACHE, key)
-    _TF_CACHE[key] = tf
-    return tf
 
 
 _WMH_SEEDS = MINHASH_SEEDS[:8]  # 2 bands x 4 rows
@@ -1105,7 +1045,7 @@ def dedup_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize signatures+bitsets ONCE: the band self-join below
     # would otherwise rebuild the scan->window->agg chain on BOTH sides
-    # (the _SIG_CACHE lesson from the unweighted family)
+    # (the signature-table lesson from the unweighted family)
     sig = el.join(F.broadcast(vocab_h), "elem").groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(len(_WMH_SEEDS))],
         *[
@@ -1271,7 +1211,7 @@ def _icws_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc ICWS signature table: one min(struct) per seed plus the
     doc's (token -> nano-unit weight) map and total weight for exact
     verification. localCheckpointed — the probe band join consumes it
-    on both sides (the _SIG_CACHE lesson). Exposed for the
+    on both sides (the signature-table lesson). Exposed for the
     exact-Python-replay test."""
     # shared, checkpointed (doc, token, tf) table (see _doc_token_tf):
     # it feeds BOTH the sampler-vocab distinct and the per-row keys
@@ -3222,7 +3162,8 @@ def text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Physical form (r14): one narrow Arrow pass — per document the
     bucket histogram is a 16-slot int array filled at C speed, with the
-    token -> bucket md5 memoized per task over the (Zipf-small) vocab.
+    token -> bucket md5 memoized per Arrow batch over the (Zipf-small)
+    vocab, so the memo never outgrows one batch.
     md5 is a bytes -> bytes contract (Spark hashes the UTF-8 bytes of
     the token, hashlib the same), the bucket index and counts are exact
     integers and the feature string is their decimal join — no floating
@@ -3243,29 +3184,22 @@ def text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def feat(batches):
-        memo: dict = {}
-
-        def bucket(tok: str) -> int:
-            b = memo.get(tok)
-            if b is None:
-                # == conv(substring(md5(token), 1, 8), 16, 10) % 16
-                b = (
-                    int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:8], 16)
-                    % 16
-                )
-                memo[tok] = b
-            return b
-
         for pdf in batches:
             if pdf.empty:
                 continue
+            memo: dict = {}  # token -> bucket, for this batch only
             feats = []
             for t in pdf["text"]:
                 counts = [0] * 16
                 if t is not None:
                     # split(" ") keeps empty tokens, like Spark's split
                     for tok in t.split(" "):
-                        counts[bucket(tok)] += 1
+                        b = memo.get(tok)
+                        if b is None:
+                            # == conv(substring(md5(token), 1, 8), 16, 10) % 16
+                            h = hashlib.md5(tok.encode("utf-8")).hexdigest()
+                            b = memo[tok] = int(h[:8], 16) % 16
+                        counts[b] += 1
                 feats.append("|".join(map(str, counts)))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
@@ -4437,23 +4371,18 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Learned-merge cache: text_bpe_train and text_tokenizer_apply share one
-# training run per (session, sf_dir, source-stamp) — same posture as the
-# graph edge cache (_LPA_CACHE): recomputing an iterative loop inside a
-# downstream query is the r3-verdict anti-pattern.
-_BPE_MERGE_CACHE: dict = {}
-
-
 def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Run the 6-round Sennrich merge loop; returns
-    [(rank, l, r, merged, count)]. See text_bpe_train for semantics."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
+    [(rank, l, r, merged, count)]. See text_bpe_train for semantics.
+    text_bpe_train and text_tokenizer_apply share one training run (the
+    graph LPA posture): recomputing an iterative loop inside a
+    downstream query is the r3-verdict anti-pattern."""
+    return shared(
+        spark, sf_dir, "documents", "bpe_merges", lambda: _bpe_train(spark, sf_dir)
     )
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     d = load(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -4517,7 +4446,6 @@ def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple]:
             ).alias("s"),
             "n",
         ).localCheckpoint()
-    _BPE_MERGE_CACHE[key] = merges
     return merges
 
 
@@ -4566,8 +4494,8 @@ def text_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression ratio (the metric tokenizer quality is judged by)
     come from one hash agg.
 
-    Scale shape: training state is shared via the session merge cache
-    (one training run per sf_dir, the _LPA_CACHE posture); encoding
+    Scale shape: training state is shared via runtime.shared (one
+    training run per corpus version, the graph LPA posture); encoding
     itself is zero-shuffle in-row string work at scan speed — the
     merge list rides INTO the plan as literals (at 50k merges it
     becomes a broadcast map + a join-free UDF-less loop unroll, same
@@ -4609,30 +4537,22 @@ def text_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUP_CC_ROUNDS = 8  # oracle unroll; measured min-label fixpoint <= 5 at all SFs
 _DUP_CC_MAX_ROUNDS = 20  # Spark-side loud-fail bound on the contraction loop
 
-# (app, sf, stamp) -> checkpointed (doc_a, doc_b) verified-pair table.
-# The LSH-verified pair set is consumed by the cluster stage AND the
-# curation pipeline (and any dedup audit); at 100 TB it is written ONCE
-# as its own table and every consumer reads it — this cache is the
-# single-node equivalent (same contract as _SIG_CACHE above).
-_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
 
 def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
+    """Checkpointed (doc_a, doc_b) verified-pair table. The LSH-verified
+    pair set is consumed by the cluster stage AND the curation pipeline
+    (and any dedup audit); at 100 TB it is written ONCE as its own table
+    and every consumer reads it — the shared entry is the single-node
+    equivalent (same contract as the signature table)."""
+    return shared(
+        spark,
         sf_dir,
-        src_stamp(sf_dir, "documents"),
+        "documents",
+        "verified_pairs",
+        lambda: dedup_minhash_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(),
     )
-    if key not in _PAIRS_CACHE:
-        _evict_stale(_PAIRS_CACHE, key)
-        _PAIRS_CACHE[key] = (
-            dedup_minhash_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint()
-        )
-    return _PAIRS_CACHE[key]
 
 
 def dup_cc_chain_sql() -> str:
@@ -4671,15 +4591,6 @@ def _dup_cc_oracle() -> str:
     FROM l{_DUP_CC_ROUNDS}"""
 
 
-# (app, sf, stamp) -> checkpointed (doc_id, lbl) contraction-fixpoint
-# labels. Like the pair table above, the cluster/keeper table is
-# materialized once and consumed by both the registered cluster query
-# and the curation pipeline's drop-list stage.
-_CC_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 @query("dedup_cluster_cc", oracle=_dup_cc_oracle())
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS — the final stage of corpus dedup that
@@ -4708,21 +4619,29 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation reaches — both must produce identical rows,
     hash-checked. Docs with no near-dup pair never enter the graph
     (they keep by default and are not rows here — this operator
-    reports the DUPLICATE mass)."""
-    key = (
-        spark.sparkContext.applicationId,
+    reports the DUPLICATE mass).
+
+    The checkpointed (doc_id, lbl) fixpoint labels are shared: like the
+    pair table, the cluster/keeper table is materialized once and
+    consumed by both this query and the curation pipeline's drop-list
+    stage."""
+    lbl = shared(
+        spark,
         sf_dir,
-        src_stamp(sf_dir, "documents"),
+        "documents",
+        "dup_cc_labels",
+        lambda: _dup_cc_labels(spark, sf_dir),
     )
-    if key in _CC_CACHE:
-        lbl = _CC_CACHE[key]
-        w = Window.partitionBy("lbl")
-        return lbl.select(
-            "doc_id",
-            F.col("lbl").alias("cluster_id"),
-            (F.col("doc_id") == F.col("lbl")).alias("keep"),
-            F.count(F.lit(1)).over(w).cast("bigint").alias("cluster_size"),
-        )
+    w = Window.partitionBy("lbl")
+    return lbl.select(
+        "doc_id",
+        F.col("lbl").alias("cluster_id"),
+        (F.col("doc_id") == F.col("lbl")).alias("keep"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("cluster_size"),
+    )
+
+
+def _dup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = verified_pairs(spark, sf_dir)
     # Boruvka-style min-neighbor star contraction, with round 1 taken
     # DIRECTLY from the pair stream: the doubled (src, dst) edge list is
@@ -4785,15 +4704,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"dedup_cluster_cc: no contraction fixpoint within "
             f"{_DUP_CC_MAX_ROUNDS} rounds"
         )
-    _evict_stale(_CC_CACHE, key)
-    _CC_CACHE[key] = lbl
-    w = Window.partitionBy("lbl")
-    return lbl.select(
-        "doc_id",
-        F.col("lbl").alias("cluster_id"),
-        (F.col("doc_id") == F.col("lbl")).alias("keep"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("cluster_size"),
-    )
+    return lbl
 
 
 _LINE_TOKENS = 8  # tokens per synthesized line (fixture granularity)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..runtime import register_shared_cache
+from ..runtime import shared
 from ..sources.tables import load
 
 
@@ -260,26 +260,20 @@ def _np_inrow_topk(
     ).drop("_cs")
 
 
-# Materialized-DataFrame cache shared across queries in one application
-# (the _SIG_CACHE pattern, text.py): keyed by applicationId (survives
-# session reuse, dies with the app) + sf_dir + stage tag. Lets
-# vec_rerank_stub consume vec_ann_lsh's shortlist without recomputing
-# the whole ANN stage, and lets each LSH bucket table be computed ONCE
-# instead of once per plan branch.
-_VEC_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 def _materialized(
     spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _VEC_CACHE:
+    """``build()`` persisted and shared across queries (runtime.shared
+    on the embeddings table). Lets vec_rerank_stub consume vec_ann_lsh's
+    shortlist without recomputing the whole ANN stage, and lets each LSH
+    bucket table be computed ONCE instead of once per plan branch."""
+
+    def persisted() -> DataFrame:
         df = build().persist()
         df.count()  # force materialization so every consumer hits cache
-        _VEC_CACHE[key] = df
-    return _VEC_CACHE[key]
+        return df
+
+    return shared(spark, sf_dir, "embeddings", tag, persisted)
 
 
 def _bucket_assign_udf(plane_sets: list[list[list[float]]]):

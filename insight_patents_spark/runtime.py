@@ -16,21 +16,35 @@ finally executes them. The release point is the harness, after the
 result is fully consumed — which is what :func:`release_ephemeral`
 provides.
 
-What must survive a release: the shared caches (text.py ``_SIG_CACHE``
-/ ``_PAIRS_CACHE`` / ``_CC_CACHE``, graph.py ``_PAIR_CACHE`` /
-``_EDGE_CACHE`` / ``_LPA_CACHE``, ...) hold localCheckpointed
-DataFrames reused ACROSS queries; unpersisting a localCheckpoint is
-unrecoverable (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` on next touch —
-verified empirically, there is no recompute fallback). Each cache
-module registers its dict here at import; a release walks the cached
-DataFrames' analyzed plans, collects the persistent RDD ids behind
-their ``LogicalRDD`` leaves, and protects exactly those.
+What must survive a release: the cross-query cache. Derived tables
+that several queries reuse (signature, pair and label tables of the
+text family, the graph edge tables, the LSH index tables, the
+streaming schema, ...) are built through :func:`shared`, ONE dict keyed
+by ``(applicationId, sf_dir, source, src_stamp(sf_dir, source), tag)``.
+``applicationId`` (not ``id(spark)``: reusable after GC) ties an entry
+to its SparkContext; the source stamp invalidates it when the source
+table is rewritten. A miss first evicts every entry of another
+application (its pinned checkpoints are unreclaimable garbage) and
+every entry of the same ``(sf_dir, source)`` under an older stamp
+(nothing can hit it again); entries of other sf_dirs or other sources
+stay, because concurrent multi-SF use is legitimate.
 
-SQL-cached DataFrames (``.persist()``+count, e.g. vector.py
-``_VEC_CACHE``) are left alone entirely: only RDDs whose
-``checkpointData`` is defined (i.e. localCheckpoints) are candidates.
-Persist-based cache blocks are evictable/recomputable by Spark's own
-storage manager, so they are not a leak in the same sense.
+Many entries hold localCheckpointed DataFrames, and unpersisting a
+localCheckpoint is unrecoverable (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
+on next touch — verified empirically, there is no recompute fallback).
+A release walks the store's DataFrames' analyzed plans, collects the
+persistent RDD ids behind their ``LogicalRDD`` leaves, and protects
+exactly those. An evicted entry loses that protection, so the next
+release frees its checkpoints.
+
+SQL-cached DataFrames (``.persist()``+count, e.g. vector.py's LSH
+tables) are left alone entirely: only RDDs whose ``checkpointData`` is
+defined (i.e. localCheckpoints) are candidates. Persist-based cache
+blocks are evictable/recomputable by Spark's own storage manager, so
+they are not a leak in the same sense. Eviction of a superseded stamp
+does unpersist them at once: Spark's SQL cache matches plans by source
+path, so a stale persist() would otherwise answer the rebuild over the
+rewritten file.
 
 At 1000-executor scale the same discipline applies unchanged: a
 long-lived driver serving many queries must bound pinned storage, and
@@ -45,6 +59,8 @@ from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources.tables import src_stamp
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -54,29 +70,51 @@ class PlanScanError(RuntimeError):
     localCheckpoint is unrecoverable), so this aborts the release cycle
     instead of silently leaving the cache unprotected."""
 
-# (cache_dict, extractor) pairs; extractor(value) yields the DataFrames
-# inside one cache value (values are DataFrames or tuples containing one).
-_SHARED_CACHES: list[tuple[dict, Callable[[Any], Iterable[DataFrame]]]] = []
+
+# (applicationId, sf_dir, source, stamp, tag) -> value; see the module
+# docstring for the key and the eviction rule.
+_SHARED: dict[tuple[str, str, str, str, str], Any] = {}
 
 
-def _default_extract(value: Any) -> Iterable[DataFrame]:
+def shared(
+    spark: SparkSession,
+    sf_dir: str,
+    source: str,
+    tag: str,
+    build: Callable[[], Any],
+) -> Any:
+    """The value ``build()`` returns, built once per application and
+    version of the ``source`` table under ``sf_dir``; ``tag`` names the
+    derived table. DataFrames in the value (alone or inside a
+    tuple/list) are protected from :func:`release_ephemeral`."""
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        source,
+        src_stamp(sf_dir, source),
+        tag,
+    )
+    if key not in _SHARED:
+        for k in [
+            k
+            for k in _SHARED
+            if k[0] != key[0] or (k[1:3] == key[1:3] and k[3] != key[3])
+        ]:
+            value = _SHARED.pop(k)
+            if k[0] == key[0]:  # a dead app's SQL cache died with it
+                for df in _dataframes(value):
+                    if df.is_cached:
+                        df.unpersist()
+        _SHARED[key] = build()
+    return _SHARED[key]
+
+
+def _dataframes(value: Any) -> Iterable[DataFrame]:
     if isinstance(value, DataFrame):
         return (value,)
     if isinstance(value, (tuple, list)):
         return tuple(v for v in value if isinstance(v, DataFrame))
     return ()
-
-
-def register_shared_cache(
-    cache: dict,
-    extract: Callable[[Any], Iterable[DataFrame]] = _default_extract,
-) -> dict:
-    """Mark ``cache``'s DataFrames as protected from release_ephemeral.
-
-    Returns the dict so it can be used inline at definition site.
-    """
-    _SHARED_CACHES.append((cache, extract))
-    return cache
 
 
 def _plan_rdd_ids(df: DataFrame) -> set[int]:
@@ -105,22 +143,21 @@ def _plan_rdd_ids(df: DataFrame) -> set[int]:
 
 
 def protected_rdd_ids() -> set[int]:
-    """Union of checkpoint RDD ids owned by registered shared caches.
+    """Union of checkpoint RDD ids owned by the :func:`shared` store.
 
     Propagates :class:`PlanScanError` from any unreadable cache value —
     callers that unpersist must treat that as "protection unknown" and
     release nothing this cycle.
     """
     ids: set[int] = set()
-    for cache, extract in _SHARED_CACHES:
-        for value in list(cache.values()):
-            for df in extract(value):
-                ids |= _plan_rdd_ids(df)
+    for value in list(_SHARED.values()):
+        for df in _dataframes(value):
+            ids |= _plan_rdd_ids(df)
     return ids
 
 
 def release_ephemeral(spark: SparkSession) -> list[int]:
-    """Unpersist localCheckpoint RDDs not owned by a shared cache.
+    """Unpersist localCheckpoint RDDs not owned by the shared store.
 
     Call ONLY after the current query's result has been fully consumed
     (sink committed / collected): released checkpoints cannot be

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..runtime import shared
 from ..sources.tables import load
 
 # Streaming scratch (checkpoints + the µs-converted source copy). A
@@ -76,17 +77,17 @@ def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-_SCHEMA_CACHE: dict[tuple[str, str], "T.StructType"] = {}
-
-
 def _stream_schema(spark: SparkSession, sf_dir: str):
-    """Converted-events schema, cached per (app, source): deriving it
+    """Converted-events schema, shared per events version: deriving it
     spins up a batch parquet read (footer job), so only the first
     streaming query in the app pays that."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = _events_us(spark, sf_dir).schema
-    return _SCHEMA_CACHE[key]
+    return shared(
+        spark,
+        sf_dir,
+        "events",
+        "stream_schema",
+        lambda: _events_us(spark, sf_dir).schema,
+    )
 
 
 def _read_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8793,19 +8793,34 @@ def test_icws_collision_probability_is_weighted_jaccard():
     assert abs(hits / n - jw) < 4 * sigma, (hits / n, jw)
 
 
-def test_evict_stale_cache_policy():
-    """The checkpoint-cache evictor (ADVICE r9): dead-application
-    entries and superseded same-sf stamps are dropped; live entries for
-    OTHER sf_dirs in the same app survive."""
-    from insight_patents_spark.operators.text import _evict_stale
+def test_evict_stale_cache_policy(tmp_path, monkeypatch):
+    """The shared-store evictor (ADVICE r9): a miss drops dead-application
+    entries and superseded stamps of the same (sf_dir, source); live
+    entries for OTHER sf_dirs, or other sources of the same sf_dir, in
+    the same app survive."""
+    from types import SimpleNamespace
 
-    cache = {
-        ("dead-app", "sfA", "s1"): 1,
-        ("live-app", "sfA", "s0"): 2,  # superseded stamp
-        ("live-app", "sfB", "s9"): 3,  # other sf_dir, still live
+    from insight_patents_spark import runtime
+    from insight_patents_spark.sources.tables import src_stamp
+
+    (tmp_path / "documents.parquet").write_bytes(b"v1")
+    sf = str(tmp_path)
+    s1 = src_stamp(sf, "documents")
+    store = {
+        ("dead-app", sf, "documents", s1, "t"): 1,
+        ("live-app", sf, "documents", "s0", "t"): 2,  # superseded stamp
+        ("live-app", "sfB", "documents", "s9", "t"): 3,  # other sf_dir
+        ("live-app", sf, "lineitem", "s8", "t"): 4,  # other source
     }
-    _evict_stale(cache, ("live-app", "sfA", "s1"))
-    assert cache == {("live-app", "sfB", "s9"): 3}
+    monkeypatch.setattr(runtime, "_SHARED", store)
+    live = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="live-app"))
+    assert runtime.shared(live, sf, "documents", "t", lambda: 5) == 5
+    assert runtime.shared(live, sf, "documents", "t", lambda: 6) == 5  # hit
+    assert store == {
+        ("live-app", "sfB", "documents", "s9", "t"): 3,
+        ("live-app", sf, "lineitem", "s8", "t"): 4,
+        ("live-app", sf, "documents", s1, "t"): 5,
+    }
 
 
 def test_vec_ann_nsw_grounding_matches_python_replay(spark, sf_dir):

@@ -10,9 +10,16 @@ so the protection logic is load-bearing, not an optimization.
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from insight_patents_spark import registry, runtime
+from insight_patents_spark.sources.tables import TABLE_NAMES
+from tools.check import compare, duck_connect
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -67,7 +74,7 @@ def test_release_leaves_sql_cache_alone(spark):
     df.unpersist()
 
 
-def test_release_fails_closed_on_plan_scan_error(spark):
+def test_release_fails_closed_on_plan_scan_error(spark, monkeypatch):
     # An unscannable shared-cache value means the protected set is
     # unknown — the hook must release NOTHING that cycle rather than
     # risk destroying the cache's live checkpoints (ADVICE r11).
@@ -75,17 +82,14 @@ def test_release_fails_closed_on_plan_scan_error(spark):
     cp_id = int(
         cp._jdf.queryExecution().analyzed().collectLeaves().apply(0).rdd().id()
     )
-    # extract yields a non-DataFrame whose plan scan raises
-    poison = {"bad": object()}
-    runtime.register_shared_cache(poison, extract=lambda v: (v,))
-    try:
+    # a stored DataFrame whose plan scan raises
+    poison = spark.range(1)
+    poison._jdf = None
+    with monkeypatch.context() as m:
+        m.setitem(runtime._SHARED, ("poison",), poison)
         released = runtime.release_ephemeral(spark)
         assert released == []
         assert cp_id in _persistent_ids(spark)
-    finally:
-        runtime._SHARED_CACHES[:] = [
-            (c, e) for c, e in runtime._SHARED_CACHES if c is not poison
-        ]
     # with the poison gone the same checkpoint is released normally
     assert cp_id in runtime.release_ephemeral(spark)
 
@@ -105,3 +109,47 @@ def test_ephemeral_checkpoints_do_not_accumulate(spark, sf_dir):
     for k in jmap.keySet().toArray():
         if int(k) in leftover:
             assert not jmap.get(k).rdd().checkpointData().isDefined()
+
+
+def _writable_sf0001(sf_dir, tmp_path) -> str:
+    """A private, writable copy of the sf0.001 dataset next to ``sf_dir``."""
+    src = Path(sf_dir).parent / "sf0.001"
+    for t in TABLE_NAMES:
+        shutil.copyfile(src / f"{t}.parquet", tmp_path / f"{t}.parquet")
+    return str(tmp_path)
+
+
+def _keep_even(sf: str, table: str, col: str) -> None:
+    """Rewrite ``table`` in place with only the rows whose ``col`` is even
+    (a new size, so a new source stamp)."""
+    path = f"{sf}/{table}.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t[col], 1), 0)), path)
+
+
+def test_lsh_index_follows_rewritten_embeddings(spark, sf_dir, tmp_path):
+    # The persisted LSH tables are keyed by the embeddings stamp: after an
+    # in-place rewrite the query must answer for the new file, not serve
+    # the index built from the old one.
+    sf = _writable_sf0001(sf_dir, tmp_path)
+    spec = registry.load_all()["vec_ann_lsh"]
+    spec.fn(spark, sf).toPandas()
+    _keep_even(sf, "embeddings", "vec_id")
+    got = spec.fn(spark, sf).toPandas()
+    con = duck_connect(sf)
+    want = con.execute(spec.oracle).df()
+    con.close()
+    problems = compare("vec_ann_lsh", got, want)
+    assert not problems, "; ".join(problems)
+
+
+def test_rewritten_source_unpins_superseded_checkpoints(spark, sf_dir, tmp_path):
+    # A new lineitem stamp evicts the graph tables built from the old one,
+    # so their checkpoints stop being protected: the protected set must
+    # not grow when the same query reruns on the rewritten table.
+    sf = _writable_sf0001(sf_dir, tmp_path)
+    _run(spark, sf, "graph_degree")
+    before = runtime.protected_rdd_ids()
+    _keep_even(sf, "lineitem", "l_orderkey")
+    _run(spark, sf, "graph_degree")
+    assert len(runtime.protected_rdd_ids()) <= len(before)

@@ -1,14 +1,20 @@
-"""Like stage_probe, but reports executorCpuTime (ms) alongside runTime —
-on a box with ambient hypervisor throttling, runTime overstates task cost
-by the wait factor; CPU is the honest per-stage cost. Usage:
+"""Per-stage diagnostic: run registered queries through the noop sink and
+print, per query, its wall time, stage count and total executor CPU, then
+each new stage's (numTasks, executorRunTime, executorCpuTime) from the UI
+REST API. Single-task stages with large run time = single-input-split map
+stages (guide §2.5). On a box with ambient hypervisor throttling, runTime
+overstates task cost by the wait factor; CPU is the honest per-stage
+cost. Uses the bench session confs but with the UI enabled (the probe is
+a diagnostic, not a bench). Usage:
 
-    python tools/cpu_probe.py [--sf DIR] q [q ...]
+    python tools/cpu_probe.py [--sf DIR] [--min-ms N] q [q ...]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 import urllib.request
@@ -17,9 +23,27 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from pyspark.sql import SparkSession  # noqa: E402
+
 from insight_patents_spark import registry  # noqa: E402
 from insight_patents_spark.runtime import release_ephemeral  # noqa: E402
-from tools.stage_probe import probe_session  # noqa: E402
+
+
+def probe_session() -> SparkSession:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return (
+        SparkSession.builder.appName("ips-stage-probe")
+        .master(f"local[{cpus}]")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.shuffle.partitions", "64")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.ui.enabled", "true")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .getOrCreate()
+    )
 
 
 def stage_cpu_rows(spark):
@@ -35,7 +59,7 @@ def stage_cpu_rows(spark):
             s["numTasks"],
             s.get("executorRunTime", 0),
             s.get("executorCpuTime", 0) // 1_000_000,
-            s.get("name", "")[:60],
+            s.get("name", "")[:70],
         )
         for s in data
         if s.get("status") in ("COMPLETE", "ACTIVE")
