@@ -40,6 +40,8 @@ from insight_patents_spark import registry  # noqa: E402
 from insight_patents_spark.runtime import release_ephemeral  # noqa: E402
 from insight_patents_spark.session import get_spark  # noqa: E402
 
+_GC_EVERY = 25  # queries between forced JVM GCs (see main's hygiene note)
+
 
 def _execute(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -101,11 +103,7 @@ def main() -> None:
     # under — so r11+ maps are a NEW BASELINE, not directly comparable
     # with r1-r10 maps except one-sidedly (r11+ rows can only be equal
     # or faster for the same plan; ADVICE r11). Cross-round deltas
-    # should compare r11+ against r11+; to reproduce the old conditions
-    # set IPS_BENCH_RELEASE=0. Bisect knobs (attribution experiments
-    # only; both default ON):
-    _GC_EVERY = int(os.environ.get("IPS_BENCH_GC_EVERY", "25"))  # 0 = off
-    _RELEASE = os.environ.get("IPS_BENCH_RELEASE", "1") != "0"
+    # should compare r11+ against r11+.
     for i, name in enumerate(names):
         t0 = time.time()
         try:
@@ -115,9 +113,8 @@ def main() -> None:
             timings[name] = -1.0
             print(f"# BENCH ERROR {name}: {type(e).__name__}: {str(e)[:200]}",
                   file=sys.stderr)
-        if _RELEASE:
-            release_ephemeral(spark)
-        if _GC_EVERY and (i + 1) % _GC_EVERY == 0:
+        release_ephemeral(spark)
+        if (i + 1) % _GC_EVERY == 0:
             spark.sparkContext._jvm.System.gc()
 
     # Contention stabilization (VERDICT r8 #6, symmetric since r10 per

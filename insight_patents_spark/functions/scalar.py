@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from ..sources.tables import load
+from .stable import tokens
 
 
 @query(
@@ -172,7 +173,7 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     Array-valued intermediates are serialized with '|' joins before they
     reach the result: the driver's value-hash canonicalizer cannot
     hash/sort list cells (round-1 agg_collect failure)."""
-    d = load(spark, sf_dir, "documents").withColumn("tokens", F.split("text", " "))
+    d = load(spark, sf_dir, "documents").withColumn("tokens", tokens())
     return d.select(
         "doc_id",
         F.size("tokens").cast("bigint").alias("n_tokens"),
@@ -206,9 +207,7 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode tokens with position (0-based in Spark; oracle shifts)."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    return d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    )
+    return d.select("doc_id", F.posexplode(tokens()).alias("pos", "token"))
 
 
 @query(

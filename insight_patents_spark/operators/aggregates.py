@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import davg, dsum, sql_davg, sql_dsum
+from ..functions.stable import davg, dsum, hex_int, sql_davg, sql_dsum
 from ..registry import query
 from ..sources.tables import load
 
@@ -455,7 +455,7 @@ def _cms_cell_spark(j_col: F.Column, key_col: F.Column) -> F.Column:
     the cross-engine-stable hash of the determinism contract (SURVEY §5);
     two hex digits give 0..255, and 256 % 64 == 0 keeps the mod uniform."""
     h = F.md5(F.concat_ws(":", j_col, key_col))
-    return (F.conv(F.substring(h, 1, 2), 16, 10).cast("int") % _CMS_W).alias("cell")
+    return (hex_int(h, 2).cast("int") % _CMS_W).alias("cell")
 
 
 _CMS_CELL_SQL = """
@@ -1119,11 +1119,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     an eighth of one scan, the verify pass aggregates a 20-key subset, and no
     per-key state ever exceeds the candidate list."""
     e = load(spark, sf_dir, "events")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 1), 16, 10)
-        .cast("int")
-        % 10
-    )
+    bucket = hex_int(F.md5(F.col("event_id").cast("string")), 1).cast("int") % 10
     samp = (
         e.filter(bucket == 0)
         .groupBy("user_id")
@@ -2823,21 +2819,16 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("bs:"),
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        hex_int(
+            F.md5(
+                F.concat(
+                    F.lit("bs:"),
+                    F.col("event_id").cast("string"),
+                    F.lit(":"),
+                    F.col("b").cast("string"),
+                )
             ),
-            16,
-            10,
+            12,
         ).cast("double")
         / float(16**12)
     )
@@ -3079,6 +3070,14 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DID_SPLIT = "2024-01-16"  # fixed calendar pre/post boundary
 
 
+def _treated() -> F.Column:
+    """Treatment arm of the causal estimators: the parity of the first two
+    hex digits of md5('t:' || user_id), as each oracle spells out."""
+    return (
+        hex_int(F.md5(F.concat(F.lit("t:"), F.col("user_id").cast("string"))), 2) % 2
+    ).alias("treated")
+
+
 @query(
     "agg_causal_did",
     # Difference-in-differences per event_type: treatment = md5(user)
@@ -3149,18 +3148,7 @@ def agg_causal_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly this plan."""
     e = load(spark, sf_dir, "events").select(
         "event_type",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("t:"), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("treated"),
+        _treated(),
         F.when(
             F.col("ts").cast("date") < F.lit(_DID_SPLIT).cast("date"), 0
         )
@@ -3316,22 +3304,7 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum(F.when(~pre, cents)), F.lit(0))
         .cast("bigint")
         .alias("y"),
-    ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("t:"), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("treated"),
-        "x",
-        "y",
-    )
+    ).select(_treated(), "x", "y")
     xd = F.col("x").cast("decimal(38,0)")
     yd = F.col("y").cast("decimal(38,0)")
     g = u.agg(
@@ -3704,22 +3677,7 @@ def agg_delta_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("y"),
-    ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("t:"), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("treated"),
-        "x",
-        "y",
-    )
+    ).select(_treated(), "x", "y")
     xd = F.col("x").cast("decimal(38,0)")
     yd = F.col("y").cast("decimal(38,0)")
     g = u.groupBy("treated").agg(
@@ -4135,20 +4093,7 @@ def agg_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     run. The decision comparison uses the unrounded double of exact
     ints against a literal — identical in both engines."""
     e = load(spark, sf_dir, "events")
-    u = e.select("user_id").distinct().select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("t:"), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("treated")
-    )
+    u = e.select("user_id").distinct().select(_treated())
     g = u.agg(
         F.sum(F.when(F.col("treated") == 1, 1).otherwise(0))
         .cast("bigint")

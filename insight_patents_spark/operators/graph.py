@@ -28,8 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import hex_int
 from ..registry import query
 from ..runtime import shared
+from ..session import conf_scope
 from ..sources.tables import load
 
 MIN_SUPPORT = 2
@@ -348,6 +350,14 @@ def _cc_oracle() -> str:
     return sql + f"\n    SELECT node, lbl AS component FROM l{CC_MAX_ROUNDS}"
 
 
+# Workaround (Spark 4.1.2): Union constraint rewriting throws
+# NoSuchElementException when a checkpointed self-joined label table feeds
+# the next round's union; constraints buy nothing in these loops (joins
+# are on exact keys over tiny tables), so the loops below run their
+# checkpoints inside conf_scope(spark, _NO_CONSTRAINTS).
+_NO_CONSTRAINTS = {"spark.sql.constraintPropagation.enabled": "false"}
+
+
 @query("graph_cc", oracle=_cc_oracle())
 def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by min-label propagation to fixpoint
@@ -355,17 +365,8 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     second round; localCheckpoint at each jump truncates lineage so the
     plan stays flat however many rounds run."""
     edges = _edges(spark, sf_dir).select("src", "dst")
-    # Workaround (Spark 4.1.2): Union constraint rewriting throws
-    # NoSuchElementException when a checkpointed self-joined label table
-    # feeds the next round's union; constraints buy nothing in this loop
-    # (joins are on exact keys over tiny tables), so disable propagation
-    # while the loop's checkpoints execute, restoring afterwards.
-    prev_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
+    with conf_scope(spark, _NO_CONSTRAINTS):
         return _cc_loop(edges)
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
 
 
 def _cc_loop(
@@ -1245,22 +1246,17 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for t in range(1, WALK_STEPS + 1):
         pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("start").cast("string"),
-                            F.lit(":"),
-                            F.col("cur").cast("string"),
-                            F.lit(f":{t}"),
-                        )
-                    ),
-                    1,
-                    8,
+            hex_int(
+                F.md5(
+                    F.concat(
+                        F.col("start").cast("string"),
+                        F.lit(":"),
+                        F.col("cur").cast("string"),
+                        F.lit(f":{t}"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("bigint")
+                8,
+            )
             % F.col("deg")
             + 1
         )
@@ -1479,16 +1475,12 @@ def _louvain_level(spark: SparkSession, e: DataFrame) -> DataFrame:
     medges = mv.select(F.col("node").alias("src"), F.col("tgt").alias("dst")).unionByName(
         mv.select(F.col("tgt").alias("src"), F.col("node").alias("dst"))
     )
-    prev_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
+    with conf_scope(spark, _NO_CONSTRAINTS):
         cc = _cc_loop(
             medges.localCheckpoint(),
             max_rounds=_LOUVAIN_CC_ROUNDS,
             tag="graph_louvain_move",
         )
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
     lab = (
         deg.select(F.col("src").alias("node"), "k")
         .join(cc, "node", "left")
@@ -2076,17 +2068,13 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per node) is schedule-independent, so parallelism never changes the
     answer."""
     edges0 = _scc_edges(spark, sf_dir)
-    prev_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
+    with conf_scope(spark, _NO_CONSTRAINTS):
         nodes = (
             edges0.select(F.col("src").alias("node"))
             .unionByName(edges0.select(F.col("dst").alias("node")))
             .distinct()
         )
         return _scc_peel(nodes, edges0)
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
 
 
 def _both_roles(edges: DataFrame) -> DataFrame:
@@ -2148,11 +2136,8 @@ def _scc_peel(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     ecnt = edges.count()
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     loop_parts = max(1, min(sess_parts, ecnt // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         return _scc_peel_rounds(all_nodes, edges, ecnt)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
 
 
 def _scc_peel_rounds(

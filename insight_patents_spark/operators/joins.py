@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions.stable import dsum, sql_dsum
+from ..functions.stable import dsum, hex_int, sql_dsum
 from ..registry import query
+from ..session import conf_scope
 from ..sources.tables import load
 
 
@@ -580,20 +581,11 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan gate: tests/test_plans.py asserts the executed plan carries the
     `skew=true` sort-merge marker and that no broadcast join swallowed
     the exhibit."""
-    old = {k: spark.conf.get(k, None) for k in _AQE_SKEW_CONFS}
-    for k, v in _AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, _AQE_SKEW_CONFS):
         # materialize the JOIN under the skew confs (the rollup after it
         # re-shuffles on grp anyway, so splitting the join partition is
         # legal and AQE takes it)
         joined = _skew_join_frame(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return joined.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(22,6)"))
@@ -881,6 +873,12 @@ _GEO_LON_CELL = 100_000  # 10 degrees, in 1e-4-degree units
 _GEO_R2 = 45_000**2  # 4.5 degrees (≈500 km N-S) squared, in units²
 
 
+def _geo_h(prefix: str, key: str = "c_custkey") -> F.Column:
+    """Synthetic coordinate seed of the geo queries: the first 8 hex
+    digits of md5(prefix || key) as a bigint, as each oracle spells out."""
+    return hex_int(F.md5(F.concat(F.lit(prefix), F.col(key).cast("string"))), 8)
+
+
 @query(
     "geo_grid_join",
     # Spatial neighbor join via grid bucketing (the Sedona/PostGIS
@@ -943,21 +941,10 @@ def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integer arithmetic — no division whose floor/truncate
     semantics could differ between engines."""
     c = load(spark, sf_dir, "customer")
-    h = lambda p: (  # noqa: E731
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(p), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    )
     pts = c.select(
         F.col("c_custkey").alias("id"),
-        (h("lat") % 1200001 - 600000).alias("lat"),
-        (h("lon") % 3600001 - 1800000).alias("lon"),
+        (_geo_h("lat") % 1200001 - 600000).alias("lat"),
+        (_geo_h("lon") % 3600001 - 1800000).alias("lon"),
     )
     cells = pts.select(
         "id",
@@ -1098,21 +1085,10 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production polygon sets partition edges by the geo_grid_join cells
     first (R-tree-lite) so each point only meets nearby edges."""
     c = load(spark, sf_dir, "customer")
-    h = lambda p: (  # noqa: E731
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(p), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    )
     pts = c.select(
         F.col("c_custkey").alias("id"),
-        (h("lon") % 3600001 - 1800000).alias("px"),
-        (h("lat") % 1200001 - 600000).alias("py"),
+        (_geo_h("lon") % 3600001 - 1800000).alias("px"),
+        (_geo_h("lat") % 1200001 - 600000).alias("py"),
     )
     edge_rows = [
         (pid, *ring[i], *ring[(i + 1) % len(ring)])
@@ -1192,22 +1168,11 @@ def geo_cell_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     size the smoothing cost is grid-bound; finer kernels widen the
     scatter stencil, nothing else."""
     c = load(spark, sf_dir, "customer")
-    h = lambda p: (  # noqa: E731
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(p), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    )
     pts = c.select(
-        F.floor((h("lat") % 1200001 - 600000) * 1.0 / _GEO_LAT_CELL)
+        F.floor((_geo_h("lat") % 1200001 - 600000) * 1.0 / _GEO_LAT_CELL)
         .cast("bigint")
         .alias("cy"),
-        F.floor((h("lon") % 3600001 - 1800000) * 1.0 / _GEO_LON_CELL)
+        F.floor((_geo_h("lon") % 3600001 - 1800000) * 1.0 / _GEO_LON_CELL)
         .cast("bigint")
         .alias("cx"),
     )
@@ -1318,19 +1283,10 @@ def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     s = load(spark, sf_dir, "supplier")
 
-    def h(prefix: str, key: str) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col(key).cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
     probes = s.select(
         F.col("s_suppkey").alias("probe_id"),
-        (h("plat", "s_suppkey") % 1200001 - 600000).alias("plat"),
-        (h("plon", "s_suppkey") % 3600001 - 1800000).alias("plon"),
+        (_geo_h("plat", "s_suppkey") % 1200001 - 600000).alias("plat"),
+        (_geo_h("plon", "s_suppkey") % 3600001 - 1800000).alias("plon"),
     ).toPandas()
     bc = spark.sparkContext.broadcast(
         (
@@ -1365,8 +1321,8 @@ def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     items = c.select(
         F.col("c_custkey").alias("item_id"),
-        (h("lat", "c_custkey") % 1200001 - 600000).alias("lat"),
-        (h("lon", "c_custkey") % 3600001 - 1800000).alias("lon"),
+        (_geo_h("lat") % 1200001 - 600000).alias("lat"),
+        (_geo_h("lon") % 3600001 - 1800000).alias("lon"),
     ).repartition(spark.sparkContext.defaultParallelism)
     part = items.mapInPandas(
         part_topk, "probe_id bigint, d2q bigint, item_id bigint"
@@ -1479,22 +1435,9 @@ def geo_cluster_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     10⁹ points only the first agg grows."""
     c = load(spark, sf_dir, "customer")
 
-    def h(prefix: str) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit(prefix), F.col("c_custkey").cast("string"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
     pts = c.select(
-        (h("lat") % 1200001 - 600000).alias("lat"),
-        (h("lon") % 3600001 - 1800000).alias("lon"),
+        (_geo_h("lat") % 1200001 - 600000).alias("lat"),
+        (_geo_h("lon") % 3600001 - 1800000).alias("lon"),
     )
     cells = pts.groupBy(
         F.floor(F.col("lat") / _GEO_LAT_CELL).cast("bigint").alias("cy"),

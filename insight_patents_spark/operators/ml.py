@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import hex_int, tokens
 from ..registry import query
 from ..sources.tables import load
-from .text import _tokens
 
 _LR_BUCKETS = 16  # hashed feature width (production: 2^18+)
 _LR_BIAS_CENTI = -20  # intercept, in 1/100 units like the weights
@@ -41,12 +41,7 @@ def _lr_bucket() -> F.Column:
     chars -> bigint mod _LR_BUCKETS. The ONE definition every ml.py
     scorer shares (its SQL twin is inlined in each oracle) — the hashed
     model is a pure expression, so "the model" IS this pair of helpers."""
-    return (
-        F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10).cast(
-            "bigint"
-        )
-        % _LR_BUCKETS
-    )
+    return hex_int(F.md5(F.col("token")), 8) % _LR_BUCKETS
 
 
 def _lr_w_centi() -> F.Column:
@@ -54,15 +49,7 @@ def _lr_w_centi() -> F.Column:
     integer in [-50, 50] — so per-doc dot products are exact bigint sums
     in both engines (the float enters once, at the final division)."""
     return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("w"), F.col("bucket").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        hex_int(F.md5(F.concat(F.lit("w"), F.col("bucket").cast("string"))), 4)
         % 101
         - 50
     )
@@ -117,7 +104,7 @@ def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     is quadratic, nothing shuffles except the two doc_id aggs (which
     share partitioning)."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     # weight(bucket) in centi-units: md5-derived int in [-50, 50]
     w_centi = _lr_w_centi()
@@ -192,7 +179,7 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream."""
     d = load(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", "lang", F.explode(_tokens()).alias("token")
+        "doc_id", "lang", F.explode(tokens()).alias("token")
     )
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
@@ -289,7 +276,7 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ml_lr_inference (stateless, no weight
     table) plus a broadcast-sized label join and a 4-cell aggregate."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -412,7 +399,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction) — no collect_list of scores, no per-bin sort, at any
     corpus size."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -528,7 +515,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     on 10⁹ scored documents. Swapping in a real model score only
     changes the bin expression."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", "source", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", "source", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.min("source").alias("source"),
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
@@ -616,7 +603,7 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic cross-multiplies exact int64 counts (cum_pos·tot_n
     stays < 2⁶³ up to 3·10⁹ rows) — no intermediate ratios."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")
@@ -716,12 +703,7 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid only. The total is a window sum of nano-quantized 9dp terms —
     exact int64, order-independent under any partitioning."""
     d = load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    part = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % 2
-    )
+    part = hex_int(F.md5(F.col("doc_id").cast("string")), 8) % 2
     halves = d.select(
         (F.length(F.bin(F.col("n_chars"))) - 1).cast("bigint").alias("bucket"),
         part.alias("part"),
@@ -835,21 +817,16 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "value",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("user_id").cast("string"),
-                            F.lit(":"),
-                            F.col("event_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
+            hex_int(
+                F.md5(
+                    F.concat(
+                        F.col("user_id").cast("string"),
+                        F.lit(":"),
+                        F.col("event_id").cast("string"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("bigint")
+                8,
+            )
             % 4
         ).alias("rel"),
     )
@@ -961,7 +938,7 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, cumulative windows over ≤101 rows. The corpus is never
     sorted by score."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")
@@ -1075,7 +1052,7 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ≤101-row grid → one tiny argmax aggregate. Corpus never sorted,
     never rescanned."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")
@@ -1202,7 +1179,7 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     two cumulative windows (ascending for V10, descending for V01),
     one tiny moment aggregate. The corpus is never ranked."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")
@@ -1320,7 +1297,7 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows on the cell grid. Nothing scales with the corpus after the
     first agg."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -1447,7 +1424,7 @@ def ml_group_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit is the inference pipeline + ONE (source) hash agg + windows
     over the |groups|-row grid — corpus scanned once, nothing sorted."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -1587,7 +1564,7 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows on the cell grid — identical topology to ml_ece; nothing
     after the first agg scales with the corpus."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -1752,7 +1729,7 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket domain never leaves a broadcast. Nothing is per-doc after
     the first agg."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     c = (
         tok.select("doc_id", bucket.alias("bucket"))
@@ -1989,7 +1966,7 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows on the (3 x grid) cross — identical cost to ml_pr_curve
     regardless of corpus size."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")
@@ -2124,7 +2101,7 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined 1-row overall frame — auditing 10^9 decisions costs
     one corpus scan."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
     bucket = _lr_bucket()
     w_centi = _lr_w_centi()
     c = (
@@ -2279,7 +2256,7 @@ def ml_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus collapses to the bin grid in one hash agg; everything after
     is corpus-size-free."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(_tokens()).alias("token"))
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
     per_doc = tok.groupBy("doc_id").agg(
         F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
         .cast("bigint")

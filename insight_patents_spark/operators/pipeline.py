@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import hex_int, tokens
 from ..registry import query
 from ..sources.tables import load
 from .graph import MIN_SUPPORT, PAGERANK_ITERS, RANK_SCALE, pagerank_loop, pagerank_rounds_sql
@@ -268,7 +269,7 @@ def _llm_curation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", clean_text_expr().alias("ct"))
         .repartition(sh_parts(spark))
     )
-    t = base.withColumn("toks", F.split("ct", " ")).filter(
+    t = base.withColumn("toks", tokens("ct")).filter(
         F.size("toks") >= _LLM_MIN_TOKENS
     )
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -371,15 +372,9 @@ def _llm_curation_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("cn")
     )
     mn = cls.agg(F.min("cn").alias("m"))
-    u48 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("llmbal:"), F.col("doc_id").cast("string"))),
-            1,
-            12,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u48 = hex_int(
+        F.md5(F.concat(F.lit("llmbal:"), F.col("doc_id").cast("string"))), 12
+    )
     bal = (
         surv.join(F.broadcast(cls), "lang")
         .crossJoin(F.broadcast(mn))

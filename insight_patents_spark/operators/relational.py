@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.stable import hex_int
 from ..registry import query
+from ..session import conf_scope
 from ..sources.tables import load
 
 # Stable temp root for format round-trips; content is derived purely from
@@ -585,11 +587,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, fully pushdown-friendly, identical row selection at any
     scale or partitioning."""
     d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10)
-        .cast("int")
-        % 10
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 2).cast("int") % 10
     keep = F.when(F.col("lang") == "en", F.lit(2)).otherwise(F.lit(5))
     return (
         d.withColumn("bucket", bucket)
@@ -840,9 +838,7 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.lit(False).alias("rewritten"), "o_orderstatus"
     )
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "F")
@@ -851,8 +847,6 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderstatus")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.groupBy(
         F.col("o_orderstatus").cast("string").alias("o_orderstatus")
@@ -946,11 +940,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     means membership survives repartitioning and incremental appends —
     the property per-row rand() lacks once row order changes."""
     d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 100
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 8) % 100
     return d.select(
         "doc_id",
         bucket.alias("bucket"),
@@ -1074,16 +1064,9 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("c"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ws:"), F.col("event_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("double")
-        / float(16**12)
-    )
+    u = hex_int(
+        F.md5(F.concat(F.lit("ws:"), F.col("event_id").cast("string"))), 12
+    ).cast("double") / float(16**12)
     # weight clamped to >= 1 cent: sf0.1 contains value = 0.00 events,
     # and u^(1/0) divides by zero under ANSI mode (bench r4 discovery)
     pri = F.round(
@@ -1188,10 +1171,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in filters}
-    for k, v in filters.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, filters):
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
         o = load(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -1214,12 +1194,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the whole join a second time). 1-row result: checkpoint cost
         # is nil.
         return out.localCheckpoint()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(
@@ -1788,15 +1762,9 @@ def dq_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("event_id").cast("string")), 1, 4),
-                16,
-                10,
-            ).cast("bigint")
-            % 10
-            == 0
-        ).alias("is_missing"),
+        (hex_int(F.md5(F.col("event_id").cast("string")), 4) % 10 == 0).alias(
+            "is_missing"
+        ),
     )
     med = (
         flagged.filter(~F.col("is_missing"))
@@ -2193,13 +2161,7 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     cls = d.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     mn = cls.agg(F.min("n").alias("m"))
-    u48 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("bal:"), F.col("doc_id").cast("string"))), 1, 12
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u48 = hex_int(F.md5(F.concat(F.lit("bal:"), F.col("doc_id").cast("string"))), 12)
     keep = (
         d.join(F.broadcast(cls), "lang")
         .crossJoin(F.broadcast(mn))

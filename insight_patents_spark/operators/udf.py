@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.stable import py_tokens
 from ..registry import query
 from ..sources.tables import load
 
@@ -211,7 +212,7 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="pos: bigint, token: string, token_len: bigint")
     class Tokenize:
         def eval(self, text: str):
-            for i, tok in enumerate(text.split(" ")):
+            for i, tok in enumerate(py_tokens(text)):
                 yield i, tok, len(tok)
 
     spark.udtf.register("ips_tokenize", Tokenize)

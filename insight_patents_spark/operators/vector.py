@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import hex_int
 from ..registry import query
 from ..runtime import shared
 from ..sources.tables import load
@@ -743,21 +744,21 @@ def _planes_sql(occupancy: int, lo: int, hi: int) -> str:
     )
 
 
-def _plane_weights(n_planes: int) -> list[list[float]]:
-    """Deterministic 'random' hyperplanes: weight[p][j] derives from hex
-    digit j of md5(f'{p}:{j//32}') exactly as DuckDB's md5 reproduces it
-    — the planes are part of the cross-engine contract, not a seed-time
-    accident."""
+def _md5_digit_row(tag: str) -> list[float]:
+    """One md5-derived weight row: the hex digits of md5(f'{tag}:0') ‖
+    md5(f'{tag}:1'), cut to _DIM, each minus 7.5. The oracles rebuild it
+    digit by digit with strpos('0123456789abcdef', substr(md5(...))), so
+    every plane and rotation below is part of the cross-engine contract,
+    not a seed-time accident."""
     import hashlib
 
-    planes = []
-    for p in range(n_planes):
-        halves = [
-            hashlib.md5(f"{p}:{h}".encode()).hexdigest() for h in (0, 1)
-        ]
-        digits = "".join(halves)
-        planes.append(["0123456789abcdef".index(d) - 7.5 for d in digits[:_DIM]])
-    return planes
+    digits = "".join(hashlib.md5(f"{tag}:{h}".encode()).hexdigest() for h in (0, 1))
+    return [int(d, 16) - 7.5 for d in digits[:_DIM]]
+
+
+def _plane_weights(n_planes: int) -> list[list[float]]:
+    """Deterministic 'random' hyperplanes: row p is _md5_digit_row(f'{p}')."""
+    return [_md5_digit_row(f"{p}") for p in range(n_planes)]
 
 
 # Shared by vec_ann_lsh and vec_rerank_stub (the rerank consumes the
@@ -1402,20 +1403,10 @@ def _bucket_pairs_topk(b: DataFrame, k: int = 3) -> DataFrame:
 
 
 def _multi_table_planes(planes_per_table: int) -> list[list[list[float]]]:
-    """L independent plane sets for multi-table LSH; weight digits derive
-    from md5(f'{t}:{p}:{half}') so DuckDB rebuilds identical tables."""
-    import hashlib
-
+    """L independent plane sets for multi-table LSH: plane p of table t
+    is _md5_digit_row(f'{t}:{p}')."""
     return [
-        [
-            [
-                "0123456789abcdef".index(d) - 7.5
-                for d in "".join(
-                    hashlib.md5(f"{t}:{p}:{h}".encode()).hexdigest() for h in (0, 1)
-                )[:_DIM]
-            ]
-            for p in range(planes_per_table)
-        ]
+        [_md5_digit_row(f"{t}:{p}") for p in range(planes_per_table)]
         for t in range(_N_TABLES)
     ]
 
@@ -1502,25 +1493,11 @@ def vec_ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cp_rotations() -> list[list[list[float]]]:
-    """L pseudo-rotation matrices (D×D) for cross-polytope LSH; row j of
-    table t derives from md5(f'cp{t}:{j}:{half}') digit-by-digit exactly
-    as the oracle's strpos(md5(...)) rebuild, so the rotations are part
-    of the cross-engine contract (same derivation idiom as
-    _multi_table_planes, 'cp' prefix keeps the families independent)."""
-    import hashlib
-
+    """L pseudo-rotation matrices (D×D) for cross-polytope LSH: row j of
+    table t is _md5_digit_row(f'cp{t}:{j}') (the 'cp' prefix keeps the
+    family independent of _multi_table_planes)."""
     return [
-        [
-            [
-                "0123456789abcdef".index(d) - 7.5
-                for d in "".join(
-                    hashlib.md5(f"cp{t}:{j}:{h}".encode()).hexdigest()
-                    for h in (0, 1)
-                )[:_DIM]
-            ]
-            for j in range(_DIM)
-        ]
-        for t in range(_N_TABLES)
+        [_md5_digit_row(f"cp{t}:{j}") for j in range(_DIM)] for t in range(_N_TABLES)
     ]
 
 
@@ -3711,11 +3688,7 @@ def sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.5) / F.col("n")
         + F.lit(0.5) * (F.col("d2n").cast("double") / F.col("tot").cast("double"))
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 6), 16, 10)
-        .cast("bigint")
-        + 0.5
-    ) / F.lit(16777216.0)
+    u = (hex_int(F.md5(F.col("vec_id").cast("string")), 6) + 0.5) / F.lit(16777216.0)
     keyed = d.crossJoin(F.broadcast(tot)).select(
         "vec_id",
         F.round(qx, 9).cast("double").alias("q"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import tokens
 from ..registry import query
 from ..sources.tables import load
 
@@ -1254,10 +1255,8 @@ def win_skyline_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select(
             "doc_id",
-            F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),
-            F.size(F.array_distinct(F.split("text", " ")))
-            .cast("bigint")
-            .alias("n_uniq"),
+            F.size(tokens()).cast("bigint").alias("n_tok"),
+            F.size(F.array_distinct(tokens())).cast("bigint").alias("n_uniq"),
             F.length("text").cast("bigint").alias("len_c"),
             F.pmod(
                 F.crc32(F.col("doc_id").cast("string")), _SKY3_BUCKETS

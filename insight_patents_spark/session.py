@@ -17,6 +17,8 @@ Design notes (100 TB target, SURVEY §7):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -50,3 +52,20 @@ def configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set runtime confs for the body of a ``with`` block; on exit each key
+    gets its earlier value back, or is unset if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..runtime import shared
+from ..session import conf_scope
 from ..sources.tables import load
 
 # Streaming scratch (checkpoints + the µs-converted source copy). A
@@ -99,10 +100,10 @@ def _read_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint at stream start (we always start fresh). Each partition is a
 # state-store instance with its own snapshot/commit files, so on small/medium
 # key cardinality fewer, larger stores win; on a real cluster raise this to
-# O(executor cores) via the env knob. (r4: measured 8 -> 4 saves ~0.5 s of
-# per-query store setup at sf0.1 with no task-parallelism loss at this key
-# cardinality; 2 measures the same as 4, so 4 keeps headroom.)
-_STREAM_STATE_PARTITIONS = int(os.environ.get("IPS_STREAM_STATE_PARTITIONS", "4"))
+# O(executor cores). (r4: measured 8 -> 4 saves ~0.5 s of per-query store
+# setup at sf0.1 with no task-parallelism loss at this key cardinality; 2
+# measures the same as 4, so 4 keeps headroom.)
+_STREAM_STATE_PARTITIONS = 4
 
 
 def _run_available_now(
@@ -118,12 +119,8 @@ def _run_available_now(
     import shutil
 
     shutil.rmtree(ckpt, ignore_errors=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(state_partitions or _STREAM_STATE_PARTITIONS),
-    )
-    try:
+    parts = str(state_partitions or _STREAM_STATE_PARTITIONS)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": parts}):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -133,8 +130,6 @@ def _run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)
 
 
@@ -748,20 +743,14 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(provider_key, None)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
+        rocksdb = {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        }
+        with conf_scope(spark, rocksdb):
             out = _run_available_now(result, "ips_stream_tws", mode="update")
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
     else:
         from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -1414,7 +1403,7 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
 # on the last batch of the standard run, so the pass is exercised by the
 # gate, not only by tests). At 100 TB the store is Delta/Iceberg and this
 # is OPTIMIZE/rewrite_data_files on a schedule.
-_DEDUP_STORE_MAX_FILES = int(os.environ.get("IPS_DEDUP_STORE_MAX_FILES", "3"))
+_DEDUP_STORE_MAX_FILES = 3
 
 
 def _dedup_store_committed(store: str) -> set[int]:

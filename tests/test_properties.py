@@ -10149,3 +10149,82 @@ def test_cosine_topk_drops_null_labels_like_oracle(spark, sf_dir, tmp_path):
     assert not set(null_ids) & (set(got["vec_id"]) | set(got["neighbor_id"]))
     problems = compare("vec_cosine_topk", got, want)
     assert not problems, "; ".join(problems)
+
+
+# Inputs of the determinism-contract tests: empty, ASCII, and multi-byte
+# UTF-8 text (md5 hashes the UTF-8 bytes in all three engines).
+_HASH_INPUTS = ["", "a", "table 42", "é", "日本語 テキスト", "\U0001f600 emoji"]
+
+
+def test_hex_int_matches_duckdb_and_python(spark):
+    """hex_int(md5(x), width, start) == DuckDB's
+    CAST('0x' || substr(md5(x), start, width) AS BIGINT) == Python's
+    int(md5(x).hexdigest()[start-1:start-1+width], 16), for every width
+    the contract allows; width 16 could pass 2^63 and must raise."""
+    import hashlib
+
+    import duckdb
+    import pandas as pd
+
+    from insight_patents_spark.functions.stable import hex_int
+
+    cases = [(w, s) for w in range(1, 16) for s in (1, 2, 9, 18)]
+    df = spark.createDataFrame(list(enumerate(_HASH_INPUTS)), "i int, x string")
+    got = {
+        r["i"]: r
+        for r in df.select(
+            "i", *[hex_int(F.md5("x"), w, s).alias(f"h{w}_{s}") for w, s in cases]
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(_HASH_INPUTS)), "x": _HASH_INPUTS}))
+    cols = ", ".join(
+        f"CAST('0x' || substr(md5(x), {s}, {w}) AS BIGINT) AS h{w}_{s}"
+        for w, s in cases
+    )
+    duck = {r[0]: r[1:] for r in con.execute(f"SELECT i, {cols} FROM t").fetchall()}
+    con.close()
+    for i, x in enumerate(_HASH_INPUTS):
+        digest = hashlib.md5(x.encode("utf-8")).hexdigest()
+        for k, (w, s) in enumerate(cases):
+            want = int(digest[s - 1 : s - 1 + w], 16)
+            assert got[i][f"h{w}_{s}"] == duck[i][k] == want, (x, w, s)
+    with pytest.raises(ValueError):
+        hex_int(F.md5(F.lit("x")), 16)
+
+
+def test_tokens_match_duckdb_string_split_and_py_tokens(spark):
+    """tokens(), DuckDB string_split(x, ' ') and py_tokens agree on empty
+    strings, edge and double spaces, non-space whitespace and NULL."""
+    import duckdb
+    import pandas as pd
+
+    from insight_patents_spark.functions.stable import py_tokens, tokens
+
+    inputs = ["", " ", " a", "a ", "a  b", "a\xa0b", "a\tb", "　x y", None]
+    df = spark.createDataFrame(list(enumerate(inputs)), "i int, x string")
+    got = {r["i"]: r["t"] for r in df.select("i", tokens("x").alias("t")).collect()}
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(inputs)), "x": inputs}))
+    duck = dict(con.execute("SELECT i, string_split(x, ' ') FROM t").fetchall())
+    con.close()
+    for i, x in enumerate(inputs):
+        assert got[i] == duck[i] == py_tokens(x), repr(x)
+
+
+def test_md5_digit_row_matches_hashlib_nibbles():
+    """One row of each md5-derived weight family equals the nibbles of
+    md5(tag:0) ‖ md5(tag:1), cut to 64 and shifted by 7.5."""
+    import hashlib
+
+    from insight_patents_spark.operators import vector as V
+
+    def row(tag: str) -> list[float]:
+        raw = b"".join(hashlib.md5(f"{tag}:{h}".encode()).digest() for h in (0, 1))
+        nibbles = [n for byte in raw for n in (byte >> 4, byte & 15)]
+        return [n - 7.5 for n in nibbles[: V._DIM]]
+
+    assert V._DIM == 64
+    assert V._md5_digit_row("5") == V._plane_weights(6)[5] == row("5")
+    assert V._md5_digit_row("1:3") == V._multi_table_planes(4)[1][3] == row("1:3")
+    assert V._md5_digit_row("cp2:7") == V._cp_rotations()[2][7] == row("cp2:7")
