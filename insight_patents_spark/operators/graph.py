@@ -9,9 +9,12 @@ set bounded and meaningful as the fact table scales (~3.7k edges at both
 sf0.01 and sf0.1 — BASELINE.md risk item 3).
 
 Architecture (Pregel-on-dataflow, PAPERS.md VLDB'14): iterative
-algorithms are driver-side loops of join+aggregate with
-``localCheckpoint`` every few rounds to truncate lineage. No GraphX
-(no Python API) and no external jars — pure DataFrame ops.
+algorithms are driver-side loops of join+aggregate with a
+``localCheckpoint`` every round to truncate lineage. Loops that run to a
+fixpoint take their halt values (changed labels, surviving edges) from
+that checkpoint's own job via ``runtime.checkpoint`` — Pregelix's
+in-plan halt test, not a separate ``count()`` pass. No GraphX (no
+Python API) and no external jars — pure DataFrame ops.
 
 Determinism (SURVEY §5): PageRank runs a FIXED 10 iterations with rank
 state in exact int64 femto-units (RANK_SCALE) — every reduction is a
@@ -30,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..functions.stable import hex_int
 from ..registry import query
-from ..runtime import shared
+from ..runtime import checkpoint, shared
 from ..session import conf_scope
 from ..sources.tables import load
 
@@ -298,7 +301,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = _pairs(spark, sf_dir).select("pa", "pb").withColumn(
         "s", F.lit(0).cast("bigint")
     )
-    prev_n = cur.count()
+    prev_n = None  # a round that drops no edge recomputes the same supports
     for _ in range(_KTRUSS_MAX_ROUNDS):
         p1, p2, p3 = cur.alias("p1"), cur.alias("p2"), cur.alias("p3")
         tri = (
@@ -321,15 +324,13 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("pa", "pb")
             .agg(F.count(F.lit(1)).cast("bigint").alias("s"))
         )
-        cur = (
-            sup.filter(F.col("s") >= _KTRUSS_K - 2)
-            .select("pa", "pb", "s")
-            .localCheckpoint()
+        cur, seen = checkpoint(
+            sup.filter(F.col("s") >= _KTRUSS_K - 2).select("pa", "pb", "s"),
+            n=F.count(F.lit(1)),
         )
-        n = cur.count()
-        if n == prev_n:
+        if seen["n"] == prev_n:
             return cur.select("pa", "pb", F.col("s").alias("support"))
-        prev_n = n
+        prev_n = seen["n"]
     raise RuntimeError(
         f"graph_ktruss: no fixpoint within {_KTRUSS_MAX_ROUNDS} rounds "
         f"(raise _KTRUSS_MAX_ROUNDS and the oracle unroll together)"
@@ -353,7 +354,7 @@ def _cc_oracle() -> str:
 # Workaround (Spark 4.1.2): Union constraint rewriting throws
 # NoSuchElementException when a checkpointed self-joined label table feeds
 # the next round's union; constraints buy nothing in these loops (joins
-# are on exact keys over tiny tables), so the loops below run their
+# are on exact keys over tiny tables), so _min_label_loop runs its
 # checkpoints inside conf_scope(spark, _NO_CONSTRAINTS).
 _NO_CONSTRAINTS = {"spark.sql.constraintPropagation.enabled": "false"}
 
@@ -361,104 +362,85 @@ _NO_CONSTRAINTS = {"spark.sql.constraintPropagation.enabled": "false"}
 @query("graph_cc", oracle=_cc_oracle())
 def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by min-label propagation to fixpoint
-    (Pregel-style driver loop), accelerated by pointer jumping every
-    second round; localCheckpoint at each jump truncates lineage so the
-    plan stays flat however many rounds run."""
+    (Pregel-style driver loop) with pointer jumping every round;
+    localCheckpoint per round truncates lineage so the plan stays flat
+    however many rounds run."""
     edges = _edges(spark, sf_dir).select("src", "dst")
-    with conf_scope(spark, _NO_CONSTRAINTS):
-        return _cc_loop(edges)
-
-
-def _cc_loop(
-    edges: DataFrame,
-    max_rounds: int = CC_MAX_ROUNDS,
-    tag: str | None = None,
-) -> DataFrame:
-    """Min-label propagation with per-round pointer jumping.
-
-    ``max_rounds`` bounds the jumped rounds; callers whose ORACLE unrolls
-    fewer rounds than CC_MAX_ROUNDS pass their own bound plus a ``tag``:
-    with a tag set, a run that exhausts the bound WITHOUT reaching
-    fixpoint raises instead of returning unconverged labels (ADVICE r10:
-    otherwise a deeper-than-unroll graph makes the gate fail on the
-    oracle side silently — the engine must be the loud one)."""
-    converged = False
-    lbl = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    return _min_label_loop(nodes, edges, CC_MAX_ROUNDS, "graph_cc").select(
+        "node", F.col("lbl").alias("component")
     )
-    for round_no in range(1, max_rounds + 1):
-        propagated = (
-            lbl.join(edges, lbl.node == edges.src)
-            .select(F.col("dst").alias("node"), "lbl")
-        )
-        new_lbl = (
-            lbl.select("node", "lbl")
-            .unionByName(propagated)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        # Pointer-jump every round: lbl <- lbl(lbl). Every label is itself
-        # a node id of the same component (inner join always resolves), so
-        # the self-join collapses label-chain depth geometrically —
-        # fixpoint in O(log diameter) rounds instead of O(diameter). The
-        # fixpoint itself is schedule-independent (min label per
-        # component), so this equals the oracle's plain unrolled
-        # propagation. Checkpoint per round truncates lineage.
-        jumped = (
-            new_lbl.alias("x")
-            .join(
+
+
+def _min_label_loop(
+    nodes: DataFrame, edges: DataFrame, max_rounds: int, name: str
+) -> DataFrame:
+    """Min-label propagation along src→dst edges with pointer jumping,
+    to fixpoint: (node, lbl) with lbl(v) = min id over {v} ∪ the nodes
+    that reach v. On a symmetric edge list that is the min id of v's
+    component (graph_cc, graph_louvain_move's merge forest); on a
+    directed one, the min ancestor-or-self (graph_scc's color and
+    confirm steps).
+
+    Each round is propagate (union + min) then jump (lbl ← lbl(lbl)).
+    The jump is sound because lbl(v) is always an ancestor-or-self of
+    v, so the self-join always resolves and label chains collapse
+    geometrically; when ids run against edge direction the chain
+    collapses to self-pointing labels and a round advances the min one
+    hop, so the worst case is O(longest path) rounds, not O(log). The
+    fixpoint itself is schedule-independent (if some ancestor u had
+    u < lbl(v), labels are non-increasing along the u→v path, a
+    contradiction), so it equals every oracle's plain unrolled
+    propagation.
+
+    Halt test: the union's lbl rows carry ``prev = lbl`` and the
+    propagated rows NULL, so ``max(prev)`` is the node's old label and
+    the round's changed-label count is observed by its own checkpoint
+    job. The ONLY successful exit is an observed zero-change round; if
+    round ``max_rounds + 1`` still changes a label, the loop raises
+    rather than return labels the caller's oracle would not reach.
+    At a propagation fixpoint the jump is a no-op, and otherwise the
+    jump strictly lowers some label, so "zero change" is exactly
+    "propagation fixpoint"."""
+    spark = edges.sparkSession
+    lbl = nodes.select("node", F.col("node").alias("lbl"))
+    with conf_scope(spark, _NO_CONSTRAINTS):
+        for _ in range(max_rounds + 1):
+            propagated = lbl.join(edges, lbl["node"] == edges["src"]).select(
+                F.col("dst").alias("node"), "lbl", F.lit(None).alias("prev")
+            )
+            new_lbl = (
+                lbl.select("node", "lbl", F.col("lbl").alias("prev"))
+                .unionByName(propagated)
+                .groupBy("node")
+                .agg(F.min("lbl").alias("lbl"), F.max("prev").alias("prev"))
+            )
+            jumped = new_lbl.alias("x").join(
                 new_lbl.select(
                     F.col("node").alias("jn"), F.col("lbl").alias("jlbl")
                 ),
                 F.col("x.lbl") == F.col("jn"),
             )
-            .select(
-                F.col("x.node").alias("node"),
-                F.col("jlbl").alias("lbl"),
+            staged, seen = checkpoint(
+                jumped.select(
+                    F.col("x.node").alias("node"),
+                    F.col("jlbl").alias("lbl"),
+                    F.col("x.prev").alias("prev"),
+                ),
+                changed=F.sum(
+                    F.coalesce(F.col("lbl") != F.col("prev"), F.lit(True)).cast(
+                        "int"
+                    )
+                ),
             )
-            .localCheckpoint()
-        )
-        # Convergence check: a tiny join of two checkpointed label tables.
-        # Rounds 1-2 always change on any graph with an edge — skip the
-        # extra job there.
-        if round_no >= 3:
-            changed = (
-                jumped.alias("n")
-                .join(lbl.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.lbl") != F.col("o.lbl"))
-                .count()
-            )
-            if changed == 0:
-                lbl = jumped
-                converged = True
-                break
-        lbl = jumped
-    if tag is not None and not converged:
-        # One plain propagation over the final labels: if it changes
-        # nothing, the bounded run IS the fixpoint (the early-exit just
-        # never fired); otherwise fail loudly — the caller's oracle
-        # unrolls exactly max_rounds jumped rounds and would silently
-        # disagree from here on.
-        still_moving = (
-            lbl.select("node", "lbl")
-            .unionByName(
-                lbl.join(edges, lbl.node == edges.src).select(
-                    F.col("dst").alias("node"), "lbl"
-                )
-            )
-            .groupBy("node")
-            .agg(F.min("lbl").alias("nlbl"))
-            .join(lbl, "node")
-            .filter(F.col("nlbl") != F.col("lbl"))
-            .count()
-        )
-        if still_moving:
-            raise RuntimeError(
-                f"{tag}: label contraction did not converge within "
-                f"{max_rounds} jumped rounds — raise the caller's round "
-                f"constant and its oracle unroll together"
-            )
-    return lbl.select("node", F.col("lbl").alias("component"))
+            lbl = staged.select("node", "lbl")
+            if seen["changed"] == 0:
+                return lbl
+    raise RuntimeError(
+        f"{name}: min-label propagation still changed labels in round "
+        f"{max_rounds + 1} — raise the caller's round bound (and its "
+        f"oracle unroll, where it has one) for this graph shape"
+    )
 
 
 def pagerank_rounds_sql() -> str:
@@ -1360,7 +1342,7 @@ def _louvain_oracle() -> str:
     edges -> min-label weak components WITH pointer jumping per round
     (the merge forest is chain-shaped, so plain propagation depth is the
     chain length; the jump squares resolved depth per round exactly as
-    _cc_loop does) -> graph_modularity's per-community scoring."""
+    _min_label_loop does) -> graph_modularity's per-community scoring."""
     sql = _EDGES_CTE + f"""
     , deg AS MATERIALIZED (
         SELECT src AS node, CAST(SUM(w) AS BIGINT) AS k FROM edges GROUP BY src)
@@ -1437,7 +1419,7 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the gain table is ONE pass over the cached edge list
     with two |nodes|-sized degree joins; the argmax is a src-partitioned
-    window; contraction runs _cc_loop's pointer-jumped min-label
+    window; contraction runs _min_label_loop's pointer-jumped min-label
     propagation on the |nodes|-sized merge forest (O(log depth) rounds,
     checkpoint per round); scoring is graph_modularity's broadcast
     pattern. Nothing touches the fact table after the shared edge build;
@@ -1475,18 +1457,19 @@ def _louvain_level(spark: SparkSession, e: DataFrame) -> DataFrame:
     medges = mv.select(F.col("node").alias("src"), F.col("tgt").alias("dst")).unionByName(
         mv.select(F.col("tgt").alias("src"), F.col("node").alias("dst"))
     )
-    with conf_scope(spark, _NO_CONSTRAINTS):
-        cc = _cc_loop(
-            medges.localCheckpoint(),
-            max_rounds=_LOUVAIN_CC_ROUNDS,
-            tag="graph_louvain_move",
-        )
+    medges = medges.localCheckpoint()
+    cc = _min_label_loop(
+        medges.select(F.col("src").alias("node")).distinct(),
+        medges,
+        _LOUVAIN_CC_ROUNDS,
+        "graph_louvain_move",
+    )
     lab = (
         deg.select(F.col("src").alias("node"), "k")
         .join(cc, "node", "left")
         .select(
             "node", "k",
-            F.coalesce(F.col("component"), F.col("node")).alias("community"),
+            F.coalesce(F.col("lbl"), F.col("node")).alias("community"),
         )
         .localCheckpoint()  # feeds tot + both w_in endpoint joins
     )
@@ -1969,72 +1952,7 @@ def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DMIN_MAX_ROUNDS = 64  # directed min-propagation bound (see _dmin_loop)
-
-
-def _dmin_step(lbl: DataFrame, edges: DataFrame) -> DataFrame:
-    """One lazy propagate+jump step of directed min-label propagation."""
-    propagated = lbl.join(edges, lbl["node"] == edges["src"]).select(
-        F.col("dst").alias("node"), "lbl"
-    )
-    new_lbl = (
-        lbl.select("node", "lbl")
-        .unionByName(propagated)
-        .groupBy("node")
-        .agg(F.min("lbl").alias("lbl"))
-    )
-    return (
-        new_lbl.alias("x")
-        .join(
-            new_lbl.select(
-                F.col("node").alias("jn"), F.col("lbl").alias("jlbl")
-            ),
-            F.col("x.lbl") == F.col("jn"),
-        )
-        .select(F.col("x.node").alias("node"), F.col("jlbl").alias("lbl"))
-    )
-
-
-def _dmin_loop(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Directed min-label propagation with pointer jumping: fixpoint
-    lbl(v) = min id over {v} ∪ ancestors(v) (along src→dst edges).
-    Pointer jumping is sound because lbl(v) is always an
-    ancestor-or-self of v, and an ancestor's ancestor is an ancestor —
-    so lbl ← lbl(lbl) collapses label-chain depth geometrically when
-    label chains form; when ids run against edge direction the chain
-    collapses to self-pointing labels and each round advances the min
-    one hop, so worst-case convergence is O(longest path), not O(log).
-
-    Because a NON-converged labeling would let graph_scc confirm nodes
-    under a non-minimal color and return silently wrong components, the
-    loop's ONLY successful exit is an observed zero-change fixpoint;
-    exceeding DMIN_MAX_ROUNDS raises. The changed-flag rides the same
-    per-round checkpoint, so the convergence probe is a scan of
-    already-materialized rows, not an extra shuffle job. The fixpoint
-    itself is the schedule-independent exact min-ancestor (if some
-    ancestor u had u < lbl(v), labels are non-increasing along the
-    u→v path, a contradiction at fixpoint)."""
-    lbl = nodes.withColumn("lbl", F.col("node"))
-    for _ in range(DMIN_MAX_ROUNDS):
-        staged = (
-            _dmin_step(lbl, edges)
-            .join(
-                lbl.select(F.col("node").alias("pn"), F.col("lbl").alias("prev")),
-                F.col("node") == F.col("pn"),
-            )
-            .select(
-                "node", "lbl", (F.col("lbl") != F.col("prev")).alias("changed")
-            )
-            .localCheckpoint()
-        )
-        lbl = staged.select("node", "lbl")
-        if staged.filter("changed").isEmpty():
-            return lbl
-    raise RuntimeError(
-        f"_dmin_loop: no fixpoint within {DMIN_MAX_ROUNDS} rounds — "
-        "label chains longer than the bound (ids running against edge "
-        "direction); raise DMIN_MAX_ROUNDS for this graph shape"
-    )
+DMIN_MAX_ROUNDS = 64  # directed min-propagation bound (graph_scc)
 
 
 @query("graph_scc", oracle=_scc_oracle())
@@ -2049,7 +1967,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     each outer round (1) TRIMS nodes with no in-edge or no out-edge in
     the remaining graph (they cannot lie on a cycle → singleton SCCs,
     scc=self); (2) colors every remaining node with its min ancestor
-    via the pointer-jumped directed min-propagation loop (_dmin_loop,
+    via the pointer-jumped directed min-propagation loop (_min_label_loop,
     O(log path) rounds); (3) confirms membership by running the same
     loop on the CLASS-RESTRICTED REVERSED edges — d(v) = min same-color
     node reachable FROM v; d(v) == color(v) ⇔ v reaches its color root
@@ -2068,13 +1986,12 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per node) is schedule-independent, so parallelism never changes the
     answer."""
     edges0 = _scc_edges(spark, sf_dir)
-    with conf_scope(spark, _NO_CONSTRAINTS):
-        nodes = (
-            edges0.select(F.col("src").alias("node"))
-            .unionByName(edges0.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        return _scc_peel(nodes, edges0)
+    nodes = (
+        edges0.select(F.col("src").alias("node"))
+        .unionByName(edges0.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return _scc_peel(nodes, edges0)
 
 
 def _both_roles(edges: DataFrame) -> DataFrame:
@@ -2132,8 +2049,8 @@ def _scc_peel(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     overhead from dominating every one of the O(rounds) tiny stages."""
     spark = edges.sparkSession
     all_nodes = nodes.localCheckpoint()
-    edges = edges.localCheckpoint()
-    ecnt = edges.count()
+    edges, seen = checkpoint(edges, n=F.count(F.lit(1)))
+    ecnt = seen["n"]
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     loop_parts = max(1, min(sess_parts, ecnt // 50_000 + 1))
     with conf_scope(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
@@ -2149,21 +2066,19 @@ def _scc_peel_rounds(
         # acyclic; removing it can expose more, so repeat to fixpoint.
         while ecnt > 0:
             keep = _both_roles(edges)
-            edges2 = (
+            edges, seen = checkpoint(
                 edges.join(
                     keep.select(F.col("node").alias("src")), "src", "left_semi"
                 )
                 .join(
                     keep.select(F.col("node").alias("dst")), "dst", "left_semi"
                 )
-                .select("src", "dst")
-                .localCheckpoint()
+                .select("src", "dst"),
+                n=F.count(F.lit(1)),
             )
-            c2 = edges2.count()
-            edges = edges2
-            if c2 == ecnt:
+            if seen["n"] == ecnt:
                 break
-            ecnt = c2
+            ecnt = seen["n"]
         if ecnt == 0:
             break
         survivors = (
@@ -2173,7 +2088,7 @@ def _scc_peel_rounds(
             .localCheckpoint()
         )
         # (2) forward color: min ancestor per remaining node
-        color = _dmin_loop(survivors, edges)
+        color = _min_label_loop(survivors, edges, DMIN_MAX_ROUNDS, "graph_scc")
         # (3) backward confirm within color class
         ce = (
             edges.join(
@@ -2190,12 +2105,12 @@ def _scc_peel_rounds(
             )
             .filter(F.col("cs") == F.col("cd"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            # checkpoint: _dmin_loop touches its edge input every
+            # checkpoint: _min_label_loop touches its edge input every
             # round — without this the class-restriction joins
             # would re-execute per inner round
             .localCheckpoint()
         )
-        d = _dmin_loop(survivors, ce)
+        d = _min_label_loop(survivors, ce, DMIN_MAX_ROUNDS, "graph_scc")
         found = (
             color.join(d.withColumnRenamed("lbl", "dlbl"), "node")
             .filter(F.col("lbl") == F.col("dlbl"))
@@ -2204,17 +2119,17 @@ def _scc_peel_rounds(
             .localCheckpoint()
         )
         parts.append(found)
-        edges = (
+        edges, seen = checkpoint(
             edges.join(
                 found.select(F.col("node").alias("src")), "src", "left_anti"
             )
             .join(
                 found.select(F.col("node").alias("dst")), "dst", "left_anti"
             )
-            .select("src", "dst")
-            .localCheckpoint()
+            .select("src", "dst"),
+            n=F.count(F.lit(1)),
         )
-        ecnt = edges.count()
+        ecnt = seen["n"]
         if ecnt == 0:
             break
     else:

@@ -879,6 +879,16 @@ def _geo_h(prefix: str, key: str = "c_custkey") -> F.Column:
     return hex_int(F.md5(F.concat(F.lit(prefix), F.col(key).cast("string"))), 8)
 
 
+def _approx_km(d2q: F.Column) -> F.Column:
+    """``ROUND(SQRT(d2q) * 0.00555225, 9)`` as DuckDB computes it: round
+    ``x * 1e9`` to an integer, then divide. Spark's ``round(x, 9)``
+    rounds x's shortest decimal string half-up instead, which splits
+    from DuckDB where ``x * 1e9`` lands exactly on a half (439.39270552749997:
+    Spark 439.392705527, DuckDB 439.392705528)."""
+    x = F.sqrt(d2q.cast("double")) * 0.00555225
+    return (F.round(x * 1e9, 0) / 1e9).alias("approx_km")
+
+
 @query(
     "geo_grid_join",
     # Spatial neighbor join via grid bucketing (the Sedona/PostGIS
@@ -999,9 +1009,7 @@ def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a",
         "id_b",
         F.col("d2q").cast("bigint").alias("d2q_units"),
-        F.round(F.sqrt(F.col("d2q").cast("double")) * 0.00555225, 9)
-        .cast("double")
-        .alias("approx_km"),
+        _approx_km(F.col("d2q")),
     )
 
 
@@ -1351,9 +1359,7 @@ def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).cast("bigint").alias("rank"),
         F.col("t.item_id").alias("item_id"),
         F.col("t.d2q").cast("bigint").alias("d2q_units"),
-        F.round(F.sqrt(F.col("t.d2q").cast("double")) * 0.00555225, 9)
-        .cast("double")
-        .alias("approx_km"),
+        _approx_km(F.col("t.d2q")),
     )
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.stable import hex_int, py_tokens, tokens
 from ..registry import query
-from ..runtime import shared
+from ..runtime import checkpoint, shared
 from ..sources.tables import load
 
 # Inline fixtures (FIXTURES.md §5): defined identically in both engines.
@@ -4673,15 +4673,15 @@ def _dup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         sa = smap.select(F.col("v").alias("src"), F.col("s").alias("ss"))
         sb = smap.select(F.col("v").alias("dst"), F.col("s").alias("sd"))
-        cur = (
+        cur, seen = checkpoint(
             cur.join(sa.hint("shuffle_hash"), "src")
             .join(sb.hint("shuffle_hash"), "dst")
             .filter(F.col("ss") != F.col("sd"))
             .select(F.col("ss").alias("src"), F.col("sd").alias("dst"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
-        if cur.isEmpty():
+        if seen["n"] == 0:
             break
     else:
         raise RuntimeError(

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from ..functions.stable import tokens
 from ..registry import query
+from ..runtime import checkpoint
 from ..sources.tables import load
 
 
@@ -1293,18 +1294,16 @@ def win_skyline_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
                 kept.append(i)
         return pdf.iloc[kept][["doc_id", "n_tok", "n_uniq", "len_c"]]
 
-    cand = (
-        m.groupBy("bkt")
-        .applyInPandas(
+    cand, seen = checkpoint(
+        m.groupBy("bkt").applyInPandas(
             local_skyline, "doc_id bigint, n_tok bigint, n_uniq bigint, len_c bigint"
-        )
-        .localCheckpoint()
+        ),
+        n=F.count(F.lit(1)),
     )
-    n_cand = cand.count()
-    if n_cand > _SKY3_CAND_CAP:  # loud even under python -O
+    if seen["n"] > _SKY3_CAND_CAP:  # loud even under python -O
         raise RuntimeError(
             f"win_skyline_3d: merged local skylines exceed the cap "
-            f"({n_cand} > {_SKY3_CAND_CAP}); raise _SKY3_BUCKETS"
+            f"({seen['n']} > {_SKY3_CAND_CAP}); raise _SKY3_BUCKETS"
         )
     p, q = cand.alias("p"), cand.alias("q")
     return p.join(

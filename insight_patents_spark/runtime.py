@@ -50,6 +50,12 @@ At 1000-executor scale the same discipline applies unchanged: a
 long-lived driver serving many queries must bound pinned storage, and
 "release after the sink commits, protect the shared snapshot tables"
 is the production form of this hook.
+
+Iterative loops materialize each round through :func:`checkpoint`,
+which also returns the round's halt values (row counts, changed-label
+sums) from the checkpoint's own job — the Pregelix superstep, whose
+halt test runs inside the superstep's dataflow plan instead of as a
+separate ``count()`` or emptiness-probe job.
 """
 
 from __future__ import annotations
@@ -57,7 +63,7 @@ from __future__ import annotations
 import logging
 from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from .sources.tables import src_stamp
 
@@ -107,6 +113,17 @@ def shared(
                         df.unpersist()
         _SHARED[key] = build()
     return _SHARED[key]
+
+
+def checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict[str, Any]]:
+    """``df.localCheckpoint()`` plus the aggregates ``aggs`` (name ->
+    aggregate Column) over its rows, computed by the checkpoint's own job:
+    the observation sits directly under the checkpoint, in the result
+    stage, so each row is counted once and no second job runs. A NULL
+    aggregate (a sum over no rows) comes back as 0."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(k) for k, c in aggs.items())).localCheckpoint()
+    return out, {k: 0 if v is None else v for k, v in obs.get.items()}
 
 
 def _dataframes(value: Any) -> Iterable[DataFrame]:

@@ -17,6 +17,7 @@ from insight_patents_spark.plans.explain import (  # noqa: E402
     assert_in_plan,
     formatted_plan,
 )
+from insight_patents_spark.session import conf_scope  # noqa: E402
 from insight_patents_spark.sources.tables import load  # noqa: E402
 
 
@@ -532,10 +533,7 @@ def test_runtime_bloom_filter_reaches_probe_scan(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
         o = load(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -546,12 +544,6 @@ def test_runtime_bloom_filter_reaches_probe_scan(spark, sf_dir):
         plan = formatted_plan(j)
         assert "might_contain" in plan
         assert "bloom_filter_agg" in plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bitmap_distinct_has_partial_bitor(spark, sf_dir):
@@ -1580,16 +1572,10 @@ def test_join_skew_aqe_splits_hot_partition(spark, sf_dir):
         _skew_join_frame,
     )
 
-    old = {k: spark.conf.get(k, None) for k in _AQE_SKEW_CONFS}
-    for k, v in _AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, _AQE_SKEW_CONFS):
         df = _skew_join_frame(spark, sf_dir)
         df.foreach(lambda r: None)  # execute under the skew confs
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "SortMergeJoin(skew=true)" in plan
     assert "skewed" in plan  # the AQEShuffleRead skew-split marker
     assert "BroadcastHashJoin" not in plan

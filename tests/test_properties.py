@@ -21,10 +21,14 @@ from pyspark.sql import functions as F
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from insight_patents_spark.operators.graph import _cc_loop  # noqa: E402
+from insight_patents_spark.operators.graph import (  # noqa: E402
+    CC_MAX_ROUNDS,
+    _min_label_loop,
+)
 from insight_patents_spark.operators.joins import (  # noqa: E402
     asof_last_at_or_before,
 )
+from insight_patents_spark.session import conf_scope  # noqa: E402
 
 _PROP = settings(
     max_examples=6,
@@ -90,16 +94,97 @@ _edges = st.lists(
 @_PROP
 @given(edges=_edges)
 def test_cc_matches_union_find(spark, edges):
-    """graph_cc's core (_cc_loop) vs a Python union-find."""
+    """graph_cc's core (_min_label_loop) vs a Python union-find."""
     rows = [(a, b) for a, b in edges] + [(b, a) for a, b in edges]
     edf = spark.createDataFrame(rows, "src long, dst long").distinct()
-    prev = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        got = {(r.node, r.component) for r in _cc_loop(edf).collect()}
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", prev)
+    ndf = edf.select(F.col("src").alias("node")).distinct()
+    got = {
+        (r.node, r.lbl)
+        for r in _min_label_loop(ndf, edf, CC_MAX_ROUNDS, "graph_cc").collect()
+    }
     assert got == set(_uf_components(12, edges).items())
+
+
+def _label_rounds(
+    nodes: list[int], edges: list[tuple[int, int]]
+) -> tuple[int, dict[int, int]]:
+    """Python replay of one _min_label_loop round (propagate along
+    src→dst, then jump): the number of label-changing rounds before the
+    fixpoint, and the fixpoint labels."""
+    lbl = {v: v for v in nodes}
+    rounds = 0
+    while True:
+        new = dict(lbl)
+        for s, d in edges:
+            new[d] = min(new[d], lbl[s])
+        nxt = {v: new[new[v]] for v in nodes}
+        if nxt == lbl:
+            return rounds, lbl
+        lbl, rounds = nxt, rounds + 1
+
+
+@pytest.mark.parametrize(
+    "shape, n, edges, want_rounds",
+    [
+        # graph_cc-shaped: a symmetric 8-node path, ids along it; the
+        # jump resolves label distance 2, 6, 14 after rounds 1-3
+        ("symmetric", 8,
+         [(k, k + 1) for k in range(7)] + [(k + 1, k) for k in range(7)], 3),
+        # graph_scc-shaped: a directed 12-cycle with ids against edge
+        # direction; the min advances one hop per round
+        ("directed", 12, [((k + 1) % 12, k) for k in range(12)], 11),
+    ],
+)
+def test_min_label_loop_bound_is_label_changing_rounds(
+    spark, shape, n, edges, want_rounds
+):
+    """A graph needing exactly R label-changing rounds converges with
+    max_rounds=R (round R+1 observes no change) and raises with R-1."""
+    rounds, want = _label_rounds(list(range(n)), edges)
+    assert rounds == want_rounds
+    ndf = spark.createDataFrame([(v,) for v in range(n)], "node long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    got = _min_label_loop(ndf, edf, rounds, "bound_test").collect()
+    assert {r.node: r.lbl for r in got} == want
+    with pytest.raises(RuntimeError, match="bound_test"):
+        _min_label_loop(ndf, edf, rounds - 1, "bound_test")
+
+
+def test_approx_km_rounds_like_duckdb(spark):
+    """geo_grid_join / geo_knn's approx_km == DuckDB's
+    ROUND(SQRT(d2q) * 0.00555225, 9), bit for bit. Pinned: d2q =
+    6262787269 gives x = 439.39270552749997 with x * 1e9 exactly
+    439392705527.5, where Spark's round(x, 9) (half-up on the shortest
+    decimal string) says ...527 and DuckDB ...528."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    from insight_patents_spark.operators.joins import _approx_km
+
+    rng = random.Random(8)
+    d2q = (
+        [6262787269.0, 0.0]
+        + [rng.uniform(0, 8.1e9) for _ in range(2000)]
+        + [float(rng.randrange(8_100_000_000)) for _ in range(2000)]
+    )
+    pdf = pd.DataFrame({"i": range(len(d2q)), "d2q": d2q})
+    got = {
+        r.i: r.approx_km
+        for r in spark.createDataFrame(pdf)
+        .select("i", _approx_km(F.col("d2q")))
+        .collect()
+    }
+    con = duckdb.connect()
+    want = dict(
+        con.execute(
+            "SELECT i, ROUND(SQRT(d2q) * 0.00555225, 9) FROM pdf"
+        ).fetchall()
+    )
+    con.close()
+    assert got[0] == 439.392705528
+    assert got == want
 
 
 _docs = st.lists(
@@ -8147,18 +8232,14 @@ def test_salted_band_pairs_bounds_per_task_fanout(spark):
     # AQE's partition coalescing re-merges the (tiny) salted reducers at
     # toy scale — exactly the partitions that stay huge and separate on
     # a real degenerate band. Observe the pre-coalesce spread.
-    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    with conf_scope(
+        spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    ):
         pairs = salted_band_pairs(bands, s)
         per_task = (
             pairs.groupBy(F.spark_partition_id().alias("pid"))
             .count()
             .collect()
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", prev
         )
     total = n * (n - 1) // 2
     assert sum(r["count"] for r in per_task) == total
@@ -9354,9 +9435,7 @@ def test_stream_sessionize_state_multibatch_real_stream(spark, tmp_path):
     # state-store partition count baked into the checkpoint at start —
     # 4 like the registered operator (64 stores × 4 batches dominate
     # wall time otherwise; key cardinality here is 15 users)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             result.writeStream.format("memory")
             .queryName("mb_sess_it")
@@ -9366,8 +9445,6 @@ def test_stream_sessionize_state_multibatch_real_stream(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_batches = sum(
         1 for p in q.recentProgress if p["numInputRows"] > 0
     )
@@ -9709,9 +9786,7 @@ def test_stream_sessionize_timer_flushes_idle_user_via_real_timer(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     ckpt = tmp_path / "ckpt"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             result.writeStream.format("memory")
             .queryName("timer_sess_it")
@@ -9721,8 +9796,6 @@ def test_stream_sessionize_timer_flushes_idle_user_via_real_timer(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     assert n_batches >= len(files)
 

@@ -1,4 +1,6 @@
-"""Harness state-hygiene contract (runtime.release_ephemeral).
+"""Harness state-hygiene contract (runtime.release_ephemeral), and the
+loop halt contract (runtime.checkpoint: halt values ride the round's own
+checkpoint job).
 
 Pins the r11 fix for the r10 full-bench inflation: ephemeral
 localCheckpoints are unpersisted after a query's result is consumed,
@@ -16,6 +18,7 @@ from pathlib import Path
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from insight_patents_spark import registry, runtime
 from insight_patents_spark.sources.tables import TABLE_NAMES
@@ -153,3 +156,78 @@ def test_rewritten_source_unpins_superseded_checkpoints(spark, sf_dir, tmp_path)
     _keep_even(sf, "lineitem", "l_orderkey")
     _run(spark, sf, "graph_degree")
     assert len(runtime.protected_rdd_ids()) <= len(before)
+
+
+def test_checkpoint_observes_count_and_sum_of_its_rows(spark):
+    # The observed aggregates describe exactly the checkpointed rows,
+    # and a sum over no rows comes back as 0, not None.
+    df = spark.range(100).select((F.col("id") % 7).alias("x"))
+    for cond in ("x > 2", "x > 9"):
+        cp, seen = runtime.checkpoint(
+            df.filter(cond), n=F.count(F.lit(1)), s=F.sum("x")
+        )
+        assert seen["n"] == cp.count()
+        assert seen["s"] == (cp.agg(F.sum("x")).first()[0] or 0)
+    assert seen == {"n": 0, "s": 0}
+
+
+def _forbid_halt_jobs(spark, monkeypatch) -> None:
+    """Make any separate count()/isEmpty() job an error: loop halt and
+    guard values must come from the round's own checkpoint job. Patched
+    on the session's concrete DataFrame class, which overrides both."""
+
+    def separate_job(self, *args, **kwargs):
+        raise AssertionError("a separate count()/isEmpty() job ran")
+
+    cls = type(spark.range(0))
+    monkeypatch.setattr(cls, "count", separate_job)
+    monkeypatch.setattr(cls, "isEmpty", separate_job)
+
+
+def test_min_label_loop_runs_no_separate_halt_job(spark, monkeypatch):
+    from insight_patents_spark.operators.graph import _min_label_loop
+
+    edges = [(0, 1), (1, 0), (1, 2), (2, 1), (3, 4), (4, 3)]
+    ndf = spark.createDataFrame([(v,) for v in range(5)], "node long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    _forbid_halt_jobs(spark, monkeypatch)
+    got = _min_label_loop(ndf, edf, 4, "guard").collect()
+    assert {r.node: r.lbl for r in got} == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
+
+
+def test_scc_peel_runs_no_separate_halt_job(spark, monkeypatch):
+    from insight_patents_spark.operators.graph import _scc_peel
+
+    n = 12  # reversed 12-cycle: one SCC, min id 0
+    ndf = spark.createDataFrame([(v,) for v in range(n)], "node long")
+    edf = spark.createDataFrame(
+        [((k + 1) % n, k) for k in range(n)], "src long, dst long"
+    )
+    _forbid_halt_jobs(spark, monkeypatch)
+    got = _scc_peel(ndf, edf).collect()
+    assert {r.node: r.scc for r in got} == {v: 0 for v in range(n)}
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_ktruss", "dedup_cluster_cc", "win_skyline_3d"]
+)
+def test_query_loops_run_no_separate_halt_job(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    # A private dataset copy, so the loop's own shared-cache entry is
+    # new; the shared inputs the loop reads are built before the patch.
+    from insight_patents_spark.operators.graph import _pairs
+    from insight_patents_spark.operators.text import verified_pairs
+
+    sf = _writable_sf0001(sf_dir, tmp_path)
+    _pairs(spark, sf)
+    verified_pairs(spark, sf)
+    spec = registry.load_all()[name]
+    _forbid_halt_jobs(spark, monkeypatch)
+    got = spec.fn(spark, sf).toPandas()
+    monkeypatch.undo()
+    con = duck_connect(sf)
+    want = con.execute(spec.oracle).df()
+    con.close()
+    problems = compare(name, got, want)
+    assert not problems, "; ".join(problems)

@@ -1,7 +1,7 @@
 """Per-stage diagnostic: run registered queries through the noop sink and
-print, per query, its wall time, stage count and total executor CPU, then
-each new stage's (numTasks, executorRunTime, executorCpuTime) from the UI
-REST API. Single-task stages with large run time = single-input-split map
+print, per query, its wall time, job and stage counts and total executor
+CPU, then each new stage's (numTasks, executorRunTime, executorCpuTime)
+from the UI REST API. Single-task stages with large run time = single-input-split map
 stages (guide §2.5). On a box with ambient hypervisor throttling, runTime
 overstates task cost by the wait factor; CPU is the honest per-stage
 cost. Uses the bench session confs but with the UI enabled (the probe is
@@ -46,13 +46,19 @@ def probe_session() -> SparkSession:
     )
 
 
-def stage_cpu_rows(spark):
+def _rest(spark, what: str) -> list[dict]:
     base = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages"
-    ) as r:
-        data = json.load(r)
+    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/{what}") as r:
+        return json.load(r)
+
+
+def job_ids(spark) -> set[int]:
+    return {j["jobId"] for j in _rest(spark, "jobs")}
+
+
+def stage_cpu_rows(spark):
+    data = _rest(spark, "stages")
     return [
         (
             s["stageId"],
@@ -79,6 +85,7 @@ def main() -> None:
         "overwrite"
     ).save()
     seen = {r[0] for r in stage_cpu_rows(spark)}
+    seen_jobs = job_ids(spark)
     for name in args.queries:
         t0 = time.time()
         specs[name].fn(spark, args.sf).write.format("noop").mode(
@@ -87,9 +94,11 @@ def main() -> None:
         wall = time.time() - t0
         rows = [r for r in stage_cpu_rows(spark) if r[0] not in seen]
         seen |= {r[0] for r in rows}
+        jobs = job_ids(spark) - seen_jobs
+        seen_jobs |= jobs
         tot_cpu = sum(r[3] for r in rows)
         print(
-            f"== {name}: wall={wall:.2f}s stages={len(rows)} "
+            f"== {name}: wall={wall:.2f}s jobs={len(jobs)} stages={len(rows)} "
             f"totalCpu={tot_cpu}ms",
             file=sys.stderr,
         )
