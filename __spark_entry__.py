@@ -39,6 +39,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each key in ``queries()`` (omissions =
-    rows-only ops; see SURVEY §2 inventory)."""
+    """DuckDB-equivalent SQL for every key in ``queries()``."""
     return registry.oracle_sql()

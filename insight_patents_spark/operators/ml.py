@@ -17,6 +17,11 @@ over the full corpus, not in a training framework):
   sklearn does it and exactly what dies at 10⁹ rows; Spark ML's
   BinaryClassificationMetrics bins for the same reason).
 
+Each of the two scores — the hashed-LR classifier (``_lr_docs``) and
+the TTR bin (``_ttr_docs``) — is defined once per engine below: a Spark
+builder over a ``documents`` frame with its DuckDB CTE twin beside it.
+Every query and oracle here that scores documents calls these.
+
 Determinism: logits are exact int64 weight-dot-products divided once;
 sigmoid/F1 are single transcendental/divisions of bit-identical inputs,
 rounded 9dp per the repo contract (README §determinism).
@@ -34,13 +39,15 @@ from ..sources.tables import load
 
 _LR_BUCKETS = 16  # hashed feature width (production: 2^18+)
 _LR_BIAS_CENTI = -20  # intercept, in 1/100 units like the weights
+# The audits' operating point, in quarter-logits: keep <=> logit > -1/4.
+# On this corpus's score distribution keep-at-0 keeps nothing (0 of 500
+# documents at sf0.01), which would leave the audits nothing to audit.
+_LR_AUDIT_MARGIN_Q = 1
 
 
 def _lr_bucket() -> F.Column:
     """Hashed-feature bucket of the ``token`` column: first 8 md5 hex
-    chars -> bigint mod _LR_BUCKETS. The ONE definition every ml.py
-    scorer shares (its SQL twin is inlined in each oracle) — the hashed
-    model is a pure expression, so "the model" IS this pair of helpers."""
+    chars -> bigint mod _LR_BUCKETS."""
     return hex_int(F.md5(F.col("token")), 8) % _LR_BUCKETS
 
 
@@ -55,6 +62,122 @@ def _lr_w_centi() -> F.Column:
     )
 
 
+def _lr_w_centi_sql(bucket: str) -> str:
+    """SQL twin of ``_lr_w_centi`` for the bucket expression ``bucket``."""
+    return (
+        f"(CAST(('0x' || substr(md5('w' || CAST({bucket} AS VARCHAR)), 1, 4))"
+        f" AS BIGINT) % 101 - 50)"
+    )
+
+
+def _lr_counts(d: DataFrame) -> DataFrame:
+    """Hashed-LR classifier, feature layer: ``(doc_id, bucket, cnt)``,
+    the per-doc token count of each hashed bucket. Twin: the
+    ``lr_counts`` CTE of ``_LR_DOCS_CTE``."""
+    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
+    return (
+        tok.select("doc_id", _lr_bucket().alias("bucket"))
+        .groupBy("doc_id", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _lr_docs(d: DataFrame) -> DataFrame:
+    """Hashed-LR classifier, per doc: ``(doc_id, n_tokens, z_centi)``
+    with z_centi = Σ cnt_b·w_b, an exact int64 weight-dot-product. The
+    model is a hash function, so this is a stateless narrow pipeline
+    plus two doc_id aggs — no weight table to ship, join or broadcast.
+    Twin: the ``lr_docs`` CTE of ``_LR_DOCS_CTE``."""
+    return _lr_counts(d).groupBy("doc_id").agg(
+        F.sum("cnt").cast("bigint").alias("n_tokens"),
+        F.sum(F.col("cnt") * _lr_w_centi()).cast("bigint").alias("z_centi"),
+    )
+
+
+_LR_DOCS_CTE = f"""
+    WITH lr_counts AS (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
+               % {_LR_BUCKETS} AS bucket,
+             COUNT(*) AS cnt
+      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+            FROM documents)
+      GROUP BY doc_id, bucket),
+    lr_docs AS (
+      SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
+             CAST(SUM(cnt * {_lr_w_centi_sql("bucket")}) AS BIGINT) AS z_centi
+      FROM lr_counts GROUP BY doc_id)"""
+
+
+def _lr_z_num() -> F.Column:
+    """z_centi + bias·n_tokens: the logit numerator, exact int64."""
+    return F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens")
+
+
+_LR_Z_NUM_SQL = f"(z_centi + {_LR_BIAS_CENTI} * n_tokens)"
+
+
+def _lr_logit() -> F.Column:
+    """logit = z_num / (100·n_tokens): one division, rounded 9dp."""
+    return F.round(_lr_z_num() / (100.0 * F.col("n_tokens")), 9)
+
+
+def _lr_score() -> F.Column:
+    """Sigmoid of the rounded logit, rounded 9dp."""
+    return F.round(1.0 / (1.0 + F.exp(-_lr_logit())), 9)
+
+
+_LR_LOGIT_SQL = f"ROUND({_LR_Z_NUM_SQL} * 1.0 / (100 * n_tokens), 9)"
+_LR_SCORE_SQL = f"ROUND(1.0 / (1.0 + EXP(-{_LR_LOGIT_SQL})), 9)"
+
+
+def _lr_keep(margin_q: int = 0) -> F.Column:
+    """The keep decision, logit > -margin_q/4, as an exact integer
+    comparison (the decision never touches a float): z_num > 0 at
+    margin 0, else 4·z_num + 100·margin_q·n_tokens > 0."""
+    z = _lr_z_num()
+    if margin_q:
+        z = 4 * z + 100 * margin_q * F.col("n_tokens")
+    return z > 0
+
+
+def _lr_keep_sql(margin_q: int = 0) -> str:
+    """SQL twin of ``_lr_keep``."""
+    if margin_q:
+        return f"(4 * {_LR_Z_NUM_SQL} + {100 * margin_q} * n_tokens > 0)"
+    return f"({_LR_Z_NUM_SQL} > 0)"
+
+
+def _ttr_docs(d: DataFrame, by_source: bool = False) -> DataFrame:
+    """TTR-bin score, per doc: ``(doc_id, [source], bin, pos)`` with
+    bin = floor(100·distinct/total tokens), the type-token ratio as an
+    exact integer score bin, and the label pos = lang='en'. One per-doc
+    hash agg. Twin: ``_ttr_docs_cte``."""
+    cols = ["doc_id", "lang"] + (["source"] if by_source else [])
+    tok = d.select(*cols, F.explode(tokens()).alias("token"))
+    src = [F.min("source").alias("source")] if by_source else []
+    return tok.groupBy("doc_id").agg(
+        *src,
+        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
+        .cast("bigint")
+        .alias("bin"),
+        (F.min("lang") == "en").alias("pos"),
+    )
+
+
+def _ttr_docs_cte(by_source: bool = False) -> str:
+    """SQL twin of ``_ttr_docs``: the ``per_doc`` CTE."""
+    src = "MIN(d.source) AS source, " if by_source else ""
+    return f"""
+    WITH per_doc AS (
+      SELECT d.doc_id, {src}
+             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
+                  AS BIGINT) AS bin,
+             (MIN(d.lang) = 'en') AS pos
+      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
+      GROUP BY d.doc_id)"""
+
+
 @query(
     "ml_lr_inference",
     # Logistic scoring over hashed features. Weights derive from md5 of
@@ -62,29 +185,13 @@ def _lr_w_centi() -> F.Column:
     # pure function — Spark and DuckDB materialize identical weights
     # with no fitted artifact. z_centi = sum(cnt_b * w_b) is an exact
     # int64; logit = one division; sigmoid rounded 9dp.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id,
-             CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id)
+    oracle=_LR_DOCS_CTE
+    + f"""
     SELECT doc_id, n_tokens,
-           CAST(ROUND((z_centi + {_LR_BIAS_CENTI} * n_tokens) * 1.0
-                      / (100 * n_tokens), 9) AS DOUBLE) AS logit,
-           CAST(ROUND(1.0 / (1.0 + EXP(-ROUND((z_centi + {_LR_BIAS_CENTI} * n_tokens) * 1.0
-                      / (100 * n_tokens), 9))), 9) AS DOUBLE) AS score,
-           (z_centi + {_LR_BIAS_CENTI} * n_tokens) > 0 AS keep
-    FROM w
+           CAST({_LR_LOGIT_SQL} AS DOUBLE) AS logit,
+           CAST({_LR_SCORE_SQL} AS DOUBLE) AS score,
+           {_lr_keep_sql()} AS keep
+    FROM lr_docs
     """,
 )
 def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,28 +210,12 @@ def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 2^18-entry broadcast map, everything else unchanged. Nothing here
     is quadratic, nothing shuffles except the two doc_id aggs (which
     share partitioning)."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    # weight(bucket) in centi-units: md5-derived int in [-50, 50]
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    z_num = F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens")
-    logit = F.round(z_num / (100.0 * F.col("n_tokens")), 9)
-    return w.select(
+    return _lr_docs(load(spark, sf_dir, "documents")).select(
         "doc_id",
         "n_tokens",
-        logit.cast("double").alias("logit"),
-        F.round(1.0 / (1.0 + F.exp(-logit)), 9).cast("double").alias("score"),
-        (z_num > 0).alias("keep"),
+        _lr_logit().cast("double").alias("logit"),
+        _lr_score().cast("double").alias("score"),
+        _lr_keep().alias("keep"),
     )
 
 
@@ -136,14 +227,8 @@ def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold bin t are DESCENDING cumulative window sums over the
     # occupied-bin grid; precision/recall/F1 are single divisions of
     # exact ints, rounded 9dp.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
@@ -177,16 +262,7 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10⁹-row corpus cannot do; Spark ML bins for the same reason).
     Swapping the score for a real model column changes nothing
     downstream."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", F.explode(tokens()).alias("token")
-    )
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
@@ -223,25 +299,11 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang='en' label: one hash agg to 4 cells, every metric a single
     # division of exact int64s (MCC's sqrt rounds 9dp). The metric
     # columns repeat per row by design (scalar-only results contract).
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    z AS (
-      SELECT doc_id,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT)
-               + {_LR_BIAS_CENTI} * CAST(SUM(cnt) AS BIGINT) AS zc
-      FROM c GROUP BY doc_id),
+    oracle=_LR_DOCS_CTE
+    + f""",
     joined AS (
-      SELECT (z.zc > 0) AS pred, (d.lang = 'en') AS actual
-      FROM z JOIN documents d ON z.doc_id = d.doc_id),
+      SELECT {_lr_keep_sql()} AS pred, (d.lang = 'en') AS actual
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     m AS (
       SELECT CAST(SUM(CASE WHEN pred AND actual THEN 1 ELSE 0 END) AS BIGINT) AS tp,
              CAST(SUM(CASE WHEN pred AND NOT actual THEN 1 ELSE 0 END) AS BIGINT) AS fp,
@@ -276,24 +338,8 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ml_lr_inference (stateless, no weight
     table) plus a broadcast-sized label join and a 4-cell aggregate."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    z = c.groupBy("doc_id").agg(
-        (
-            F.sum(F.col("cnt") * w_centi)
-            + _LR_BIAS_CENTI * F.sum("cnt")
-        )
-        .cast("bigint")
-        .alias("zc")
-    )
-    joined = z.join(d.select("doc_id", "lang"), "doc_id").select(
-        (F.col("zc") > 0).alias("pred"), (F.col("lang") == "en").alias("actual")
+    joined = _lr_docs(d).join(d.select("doc_id", "lang"), "doc_id").select(
+        _lr_keep().alias("pred"), (F.col("lang") == "en").alias("actual")
     )
     m = joined.agg(
         F.sum(F.when(F.col("pred") & F.col("actual"), 1).otherwise(0))
@@ -350,27 +396,11 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column is made order-independent by FLOOR-quantizing each score to
     # exact int64 nano-units before summing (documented quantization —
     # at 1e-9 resolution the bias is below the 9dp output rounding).
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id),
+    oracle=_LR_DOCS_CTE
+    + f""",
     sc AS (
-      SELECT w.doc_id,
-             ROUND(1.0 / (1.0 + EXP(-ROUND((z_centi + {_LR_BIAS_CENTI} * n_tokens) * 1.0
-                   / (100 * n_tokens), 9))), 9) AS score,
-             (d.lang = 'en') AS pos
-      FROM w JOIN documents d ON w.doc_id = d.doc_id),
+      SELECT {_LR_SCORE_SQL} AS score, (d.lang = 'en') AS pos
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     cells AS (
       SELECT CAST(FLOOR(score * 100) AS BIGINT) AS bin,
              COUNT(*) AS n,
@@ -399,26 +429,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction) — no collect_list of scores, no per-bin sort, at any
     corpus size."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    logit = F.round(
-        (F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens"))
-        / (100.0 * F.col("n_tokens")),
-        9,
-    )
-    sc = w.join(d.select("doc_id", "lang"), "doc_id").select(
-        F.round(1.0 / (1.0 + F.exp(-logit)), 9).alias("score"),
-        (F.col("lang") == "en").alias("pos"),
+    sc = _lr_docs(d).join(d.select("doc_id", "lang"), "doc_id").select(
+        _lr_score().alias("score"), (F.col("lang") == "en").alias("pos")
     )
     cells = sc.groupBy(
         F.floor(F.col("score") * 100).cast("bigint").alias("bin")
@@ -470,14 +482,8 @@ def _disc_sql(rank_col: str) -> str:
     # numerator keeps it an exact int64; ONE division at the end,
     # rounded 9dp. Groups with a degenerate class (P=0 or N=0) are
     # excluded (AUC undefined there).
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id, MIN(d.source) AS source,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte(by_source=True)
+    + """,
     cells AS (
       SELECT source, bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
@@ -514,15 +520,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     No global sort, no per-row ranks — the property that lets AUC run
     on 10⁹ scored documents. Swapping in a real model score only
     changes the bin expression."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", "source", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.min("source").alias("source"),
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"), by_source=True)
     cells = per_doc.groupBy("source", "bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
@@ -562,14 +560,8 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # captures 45% of positives, lift 2.2x"). Same integer-bin
     # histogram as ml_pr_curve; depth/gain/lift are single divisions of
     # exact int64 cumulative counts, rounded 9dp.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos
@@ -602,14 +594,7 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell agg, cumulative windows over the bin grid only. gain·depth
     arithmetic cross-multiplies exact int64 counts (cum_pos·tot_n
     stays < 2⁶³ up to 3·10⁹ rows) — no intermediate ratios."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
@@ -891,14 +876,8 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bin, term = pos_b * tp_b / (P * (tp_b + fp_b)) — exact int64
     # numerator, ONE division, 9dp; the total nano-quantizes rounded
     # terms so the window sum is order-independent.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
@@ -937,14 +916,7 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ml_pr_curve — per-doc hash agg, bin-grid
     cells, cumulative windows over ≤101 rows. The corpus is never
     sorted by score."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
@@ -1004,14 +976,8 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells, ECDFs as cumulative windows, D in exact integer form
     # max|cp*N - cn*P| until ONE final division. The bin where the max
     # is achieved is the optimal decision cut under equal costs.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS p,
@@ -1051,14 +1017,7 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-doc hash agg → bin cells → cumulative windows on
     the ≤101-row grid → one tiny argmax aggregate. Corpus never sorted,
     never rescanned."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("p"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("q"),
@@ -1113,14 +1072,8 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # P*Spa2 - Spa^2 stay < 2^63 up to ~10^5 occupied-bin mass per side
     # (documented bound; beyond that the moments widen to DOUBLE). One
     # sqrt + two additions at the end, 9dp.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS p,
@@ -1178,14 +1131,7 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ml_roc_auc — per-doc hash agg, bin grid,
     two cumulative windows (ascending for V10, descending for V01),
     one tiny moment aggregate. The corpus is never ranked."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("p"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("q"),
@@ -1243,27 +1189,11 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor-quantized nano mean; per-bin terms round 9dp, the total is
     # the nano-quantized order-independent window sum. The repeated
     # total per row keeps the result scalar-only.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id),
+    oracle=_LR_DOCS_CTE
+    + f""",
     sc AS (
-      SELECT w.doc_id,
-             ROUND(1.0 / (1.0 + EXP(-ROUND((z_centi + {_LR_BIAS_CENTI} * n_tokens) * 1.0
-                   / (100 * n_tokens), 9))), 9) AS score,
-             (d.lang = 'en') AS pos
-      FROM w JOIN documents d ON w.doc_id = d.doc_id),
+      SELECT {_LR_SCORE_SQL} AS score, (d.lang = 'en') AS pos
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     cells AS (
       SELECT CAST(FLOOR(score * 100) AS BIGINT) AS bin,
              CAST(COUNT(*) AS BIGINT) AS n,
@@ -1297,26 +1227,8 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows on the cell grid. Nothing scales with the corpus after the
     first agg."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    logit = F.round(
-        (F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens"))
-        / (100.0 * F.col("n_tokens")),
-        9,
-    )
-    sc = w.join(d.select("doc_id", "lang"), "doc_id").select(
-        F.round(1.0 / (1.0 + F.exp(-logit)), 9).alias("score"),
-        (F.col("lang") == "en").alias("pos"),
+    sc = _lr_docs(d).join(d.select("doc_id", "lang"), "doc_id").select(
+        _lr_score().alias("score"), (F.col("lang") == "en").alias("pos")
     )
     cells = sc.groupBy(
         F.floor(F.col("score") * 100).cast("bigint").alias("bin")
@@ -1372,28 +1284,13 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the best-treated group. Counts are exact ints from one hash agg;
     # every rate is one division rounded 9dp; diff/ratio operate on the
     # ROUNDED rates so both engines subtract/divide identical doubles.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id,
-             CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id),
+    oracle=_LR_DOCS_CTE
+    + f""",
     dec AS (
-      SELECT d.source, w.doc_id,
-             CASE WHEN 4 * (w.z_centi + {_LR_BIAS_CENTI} * w.n_tokens)
-                       + 100 * w.n_tokens > 0
-                  THEN 1 ELSE 0 END AS kept
-      FROM w JOIN documents d ON w.doc_id = d.doc_id),
+      SELECT d.source,
+             CASE WHEN {_lr_keep_sql(_LR_AUDIT_MARGIN_Q)} THEN 1 ELSE 0 END
+               AS kept
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     grp AS (
       SELECT source, COUNT(*) AS n_docs,
              CAST(SUM(kept) AS BIGINT) AS n_kept,
@@ -1424,30 +1321,8 @@ def ml_group_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit is the inference pipeline + ONE (source) hash agg + windows
     over the |groups|-row grid — corpus scanned once, nothing sorted."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    # keep <=> logit > -0.25 (the operating point for this corpus's
-    # score distribution; ml_lr_inference's keep-at-0 would keep nothing
-    # here). Still an exact integer comparison: 4*z_num + 100*n > 0.
-    kept = (
-        (
-            4 * (F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens"))
-            + 100 * F.col("n_tokens")
-        )
-        > 0
-    ).cast("int")
-    dec = w.join(d.select("doc_id", "source"), "doc_id").select(
-        "source", kept.alias("kept")
+    dec = _lr_docs(d).join(d.select("doc_id", "source"), "doc_id").select(
+        "source", _lr_keep(_LR_AUDIT_MARGIN_Q).cast("int").alias("kept")
     )
     grp = dec.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1490,27 +1365,12 @@ def ml_group_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the floor-quantized bin confidence, rounded 9dp, totals via the
     # nano window-sum contract. Uncertainty = base*(1-base) of the
     # exact global base rate.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id),
+    oracle=_LR_DOCS_CTE
+    + f""",
     sc AS (
-      SELECT w.doc_id,
-             ROUND(1.0 / (1.0 + EXP(-ROUND((z_centi + {_LR_BIAS_CENTI} * n_tokens) * 1.0
-                   / (100 * n_tokens), 9))), 9) AS score,
+      SELECT {_LR_SCORE_SQL} AS score,
              CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-      FROM w JOIN documents d ON w.doc_id = d.doc_id),
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     cells AS (
       SELECT CAST(FLOOR(score * 100) AS BIGINT) AS bin,
              CAST(COUNT(*) AS BIGINT) AS n,
@@ -1564,25 +1424,8 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows on the cell grid — identical topology to ml_ece; nothing
     after the first agg scales with the corpus."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    logit = F.round(
-        (F.col("z_centi") + _LR_BIAS_CENTI * F.col("n_tokens"))
-        / (100.0 * F.col("n_tokens")),
-        9,
-    )
-    sc = w.join(d.select("doc_id", "lang"), "doc_id").select(
-        F.round(1.0 / (1.0 + F.exp(-logit)), 9).alias("score"),
+    sc = _lr_docs(d).join(d.select("doc_id", "lang"), "doc_id").select(
+        _lr_score().alias("score"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
     )
     sqerr = (F.col("score") - F.col("y")) * (F.col("score") - F.col("y"))
@@ -1669,26 +1512,16 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an exact decimal/HUGEINT sum) plus the (N - n_b) absent docs at
     # exactly mu each (one quantized term), so the result is
     # order-independent at any parallelism.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    bk AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS cnt FROM bk
-          GROUP BY doc_id, bucket),
-    nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM c),
+    oracle=_LR_DOCS_CTE
+    + f""",
+    nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM lr_counts),
     buckets AS (
       SELECT unnest(range(0, {_LR_BUCKETS})) AS bucket),
     stats AS (
-      SELECT b.bucket,
-             CAST(('0x' || substr(md5('w' || CAST(b.bucket AS VARCHAR)), 1, 4))
-                  AS BIGINT) % 101 - 50 AS w_centi,
+      SELECT b.bucket, {_lr_w_centi_sql("b.bucket")} AS w_centi,
              COALESCE(COUNT(c.doc_id), 0) AS n_docs_with,
              COALESCE(SUM(c.cnt), 0) AS sum_cnt
-      FROM buckets b LEFT JOIN c ON b.bucket = c.bucket
+      FROM buckets b LEFT JOIN lr_counts c ON b.bucket = c.bucket
       GROUP BY b.bucket),
     mu AS (
       SELECT s.bucket, s.w_centi, s.n_docs_with, s.sum_cnt,
@@ -1699,7 +1532,7 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
              COALESCE(SUM(CAST(FLOOR(ABS(c.cnt - m.m) * 1e9) AS HUGEINT)), 0)
                + (m.n - m.n_docs_with) * CAST(FLOOR(m.m * 1e9) AS HUGEINT)
                AS qdev
-      FROM mu m LEFT JOIN c ON m.bucket = c.bucket
+      FROM mu m LEFT JOIN lr_counts c ON m.bucket = c.bucket
       GROUP BY m.bucket, m.w_centi, m.n_docs_with, m.m, m.n)
     SELECT bucket, CAST(w_centi AS BIGINT) AS w_centi,
            CAST(n_docs_with AS BIGINT) AS n_docs_with,
@@ -1728,21 +1561,13 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded corpus) feeds a {_LR_BUCKETS}-row per-bucket agg; the
     bucket domain never leaves a broadcast. Nothing is per-doc after
     the first agg."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
+    c = _lr_counts(load(spark, sf_dir, "documents"))
     n_docs = c.agg(
         F.count_distinct("doc_id").cast("bigint").alias("n")
     )
     buckets = spark.range(_LR_BUCKETS).select(
         F.col("id").cast("bigint").alias("bucket")
     )
-    w_centi = _lr_w_centi()
     stats = (
         buckets.join(c, "bucket", "left")
         .groupBy("bucket")
@@ -1750,7 +1575,7 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("doc_id").cast("bigint").alias("n_docs_with"),
             F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("sum_cnt"),
         )
-        .withColumn("w_centi", w_centi)
+        .withColumn("w_centi", _lr_w_centi())
     )
     mu = stats.crossJoin(F.broadcast(n_docs)).select(
         "bucket",
@@ -1912,14 +1737,8 @@ _FBETA_NUM_DEN = ((0.5, 1, 4), (1.0, 4, 4), (2.0, 16, 4))
     # (deterministic in both engines). The corpus is never sorted by
     # score — ml_pr_curve's binned-sweep posture, reduced to the
     # decision output.
-    oracle=f"""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + f""",
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
@@ -1965,14 +1784,7 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one per-doc hash agg + one <=101-row cell agg +
     windows on the (3 x grid) cross — identical cost to ml_pr_curve
     regardless of corpus size."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
         F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
@@ -2034,31 +1846,18 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_fairness_eo",
     # Equalized-odds audit per corpus source: TPR and FPR of the
-    # deployed integer decision (the ml_group_parity cut: 4z+100n > 0)
-    # against the lang='en' label, per group, plus each group's gap to
-    # the overall rates and the max gap repeated (the EO distance).
-    # Every rate is ONE division of exact int64 cell counts, 9dp;
-    # groups with a degenerate class emit NULL rates in BOTH engines.
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-    b AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT)
-               % {_LR_BUCKETS} AS bucket
-      FROM tok),
-    c AS (SELECT doc_id, bucket, COUNT(*) AS cnt FROM b
-          GROUP BY doc_id, bucket),
-    w AS (
-      SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-             CAST(SUM(cnt * (CAST(('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 4))
-                                  AS BIGINT) % 101 - 50)) AS BIGINT) AS z_centi
-      FROM c GROUP BY doc_id),
+    # deployed integer decision (ml_group_parity's cut, logit > -0.25:
+    # 4·(z − 20·n) + 100·n > 0) against the lang='en' label, per group,
+    # plus each group's gap to the overall rates and the max gap
+    # repeated (the EO distance). Every rate is ONE division of exact
+    # int64 cell counts, 9dp; groups with a degenerate class emit NULL
+    # rates in BOTH engines.
+    oracle=_LR_DOCS_CTE
+    + f""",
     dec AS (
-      SELECT w.doc_id, d.source,
-             (4 * z_centi + 100 * n_tokens) > 0 AS kept,
+      SELECT d.source, {_lr_keep_sql(_LR_AUDIT_MARGIN_Q)} AS kept,
              (d.lang = 'en') AS pos
-      FROM w JOIN documents d ON w.doc_id = d.doc_id),
+      FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     g AS (
       SELECT source,
              CAST(SUM(CASE WHEN pos AND kept THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -2101,21 +1900,9 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined 1-row overall frame — auditing 10^9 decisions costs
     one corpus scan."""
     d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("token"))
-    bucket = _lr_bucket()
-    w_centi = _lr_w_centi()
-    c = (
-        tok.select("doc_id", bucket.alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = c.groupBy("doc_id").agg(
-        F.sum("cnt").cast("bigint").alias("n_tokens"),
-        F.sum(F.col("cnt") * w_centi).cast("bigint").alias("z_centi"),
-    )
-    dec = w.join(d.select("doc_id", "source", "lang"), "doc_id").select(
+    dec = _lr_docs(d).join(d.select("doc_id", "source", "lang"), "doc_id").select(
         "source",
-        ((4 * F.col("z_centi") + 100 * F.col("n_tokens")) > 0).alias("kept"),
+        _lr_keep(_LR_AUDIT_MARGIN_Q).alias("kept"),
         (F.col("lang") == "en").alias("pos"),
     )
     g = dec.groupBy("source").agg(
@@ -2198,14 +1985,8 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # division of exact int64 cumulative counts, min/max run over
     # identical double sets in both engines, 9dp at the end. The
     # pair/triple work is grid-sized (<=101^2 rows), corpus-free.
-    oracle="""
-    WITH per_doc AS (
-      SELECT d.doc_id,
-             CAST(FLOOR(100.0 * COUNT(DISTINCT t.token) / COUNT(*))
-                  AS BIGINT) AS bin,
-             (MIN(d.lang) = 'en') AS pos
-      FROM documents d, unnest(string_split(d.text, ' ')) AS t(token)
-      GROUP BY d.doc_id),
+    oracle=_ttr_docs_cte()
+    + """,
     cells AS (
       SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
@@ -2255,14 +2036,7 @@ def ml_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     select among identical values, 9dp at the end. Scale shape: the
     corpus collapses to the bin grid in one hash agg; everything after
     is corpus-size-free."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.floor(100.0 * F.count_distinct(F.col("token")) / F.count(F.lit(1)))
-        .cast("bigint")
-        .alias("bin"),
-        (F.min("lang") == "en").alias("pos"),
-    )
+    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
     cells = per_doc.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias(

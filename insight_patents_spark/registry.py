@@ -5,8 +5,7 @@ decorator, keeping the Spark implementation and its DuckDB oracle SQL
 side by side in the same file (the driver hashes results of both; keeping
 them adjacent is what keeps column names/rounding in sync).
 
-``oracle=None`` marks a genuinely non-SQL-expressible op -> the driver
-records a weaker rows-only check (SURVEY §2 inventory notes which).
+Every query has an oracle: ``oracle`` is a required argument.
 """
 
 from __future__ import annotations
@@ -46,10 +45,10 @@ _OPERATOR_MODULES = (
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL over the pre-registered views, or None
+    oracle: str  # DuckDB SQL over the pre-registered views
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` as the implementation of operator ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -187,8 +186,4 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in load_all().items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in load_all().items()}

@@ -4,14 +4,13 @@ import os
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from insight_patents_spark.session import get_spark  # noqa: E402
-from insight_patents_spark.sources.tables import TABLE_NAMES  # noqa: E402
+from tools.check import duck_connect  # noqa: E402
 
 SF_DIR = os.environ.get("IPS_TEST_SF_DIR", "/root/testdata/sf0.01")
 
@@ -31,10 +30,6 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_connect(SF_DIR)
     yield con
     con.close()

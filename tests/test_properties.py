@@ -1148,6 +1148,75 @@ def test_lr_inference_matches_reference_model(spark, sf_dir):
         assert 0.0 < got.score < 1.0
 
 
+# Texts the fixed test corpus lacks: empty, leading/trailing/double
+# space, NULL; plus NULL lang (pos is NULL in both engines). In " a a"
+# and "b  b" the empty token also moves the TTR bin (2/3, not 1/2);
+# "c f b" and "c c a" sit exactly on the keep and the audit cut.
+_MODEL_DOCS = [
+    (0, "", "en", "s0"),
+    (1, " a", "de", "s0"),
+    (2, "a ", "en", "s1"),
+    (3, "a  b", "en", "s1"),
+    (4, None, "en", "s0"),
+    (5, "the cat the hat", None, "s2"),
+    (6, " a a", "fr", "s2"),
+    (7, "b  b", "en", "s2"),
+    (8, "c f b", "en", "s0"),
+    (9, "c c a", "de", "s1"),
+]
+
+
+@pytest.mark.parametrize(
+    "model", ["lr_counts", "lr_docs", "ttr_docs", "ttr_docs_by_source"]
+)
+def test_model_builder_equals_sql_twin(spark, model):
+    """Each ml.py model's Spark builder and its DuckDB CTE twin return
+    equal rows over a small in-memory documents frame. lr_docs also
+    carries the logit/score/keep Column twins at both cuts."""
+    import duckdb
+    import pandas as pd
+
+    from insight_patents_spark.operators import ml
+
+    d = spark.createDataFrame(
+        _MODEL_DOCS, "doc_id long, text string, lang string, source string"
+    )
+    audit = ml._LR_AUDIT_MARGIN_Q
+    if model == "lr_counts":
+        sdf = ml._lr_counts(d)
+        sql = ml._LR_DOCS_CTE + " SELECT doc_id, bucket, cnt FROM lr_counts"
+    elif model == "lr_docs":
+        sdf = ml._lr_docs(d).select(
+            "doc_id",
+            "n_tokens",
+            "z_centi",
+            ml._lr_logit().alias("logit"),
+            ml._lr_score().alias("score"),
+            ml._lr_keep().alias("keep"),
+            ml._lr_keep(audit).alias("audit_keep"),
+        )
+        sql = ml._LR_DOCS_CTE + f"""
+        SELECT doc_id, n_tokens, z_centi,
+               CAST({ml._LR_LOGIT_SQL} AS DOUBLE),
+               CAST({ml._LR_SCORE_SQL} AS DOUBLE),
+               {ml._lr_keep_sql()}, {ml._lr_keep_sql(audit)}
+        FROM lr_docs"""
+    else:
+        by_source = model == "ttr_docs_by_source"
+        sdf = ml._ttr_docs(d, by_source=by_source)
+        src = "source, " if by_source else ""
+        sql = ml._ttr_docs_cte(by_source) + f" SELECT doc_id, {src}bin, pos FROM per_doc"
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(_MODEL_DOCS, columns=["doc_id", "text", "lang", "source"])
+    )
+    want = sorted(con.execute(sql).fetchall(), key=lambda r: r[:2])
+    con.close()
+    got = sorted((tuple(r) for r in sdf.collect()), key=lambda r: r[:2])
+    assert got == want
+    assert {r[0] for r in got} == {0, 1, 2, 3, 5, 6, 7, 8, 9}  # NULL text: no row
+
+
 def test_pr_curve_monotone_and_bounded(spark, sf_dir):
     """Recall is monotone nonincreasing as the threshold rises; tp+fp is
     monotone too; precision/recall/f1 all within [0,1]; the lowest
@@ -7469,16 +7538,19 @@ def test_richclub_matches_python_count(spark, sf_dir):
 
 
 def test_fairness_eo_rates_reconstruct(spark, sf_dir):
-    """ml_fairness_eo: cells partition the corpus, rates reconstruct
-    from cells, gaps are vs the pooled rates, and eo_distance is the
-    max of all per-group gaps."""
-    from insight_patents_spark.operators.ml import ml_fairness_eo
+    """ml_fairness_eo: cells partition the corpus, the kept cells are
+    exactly ml_group_parity's kept docs per source (one decision), rates
+    reconstruct from cells, gaps are vs the pooled rates, and
+    eo_distance is the max of all per-group gaps."""
+    from insight_patents_spark.operators.ml import ml_fairness_eo, ml_group_parity
     from insight_patents_spark.sources.tables import load
 
     rows = ml_fairness_eo(spark, sf_dir).collect()
     assert rows
     n_docs = load(spark, sf_dir, "documents").count()
     assert sum(r.tp + r.fn + r.fp + r.tn for r in rows) == n_docs
+    n_kept = {r.source: r.n_kept for r in ml_group_parity(spark, sf_dir).collect()}
+    assert {r.source: r.tp + r.fp for r in rows} == n_kept
     otp = sum(r.tp for r in rows)
     ofn = sum(r.fn for r in rows)
     ofp = sum(r.fp for r in rows)

@@ -165,7 +165,7 @@ def main() -> int:
         fns = {n: s.fn for n, s in specs.items()}
     con = duck_connect(args.sf)
 
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     results: dict[str, dict] = {}
     for name in names:
         spec = specs[name]
@@ -184,12 +184,6 @@ def main() -> int:
             # query's ephemeral localCheckpoints can be released —
             # shared caches are protected via the runtime registry.
             release_ephemeral(spark)
-        if spec.oracle is None:
-            status = "ROWS" if len(sdf) >= 0 else "FAIL"
-            n_rows_only += 1
-            print(f"{status} {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            results[name] = {"status": status, "rows": len(sdf)}
-            continue
         try:
             odf = con.execute(spec.oracle).df()
         except Exception as e:  # noqa: BLE001
@@ -213,13 +207,13 @@ def main() -> int:
             results[name] = {"status": "PASS", "rows": len(sdf),
                              "sec": secs}
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     if args.json:
         import json
 
         Path(args.json).write_text(json.dumps(
             {"sf": args.sf, "n_pass": n_pass, "n_fail": n_fail,
-             "n_rows_only": n_rows_only, "results": results}, indent=1))
+             "results": results}, indent=1))
         print(f"wrote {args.json}")
     spark.stop()
     return 1 if n_fail else 0
