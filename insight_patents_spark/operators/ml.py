@@ -39,10 +39,11 @@ from ..sources.tables import load
 
 _LR_BUCKETS = 16  # hashed feature width (production: 2^18+)
 _LR_BIAS_CENTI = -20  # intercept, in 1/100 units like the weights
-# The audits' operating point, in quarter-logits: keep <=> logit > -1/4.
-# On this corpus's score distribution keep-at-0 keeps nothing (0 of 500
-# documents at sf0.01), which would leave the audits nothing to audit.
-_LR_AUDIT_MARGIN_Q = 1
+# The classifier's one operating point, in quarter-logits: keep <=>
+# logit > -1/4. On this corpus's score distribution keep-at-0 keeps
+# nothing (0 of 500 documents at sf0.01), which would leave the filter
+# keeping nothing and every audit of it nothing to audit.
+_LR_KEEP_MARGIN_Q = 1
 
 
 def _lr_bucket() -> F.Column:
@@ -131,21 +132,14 @@ _LR_LOGIT_SQL = f"ROUND({_LR_Z_NUM_SQL} * 1.0 / (100 * n_tokens), 9)"
 _LR_SCORE_SQL = f"ROUND(1.0 / (1.0 + EXP(-{_LR_LOGIT_SQL})), 9)"
 
 
-def _lr_keep(margin_q: int = 0) -> F.Column:
-    """The keep decision, logit > -margin_q/4, as an exact integer
-    comparison (the decision never touches a float): z_num > 0 at
-    margin 0, else 4·z_num + 100·margin_q·n_tokens > 0."""
-    z = _lr_z_num()
-    if margin_q:
-        z = 4 * z + 100 * margin_q * F.col("n_tokens")
-    return z > 0
+def _lr_keep() -> F.Column:
+    """The keep decision, logit > -_LR_KEEP_MARGIN_Q/4, as an exact
+    integer comparison (the decision never touches a float):
+    4·z_num + 100·_LR_KEEP_MARGIN_Q·n_tokens > 0."""
+    return 4 * _lr_z_num() + 100 * _LR_KEEP_MARGIN_Q * F.col("n_tokens") > 0
 
 
-def _lr_keep_sql(margin_q: int = 0) -> str:
-    """SQL twin of ``_lr_keep``."""
-    if margin_q:
-        return f"(4 * {_LR_Z_NUM_SQL} + {100 * margin_q} * n_tokens > 0)"
-    return f"({_LR_Z_NUM_SQL} > 0)"
+_LR_KEEP_SQL = f"(4 * {_LR_Z_NUM_SQL} + {100 * _LR_KEEP_MARGIN_Q} * n_tokens > 0)"
 
 
 def _ttr_docs(d: DataFrame, by_source: bool = False) -> DataFrame:
@@ -190,7 +184,7 @@ def _ttr_docs_cte(by_source: bool = False) -> str:
     SELECT doc_id, n_tokens,
            CAST({_LR_LOGIT_SQL} AS DOUBLE) AS logit,
            CAST({_LR_SCORE_SQL} AS DOUBLE) AS score,
-           {_lr_keep_sql()} AS keep
+           {_LR_KEEP_SQL} AS keep
     FROM lr_docs
     """,
 )
@@ -200,7 +194,7 @@ def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash into {_LR_BUCKETS} buckets (hashing trick), each bucket carries
     a weight derived from md5 of its id (centi-units, so the dot product
     is EXACT int64 arithmetic), logit = (Σ cnt·w + bias·n) / (100·n) in
-    one division, sigmoid rounded 9dp, keep = logit > 0 (exact integer
+    one division, sigmoid rounded 9dp, keep = logit > -1/4 (exact integer
     comparison — the filter decision never touches a float).
 
     Scale shape: the model is a hash function, so inference is a
@@ -302,7 +296,7 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_LR_DOCS_CTE
     + f""",
     joined AS (
-      SELECT {_lr_keep_sql()} AS pred, (d.lang = 'en') AS actual
+      SELECT {_LR_KEEP_SQL} AS pred, (d.lang = 'en') AS actual
       FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     m AS (
       SELECT CAST(SUM(CASE WHEN pred AND actual THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -327,7 +321,7 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix + accuracy + Matthews correlation for the
     ml_lr_inference filter against the lang='en' label — the
     classifier-audit readout next to ml_pr_curve (PR sweeps thresholds;
-    this scores the DEPLOYED cut at logit>0). The prediction recomputes
+    this scores the DEPLOYED cut at logit > -1/4). The prediction recomputes
     the exact int64 decision (shared arithmetic with ml_lr_inference),
     so the whole evaluation is one narrow pipeline + two hash aggs + a
     4-cell rollup; every metric is one division of exact ints (MCC's
@@ -1288,7 +1282,7 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f""",
     dec AS (
       SELECT d.source,
-             CASE WHEN {_lr_keep_sql(_LR_AUDIT_MARGIN_Q)} THEN 1 ELSE 0 END
+             CASE WHEN {_LR_KEEP_SQL} THEN 1 ELSE 0 END
                AS kept
       FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     grp AS (
@@ -1322,7 +1316,7 @@ def ml_group_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the |groups|-row grid — corpus scanned once, nothing sorted."""
     d = load(spark, sf_dir, "documents")
     dec = _lr_docs(d).join(d.select("doc_id", "source"), "doc_id").select(
-        "source", _lr_keep(_LR_AUDIT_MARGIN_Q).cast("int").alias("kept")
+        "source", _lr_keep().cast("int").alias("kept")
     )
     grp = dec.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1846,7 +1840,7 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_fairness_eo",
     # Equalized-odds audit per corpus source: TPR and FPR of the
-    # deployed integer decision (ml_group_parity's cut, logit > -0.25:
+    # deployed integer decision (the one cut, logit > -0.25:
     # 4·(z − 20·n) + 100·n > 0) against the lang='en' label, per group,
     # plus each group's gap to the overall rates and the max gap
     # repeated (the EO distance). Every rate is ONE division of exact
@@ -1855,7 +1849,7 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_LR_DOCS_CTE
     + f""",
     dec AS (
-      SELECT d.source, {_lr_keep_sql(_LR_AUDIT_MARGIN_Q)} AS kept,
+      SELECT d.source, {_LR_KEEP_SQL} AS kept,
              (d.lang = 'en') AS pos
       FROM lr_docs w JOIN documents d ON w.doc_id = d.doc_id),
     g AS (
@@ -1902,7 +1896,7 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     dec = _lr_docs(d).join(d.select("doc_id", "source", "lang"), "doc_id").select(
         "source",
-        _lr_keep(_LR_AUDIT_MARGIN_Q).alias("kept"),
+        _lr_keep().alias("kept"),
         (F.col("lang") == "en").alias("pos"),
     )
     g = dec.groupBy("source").agg(

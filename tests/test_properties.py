@@ -1121,12 +1121,15 @@ def test_scd2_asof_picks_exactly_one_version(spark, sf_dir):
 
 def test_lr_inference_matches_reference_model(spark, sf_dir):
     """Recompute one doc's logit with a pure-Python reference model and
-    check keep == (logit > 0) exactly; scores are valid probabilities."""
+    check keep == (logit > -margin/4) exactly; scores are valid
+    probabilities."""
     import hashlib
+    from fractions import Fraction
 
     from insight_patents_spark.operators.ml import (
         _LR_BIAS_CENTI,
         _LR_BUCKETS,
+        _LR_KEEP_MARGIN_Q,
         ml_lr_inference,
     )
     from insight_patents_spark.sources.tables import load
@@ -1143,7 +1146,7 @@ def test_lr_inference_matches_reference_model(spark, sf_dir):
         got = rows[d.doc_id]
         assert got.n_tokens == n
         z_total = z + _LR_BIAS_CENTI * n
-        assert got.keep == (z_total > 0)
+        assert got.keep == (Fraction(z_total, 100 * n) > Fraction(-_LR_KEEP_MARGIN_Q, 4))
         assert abs(got.logit - z_total / (100 * n)) < 1e-8
         assert 0.0 < got.score < 1.0
 
@@ -1151,7 +1154,7 @@ def test_lr_inference_matches_reference_model(spark, sf_dir):
 # Texts the fixed test corpus lacks: empty, leading/trailing/double
 # space, NULL; plus NULL lang (pos is NULL in both engines). In " a a"
 # and "b  b" the empty token also moves the TTR bin (2/3, not 1/2);
-# "c f b" and "c c a" sit exactly on the keep and the audit cut.
+# "c c a" sits exactly on the keep cut (logit -1/4), "c f b" at logit 0.
 _MODEL_DOCS = [
     (0, "", "en", "s0"),
     (1, " a", "de", "s0"),
@@ -1172,7 +1175,7 @@ _MODEL_DOCS = [
 def test_model_builder_equals_sql_twin(spark, model):
     """Each ml.py model's Spark builder and its DuckDB CTE twin return
     equal rows over a small in-memory documents frame. lr_docs also
-    carries the logit/score/keep Column twins at both cuts."""
+    carries the logit/score/keep Column twins."""
     import duckdb
     import pandas as pd
 
@@ -1181,7 +1184,6 @@ def test_model_builder_equals_sql_twin(spark, model):
     d = spark.createDataFrame(
         _MODEL_DOCS, "doc_id long, text string, lang string, source string"
     )
-    audit = ml._LR_AUDIT_MARGIN_Q
     if model == "lr_counts":
         sdf = ml._lr_counts(d)
         sql = ml._LR_DOCS_CTE + " SELECT doc_id, bucket, cnt FROM lr_counts"
@@ -1193,13 +1195,12 @@ def test_model_builder_equals_sql_twin(spark, model):
             ml._lr_logit().alias("logit"),
             ml._lr_score().alias("score"),
             ml._lr_keep().alias("keep"),
-            ml._lr_keep(audit).alias("audit_keep"),
         )
         sql = ml._LR_DOCS_CTE + f"""
         SELECT doc_id, n_tokens, z_centi,
                CAST({ml._LR_LOGIT_SQL} AS DOUBLE),
                CAST({ml._LR_SCORE_SQL} AS DOUBLE),
-               {ml._lr_keep_sql()}, {ml._lr_keep_sql(audit)}
+               {ml._LR_KEEP_SQL}
         FROM lr_docs"""
     else:
         by_source = model == "ttr_docs_by_source"
@@ -1432,7 +1433,9 @@ def test_pca_projection_invariants(spark, sf_dir):
 
 def test_confusion_matrix_reconciles_with_lr(spark, sf_dir):
     """Quadrants partition the corpus; tp+fn equals the english doc
-    count; accuracy recomputes from the cells."""
+    count; accuracy recomputes from the cells; the scored decision keeps
+    some english docs (a cut that keeps nothing makes tp = fp = 0 and
+    MCC 0 whatever the classifier)."""
     from insight_patents_spark.operators.ml import ml_confusion_matrix
     from insight_patents_spark.sources.tables import load
     from pyspark.sql import functions as F
@@ -1444,6 +1447,7 @@ def test_confusion_matrix_reconciles_with_lr(spark, sf_dir):
     total = sum(r.n for r in rows.values())
     assert total == n
     assert rows["tp"].n + rows["fn"].n == n_en
+    assert rows["tp"].n > 0
     acc = (rows["tp"].n + rows["tn"].n) / n
     assert abs(rows["tp"].accuracy - round(acc, 9)) < 1e-12
     assert -1.0 <= rows["tp"].mcc <= 1.0

@@ -1,11 +1,13 @@
 """Per-stage diagnostic: run registered queries through the noop sink and
-print, per query, its wall time, job and stage counts and total executor
-CPU, then each new stage's (numTasks, executorRunTime, executorCpuTime)
-from the UI REST API. Single-task stages with large run time = single-input-split map
-stages (guide §2.5). On a box with ambient hypervisor throttling, runTime
-overstates task cost by the wait factor; CPU is the honest per-stage
-cost. Uses the bench session confs but with the UI enabled (the probe is
-a diagnostic, not a bench). Usage:
+print, per query, its wall time, job count, compiled generated classes
+(codegen cache misses), stage count and total executor CPU, then each
+new stage's (numTasks, executorRunTime, executorCpuTime) from the UI
+REST API. Single-task stages with large run time = single-input-split
+map stages (guide §2.5). On a box with ambient hypervisor throttling,
+runTime overstates task cost by the wait factor; CPU is the honest
+per-stage cost. Uses the engine's session confs
+(``session.session_confs``) with the UI enabled (the probe is a
+diagnostic, not a bench). Usage:
 
     python tools/cpu_probe.py [--sf DIR] [--min-ms N] q [q ...]
 """
@@ -14,7 +16,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 import urllib.request
@@ -27,23 +28,15 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from insight_patents_spark import registry  # noqa: E402
 from insight_patents_spark.runtime import release_ephemeral  # noqa: E402
+from insight_patents_spark.session import (  # noqa: E402
+    compiled_classes,
+    get_spark,
+    session_confs,
+)
 
 
 def probe_session() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("ips-stage-probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    return get_spark("ips-stage-probe", {**session_confs(), "spark.ui.enabled": "true"})
 
 
 def _rest(spark, what: str) -> list[dict]:
@@ -87,6 +80,7 @@ def main() -> None:
     seen = {r[0] for r in stage_cpu_rows(spark)}
     seen_jobs = job_ids(spark)
     for name in args.queries:
+        compiles = compiled_classes(spark)
         t0 = time.time()
         specs[name].fn(spark, args.sf).write.format("noop").mode(
             "overwrite"
@@ -97,8 +91,10 @@ def main() -> None:
         jobs = job_ids(spark) - seen_jobs
         seen_jobs |= jobs
         tot_cpu = sum(r[3] for r in rows)
+        compiles = compiled_classes(spark) - compiles
         print(
-            f"== {name}: wall={wall:.2f}s jobs={len(jobs)} stages={len(rows)} "
+            f"== {name}: wall={wall:.2f}s jobs={len(jobs)} compiles={compiles} "
+            f"stages={len(rows)} "
             f"totalCpu={tot_cpu}ms",
             file=sys.stderr,
         )
