@@ -117,63 +117,6 @@ def main() -> None:
         if (i + 1) % _GC_EVERY == 0:
             spark.sparkContext._jvm.System.gc()
 
-    # Contention stabilization (VERDICT r8 #6, symmetric since r10 per
-    # ADVICE r9): ambient load swings single queries 2-4x IN BOTH
-    # DIRECTIONS. A read suspect vs its previously committed time —
-    # past 2x (+1 s) slow OR under half (-0.5 s) fast — is re-measured
-    # once on the same warm session, and the MEDIAN of {first read,
-    # re-run, committed prior} is recorded. One noisy read (spike or
-    # lucky dip) is outvoted by the other two; a genuine shift shows in
-    # both reads and wins the median — so the record cannot ratchet
-    # toward minimum-observed timings across rounds. The re-measured
-    # set is annotated (first read preserved) only when the committed
-    # value actually changed. Shared caches are fully pre-warmed above,
-    # so the second run measures the same plan, minus the noise.
-    remeasured: dict[str, float] = {}
-    if not only:
-        # Anchor = the COMMITTED map (git HEAD), not the last run's file:
-        # under sustained directional noise, last-run anchoring lets a
-        # row ratchet upward in just-under-2x steps across back-to-back
-        # runs (each inflated run becomes the next run's baseline — the
-        # geo_knn 4.8 -> 27.6 walk at the r10 close). The committed tree
-        # only advances when a human-reviewed close lands, so intra-close
-        # runs can no longer feed each other. Falls back to the on-disk
-        # file (first run in a fresh repo / no git).
-        try:
-            import subprocess
-
-            prev = json.loads(
-                subprocess.run(
-                    ["git", "-C", str(REPO), "show", "HEAD:BENCH_local.json"],
-                    capture_output=True, text=True, check=True,
-                ).stdout
-            )["queries"]
-        except Exception:  # noqa: BLE001
-            try:
-                prev = json.loads((REPO / "BENCH_local.json").read_text())[
-                    "queries"
-                ]
-            except Exception:  # noqa: BLE001 (first run: no record yet)
-                prev = {}
-        for name in names:
-            p = prev.get(name)
-            if not (p and p > 0):
-                continue
-            first = timings[name]
-            if not (first > 2 * p + 1 or first < p / 2 - 0.5):
-                continue
-            t0 = time.time()
-            try:
-                _execute(specs[name].fn(spark, sf_dir))
-            except Exception:  # noqa: BLE001
-                continue
-            again = round(time.time() - t0, 3)
-            release_ephemeral(spark)
-            committed = sorted((first, again, p))[1]
-            if committed != first:
-                remeasured[name] = first  # the noisy first read
-                timings[name] = committed
-
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     n_err = sum(1 for t in timings.values() if t < 0)
     n_queries = sum(1 for n in timings if not n.startswith("_"))
@@ -198,10 +141,6 @@ def main() -> None:
         "sf": float(sf),
         "n_queries": n_queries,
         "n_errors": n_err,
-        # queries whose suspect first read (>2x slow or <0.5x fast vs
-        # committed) was outvoted by the re-run+prior median; the noisy
-        # first read is preserved here, timings hold the median
-        "remeasured_first_read": remeasured,
     }
     if not only:  # subset runs must not clobber the full per-query record
         (REPO / "BENCH_local.json").write_text(json.dumps(full, indent=1) + "\n")

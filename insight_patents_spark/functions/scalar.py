@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from ..sources.tables import load
-from .stable import tokens
+from .stable import round_dp, tokens
 
 
 @query(
@@ -138,7 +138,7 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        F.round("l_extendedprice", 1).alias("price_round"),
+        round_dp("l_extendedprice", 1).alias("price_round"),
         F.floor("l_extendedprice").cast("double").alias("price_floor"),
         F.ceil("l_extendedprice").cast("double").alias("price_ceil"),
         F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),
@@ -146,8 +146,8 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt("l_quantity").alias("qty_sqrt"),
         # transcendentals are not bit-identical across libm implementations
         # (Java Math.log vs C libm differ in the last ulp) -> round to 9dp
-        F.round(F.log(F.col("l_extendedprice")), 9).alias("price_ln"),
-        F.round(F.exp("l_discount"), 9).alias("disc_exp"),
+        round_dp(F.log(F.col("l_extendedprice"))).alias("price_ln"),
+        round_dp(F.exp("l_discount")).alias("disc_exp"),
         (F.col("l_orderkey") % 7).alias("key_mod"),
         F.signum(F.col("l_quantity") - 25).alias("qty_side"),
     )

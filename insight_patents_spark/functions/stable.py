@@ -1,6 +1,6 @@
 """The determinism contract's shared definitions (SURVEY §5).
 
-Spark and the DuckDB oracle must agree, byte for byte, on three things;
+Spark and the DuckDB oracle must agree, byte for byte, on four things;
 each is defined here once and every engine kernel imports it.
 
 **Hash → integer.** ``hex_int(digest, width, start)`` reads ``width`` hex
@@ -29,9 +29,28 @@ sum divided by COUNT (double/bigint IEEE division is deterministic).
 Order-statistic and merge-based aggregates (stddev/corr/percentile) stay
 double but are computed over small-magnitude columns and rounded (see
 individual queries).
+
+**Rounding.** DuckDB rounds a DOUBLE to ``k`` decimals as
+``std::round(x * 10^k) / 10^k``. Spark's ``round(x, k)`` instead rounds
+x's shortest decimal string half-up, and the two can split wherever
+``x * 10^k`` is inexact or an exact binary half: at k = 9, about 7% of
+the doubles in [1e6, 2e6), and x = 439.39270552749997. Every engine
+rounding of a double to ``k >= 1`` decimals is therefore
+``round_dp(col, k)``, or its SQL twin ``round_dp_sql(expr, k)`` in
+``F.expr`` and lambda strings: ``round(x * 10^k, 0) / 10^k``, the
+oracle's own formula. Spark's ``round(y, 0)`` is HALF_UP on y's shortest
+string, which for a double always equals ``std::round(y)`` (a shortest
+string that reads as n + 1/2 is exactly n + 1/2). ``py_round_dp`` is the
+Python twin for driver-side kernels. Oracle SQL keeps ``ROUND(x, k)``.
+DECIMAL and integral values would keep Spark's own ``round``, which is
+exact on them; no engine site rounds one to ``k >= 1``. (Past
+``|x * 10^k| > 1.8e308`` DuckDB returns x and ``round_dp`` infinity; no
+engine value comes near.)
 """
 
 from __future__ import annotations
+
+import decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -61,6 +80,30 @@ def tokens(col: Column | str = "text") -> Column:
 def py_tokens(s: str | None) -> list[str] | None:
     """Python twin of ``tokens`` for Arrow/UDF kernels."""
     return None if s is None else s.split(" ")
+
+
+def round_dp(col: Column | str, digits: int = 9) -> Column:
+    """``col`` (a double) rounded to ``digits`` decimals bit-identically to
+    DuckDB ``ROUND(x, digits)``: ``round(x * 10^digits, 0) / 10^digits``."""
+    c = F.col(col) if isinstance(col, str) else col
+    scale = float(10**digits)
+    return F.round(c * scale, 0) / scale
+
+
+def round_dp_sql(expr: str, digits: int = 9) -> str:
+    """Spark SQL twin of ``round_dp`` for ``F.expr`` and lambda strings."""
+    scale = f"{float(10**digits)!r}D"
+    return f"(round(({expr}) * {scale}, 0) / {scale})"
+
+
+def py_round_dp(x: float, digits: int = 9) -> float:
+    """Python twin of ``round_dp``: ``std::round`` (exact half away from
+    zero) of ``x * 10^digits``, then one IEEE division."""
+    scale = float(10**digits)
+    y = x * scale
+    if abs(y) < 2.0**52:  # larger doubles, inf and NaN are integral or kept
+        y = float(decimal.Decimal(y).quantize(1, rounding=decimal.ROUND_HALF_UP))
+    return y / scale
 
 
 def dsum(col: Column | str) -> Column:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import davg, dsum, hex_int, sql_davg, sql_dsum
+from ..functions.stable import davg, dsum, hex_int, round_dp, sql_davg, sql_dsum
 from ..registry import query
 from ..sources.tables import load
 
@@ -275,10 +275,10 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge-order error ~1e-12 << 5e-7 boundary distance; SURVEY §5)."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
-        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-        F.round(F.var_samp("l_quantity"), 6).alias("var_qty"),
-        F.round(F.corr("l_quantity", "l_discount"), 6).alias("corr_qd"),
-        F.round(F.covar_samp("l_quantity", "l_discount"), 6).alias("cov_qd"),
+        round_dp(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
+        round_dp(F.var_samp("l_quantity"), 6).alias("var_qty"),
+        round_dp(F.corr("l_quantity", "l_discount"), 6).alias("corr_qd"),
+        round_dp(F.covar_samp("l_quantity", "l_discount"), 6).alias("cov_qd"),
     )
 
 
@@ -301,8 +301,8 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
-            F.round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("median_total"),
-            F.round(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("p90_total"),
+            round_dp(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("median_total"),
+            round_dp(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("p90_total"),
         )
     )
 
@@ -1015,7 +1015,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     gini = (2.0 * F.col("rsum") - (F.col("n") + 1) * F.col("tot")) / (
         F.col("n") * F.col("tot")
     )
-    return g.select("event_type", "n", F.round(gini, 9).alias("gini"))
+    return g.select("event_type", "n", round_dp(gini).alias("gini"))
 
 
 @query(
@@ -1297,7 +1297,7 @@ def time_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         - (F.col("axp") - F.col("x")) * (F.col("ayn") - F.col("ayp"))
     )
     w_mid = Window.partitionBy("event_type", "bucket").orderBy(
-        F.round(area, 6).desc(), F.col("event_id")
+        round_dp(area, 6).desc(), F.col("event_id")
     )
     mid = (
         p.join(F.broadcast(bmax), "event_type")
@@ -1471,8 +1471,8 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "type_b",
             F.col("n_a").cast("bigint").alias("n_a"),
             F.col("n_b").cast("bigint").alias("n_b"),
-            F.round((F.col("m_a") - F.col("m_b")) / F.sqrt(se2), 9).alias("t_stat"),
-            F.round(df_num / df_den, 9).alias("welch_df"),
+            round_dp((F.col("m_a") - F.col("m_b")) / F.sqrt(se2)).alias("t_stat"),
+            round_dp(df_num / df_den).alias("welch_df"),
         )
     )
 
@@ -1538,8 +1538,8 @@ def agg_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "event_type",
         F.col("n").cast("bigint").alias("n"),
-        F.round(slope / 100.0, 9).alias("slope_per_min"),
-        F.round(intercept / 100.0, 9).alias("intercept"),
+        round_dp(slope / 100.0).alias("slope_per_min"),
+        round_dp(intercept / 100.0).alias("intercept"),
     )
 
 
@@ -1584,7 +1584,7 @@ def agg_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             "dau",
             "mau",
-            F.round(F.col("dau").cast("double") / F.col("mau"), 9).alias("stickiness"),
+            round_dp(F.col("dau").cast("double") / F.col("mau")).alias("stickiness"),
         )
     )
 
@@ -1709,8 +1709,8 @@ def time_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             (F.col("rev_c") / 100.0).alias("revenue"),
             ((F.col("rev_c") - F.col("prev_c")) / 100.0).alias("delta"),
-            F.round(
-                (F.col("rev_c") - F.col("prev_c")).cast("double") / F.col("prev_c"), 9
+            round_dp(
+                (F.col("rev_c") - F.col("prev_c")).cast("double") / F.col("prev_c")
             ).alias("pct_change"),
         )
     )
@@ -1824,10 +1824,9 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("age").cast("bigint").alias("age"),
             "n_users",
             F.sum("cents").over(w_cum).alias("cum_cents"),
-            F.round(
+            round_dp(
                 F.sum("cents").over(w_cum).cast("double")
                 / (100.0 * F.col("n_users")),
-                9,
             ).alias("ltv_per_user"),
         )
     )
@@ -1922,9 +1921,9 @@ def agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.crossJoin(F.broadcast(t)).select(
         "decile",
         "n_customers",
-        F.round(F.col("cents") / 100.0, 2).alias("revenue"),
-        F.round(
-            F.sum("cents").over(w).cast("double") / F.col("total"), 9
+        round_dp(F.col("cents") / 100.0, 2).alias("revenue"),
+        round_dp(
+            F.sum("cents").over(w).cast("double") / F.col("total")
         ).alias("cum_share"),
     )
 
@@ -1993,7 +1992,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     w_t = Window.partitionBy("event_type")
-    expected = F.round(F.log10(1.0 + 1.0 / F.col("digit")), 9)
+    expected = round_dp(F.log10(1.0 + 1.0 / F.col("digit")))
     t = cells.select(
         "event_type",
         "digit",
@@ -2010,7 +2009,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("total") * expected)
         ).alias("term"),
     )
-    chi = F.round(
+    chi = round_dp(
         F.aggregate(
             F.array_sort(
                 F.collect_list(F.struct("digit", "term")).over(w_t)
@@ -2018,13 +2017,12 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
             lambda acc, x: acc + x["term"],
         ),
-        9,
     )
     return t.select(
         "event_type",
         "digit",
         F.col("n").cast("bigint").alias("n"),
-        F.round(F.col("n") / F.col("total"), 9)
+        round_dp(F.col("n") / F.col("total"))
         .cast("double")
         .alias("observed_frac"),
         F.col("expected").cast("double").alias("expected"),
@@ -2177,12 +2175,11 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(Window.partitionBy("y")).alias("ny"),
         F.sum("n").over(w_all).alias("nt"),
     )
-    pmi = F.round(
+    pmi = round_dp(
         F.log(
             (F.col("n") * 1.0 * F.col("nt"))
             / (F.col("nx") * 1.0 * F.col("ny"))
         ),
-        9,
     )
     terms = m.select(
         "x",
@@ -2192,7 +2189,7 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         pmi.cast("double").alias("pmi"),
         ((F.col("n") * 1.0 / F.col("nt")) * pmi).alias("term"),
     )
-    mi = F.round(
+    mi = round_dp(
         F.aggregate(
             F.array_sort(
                 F.collect_list(F.struct("x", "y", "term")).over(w_all)
@@ -2200,7 +2197,6 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
             lambda acc, t: acc + t["term"],
         ),
-        9,
     )
     return terms.select(
         F.col("x").alias("event_type"),
@@ -2287,11 +2283,9 @@ def agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.select(
         F.col("k").cast("bigint").alias("k_groups"),
         F.col("nt").alias("n_total"),
-        F.round(ssb, 9).cast("double").alias("ss_between"),
-        F.round(ssw, 9).cast("double").alias("ss_within"),
-        F.round(
-            (ssb / (F.col("k") - 1)) / (ssw / (F.col("nt") - F.col("k"))), 9
-        )
+        round_dp(ssb).cast("double").alias("ss_between"),
+        round_dp(ssw).cast("double").alias("ss_within"),
+        round_dp((ssb / (F.col("k") - 1)) / (ssw / (F.col("nt") - F.col("k"))))
         .cast("double")
         .alias("f_stat"),
     )
@@ -2488,15 +2482,14 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("nb").cast("bigint").alias("nb"),
     )
     d = F.col("num") / (F.col("na") * F.col("nb"))
-    crit = F.round(
+    crit = round_dp(
         1.358
         * F.sqrt((F.col("na") + F.col("nb")) / (F.col("na") * F.col("nb"))),
-        9,
     )
     return m.select(
         F.col("na").alias(f"n_{_KS_A}"),
         F.col("nb").alias(f"n_{_KS_B}"),
-        F.round(d, 9).cast("double").alias("d_stat"),
+        round_dp(d).cast("double").alias("d_stat"),
         crit.cast("double").alias("crit_05"),
         (d > crit).alias("reject_05"),
     )
@@ -2579,8 +2572,8 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.min("n").cast("bigint").alias("n"),
-            F.round(F.min("med2"), 9).cast("double").alias("median_cents"),
-            F.round(F.min("mad"), 9).cast("double").alias("mad_cents"),
+            round_dp(F.min("med2")).cast("double").alias("median_cents"),
+            round_dp(F.min("mad")).cast("double").alias("mad_cents"),
             F.sum(
                 F.when(F.col("adev") > 3.5 * F.col("mad"), 1).otherwise(0)
             )
@@ -2690,17 +2683,16 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o",
         "nr",
         "nc",
-        F.round(F.col("r") * F.col("c") / F.col("n"), 9)
+        round_dp(F.col("r") * F.col("c") / F.col("n"))
         .cast("double")
         .alias("expected"),
         F.when(
             F.col("n") <= F.lit(_CHI2_EXACT_N),
-            F.round(num * num / (F.col("n") * F.col("r") * F.col("c")), 9),
+            round_dp(num * num / (F.col("n") * F.col("r") * F.col("c"))),
         )
         .otherwise(
-            F.round(
+            round_dp(
                 num_d * num_d / (F.col("n") * F.lit(1.0) * F.col("r") * F.col("c")),
-                9,
             )
         )
         .alias("chi2_term"),
@@ -2711,12 +2703,11 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o").alias("observed"),
         "expected",
         F.col("chi2_term").cast("double").alias("chi2_term"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("chi2_term") * 1e9, 0).cast("bigint")).over(
                 w_all
             )
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("chi2_total"),
@@ -2845,17 +2836,17 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sw") > 0)
         .select(
             "event_type",
-            F.round(F.col("swc") / (100.0 * F.col("sw")), 9).alias("m"),
+            round_dp(F.col("swc") / (100.0 * F.col("sw"))).alias("m"),
         )
     )
     ci = means.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_replicates"),
-        F.round(F.percentile("m", F.lit(0.025)), 4).cast("double").alias("ci_lo"),
-        F.round(F.percentile("m", F.lit(0.975)), 4).cast("double").alias("ci_hi"),
+        round_dp(F.percentile("m", F.lit(0.025)), 4).cast("double").alias("ci_lo"),
+        round_dp(F.percentile("m", F.lit(0.975)), 4).cast("double").alias("ci_hi"),
     )
     pt = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.round(F.sum("c") / (100.0 * F.count(F.lit(1))), 9)
+        round_dp(F.sum("c") / (100.0 * F.count(F.lit(1))))
         .cast("double")
         .alias("mean_value"),
     )
@@ -2947,16 +2938,15 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").cast("bigint").alias("n_orders"),
         (F.max("lo_c") / 100.0).cast("double").alias("lo_cut"),
         (F.max("hi_c") / 100.0).cast("double").alias("hi_cut"),
-        F.round(F.sum("c") / (100.0 * F.max("n")), 9)
+        round_dp(F.sum("c") / (100.0 * F.max("n")))
         .cast("double")
         .alias("mean_raw"),
-        F.round(F.sum(clamped) / (100.0 * F.max("n")), 9)
+        round_dp(F.sum(clamped) / (100.0 * F.max("n")))
         .cast("double")
         .alias("mean_winsor"),
-        F.round(
+        round_dp(
             F.sum(F.when(kept, F.col("c")).otherwise(0))
             / (100.0 * F.max(F.col("n") - 2 * F.col("t"))),
-            9,
         )
         .cast("double")
         .alias("mean_trimmed"),
@@ -3042,25 +3032,23 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seg",
         "n",
         "c",
-        F.round((F.col("c") / mu) * F.log(F.col("c") / mu), 9).alias("tt"),
-        F.round(F.log(mu / F.col("c")), 9).alias("tl"),
+        round_dp((F.col("c") / mu) * F.log(F.col("c") / mu)).alias("tt"),
+        round_dp(F.log(mu / F.col("c"))).alias("tl"),
     )
     return term.groupBy("seg").agg(
         F.max("n").cast("bigint").alias("n_customers"),
-        F.round(F.sum("c") / (100.0 * F.max("n")), 4)
+        round_dp(F.sum("c") / (100.0 * F.max("n")), 4)
         .cast("double")
         .alias("mean_revenue"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("tt") * 1e9, 0).cast("bigint"))
             / (F.max("n") * F.lit(1e9)),
-            9,
         )
         .cast("double")
         .alias("theil_t"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("tl") * 1e9, 0).cast("bigint"))
             / (F.max("n") * F.lit(1e9)),
-            9,
         )
         .cast("double")
         .alias("theil_l"),
@@ -3167,7 +3155,7 @@ def agg_causal_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         "treated",
         "post",
         "n",
-        F.round(F.col("s").cast("double") / (100.0 * F.col("n")), 9).alias(
+        round_dp(F.col("s").cast("double") / (100.0 * F.col("n"))).alias(
             "mean_v"
         ),
         (
@@ -3197,9 +3185,9 @@ def agg_causal_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select(
         "event_type",
         "n_events",
-        F.round(did, 9).cast("double").alias("did"),
-        F.round(se, 9).cast("double").alias("se"),
-        F.round(did / se, 9).cast("double").alias("t_stat"),
+        round_dp(did).cast("double").alias("did"),
+        round_dp(se).cast("double").alias("se"),
+        round_dp(did / se).cast("double").alias("t_stat"),
     )
 
 
@@ -3358,18 +3346,17 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.crossJoin(F.broadcast(th)).select(
         "treated",
         F.col("n").alias("n_users"),
-        F.round(F.col("my") / 100.0, 9).cast("double").alias("mean_y"),
-        F.round(
+        round_dp(F.col("my") / 100.0).cast("double").alias("mean_y"),
+        round_dp(
             (F.col("my") - F.col("theta") * (F.col("mx") - F.col("mx_all")))
             / 100.0,
-            9,
         )
         .cast("double")
         .alias("mean_y_cuped"),
-        F.round(F.col("theta"), 9).cast("double").alias("theta"),
-        F.round(F.col("vy") / 10000.0, 9).cast("double").alias("var_y"),
-        F.round(vc / 10000.0, 9).cast("double").alias("var_y_cuped"),
-        F.round(vc / F.col("vy"), 9).cast("double").alias("var_ratio"),
+        round_dp(F.col("theta")).cast("double").alias("theta"),
+        round_dp(F.col("vy") / 10000.0).cast("double").alias("var_y"),
+        round_dp(vc / 10000.0).cast("double").alias("var_y_cuped"),
+        round_dp(vc / F.col("vy")).cast("double").alias("var_ratio"),
     )
 
 
@@ -3459,13 +3446,13 @@ def agg_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(
         "event_type",
         "n_events",
-        F.round(F.col("mean_c") / 100.0, 9).cast("double").alias("mean_value"),
-        F.round(F.sqrt(F.col("var_c")) / 100.0, 9)
+        round_dp(F.col("mean_c") / 100.0).cast("double").alias("mean_value"),
+        round_dp(F.sqrt(F.col("var_c")) / 100.0)
         .cast("double")
         .alias("sd_value"),
-        F.round(mde_c / 100.0, 9).cast("double").alias("mde_abs"),
-        F.round(mde_c / F.col("mean_c"), 9).cast("double").alias("mde_rel"),
-        F.round(
+        round_dp(mde_c / 100.0).cast("double").alias("mde_abs"),
+        round_dp(mde_c / F.col("mean_c")).cast("double").alias("mde_rel"),
+        round_dp(
             2.0
             * _POWER_K
             * _POWER_K
@@ -3566,8 +3553,8 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = raw.select(
         "brand",
-        F.round(F.log(F.col("pc") / (100.0 * F.col("q"))), 9).alias("a"),
-        F.round(F.log(F.col("q").cast("double")), 9).alias("b"),
+        round_dp(F.log(F.col("pc") / (100.0 * F.col("q")))).alias("a"),
+        round_dp(F.log(F.col("q").cast("double"))).alias("b"),
     )
     def nano(c):
         return F.round(c * F.lit(1e9), 0).cast("long").cast("decimal(38,0)")
@@ -3586,8 +3573,8 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "brand",
         F.col("n").alias("n_lines"),
-        F.round(num / dena, 9).cast("double").alias("elasticity"),
-        F.round((num / dena) * (num / denb), 9)
+        round_dp(num / dena).cast("double").alias("elasticity"),
+        round_dp((num / dena) * (num / denb))
         .cast("double")
         .alias("r_squared"),
     )
@@ -3718,12 +3705,12 @@ def agg_delta_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(
         "treated",
         F.col("n").alias("n_users"),
-        F.round(F.col("r") / 100.0, 9).cast("double").alias("ratio"),
-        F.round(s / 100.0, 9).cast("double").alias("se"),
-        F.round((F.col("r") - _Z975 * s) / 100.0, 9)
+        round_dp(F.col("r") / 100.0).cast("double").alias("ratio"),
+        round_dp(s / 100.0).cast("double").alias("se"),
+        round_dp((F.col("r") - _Z975 * s) / 100.0)
         .cast("double")
         .alias("ci_lo"),
-        F.round((F.col("r") + _Z975 * s) / 100.0, 9)
+        round_dp((F.col("r") + _Z975 * s) / 100.0)
         .cast("double")
         .alias("ci_hi"),
     )
@@ -3847,10 +3834,8 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
-        F.round(u, 4).cast("double").alias("u_stat"),
-        F.round(
-            (u - F.col("n1") * F.col("n2") / 2.0) / F.sqrt(var), 9
-        )
+        round_dp(u, 4).cast("double").alias("u_stat"),
+        round_dp((u - F.col("n1") * F.col("n2") / 2.0) / F.sqrt(var))
         .cast("double")
         .alias("z_score"),
     )
@@ -3948,10 +3933,8 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 g.select(
                     F.lit(na).alias("var_a"),
                     F.lit(nb).alias("var_b"),
-                    F.round(cov(na, nb), 4).cast("double").alias("cov"),
-                    F.round(
-                        cov(na, nb) / F.sqrt(cov(na, na) * cov(nb, nb)), 9
-                    )
+                    round_dp(cov(na, nb), 4).cast("double").alias("cov"),
+                    round_dp(cov(na, nb) / F.sqrt(cov(na, na) * cov(nb, nb)))
                     .cast("double")
                     .alias("corr"),
                 )
@@ -4046,8 +4029,8 @@ def agg_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("seg").alias("c_mktsegment"),
         F.col("decile").cast("bigint").alias("decile"),
         F.col("dn").alias("n_customers"),
-        F.round(F.col("dc") / F.col("s"), 9).cast("double").alias("share"),
-        F.round(F.sum("dc").over(wcum) / F.col("s"), 9)
+        round_dp(F.col("dc") / F.col("s")).cast("double").alias("share"),
+        round_dp(F.sum("dc").over(wcum) / F.col("s"))
         .cast("double")
         .alias("cum_share"),
     )
@@ -4110,7 +4093,7 @@ def agg_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         F.col("n0").alias("n_control"),
         F.col("n1").alias("n_treated"),
-        F.round(chi2, 9).cast("double").alias("chi2"),
+        round_dp(chi2).cast("double").alias("chi2"),
         (chi2 > 3.841).alias("srm_detected"),
     )
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import hex_int
+from ..functions.stable import hex_int, round_dp
 from ..registry import query
 from ..runtime import checkpoint, shared
 from ..session import conf_scope
@@ -708,15 +708,14 @@ def graph_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ic), "consequent")
         .withColumn(
             "confidence",
-            F.round(F.col("pair_support").cast("double") / F.col("na"), 9),
+            round_dp(F.col("pair_support").cast("double") / F.col("na")),
         )
         .withColumn(
             "lift",
-            F.round(
+            round_dp(
                 F.col("pair_support").cast("double")
                 * F.lit(float(n_baskets))
                 / (F.col("na") * F.col("nc")),
-                9,
             ),
         )
         .filter(F.col("pair_support").cast("double") / F.col("na") >= 0.08)
@@ -764,7 +763,7 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = p.join(
         e.select(F.col("src").alias("pa"), F.col("dst").alias("n")), "pa"
     ).join(e.select(F.col("src").alias("pb"), F.col("dst").alias("n")), ["pb", "n"])
-    term = F.round(F.lit(1.0) / F.log(F.col("dn.deg")), 9).cast("decimal(24,9)")
+    term = round_dp(F.lit(1.0) / F.log(F.col("dn.deg"))).cast("decimal(24,9)")
     return (
         cn.join(F.broadcast(deg).alias("dn"), F.col("n") == F.col("dn.node"))
         .groupBy("pa", "pb")
@@ -1323,13 +1322,12 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nodes",
             F.coalesce(F.col("w_in"), F.lit(0)).alias("w_in"),
             "s_c",
-            F.round(
+            round_dp(
                 (
                     F.coalesce(F.col("w_in"), F.lit(0)) * F.col("m2")
                     - F.col("s_c") * F.col("s_c")
                 ).cast("double")
                 / (F.col("m2") * F.col("m2")),
-                9,
             ).alias("q_contrib"),
         )
     )
@@ -1494,13 +1492,12 @@ def _louvain_level(spark: SparkSession, e: DataFrame) -> DataFrame:
             "n_nodes",
             F.coalesce(F.col("w_in"), F.lit(0)).cast("bigint").alias("w_in"),
             "s_c",
-            F.round(
+            round_dp(
                 (
                     F.coalesce(F.col("w_in"), F.lit(0)) * F.col("m2")
                     - F.col("s_c") * F.col("s_c")
                 ).cast("double")
                 / (F.col("m2") * F.col("m2")),
-                9,
             ).alias("q_contrib"),
         )
     )
@@ -1555,14 +1552,13 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node",
         "degree",
         F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_triangles"),
-        F.round(
+        round_dp(
             F.when(
                 F.col("degree") >= 2,
                 2.0
                 * F.coalesce(F.col("n_tri"), F.lit(0))
                 / (F.col("degree") * (F.col("degree") - 1)),
             ).otherwise(0.0),
-            9,
         ).alias("clustering_coef"),
     )
 
@@ -1865,10 +1861,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    r = F.round(
+    r = round_dp(
         (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
         / F.sqrt(vx.cast("double") * vy.cast("double")),
-        9,
     )
     return m.select(
         F.col("n").cast("bigint").alias("n_edges"),
@@ -2391,7 +2386,7 @@ def graph_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt",
         (
             F.col("cnt")
-            * F.round(F.round(F.log(2.0 * F.col("d")), 9) * F.lit(1e9), 0).cast(
+            * F.round(round_dp(F.log(2.0 * F.col("d"))) * F.lit(1e9), 0).cast(
                 "long"
             )
         ).alias("qln"),
@@ -2404,10 +2399,10 @@ def graph_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return a.select(
         F.col("n").cast("bigint").alias("n_nodes"),
-        F.round(F.col("sum_deg").cast("double") / F.col("n"), 9)
+        round_dp(F.col("sum_deg").cast("double") / F.col("n"))
         .cast("double")
         .alias("mean_degree"),
-        F.round(1.0 + F.col("n") / (F.col("sq") / F.lit(1e9)), 9)
+        round_dp(1.0 + F.col("n") / (F.col("sq") / F.lit(1e9)))
         .cast("double")
         .alias("alpha"),
     )
@@ -2486,9 +2481,8 @@ def graph_richclub(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionByName(p)
     phi = F.when(
         F.col("n_rich") >= 2,
-        F.round(
+        round_dp(
             2.0 * F.col("e_rich") / (F.col("n_rich") * (F.col("n_rich") - 1.0)),
-            9,
         ),
     ).otherwise(F.lit(0.0))
     return out.select("k", "n_rich", "e_rich", phi.cast("double").alias("phi"))
@@ -2575,10 +2569,9 @@ def graph_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("in_b") & ~F.col("in_a"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_added"),
-        F.round(
+        round_dp(
             F.sum(F.when(F.col("in_a") & F.col("in_b"), 1).otherwise(0))
             / F.count(F.lit(1)),
-            9,
         )
         .cast("double")
         .alias("jaccard_stability"),
@@ -2710,10 +2703,10 @@ def graph_smallworld_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n").alias("n_nodes"),
             F.expr("degsum div 2").cast("bigint").alias("n_edges"),
-            F.round(c, 9).alias("transitivity"),
-            F.round(l_sample, 9).alias("l_sample"),
-            F.round(c_rand, 9).alias("c_rand"),
-            F.round(l_rand, 9).alias("l_rand"),
-            F.round((c / c_rand) / (l_sample / l_rand), 9).alias("sigma"),
+            round_dp(c).alias("transitivity"),
+            round_dp(l_sample).alias("l_sample"),
+            round_dp(c_rand).alias("c_rand"),
+            round_dp(l_rand).alias("l_rand"),
+            round_dp((c / c_rand) / (l_sample / l_rand)).alias("sigma"),
         )
     )

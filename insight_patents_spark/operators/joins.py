@@ -17,15 +17,23 @@ Scale notes:
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions.stable import dsum, hex_int, sql_dsum
+from ..functions.stable import dsum, hex_int, round_dp, sql_dsum
 from ..registry import query
 from ..session import conf_scope
-from ..sources.tables import load
+from ..sources.tables import load, src_stamp
 
 
 @query(
@@ -356,9 +364,58 @@ def join_self_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- scale-technique exhibits: bucketing and salting ---------------------
 
-_BUCKET_SCRATCH = "/dev/shm/ips_bucketed" if __import__("os").path.isdir(
-    "/dev/shm"
-) else __import__("tempfile").gettempdir() + "/ips_bucketed"
+# Root of the bucketed scratch tables. Per process (uuid suffix, removed at
+# exit), like relational._TMP and queries._STREAM_TMP: a root shared across
+# processes outlives every session that wrote it. Read at call time, so a
+# harness may rebind it after import.
+_BUCKET_SCRATCH = os.path.join(
+    "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
+    f"ips_bucketed_{uuid.uuid4().hex[:12]}",
+)
+atexit.register(shutil.rmtree, _BUCKET_SCRATCH, ignore_errors=True)
+_BUCKETS = 8  # O(cluster cores) in production
+
+
+def bucketed_table(
+    spark: SparkSession,
+    name: str,
+    stamp: str,
+    build: Callable[[], DataFrame],
+    key: str,
+) -> DataFrame:
+    """Session catalog table ``<name>_<stamp>``: ``build()`` written in
+    ``_BUCKETS`` buckets sorted by ``key`` under
+    ``_BUCKET_SCRATCH/<name>/<stamp>``.
+
+    ``stamp`` versions the sources (``src_stamp``), so a rewritten source
+    builds a new table instead of answering from the old copy; building it
+    drops the tables and files of every superseded stamp of ``name``."""
+    tname = f"{name}_{stamp}"
+    if not spark.catalog.tableExists(tname):
+        root = os.path.join(_BUCKET_SCRATCH, name)
+        if os.path.isdir(root):
+            for old in os.listdir(root):
+                spark.sql(f"DROP TABLE IF EXISTS {name}_{old}")
+                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
+        (
+            build()
+            # pre-shuffle into the bucket layout (same Murmur3 hash
+            # partitioning the bucketed write expects) so each write task
+            # emits exactly one sorted bucket file
+            .repartition(_BUCKETS, F.col(key))
+            .write.bucketBy(_BUCKETS, key)
+            .sortBy(key)
+            .option("path", os.path.join(root, stamp))
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(tname)
+        )
+    return spark.table(tname)
+
+
+def scratch_key(sf_dir: str) -> str:
+    """``sf_dir`` as a table-name fragment (every non-word char -> ``_``)."""
+    return re.sub(r"\W", "_", sf_dir.strip("/"))
 
 
 @query(
@@ -373,44 +430,28 @@ _BUCKET_SCRATCH = "/dev/shm/ips_bucketed" if __import__("os").path.isdir(
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located (bucketed) fact-fact join: both sides are written
-    bucketed+sorted by the join key (8 buckets here; O(cluster cores) in
-    production), then joined bucket-to-bucket — the scan feeds a
-    sort-merge join with NO Exchange on either side (gated in
-    test_plans.py). This is the pre-shuffle pattern that amortizes the
-    big-join shuffle across every downstream query at 100 TB: pay the
-    partitioning once at ingest, never again per query."""
-    import os
+    bucketed+sorted by the join key (`bucketed_table`), then joined
+    bucket-to-bucket — the scan feeds a sort-merge join with NO
+    Exchange on either side (gated in test_plans.py). This is the
+    pre-shuffle pattern that amortizes the big-join shuffle across every
+    downstream query at 100 TB: pay the partitioning once at ingest,
+    never again per query."""
+    key = scratch_key(sf_dir)
 
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    names = {}
     # Ingest writes only the query-relevant projection — a bucketed
     # materialized view, not a full-table copy (a production ingest would
     # bucket the full table once; the join-plan exhibit is identical).
-    proj = {
-        "lineitem": ["l_orderkey", "l_extendedprice"],
-        "orders": ["o_orderkey", "o_orderpriority"],
-    }
-    for tbl, join_key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        tname = f"ips_b_{key}_{tbl}"
-        path = os.path.join(_BUCKET_SCRATCH, key, tbl)
-        if not spark.catalog.tableExists(tname):
-            (
-                load(spark, sf_dir, tbl)
-                .select(*proj[tbl])
-                # pre-shuffle into the bucket layout (same Murmur3 hash
-                # partitioning the bucketed write expects) so each write
-                # task emits exactly one sorted bucket file
-                .repartition(8, F.col(join_key))
-                .write.bucketBy(8, join_key)
-                .sortBy(join_key)
-                .option("path", path)
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(tname)
-            )
-        names[tbl] = tname
-    li = spark.table(names["lineitem"])
-    o = spark.table(names["orders"])
+    def bucketed(tbl: str, join_key: str, other: str) -> DataFrame:
+        return bucketed_table(
+            spark,
+            f"ips_b_{key}_{tbl}",
+            src_stamp(sf_dir, tbl),
+            lambda: load(spark, sf_dir, tbl).select(join_key, other),
+            join_key,
+        )
+
+    li = bucketed("lineitem", "l_orderkey", "l_extendedprice")
+    o = bucketed("orders", "o_orderkey", "o_orderpriority")
     # merge hint: at test SF the planner would broadcast the small side;
     # the point of the exhibit is the bucket-to-bucket sort-merge join
     # (zero Exchange under the join), which is the plan a fact-fact join
@@ -879,16 +920,6 @@ def _geo_h(prefix: str, key: str = "c_custkey") -> F.Column:
     return hex_int(F.md5(F.concat(F.lit(prefix), F.col(key).cast("string"))), 8)
 
 
-def _approx_km(d2q: F.Column) -> F.Column:
-    """``ROUND(SQRT(d2q) * 0.00555225, 9)`` as DuckDB computes it: round
-    ``x * 1e9`` to an integer, then divide. Spark's ``round(x, 9)``
-    rounds x's shortest decimal string half-up instead, which splits
-    from DuckDB where ``x * 1e9`` lands exactly on a half (439.39270552749997:
-    Spark 439.392705527, DuckDB 439.392705528)."""
-    x = F.sqrt(d2q.cast("double")) * 0.00555225
-    return (F.round(x * 1e9, 0) / 1e9).alias("approx_km")
-
-
 @query(
     "geo_grid_join",
     # Spatial neighbor join via grid bucketing (the Sedona/PostGIS
@@ -1009,7 +1040,9 @@ def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a",
         "id_b",
         F.col("d2q").cast("bigint").alias("d2q_units"),
-        _approx_km(F.col("d2q")),
+        round_dp(F.sqrt(F.col("d2q").cast("double")) * 0.00555225).alias(
+            "approx_km"
+        ),
     )
 
 
@@ -1123,10 +1156,9 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("inside"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_inside"),
-        F.round(
+        round_dp(
             F.sum(F.when(F.col("inside"), 1).otherwise(0))
             / F.count_distinct("id"),
-            9,
         )
         .cast("double")
         .alias("share"),
@@ -1359,7 +1391,9 @@ def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).cast("bigint").alias("rank"),
         F.col("t.item_id").alias("item_id"),
         F.col("t.d2q").cast("bigint").alias("d2q_units"),
-        _approx_km(F.col("t.d2q")),
+        round_dp(F.sqrt(F.col("t.d2q").cast("double")) * 0.00555225).alias(
+            "approx_km"
+        ),
     )
 
 

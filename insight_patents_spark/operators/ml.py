@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import hex_int, tokens
+from ..functions.stable import hex_int, round_dp, tokens
 from ..registry import query
 from ..sources.tables import load
 
@@ -120,12 +120,12 @@ _LR_Z_NUM_SQL = f"(z_centi + {_LR_BIAS_CENTI} * n_tokens)"
 
 def _lr_logit() -> F.Column:
     """logit = z_num / (100·n_tokens): one division, rounded 9dp."""
-    return F.round(_lr_z_num() / (100.0 * F.col("n_tokens")), 9)
+    return round_dp(_lr_z_num() / (100.0 * F.col("n_tokens")))
 
 
 def _lr_score() -> F.Column:
     """Sigmoid of the rounded logit, rounded 9dp."""
-    return F.round(1.0 / (1.0 + F.exp(-_lr_logit())), 9)
+    return round_dp(1.0 / (1.0 + F.exp(-_lr_logit())))
 
 
 _LR_LOGIT_SQL = f"ROUND({_LR_Z_NUM_SQL} * 1.0 / (100 * n_tokens), 9)"
@@ -277,11 +277,11 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bin").cast("bigint").alias("threshold_bin"),
         F.col("tp").cast("bigint").alias("tp"),
         F.col("fp").cast("bigint").alias("fp"),
-        F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 9)
+        round_dp(F.col("tp") / (F.col("tp") + F.col("fp")))
         .cast("double")
         .alias("precision_at"),
-        F.round(F.col("tp") / F.col("p"), 9).cast("double").alias("recall_at"),
-        F.round(2.0 * F.col("tp") / (F.col("tp") + F.col("fp") + F.col("p")), 9)
+        round_dp(F.col("tp") / F.col("p")).cast("double").alias("recall_at"),
+        round_dp(2.0 * F.col("tp") / (F.col("tp") + F.col("fp") + F.col("p")))
         .cast("double")
         .alias("f1_at"),
     )
@@ -354,10 +354,9 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (tn + fp) * (tn + fn)
     mcc = F.when(
         (d1 > 0) & (d2 > 0),
-        F.round(
+        round_dp(
             (tp * tn - fp * fn)
             / F.sqrt(d1.cast("double") * d2.cast("double")),
-            9,
         ),
     ).otherwise(F.lit(0.0))
     wide = m.select(
@@ -365,7 +364,7 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fp",
         "fn",
         "tn",
-        F.round((tp + tn) / (tp + fp + fn + tn), 9)
+        round_dp((tp + tn) / (tp + fp + fn + tn))
         .cast("double")
         .alias("accuracy"),
         mcc.cast("double").alias("mcc"),
@@ -440,10 +439,10 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.select(
         "bin",
         F.col("n").cast("bigint").alias("n"),
-        F.round(F.col("n_pos") / F.col("n"), 9)
+        round_dp(F.col("n_pos") / F.col("n"))
         .cast("double")
         .alias("observed_rate"),
-        F.round(F.col("sq") / (F.col("n") * F.lit(1e9)), 9)
+        round_dp(F.col("sq") / (F.col("n") * F.lit(1e9)))
         .cast("double")
         .alias("mean_predicted"),
     )
@@ -541,7 +540,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_pos",
         "n_neg",
-        F.round(F.col("num2") / (2 * F.col("n_pos") * F.col("n_neg")), 9)
+        round_dp(F.col("num2") / (2 * F.col("n_pos") * F.col("n_neg")))
         .cast("double")
         .alias("auc"),
     )
@@ -610,16 +609,15 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bin").cast("bigint").alias("threshold_bin"),
         F.col("cum_n").cast("bigint").alias("cum_n"),
         F.col("cum_pos").cast("bigint").alias("cum_pos"),
-        F.round(F.col("cum_n") / F.col("tot_n"), 9)
+        round_dp(F.col("cum_n") / F.col("tot_n"))
         .cast("double")
         .alias("depth"),
-        F.round(F.col("cum_pos") / F.col("tot_pos"), 9)
+        round_dp(F.col("cum_pos") / F.col("tot_pos"))
         .cast("double")
         .alias("gain"),
-        F.round(
+        round_dp(
             F.col("cum_pos") * F.col("tot_n")
             / (F.col("cum_n") * F.col("tot_pos")),
-            9,
         )
         .cast("double")
         .alias("lift"),
@@ -711,10 +709,9 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         "cnt_a",
         "cnt_b",
-        F.round(
+        round_dp(
             (F.col("ca") / F.col("ta") - F.col("cb") / F.col("tb"))
             * F.log((F.col("ca") * F.col("tb")) / (F.col("cb") * F.col("ta"))),
-            9,
         ).alias("psi_term"),
     )
     return term.select(
@@ -722,12 +719,11 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt_a",
         "cnt_b",
         F.col("psi_term").cast("double").alias("psi_term"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("psi_term") * 1e9, 0).cast("bigint")).over(
                 w_all
             )
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("psi_total"),
@@ -850,11 +846,11 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "user_id",
         "n_events",
-        F.round(F.col("dcg_nano") / 1e9, 9).cast("double").alias("dcg"),
-        F.round(F.col("idcg_nano") / 1e9, 9).cast("double").alias("idcg"),
+        round_dp(F.col("dcg_nano") / 1e9).cast("double").alias("dcg"),
+        round_dp(F.col("idcg_nano") / 1e9).cast("double").alias("idcg"),
         F.when(
             F.col("idcg_nano") > 0,
-            F.round(F.col("dcg_nano") / F.col("idcg_nano"), 9),
+            round_dp(F.col("dcg_nano") / F.col("idcg_nano")),
         )
         .otherwise(F.lit(0.0))
         .cast("double")
@@ -932,15 +928,14 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "tp",
         "fp",
-        F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 9)
+        round_dp(F.col("tp") / (F.col("tp") + F.col("fp")))
         .cast("double")
         .alias("precision_at"),
-        F.round(F.col("pos") / F.col("p"), 9)
+        round_dp(F.col("pos") / F.col("p"))
         .cast("double")
         .alias("delta_recall"),
-        F.round(
+        round_dp(
             F.col("pos") * F.col("tp") / (F.col("p") * (F.col("tp") + F.col("fp"))),
-            9,
         ).alias("ap_term"),
     )
     return term.select(
@@ -950,12 +945,11 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         "precision_at",
         "delta_recall",
         F.col("ap_term").cast("double").alias("ap_term"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("ap_term") * 1e9, 0).cast("bigint")).over(
                 w_all
             )
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("ap_total"),
@@ -1048,7 +1042,7 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_pos",
         "n_neg",
-        F.round(F.col("max_num") / (F.col("n_pos") * F.col("n_neg")), 9)
+        round_dp(F.col("max_num") / (F.col("n_pos") * F.col("n_neg")))
         .cast("double")
         .alias("ks_stat"),
         "ks_bin",
@@ -1157,21 +1151,21 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("q") * b * b).cast("bigint").alias("sqb2"),
     )
     np_, nq = F.col("np"), F.col("nq")
-    auc = F.round(F.col("spa") / (2 * np_ * nq), 9)
+    auc = round_dp(F.col("spa") / (2 * np_ * nq))
     v10 = (np_ * F.col("spa2") - F.col("spa") * F.col("spa")) / (
         4.0 * nq * nq * np_ * F.greatest(np_ - 1, F.lit(1))
     )
     v01 = (nq * F.col("sqb2") - F.col("sqb") * F.col("sqb")) / (
         4.0 * np_ * np_ * nq * F.greatest(nq - 1, F.lit(1))
     )
-    se = F.round(F.sqrt(v10 / np_ + v01 / nq), 9)
+    se = round_dp(F.sqrt(v10 / np_ + v01 / nq))
     return m.select(
         np_.alias("n_pos"),
         nq.alias("n_neg"),
         auc.cast("double").alias("auc"),
         se.cast("double").alias("se"),
-        F.round(auc - 1.96 * se, 9).cast("double").alias("ci_lo"),
-        F.round(auc + 1.96 * se, 9).cast("double").alias("ci_hi"),
+        round_dp(auc - 1.96 * se).cast("double").alias("ci_lo"),
+        round_dp(auc + 1.96 * se).cast("double").alias("ci_hi"),
     )
 
 
@@ -1242,14 +1236,13 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "n",
         "n_pos",
-        F.round(
+        round_dp(
             F.abs(
                 F.col("n_pos") / F.col("n")
-                - F.round(F.col("sq") / (F.col("n") * F.lit(1e9)), 9)
+                - round_dp(F.col("sq") / (F.col("n") * F.lit(1e9)))
             )
             * F.col("n")
             / F.sum("n").over(w_all),
-            9,
         ).alias("ece_term"),
     )
     return term.select(
@@ -1257,12 +1250,11 @@ def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_pos",
         F.col("ece_term").cast("double").alias("ece_term"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("ece_term") * 1e9, 0).cast("bigint")).over(
                 w_all
             )
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("ece_total"),
@@ -1321,27 +1313,25 @@ def ml_group_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = dec.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("kept").cast("bigint").alias("n_kept"),
-        F.round(F.sum("kept") * 1.0 / F.count(F.lit(1)), 9)
+        round_dp(F.sum("kept") * 1.0 / F.count(F.lit(1)))
         .cast("double")
         .alias("keep_rate"),
     )
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    overall = F.round(
-        F.sum("n_kept").over(w_all) * 1.0 / F.sum("n_docs").over(w_all), 9
-    )
+    overall = round_dp(F.sum("n_kept").over(w_all) * 1.0 / F.sum("n_docs").over(w_all))
     return grp.select(
         "source",
         "n_docs",
         "n_kept",
         "keep_rate",
-        F.round(F.col("keep_rate") - overall, 9)
+        round_dp(F.col("keep_rate") - overall)
         .cast("double")
         .alias("parity_diff"),
         F.when(
             F.max("keep_rate").over(w_all) > 0,
-            F.round(F.col("keep_rate") / F.max("keep_rate").over(w_all), 9),
+            round_dp(F.col("keep_rate") / F.max("keep_rate").over(w_all)),
         )
         .otherwise(F.lit(0.0))  # all-zero keep rates: no 0/0 under ANSI
         .cast("double")
@@ -1447,7 +1437,7 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_pos").over(w_all).alias("nnpos"),
         F.sum("qb").over(w_all).alias("qball"),
         (F.col("n_pos") / F.col("n")).alias("acc"),
-        F.round(F.col("sq") / (F.col("n") * F.lit(1e9)), 9).alias("conf"),
+        round_dp(F.col("sq") / (F.col("n") * F.lit(1e9))).alias("conf"),
     )
     base = F.col("nnpos") / F.col("nn")
     term = t.select(
@@ -1455,21 +1445,19 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_pos",
         F.col("conf").cast("double").alias("conf"),
-        F.round(
+        round_dp(
             (F.col("conf") - F.col("acc"))
             * (F.col("conf") - F.col("acc"))
             * F.col("n")
             / F.col("nn"),
-            9,
         ).alias("rel_term"),
-        F.round(
+        round_dp(
             (F.col("acc") - base) * (F.col("acc") - base) * F.col("n") / F.col("nn"),
-            9,
         ).alias("res_term"),
-        F.round(F.col("qball").cast("double") / (F.col("nn") * F.lit(1e9)), 9).alias(
+        round_dp(F.col("qball").cast("double") / (F.col("nn") * F.lit(1e9))).alias(
             "brier_raw"
         ),
-        F.round(base * (1.0 - base), 9).alias("uncertainty"),
+        round_dp(base * (1.0 - base)).alias("uncertainty"),
     )
     return term.select(
         "bin",
@@ -1478,17 +1466,15 @@ def ml_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conf",
         F.col("rel_term").cast("double").alias("rel_term"),
         F.col("res_term").cast("double").alias("res_term"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("rel_term") * 1e9, 0).cast("bigint")).over(w_all)
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("reliability"),
-        F.round(
+        round_dp(
             F.sum(F.round(F.col("res_term") * 1e9, 0).cast("bigint")).over(w_all)
             / 1e9,
-            9,
         )
         .cast("double")
         .alias("resolution"),
@@ -1602,12 +1588,11 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.col("w_centi").cast("bigint").alias("w_centi"),
         F.col("n_docs_with").cast("bigint").alias("n_docs_with"),
-        F.round(F.col("m"), 9).cast("double").alias("mean_count"),
-        F.round(
+        round_dp(F.col("m")).cast("double").alias("mean_count"),
+        round_dp(
             F.abs(F.col("w_centi"))
             * (F.col("qdev").cast("double") / (F.col("n") * F.lit(1e9)))
             / 100.0,
-            9,
         )
         .cast("double")
         .alias("mean_abs_shap"),
@@ -1711,7 +1696,7 @@ def ml_tree_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_TREE_FEATS[1]).cast("bigint").alias("n_chars"),
         F.expr(_TREE_FEATS[2]).cast("bigint").alias("n_distinct"),
         F.expr(leaf_sum).cast("bigint").alias("leaf_sum_centi"),
-        F.round(F.expr(leaf_sum) / 400.0, 9).cast("double").alias("score"),
+        round_dp(F.expr(leaf_sum) / 400.0).cast("double").alias("score"),
         (F.expr(leaf_sum) > 0).alias("keep"),
     )
 
@@ -1804,14 +1789,13 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tp",
         "fp",
         "fn",
-        F.round(
+        round_dp(
             (4 + F.col("n4b2")) * F.col("tp")
             / (
                 (4 + F.col("n4b2")) * F.col("tp")
                 + 4 * F.col("fp")
                 + F.col("n4b2") * F.col("fn")
             ),
-            9,
         ).alias("fbeta"),
     )
     w_rank = Window.partitionBy("beta").orderBy(
@@ -1826,10 +1810,10 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("tp").cast("bigint").alias("tp"),
             F.col("fp").cast("bigint").alias("fp"),
             F.col("fn").cast("bigint").alias("fn"),
-            F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 9)
+            round_dp(F.col("tp") / (F.col("tp") + F.col("fp")))
             .cast("double")
             .alias("precision_at"),
-            F.round(F.col("tp") / (F.col("tp") + F.col("fn")), 9)
+            round_dp(F.col("tp") / (F.col("tp") + F.col("fn")))
             .cast("double")
             .alias("recall_at"),
             F.col("fbeta").cast("double").alias("fbeta"),
@@ -1925,17 +1909,17 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fn",
         "fp",
         "tn",
-        F.round(
-            F.col("tp") / F.nullif(F.col("tp") + F.col("fn"), F.lit(0)), 9
+        round_dp(
+            F.col("tp") / F.nullif(F.col("tp") + F.col("fn"), F.lit(0))
         ).alias("tpr"),
-        F.round(
-            F.col("fp") / F.nullif(F.col("fp") + F.col("tn"), F.lit(0)), 9
+        round_dp(
+            F.col("fp") / F.nullif(F.col("fp") + F.col("tn"), F.lit(0))
         ).alias("fpr"),
-        F.round(
-            F.col("otp") / F.nullif(F.col("otp") + F.col("ofn"), F.lit(0)), 9
+        round_dp(
+            F.col("otp") / F.nullif(F.col("otp") + F.col("ofn"), F.lit(0))
         ).alias("tpr_all"),
-        F.round(
-            F.col("ofp") / F.nullif(F.col("ofp") + F.col("otn"), F.lit(0)), 9
+        round_dp(
+            F.col("ofp") / F.nullif(F.col("ofp") + F.col("otn"), F.lit(0))
         ).alias("fpr_all"),
     )
     w_all = Window.rowsBetween(
@@ -1949,19 +1933,18 @@ def ml_fairness_eo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tn",
         F.col("tpr").cast("double").alias("tpr"),
         F.col("fpr").cast("double").alias("fpr"),
-        F.round(F.abs(F.col("tpr") - F.col("tpr_all")), 9)
+        round_dp(F.abs(F.col("tpr") - F.col("tpr_all")))
         .cast("double")
         .alias("tpr_gap"),
-        F.round(F.abs(F.col("fpr") - F.col("fpr_all")), 9)
+        round_dp(F.abs(F.col("fpr") - F.col("fpr_all")))
         .cast("double")
         .alias("fpr_gap"),
         F.max(
-            F.round(
+            round_dp(
                 F.greatest(
                     F.abs(F.col("tpr") - F.col("tpr_all")),
                     F.abs(F.col("fpr") - F.col("fpr_all")),
                 ),
-                9,
             )
         )
         .over(w_all)
@@ -2083,10 +2066,10 @@ def ml_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "n",
         "n_pos",
-        F.round(F.col("n_pos") / F.col("n"), 9).cast("double").alias(
+        round_dp(F.col("n_pos") / F.col("n")).cast("double").alias(
             "raw_rate"
         ),
-        F.round(F.col("iso_raw"), 9).cast("double").alias("iso_rate"),
+        round_dp(F.col("iso_raw")).cast("double").alias("iso_rate"),
     )
 
 
@@ -2216,15 +2199,13 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.append(
             acc.select(
                 F.lit(feat).alias("feature"),
-                F.round(F.col("a0") / F.col("n"), 9)
+                round_dp(F.col("a0") / F.col("n"))
                 .cast("double")
                 .alias("baseline_acc"),
-                F.round(F.col(col) / F.col("n"), 9)
+                round_dp(F.col(col) / F.col("n"))
                 .cast("double")
                 .alias("permuted_acc"),
-                F.round(
-                    F.col("a0") / F.col("n") - F.col(col) / F.col("n"), 9
-                )
+                round_dp(F.col("a0") / F.col("n") - F.col(col) / F.col("n"))
                 .cast("double")
                 .alias("importance"),
             )
@@ -2309,20 +2290,18 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("g").over(w_all).alias("gt"),
         F.sum("b").over(w_all).alias("bt"),
     )
-    woe = F.round(
+    woe = round_dp(
         F.log(
             ((F.col("g") + 0.5) * (F.col("bt") + 1))
             / ((F.col("b") + 0.5) * (F.col("gt") + 1))
         ),
-        9,
     ).cast("double")
-    iv_term = F.round(
+    iv_term = round_dp(
         (
             (F.col("g") + 0.5) / (F.col("gt") + 1)
             - (F.col("b") + 0.5) / (F.col("bt") + 1)
         )
         * woe,
-        9,
     ).cast("double")
     terms = m.select(
         "bin",
@@ -2331,7 +2310,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         woe.alias("woe"),
         iv_term.alias("iv_term"),
     )
-    iv = F.round(
+    iv = round_dp(
         F.aggregate(
             F.array_sort(
                 F.collect_list(F.struct("bin", "iv_term")).over(w_all)
@@ -2339,7 +2318,6 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
             lambda acc, t: acc + t["iv_term"],
         ),
-        9,
     )
     return terms.select(
         "bin", "n_good", "n_bad", "woe", "iv_term",

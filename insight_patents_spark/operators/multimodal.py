@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.stable import round_dp
 from ..registry import query
 from ..sources.tables import load
 
@@ -501,7 +502,7 @@ def mm_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("vec_id").orderBy(
-        F.round("score", 9).desc(), F.col("doc_id")
+        round_dp("score").desc(), F.col("doc_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.stable import hex_int
+from ..functions.stable import hex_int, round_dp
 from ..registry import query
 from ..session import conf_scope
 from ..sources.tables import load
@@ -1069,8 +1069,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double") / float(16**12)
     # weight clamped to >= 1 cent: sf0.1 contains value = 0.00 events,
     # and u^(1/0) divides by zero under ANSI mode (bench r4 discovery)
-    pri = F.round(
-        F.pow(u, 1.0 / (F.greatest(F.col("c"), F.lit(1)).cast("double") / 100.0)), 9
+    pri = round_dp(
+        F.pow(u, 1.0 / (F.greatest(F.col("c"), F.lit(1)).cast("double") / 100.0))
     )
     from pyspark.sql.window import Window
 
@@ -1775,7 +1775,7 @@ def dq_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "is_missing",
-        F.when(F.col("is_missing"), F.round(F.col("m"), 9))
+        F.when(F.col("is_missing"), round_dp(F.col("m")))
         .otherwise(F.col("cents").cast("double"))
         .cast("double")
         .alias("cents_imputed"),
@@ -1863,10 +1863,10 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(a - last_es) div 60").cast("bigint").alias("staleness_min"),
         "n_last_day",
         "n_last_week",
-        F.round(F.col("total_n") / F.col("span_days"), 9)
+        round_dp(F.col("total_n") / F.col("span_days"))
         .cast("double")
         .alias("daily_avg"),
-        F.round(F.col("n_last_day") * F.col("span_days") / F.col("total_n"), 9)
+        round_dp(F.col("n_last_day") * F.col("span_days") / F.col("total_n"))
         .cast("double")
         .alias("freshness_ratio"),
         ((F.col("a") - F.col("last_es")) > 86400).alias("is_stale"),
@@ -2009,10 +2009,10 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_child",
             "n_orphan",
             "n_orphan_keys",
-            F.round(F.col("n_orphan") / F.col("n_child"), 9)
+            round_dp(F.col("n_orphan") / F.col("n_child"))
             .cast("double")
             .alias("orphan_ratio"),
-            F.round(F.col("n_parent_used") / F.col("n_parent"), 9)
+            round_dp(F.col("n_parent_used") / F.col("n_parent"))
             .cast("double")
             .alias("parent_coverage"),
         )
@@ -2397,9 +2397,7 @@ def scan_text_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("line", 1, 10).cast("bigint").alias("custkey"),
         F.rtrim(F.substring("line", 11, 18)).alias("name"),
         F.substring("line", 29, 3).cast("bigint").alias("nation"),
-        F.round(
-            sign * F.substring("line", 33, 11).cast("bigint") / 100.0, 2
-        )
+        round_dp(sign * F.substring("line", 33, 11).cast("bigint") / 100.0, 2)
         .cast("double")
         .alias("acctbal"),
         F.rtrim(F.substring("line", 44, 10)).alias("segment"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.stable import py_round_dp, round_dp, round_dp_sql
 from ..registry import query
 from ..sources.tables import load
 
@@ -73,7 +74,7 @@ def seq_markov_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev",
         "curr",
         "cnt",
-        F.round(F.col("cnt") / F.sum("cnt").over(tot), 9).alias("prob"),
+        round_dp(F.col("cnt") / F.sum("cnt").over(tot)).alias("prob"),
     )
 
 
@@ -246,10 +247,9 @@ def time_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "hr",
         "n",
-        F.round(
+        round_dp(
             (F.col("cents") * F.sum("n").over(w)).cast("double")
             / (F.col("n") * F.sum("cents").over(w)),
-            9,
         ).alias("seasonal_index"),
     )
 
@@ -310,8 +310,8 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deltas.agg(
         F.count(F.lit(1)).alias("n_converted"),
         F.min("delta_us").alias("min_us"),
-        F.round(F.percentile("delta_us", F.lit(0.5)), 4).alias("median_us"),
-        F.round(F.percentile("delta_us", F.lit(0.9)), 4).alias("p90_us"),
+        round_dp(F.percentile("delta_us", F.lit(0.5)), 4).alias("median_us"),
+        round_dp(F.percentile("delta_us", F.lit(0.9)), 4).alias("p90_us"),
         F.max("delta_us").alias("max_us"),
     )
 
@@ -363,9 +363,7 @@ def agg_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.crossJoin(F.broadcast(t)).select(
         F.col("lifetime").cast("bigint").alias("lifetime_days"),
         F.sum("n").over(w).alias("n_surviving"),
-        F.round(
-            F.sum("n").over(w).cast("double") / F.col("total"), 9
-        ).alias("survival"),
+        round_dp(F.sum("n").over(w).cast("double") / F.col("total")).alias("survival"),
     )
 
 
@@ -471,7 +469,7 @@ def agg_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").cast("bigint").alias("hour"),
         F.col("at_risk").cast("bigint").alias("n_at_risk"),
         F.col("d").cast("bigint").alias("n_deaths"),
-        F.round(F.product(factor).over(w_asc), 9).alias("km_survival"),
+        round_dp(F.product(factor).over(w_asc)).alias("km_survival"),
     )
 
 
@@ -711,7 +709,7 @@ def agg_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.groupBy("channel").agg(
         F.sum("cnt").alias("n_touches"),
         F.sum("last_cnt").alias("last_touch_credit"),
-        F.round(
+        round_dp(
             F.aggregate(
                 F.array_sort(
                     F.collect_list(
@@ -726,7 +724,6 @@ def agg_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0.0),
                 lambda acc, x: acc + x["v"],
             ),
-            9,
         ).alias("linear_credit"),
     )
 
@@ -820,10 +817,9 @@ def time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    r = F.round(
+    r = round_dp(
         (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
         / F.sqrt(vx.cast("double") * vy.cast("double")),
-        9,
     )
     return m.select(
         "event_type",
@@ -886,9 +882,7 @@ def time_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("gap_us").isNotNull())
     return g.groupBy("event_type").agg(
         F.count("gap_us").alias("n_gaps"),
-        F.round(
-            F.sum("gap_us") * 1.0 / F.count("gap_us"), 9
-        )
+        round_dp(F.sum("gap_us") * 1.0 / F.count("gap_us"))
         .cast("double")
         .alias("mean_us"),
         F.percentile("gap_us", F.lit(0.5)).cast("double").alias("median_us"),
@@ -953,9 +947,7 @@ def agg_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(F.col("m"), F.col("ts").cast("date")).alias("age_d"),
         )
     )
-    wgt = F.round(
-        F.pow(F.lit(2.0), -F.col("age_d") / F.lit(float(_DECAY_HL_DAYS))), 9
-    )
+    wgt = round_dp(F.pow(F.lit(2.0), -F.col("age_d") / F.lit(float(_DECAY_HL_DAYS))))
     q = F.floor(F.col("cents") * wgt * 1_000_000).cast("long")
     return (
         p.select("user_id", "cents", q.alias("q"))
@@ -963,7 +955,7 @@ def agg_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
             F.sum("cents").cast("bigint").alias("cents_raw"),
-            F.round(F.sum("q") / 1_000_000.0, 9)
+            round_dp(F.sum("q") / 1_000_000.0)
             .cast("double")
             .alias("cents_decayed"),
         )
@@ -1047,7 +1039,7 @@ def seq_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             p.join(v.withColumnRenamed("s", "prev"), "prev")
             .groupBy(F.col("curr").alias("s"))
             .agg(
-                F.round(
+                round_dp(
                     F.aggregate(
                         F.array_sort(
                             F.collect_list(
@@ -1060,7 +1052,6 @@ def seq_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(0.0),
                         lambda acc, s: acc + s["x"],
                     ),
-                    9,
                 ).alias("v")
             )
         )
@@ -1156,25 +1147,13 @@ def _mk_attr_oracle() -> str:
 _MK_GRID_CAP = 512  # max collected variant-grid rows for the driver solve
 
 
-def _mk_round9(x: float) -> float:
-    """Bit-exact twin of Spark's F.round(double, 9): the double's
-    shortest decimal repr (Python repr == Java Double.toString for
-    round-trip values) quantized HALF_UP at 9dp, back to double."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("1e-9"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
 def _mk_solve_driver(spark: SparkSession, grid: list) -> DataFrame:
     """Absorbing-chain removal-effect solve on the collected variant
     grid — the driver-side twin of the distributed loop in
     seq_attribution_markov, with identical IEEE-double arithmetic: the
     matvec folds pr·p in ascending-nxt order from 0.0 and rounds 9dp
-    per entry, exactly like F.round(F.aggregate(array_sort(...)))."""
+    per entry (`py_round_dp`), exactly like
+    round_dp(F.aggregate(array_sort(...)))."""
     trans: dict[tuple[str, str], list[tuple[str, float]]] = {}
     states: set[tuple[str, str]] = set()
     for r in grid:
@@ -1197,21 +1176,21 @@ def _mk_solve_driver(spark: SparkSession, grid: list) -> DataFrame:
             acc = 0.0
             for nxt, pr in lst:
                 acc = acc + pr * p[(v, nxt)]
-            new_p[(v, s)] = _mk_round9(acc)
+            new_p[(v, s)] = py_round_dp(acc)
         p = new_p
     schema = "channel string, removal_effect double, attributed_share double"
     if ("full", "start") not in p:
         return spark.createDataFrame([], schema)
     pf = p[("full", "start")]
     eff = {
-        v: _mk_round9(1.0 - p[(v, "start")] / pf)
+        v: py_round_dp(1.0 - p[(v, "start")] / pf)
         for (v, s) in states
         if s == "start" and v != "full"
     }
     tot = 0.0
     for ch in sorted(eff):
         tot = tot + eff[ch]
-    rows = [(ch, re, _mk_round9(re / tot)) for ch, re in sorted(eff.items())]
+    rows = [(ch, re, py_round_dp(re / tot)) for ch, re in sorted(eff.items())]
     return spark.createDataFrame(rows, schema)
 
 
@@ -1314,8 +1293,8 @@ def seq_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-independent — so solve the chain DRIVER-SIDE when the grid
     # is provably tiny (guarded count, same pattern as the ≤63-token
     # vocab probe in text.py), replicating Spark's float semantics
-    # exactly: ascending-nxt left fold, F.round (shortest-repr decimal,
-    # HALF_UP) at 9dp per entry. One collect replaces 5×12 tiny Spark
+    # exactly: ascending-nxt left fold, round_dp (py_round_dp) at 9dp
+    # per entry. One collect replaces 5×12 tiny Spark
     # jobs (~6.7 s → ~1.5 s at sf0.1); answers are bit-identical. An
     # adversarial log with an unbounded state domain takes the
     # distributed loop below instead.
@@ -1342,7 +1321,7 @@ def seq_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("v", F.col("prev").alias("s"))
             .agg(
-                F.round(
+                round_dp(
                     F.aggregate(
                         F.array_sort(
                             F.collect_list(
@@ -1355,7 +1334,6 @@ def seq_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(0.0),
                         lambda acc, z: acc + z["x"],
                     ),
-                    9,
                 ).alias("p")
             )
         )
@@ -1375,7 +1353,7 @@ def seq_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(full))
         .select(
             F.col("v").alias("channel"),
-            F.round(1.0 - F.col("p") / F.col("pf"), 9).alias(
+            round_dp(1.0 - F.col("p") / F.col("pf")).alias(
                 "removal_effect"
             ),
         )
@@ -1394,7 +1372,7 @@ def seq_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     return eff.crossJoin(F.broadcast(tot)).select(
         "channel",
         F.col("removal_effect").cast("double").alias("removal_effect"),
-        F.round(F.col("removal_effect") / F.col("tot"), 9)
+        round_dp(F.col("removal_effect") / F.col("tot"))
         .cast("double")
         .alias("attributed_share"),
     )
@@ -1513,10 +1491,10 @@ def _pair_support(e: DataFrame) -> DataFrame:
             "type_a",
             "type_b",
             "support_n",
-            F.round(F.col("support_n") / F.col("n_users"), 9)
+            round_dp(F.col("support_n") / F.col("n_users"))
             .cast("double")
             .alias("support"),
-            F.round(F.col("support_n") / F.col("base_n"), 9)
+            round_dp(F.col("support_n") / F.col("base_n"))
             .cast("double")
             .alias("confidence"),
         )
@@ -1625,7 +1603,7 @@ def time_decompose_classical(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         F.when(
             F.count(F.lit(1)).over(w) == 7,
-            F.round(F.sum("cents").over(w) / 700.0, 9),
+            round_dp(F.sum("cents").over(w) / 700.0),
         ).alias("trend"),
     )
     fr = tr.filter(F.col("trend").isNotNull()).select(
@@ -1639,8 +1617,8 @@ def time_decompose_classical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("detr_nano"),
     )
     cells = fr.groupBy("event_type", "wd").agg(
-        F.round(
-            F.sum("detr_nano") / (F.lit(1e9) * F.count(F.lit(1))), 9
+        round_dp(
+            F.sum("detr_nano") / (F.lit(1e9) * F.count(F.lit(1)))
         ).alias("seas_raw")
     )
     w_type = Window.partitionBy("event_type").rowsBetween(
@@ -1649,25 +1627,23 @@ def time_decompose_classical(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = cells.select(
         "event_type",
         "wd",
-        F.round(
+        round_dp(
             F.col("seas_raw")
-            - F.round(
+            - round_dp(
                 F.sum(
                     F.round(F.col("seas_raw") * 1e9, 0).cast("bigint")
                 ).over(w_type)
                 / (F.lit(1e9) * F.count(F.lit(1)).over(w_type)),
-                9,
             ),
-            9,
         ).alias("seasonal"),
     )
     return fr.join(F.broadcast(norm), ["event_type", "wd"]).select(
         "event_type",
         F.col("day").cast("string").alias("day"),
-        F.round(F.col("cents") / 100.0, 9).cast("double").alias("value"),
+        round_dp(F.col("cents") / 100.0).cast("double").alias("value"),
         F.col("trend").cast("double").alias("trend"),
         F.col("seasonal").cast("double").alias("seasonal"),
-        F.round(F.col("detr_nano") / F.lit(1e9) - F.col("seasonal"), 9)
+        round_dp(F.col("detr_nano") / F.lit(1e9) - F.col("seasonal"))
         .cast("double")
         .alias("residual"),
     )
@@ -1781,11 +1757,11 @@ def time_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.select(
         "event_type",
         "n_demand_days",
-        F.round(F.col("st.z") / 100.0, 9)
+        round_dp(F.col("st.z") / 100.0)
         .cast("double")
         .alias("smoothed_demand"),
-        F.round(F.col("st.p"), 9).cast("double").alias("smoothed_interval"),
-        F.round(F.col("st.z") / (100.0 * F.col("st.p")), 9)
+        round_dp(F.col("st.p")).cast("double").alias("smoothed_interval"),
+        round_dp(F.col("st.z") / (100.0 * F.col("st.p")))
         .cast("double")
         .alias("forecast_per_day"),
     )
@@ -1883,10 +1859,10 @@ def time_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("sgn") == 1, "golden").otherwise("death").alias(
             "cross_type"
         ),
-        F.round(F.col("ss") / (_SMA_SHORT * 100.0), 9)
+        round_dp(F.col("ss") / (_SMA_SHORT * 100.0))
         .cast("double")
         .alias("short_ma"),
-        F.round(F.col("sl") / (_SMA_LONG * 100.0), 9)
+        round_dp(F.col("sl") / (_SMA_LONG * 100.0))
         .cast("double")
         .alias("long_ma"),
     )
@@ -2045,11 +2021,11 @@ def seq_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             name.alias("channel"),
             F.col("num").alias("shapley_num"),
-            F.round(F.col("num") / (12.0 * F.col("n")), 9)
+            round_dp(F.col("num") / (12.0 * F.col("n")))
             .cast("double")
             .alias("shapley_value"),
             F.when(F.col("total") == 0, F.lit(0.25))
-            .otherwise(F.round(F.col("num") / F.col("total"), 9))
+            .otherwise(round_dp(F.col("num") / F.col("total")))
             .cast("double")
             .alias("share"),
         )
@@ -2136,7 +2112,7 @@ def time_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         F.min("bdays").cast("bigint").alias("min_bd"),
         F.max("bdays").cast("bigint").alias("max_bd"),
-        F.round(F.sum("bdays") / F.count(F.lit(1)), 9)
+        round_dp(F.sum("bdays") / F.count(F.lit(1)))
         .cast("double")
         .alias("mean_bd"),
     ).withColumnRenamed("pri", "o_orderpriority")
@@ -2274,10 +2250,9 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
     racf = F.when(
         (vx > 0) & (vy > 0),
-        F.round(
+        round_dp(
             (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
             / F.sqrt(vx.cast("double") * vy.cast("double")),
-            9,
         ),
     ).otherwise(F.lit(0.0))
     rv = (
@@ -2300,23 +2275,19 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"acc + element_at(phi, i) * element_at(r, {vec_idx}))"
         )
 
-    a_expr = (
-        f"round((element_at(r, k) - {_dot('k - i')})"
-        f" / (1.0 - {_dot('i')}), 9)"
+    a_expr = round_dp_sql(
+        f"(element_at(r, k) - {_dot('k - i')}) / (1.0 - {_dot('i')})"
     )
+    phi_j = round_dp_sql(f"p - {a_expr} * element_at(phi, k - 1 - j0)")
     step = (
         "(phi, k) -> concat("
-        f"transform(phi, (p, j0) -> round(p - {a_expr}"
-        " * element_at(phi, k - 1 - j0), 9)), "
+        f"transform(phi, (p, j0) -> {phi_j}), "
         f"array({a_expr}))"
     )
+    r1 = round_dp_sql("element_at(r, 1)")
 
     def _fold(upper: str) -> str:
-        return (
-            f"aggregate(sequence(2, {upper}), "
-            "array(round(element_at(r, 1), 9)), "
-            f"{step})"
-        )
+        return f"aggregate(sequence(2, {upper}), array({r1}), {step})"
 
     # pacf(kk) = phi_kk,kk: re-run the bounded fold up to each kk and
     # take the last element (kk <= 7, in-row). kk = 1 must NOT enter
@@ -2324,7 +2295,7 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # short-doc gotcha class) — it is the base case directly.
     pacf_k = (
         f"transform(sequence(1, {_PACF_K}), kk -> "
-        "IF(kk = 1, round(element_at(r, 1), 9), "
+        f"IF(kk = 1, {r1}, "
         f"element_at({_fold('kk')}, kk)))"
     )
     out = rv.select(
@@ -2410,17 +2381,17 @@ def seq_repeat_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = u.agg(F.count(F.lit(1)).cast("bigint").alias("n_buyers"))
     stats = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_repeat"),
-        F.round(F.percentile(F.col("gap_s") / 86400.0, F.lit(0.5)), 4)
+        round_dp(F.percentile(F.col("gap_s") / 86400.0, F.lit(0.5)), 4)
         .cast("double")
         .alias("median_days"),
-        F.round(F.percentile(F.col("gap_s") / 86400.0, F.lit(0.9)), 4)
+        round_dp(F.percentile(F.col("gap_s") / 86400.0, F.lit(0.9)), 4)
         .cast("double")
         .alias("p90_days"),
     )
     return nb.crossJoin(F.broadcast(stats)).select(
         "n_buyers",
         "n_repeat",
-        F.round(F.col("n_repeat") / F.col("n_buyers"), 9)
+        round_dp(F.col("n_repeat") / F.col("n_buyers"))
         .cast("double")
         .alias("repeat_rate"),
         "median_days",
@@ -2585,7 +2556,7 @@ def _gsp_triples(events: DataFrame) -> DataFrame:
             "item_b",
             "item_c",
             "support_n",
-            F.round(F.col("support_n") / F.col("n_users"), 9)
+            round_dp(F.col("support_n") / F.col("n_users"))
             .cast("double")
             .alias("support"),
         )

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.stable import hex_int, py_tokens, tokens
+from ..functions.stable import hex_int, py_tokens, round_dp, tokens
 from ..registry import query
 from ..runtime import checkpoint, shared
 from ..sources.tables import load
@@ -153,11 +153,11 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = d.count()  # scalar; corpus cardinality, not data
-    idf = F.round(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0, 9)
+    idf = round_dp(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0)
     return (
         tf.join(F.broadcast(df), "token")
         .withColumn("idf", idf)
-        .withColumn("tfidf", F.round(F.col("tf") * F.col("idf"), 9))
+        .withColumn("tfidf", round_dp(F.col("tf") * F.col("idf")))
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id", "token", "tf", "df", "idf", "tfidf")
     )
@@ -897,11 +897,11 @@ def text_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_tokens",
-        F.round(F.col("n_tokens").cast("double") / F.col("total"), 9).alias(
+        round_dp(F.col("n_tokens").cast("double") / F.col("total")).alias(
             "token_share"
         ),
-        F.round(w, 9).alias("target_weight"),
-        F.round(epochs, 9).alias("epochs"),
+        round_dp(w).alias("target_weight"),
+        round_dp(epochs).alias("epochs"),
         (epochs > 1.0).alias("upsampled"),
     )
 
@@ -1178,7 +1178,7 @@ def _icws_token_samples() -> list:
         def u(j: int, h: F.Column = h) -> F.Column:
             return (hex_int(h, 6, 1 + 6 * j).cast("double") + 0.5) / 16777216.0
 
-        lnu = [F.round(F.log(u(j)), 9) for j in range(4)]
+        lnu = [round_dp(F.log(u(j))) for j in range(4)]
         out.append(
             F.struct(
                 (-(lnu[0] + lnu[1])).alias("r"),  # Gamma(2,1)
@@ -1197,7 +1197,7 @@ def _icws_key(i: int) -> F.Column:
     r, lnc = F.col(f"s{i}.r"), F.col(f"s{i}.lnc")
     beta = F.col(f"s{i}.beta")
     t = F.floor(F.col("lnw") / r + beta).cast("bigint")
-    lna = F.round(lnc - r * (t.cast("double") - beta) - r, 9)
+    lna = round_dp(lnc - r * (t.cast("double") - beta) - r)
     return F.struct(
         lna.alias("lna"), F.col("token").alias("token"), t.alias("t")
     )
@@ -1216,10 +1216,10 @@ def _icws_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tf.select("token").distinct().select(
         "token", *_icws_token_samples()
     )
-    w = 1.0 + F.round(F.log(F.col("tf").cast("double")), 9)
+    w = 1.0 + round_dp(F.log(F.col("tf").cast("double")))
     row = (
         tf.withColumn("wn", F.round(w * 1e9, 0).cast("bigint"))
-        .withColumn("lnw", F.round(F.log(w), 9))
+        .withColumn("lnw", round_dp(F.log(w)))
         .join(F.broadcast(vocab), "token")
         .select(
             "doc_id",
@@ -1436,9 +1436,7 @@ def dedup_minhash_icws(spark: SparkSession, sf_dir: str) -> DataFrame:
         zero,
         lambda acc, v: acc + v,
     )
-    wj = F.round(
-        smin.cast("double") / (F.col("a.wtot") + F.col("b.wtot") - smin), 9
-    )
+    wj = round_dp(smin.cast("double") / (F.col("a.wtot") + F.col("b.wtot") - smin))
     return (
         pair.filter(~dup_earlier)
         .select(
@@ -1738,9 +1736,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("bigint")
     ttr = n_distinct.cast("double") / n_tokens
     stop_ratio = n_stop.cast("double") / n_tokens
-    score = F.round(
+    score = round_dp(
         0.5 * ttr + 0.3 * F.least(n_tokens / F.lit(50.0), F.lit(1.0)) + 0.2 * stop_ratio,
-        9,
     )
     return d.select(
         "doc_id",
@@ -2509,9 +2506,9 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tok.select(
         "doc_id",
         "n_tokens",
-        F.round(dup_frac, 9).alias("dup_token_frac"),
+        round_dp(dup_frac).alias("dup_token_frac"),
         F.col("top_2gram_count").cast("bigint").alias("top_2gram_count"),
-        F.round(top_frac, 9).alias("top_2gram_frac"),
+        round_dp(top_frac).alias("top_2gram_frac"),
         F.when((dup_frac > 0.6) | (top_frac > 0.2), 1)
         .otherwise(0)
         .cast("bigint")
@@ -2610,10 +2607,9 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_chars_counted",
         "n_distinct_chars",
-        F.round(
+        round_dp(
             F.log2(F.col("n_chars_counted").cast("double"))
             - F.col("s") / F.col("n_chars_counted"),
-            9,
         ).alias("char_entropy"),
     )
 
@@ -2735,7 +2731,7 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tok.join(F.broadcast(freq), "token")
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        F.round(
+        round_dp(
             F.log2(F.lit(total))
             - F.aggregate(
                 F.array_sort(F.collect_list(F.col("cnt"))),
@@ -2743,7 +2739,6 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda acc, c: acc + F.log2(c.cast("double")),
             )
             / F.count(F.lit(1)),
-            9,
         ).alias("ppl_proxy"),
     )
 
@@ -2858,11 +2853,11 @@ def text_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = d.count()  # scalar; corpus cardinality, not data
-    idf = F.round(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0, 9)
+    idf = round_dp(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0)
     scored = (
         tf.join(F.broadcast(df), "token")
         .filter(F.col("df") * 10 <= 9 * n_docs)
-        .withColumn("tfidf", F.round(F.col("tf") * idf, 9))
+        .withColumn("tfidf", round_dp(F.col("tf") * idf))
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("token"))
     return (
@@ -3104,7 +3099,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vsize = big.select("w2").distinct().count()  # scalar: vocab size
     scored = big.join(F.broadcast(uni), "w1").withColumn(
-        "p", F.round((F.col("c2") + 1.0) / (F.col("c1") + F.lit(vsize)), 9)
+        "p", round_dp((F.col("c2") + 1.0) / (F.col("c1") + F.lit(vsize)))
     )
     w = Window.partitionBy("w1").orderBy(F.col("p").desc(), F.col("w2"))
     return (
@@ -3280,11 +3275,10 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.countDistinct("doc_id").alias("df"))
     )
-    idf = F.round(
+    idf = round_dp(
         F.log(
             (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
         ),
-        9,
     )
     denom = F.col("tf") + _BM25_K1 * (
         1.0
@@ -3313,8 +3307,8 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_doc.select(
             "doc_id",
-            *[F.round(f"s_{t}", 9).alias(f"s_{t}") for t in qt],
-            F.round(total, 9).alias("bm25"),
+            *[round_dp(f"s_{t}").alias(f"s_{t}") for t in qt],
+            round_dp(total).alias("bm25"),
         )
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(20)
@@ -3519,9 +3513,7 @@ def dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_truth"),
             F.count("p_a").alias("n_hit"),
-            F.round(
-                F.count("p_a").cast("double") / F.count(F.lit(1)), 9
-            ).alias("recall"),
+            round_dp(F.count("p_a").cast("double") / F.count(F.lit(1))).alias("recall"),
         )
     )
 
@@ -3590,22 +3582,20 @@ def text_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_docs",
             "n_tokens",
-            F.round(
-                F.col("n_tokens").cast("double") / F.col("tok_total"), 9
+            round_dp(
+                F.col("n_tokens").cast("double") / F.col("tok_total")
             ).alias("actual_share"),
-            F.round(
+            round_dp(
                 (F.col("lang_tokens").cast("double") / F.col("tok_total"))
                 / F.col("n_sources"),
-                9,
             ).alias("target_share"),
-            F.round(
+            round_dp(
                 (F.col("lang_tokens").cast("double") * F.col("tok_total"))
                 / (
                     F.col("n_sources").cast("double")
                     * F.col("tok_total")
                     * F.col("n_tokens")
                 ),
-                9,
             ).alias("mix_weight"),
         )
     )
@@ -3666,8 +3656,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = freq.select(
         "lang",
         F.row_number().over(w).alias("r"),
-        F.round(F.log(F.row_number().over(w).cast("double")), 9).alias("x"),
-        F.round(F.log(F.col("f").cast("double")), 9).alias("y"),
+        round_dp(F.log(F.row_number().over(w).cast("double"))).alias("x"),
+        round_dp(F.log(F.col("f").cast("double"))).alias("y"),
     )
 
     def fold(col: F.Column) -> F.Column:
@@ -3687,10 +3677,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "lang",
         F.col("n").cast("bigint").alias("n_vocab"),
-        F.round(
+        round_dp(
             (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
             / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
-            9,
         )
         .cast("double")
         .alias("zipf_slope"),
@@ -3936,7 +3925,7 @@ def _dsir_weight(d: DataFrame) -> DataFrame:
     return sc.select(
         "doc_id",
         "n_feats",
-        F.round(F.col("s_nano") / (F.lit(1e9) * F.col("n_feats")), 9)
+        round_dp(F.col("s_nano") / (F.lit(1e9) * F.col("n_feats")))
         .cast("double")
         .alias("logratio_per_feat"),
         (F.col("s_nano") > 0).alias("keep"),
@@ -4061,8 +4050,8 @@ def text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_xy",
         "c_x",
         "c_y",
-        F.round(log_ratio, 9).cast("double").alias("pmi"),
-        F.round(log_ratio / F.log(F.col("n_docs") / F.col("c_xy")), 9)
+        round_dp(log_ratio).cast("double").alias("pmi"),
+        round_dp(log_ratio / F.log(F.col("n_docs") / F.col("c_xy")))
         .cast("double")
         .alias("npmi"),
     )
@@ -4276,7 +4265,7 @@ def text_boilerplate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_grams",
         "n_boiler",
-        F.round(F.col("n_boiler") * 1.0 / F.col("n_grams"), 9)
+        round_dp(F.col("n_boiler") * 1.0 / F.col("n_grams"))
         .cast("double")
         .alias("boiler_ratio"),
         (F.col("n_boiler") * 10 >= F.col("n_grams") * 3).alias("drop_flag"),
@@ -4512,7 +4501,7 @@ def text_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_words"),
         F.sum("n_chars").cast("bigint").alias("n_chars"),
         F.sum("n_sym").cast("bigint").alias("n_bpe_tokens"),
-        F.round(F.sum("n_chars") / F.sum("n_sym"), 9)
+        round_dp(F.sum("n_chars") / F.sum("n_sym"))
         .cast("double")
         .alias("chars_per_token"),
     )
@@ -4785,12 +4774,11 @@ def dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_kept"),
-            F.round(
+            round_dp(
                 F.sum(
                     F.when(F.col("pk") == F.col("keeper_pk"), 1).otherwise(0)
                 )
                 / F.count(F.lit(1)),
-                9,
             )
             .cast("double")
             .alias("retained_ratio"),

@@ -15,8 +15,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 
 import numpy as np
@@ -26,10 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import hex_int
+from ..functions.stable import hex_int, round_dp, round_dp_sql
 from ..registry import query
 from ..runtime import shared
-from ..sources.tables import load
+from ..sources.tables import load, src_stamp
+from .joins import bucketed_table, scratch_key
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -85,15 +84,15 @@ def _cent_array(
 
 
 def _rank_cmp(mode: str) -> str:
-    """The one ranking comparator of the vector family: (round(score, 9)
-    DESC for ``dot_desc`` | ASC for ``d2_asc``, cid ASC), as an
-    array_sort lambda over struct<score, cid> elements. Comparator
+    """The one ranking comparator of the vector family: (score rounded
+    9dp by `round_dp_sql` DESC for ``dot_desc`` | ASC for ``d2_asc``,
+    cid ASC), as an array_sort lambda over struct<score, cid> elements. Comparator
     doubles compare with IEEE semantics (-0.0 == 0.0), matching the
     window sort's normalized keys."""
     flip = {"dot_desc": ">", "d2_asc": "<"}.get(mode)
     if flip is None:  # pragma: no cover - internal contract
         raise ValueError(mode)
-    l, r = "round(l.score, 9)", "round(r.score, 9)"
+    l, r = round_dp_sql("l.score"), round_dp_sql("r.score")
     return (
         f"(l, r) -> CASE WHEN {l} {flip} {r} THEN -1 "
         f"WHEN {l} <> {r} THEN 1 "
@@ -680,7 +679,7 @@ def vec_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cosine", _dot("vq", "vn"))
     )
     w = Window.partitionBy("vec_id").orderBy(
-        F.round("cosine", 9).desc(), F.col("neighbor_id")
+        round_dp("cosine").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -839,7 +838,7 @@ def _lsh_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         w = Window.partitionBy("vec_id").orderBy(
-            F.round("cosine", 9).desc(), F.col("neighbor_id")
+            round_dp("cosine").desc(), F.col("neighbor_id")
         )
         return (
             pairs.withColumn("rn", F.row_number().over(w))
@@ -992,11 +991,8 @@ def _nsw_build_sims(spark: SparkSession, nodes: DataFrame) -> DataFrame:
     return (
         tagged.groupBy("cell_id")
         .applyInPandas(cell_sims, "src bigint, dst bigint, sim double")
-        .select("src", "dst", F.round("sim", 9).alias("sim"))
+        .select("src", "dst", round_dp("sim").alias("sim"))
     )
-
-
-_NSW_INDEX_BUCKETS = 8  # O(cluster cores) in production
 
 
 def _nsw_index_table(
@@ -1010,43 +1006,18 @@ def _nsw_index_table(
     no per-hop Exchange of the index and, critically, no full-index
     BroadcastExchange (the r12 verdict's read-path concern: broadcasting
     nodes/edges caps the index at driver/executor memory; bucketed
-    scans cap nothing). Stamp-keyed like every scratch cache
-    (src_stamp), so a regenerated corpus invalidates it and reruns
-    within a process/session reuse it — the same session-catalog
-    contract as join_bucketed's scratch tables. A FRESH process always
-    rebuilds from the parquet inputs (mode=overwrite): nothing computed
-    by one bench/oracle invocation is consumed by the next."""
-    from ..sources.tables import src_stamp
-
-    from .joins import _BUCKET_SCRATCH
-
-    k = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    stamp = src_stamp(sf_dir, "embeddings")
-    tname = f"ips_nsw_{k}_{part}_{stamp}"
-    if not spark.catalog.tableExists(tname):
-        path = os.path.join(_BUCKET_SCRATCH, "nsw", k, stamp, part)
-        # evict superseded corpus versions first (the checkpoint-cache
-        # hygiene rule, applied to on-disk scratch): a regenerated
-        # testdata dir must not accumulate dead indexes
-        import shutil as _shutil
-
-        stamp_root = os.path.join(_BUCKET_SCRATCH, "nsw", k)
-        if os.path.isdir(stamp_root):
-            for d in os.listdir(stamp_root):
-                if d != stamp:
-                    _shutil.rmtree(
-                        os.path.join(stamp_root, d), ignore_errors=True
-                    )
-        (
-            df_fn().repartition(_NSW_INDEX_BUCKETS, F.col(key))
-            .write.bucketBy(_NSW_INDEX_BUCKETS, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tname)
-        )
-    return spark.table(tname)
+    scans cap nothing). Built by `joins.bucketed_table`, like
+    join_bucketed's tables: keyed by the embeddings stamp, so a
+    regenerated corpus rebuilds it and reruns within a session reuse it,
+    under a per-process root, so nothing computed by one bench/oracle
+    invocation is consumed by the next."""
+    return bucketed_table(
+        spark,
+        f"ips_nsw_{scratch_key(sf_dir)}_{part}",
+        src_stamp(sf_dir, "embeddings"),
+        df_fn,
+        key,
+    )
 
 
 def _nsw_hop(cur, edges, nodesb, queries):
@@ -1072,7 +1043,7 @@ def _nsw_hop(cur, edges, nodesb, queries):
         .select(
             "query_id",
             "cand_id",
-            F.round(_dot("qv", "cv"), 9).alias("sim"),
+            round_dp(_dot("qv", "cv")).alias("sim"),
         )
     )
     # dedupe + top-beam in ONE shuffle: collect the (tiny, <=
@@ -1338,7 +1309,7 @@ def vec_ann_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("t.cid").alias("exact_id"),
-            F.round(F.col("t.score"), 9).alias("exact_sim"),
+            round_dp(F.col("t.score")).alias("exact_sim"),
         )
     )
     return cur.join(exact, "query_id").select(
@@ -1393,7 +1364,7 @@ def _bucket_pairs_topk(b: DataFrame, k: int = 3) -> DataFrame:
         .distinct()
     )
     w = Window.partitionBy("vec_id").orderBy(
-        F.round("cosine", 9).desc(), F.col("neighbor_id")
+        round_dp("cosine").desc(), F.col("neighbor_id")
     )
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -1719,8 +1690,8 @@ def vec_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return e.select(
         "vec_id",
-        F.round(lo, 9).alias("lo"),
-        F.round(hi, 9).alias("hi"),
+        round_dp(lo).alias("lo"),
+        round_dp(hi).alias("hi"),
         codes.alias("codes"),
     )
 
@@ -1789,7 +1760,7 @@ def vec_rerank_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     score = 0.5 * F.col("cosine") + 0.5 * F.col("affinity")
     w = Window.partitionBy("vec_id").orderBy(
-        F.round(score, 9).desc(), F.col("neighbor_id")
+        round_dp(score).desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1863,7 +1834,7 @@ def vec_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ip", _dot("qv", "v"))
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.round("ip", 9).desc(), F.col("vec_id")
+        round_dp("ip").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1938,7 +1909,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             best["cid"].alias("cell_id"),
             "v",
-            F.round(best["score"], 9).alias("cent_cos"),
+            round_dp(best["score"]).alias("cent_cos"),
         )
         .localCheckpoint()  # feeds both sides of the pair join
     )
@@ -2034,7 +2005,7 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == F.col("label_b")) & (F.col("vec_id") != F.col("neighbor_id")),
     ).withColumn("pre_cos", _dot("pa", "pb"))
     wc = Window.partitionBy("vec_id").orderBy(
-        F.round("pre_cos", 9).desc(), "neighbor_id"
+        round_dp("pre_cos").desc(), "neighbor_id"
     )
     cand = (
         pairs.withColumn("crn", F.row_number().over(wc))
@@ -2042,7 +2013,7 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("full_cos", _dot("va", "vb"))
     )
     wf = Window.partitionBy("vec_id").orderBy(
-        F.round("full_cos", 9).desc(), "neighbor_id"
+        round_dp("full_cos").desc(), "neighbor_id"
     )
     return (
         cand.withColumn("rn", F.row_number().over(wf))
@@ -2051,8 +2022,8 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "neighbor_id",
-            F.round("pre_cos", 9).alias("pre_cos"),
-            F.round("full_cos", 9).alias("full_cos"),
+            round_dp("pre_cos").alias("pre_cos"),
+            round_dp("full_cos").alias("full_cos"),
         )
     )
 
@@ -2113,11 +2084,11 @@ def vec_hamming_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == F.col("label_b")) & (F.col("vec_id") != F.col("neighbor_id")),
     ).withColumn("hd", F.bit_count(F.col("siga").bitwiseXOR(F.col("sigb"))))
     cand = pairs.filter(F.col("hd") <= 24).withColumn("cosine", _dot("va", "vb"))
-    w = Window.partitionBy("vec_id").orderBy(F.round("cosine", 9).desc(), "neighbor_id")
+    w = Window.partitionBy("vec_id").orderBy(round_dp("cosine").desc(), "neighbor_id")
     return (
         cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
-        .select("vec_id", "neighbor_id", "hd", F.round("cosine", 9).alias("cosine"))
+        .select("vec_id", "neighbor_id", "hd", round_dp("cosine").alias("cosine"))
     )
 
 
@@ -2326,11 +2297,11 @@ def vec_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q),
         (F.col("label") == F.col("q_label")) & (F.col("vec_id") != F.col("q_id")),
     ).withColumn("adc", adc)
-    w = Window.partitionBy("q_id").orderBy(F.round("adc", 9), "vec_id")
+    w = Window.partitionBy("q_id").orderBy(round_dp("adc"), "vec_id")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
-        .select("q_id", "vec_id", "code", F.round("adc", 9).alias("adc"))
+        .select("q_id", "vec_id", "code", round_dp("adc").alias("adc"))
     )
 
 
@@ -2531,10 +2502,10 @@ def vec_cell_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cell",
-            F.when(F.round("d0", 9) <= F.round("d1", 9), 0)
+            F.when(round_dp("d0") <= round_dp("d1"), 0)
             .otherwise(1)
             .alias("subcell"),
-            F.when(F.round("d0", 9) <= F.round("d1", 9), F.col("d0"))
+            F.when(round_dp("d0") <= round_dp("d1"), F.col("d0"))
             .otherwise(F.col("d1"))
             .alias("d2"),
         )
@@ -2678,7 +2649,7 @@ def vec_cell_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "v",
             "cell",
-            F.when(F.round("d0", 9) <= F.round("d1", 9), 0)
+            F.when(round_dp("d0") <= round_dp("d1"), 0)
             .otherwise(1)
             .alias("subcell"),
         )
@@ -2722,10 +2693,10 @@ def vec_cell_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("d1", nd1)
         .select(
             "cell",
-            F.when(F.round("d0", 9) <= F.round("d1", 9), 0)
+            F.when(round_dp("d0") <= round_dp("d1"), 0)
             .otherwise(1)
             .alias("subcell"),
-            F.when(F.round("d0", 9) <= F.round("d1", 9), F.col("d0"))
+            F.when(round_dp("d0") <= round_dp("d1"), F.col("d0"))
             .otherwise(F.col("d1"))
             .alias("d2"),
         )
@@ -2828,7 +2799,7 @@ def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_ids.join(F.broadcast(hit_counts), "vec_id", "left").select(
         "vec_id",
         F.coalesce(F.col("hits"), F.lit(0)).alias("n_hits"),
-        F.round(F.coalesce(F.col("hits"), F.lit(0)) / 3.0, 9).alias(
+        round_dp(F.coalesce(F.col("hits"), F.lit(0)) / 3.0).alias(
             "recall_at_3"
         ),
     )
@@ -2968,30 +2939,28 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(
                 "wp",
-                F.round(
+                round_dp(
                     F.sqrt(
                         F.expr(
                             "aggregate(transform(wp, x -> x * x), "
                             "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
                         )
                     ),
-                    9,
                 ).alias("nm"),
             )
             .select(
                 F.transform(
-                    F.col("wp"), lambda x: F.round(x / F.col("nm"), 9)
+                    F.col("wp"), lambda x: round_dp(x / F.col("nm"))
                 ).alias("w")
             )
         )
     return cdf.crossJoin(F.broadcast(w_row)).select(
         "vec_id",
-        F.round(
+        round_dp(
             F.expr(
                 "aggregate(zip_with(c, w, (x, y) -> x * y), "
                 "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
             ),
-            9,
         )
         .cast("double")
         .alias("pc1"),
@@ -3126,19 +3095,18 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .select(
                     "wp",
-                    F.round(
+                    round_dp(
                         F.sqrt(
                             F.expr(
                                 "aggregate(transform(wp, x -> x * x), "
                                 "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
                             )
                         ),
-                        9,
                     ).alias("nm"),
                 )
                 .select(
                     F.transform(
-                        F.col("wp"), lambda x: F.round(x / F.col("nm"), 9)
+                        F.col("wp"), lambda x: round_dp(x / F.col("nm"))
                     ).alias("w")
                 )
                 .collect()[0]["w"]
@@ -3178,7 +3146,7 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored1 = cdf.crossJoin(F.broadcast(w1)).select(
         "vec_id",
         "c",
-        F.round(F.expr(dot_expr), 9).alias("pc1"),
+        round_dp(F.expr(dot_expr)).alias("pc1"),
         "w",
     )
     c2 = scored1.select(
@@ -3190,7 +3158,7 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c2.crossJoin(F.broadcast(w2)).select(
         "vec_id",
         F.col("pc1").cast("double").alias("pc1"),
-        F.round(F.expr(dot_expr), 9).cast("double").alias("pc2"),
+        round_dp(F.expr(dot_expr)).cast("double").alias("pc2"),
     )
 
 
@@ -3271,7 +3239,7 @@ def vec_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("q_id").orderBy(
-        F.round("cosine", 9).desc(), F.col("neighbor_id")
+        round_dp("cosine").desc(), F.col("neighbor_id")
     )
     truth = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -3279,7 +3247,7 @@ def vec_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("neighbor_id").alias("truth_id"))
     )
     wsl = Window.partitionBy("vec_id").orderBy(
-        F.round("cosine", 9).desc(), F.col("neighbor_id")
+        round_dp("cosine").desc(), F.col("neighbor_id")
     )
     sl = _lsh_shortlist(spark, sf_dir).withColumn(
         "rnk", F.row_number().over(wsl)
@@ -3315,10 +3283,9 @@ def vec_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "truth_id",
         "found_rank",
         "rr_sixths",
-        F.round(
+        round_dp(
             F.sum("rr_sixths").over(w_all)
             / (6.0 * F.count(F.lit(1)).over(w_all)),
-            9,
         )
         .cast("double")
         .alias("mrr"),
@@ -3442,23 +3409,21 @@ def vec_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(w_all).alias("nn"),
     ).localCheckpoint()
     qmi = F.round(
-        F.round(
+        round_dp(
             (F.col("n") / F.col("nn"))
             * F.log(
                 (F.col("n").cast("double") * F.col("nn"))
                 / (F.col("nc").cast("double") * F.col("nl"))
             ),
-            9,
         )
         * F.lit(1e9),
         0,
     ).cast("long")
     smi = tot.agg(F.sum(qmi).alias("smi"))
     qh = lambda colname: F.round(  # noqa: E731
-        F.round(
+        round_dp(
             -(F.col(colname) / F.col("nn"))
             * F.log(F.col(colname) / F.col("nn")),
-            9,
         )
         * F.lit(1e9),
         0,
@@ -3487,15 +3452,14 @@ def vec_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("nn").cast("bigint").alias("n_vectors"),
             "n_clusters",
-            F.round(F.col("pnum") / F.col("nn"), 9)
+            round_dp(F.col("pnum") / F.col("nn"))
             .cast("double")
             .alias("purity"),
-            F.round(
+            round_dp(
                 (F.col("smi") / F.lit(1e9))
                 / F.sqrt(
                     (F.col("shc") / F.lit(1e9)) * (F.col("shl") / F.lit(1e9))
                 ),
-                9,
             )
             .cast("double")
             .alias("nmi"),
@@ -3558,12 +3522,11 @@ def vec_pq_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
     for s in range(4):
-        md = F.round(
+        md = round_dp(
             F.least(
                 _subdist16("embedding", cb[2 * s], s),
                 _subdist16("embedding", cb[2 * s + 1], s),
             ),
-            9,
         )
         aggs.append(
             F.sum(F.round(md * F.lit(1e9), 0).cast("long"))
@@ -3589,10 +3552,10 @@ def vec_pq_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "subspace",
         "n_vectors",
-        F.round(F.col("q") / (F.col("n_vectors") * F.lit(1e9)), 9)
+        round_dp(F.col("q") / (F.col("n_vectors") * F.lit(1e9)))
         .cast("double")
         .alias("mse"),
-        F.round(F.col("qt") / (F.col("n_vectors") * F.lit(1e9)), 9)
+        round_dp(F.col("qt") / (F.col("n_vectors") * F.lit(1e9)))
         .cast("double")
         .alias("total_mse"),
     )
@@ -3691,9 +3654,9 @@ def sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (hex_int(F.md5(F.col("vec_id").cast("string")), 6) + 0.5) / F.lit(16777216.0)
     keyed = d.crossJoin(F.broadcast(tot)).select(
         "vec_id",
-        F.round(qx, 9).cast("double").alias("q"),
-        F.round(F.round(F.log(u), 9) / qx, 9).cast("double").alias("sample_key"),
-        F.round(F.lit(1.0) / (_CORESET_M * qx), 9).cast("double").alias("cs_weight"),
+        round_dp(qx).cast("double").alias("q"),
+        round_dp(round_dp(F.log(u)) / qx).cast("double").alias("sample_key"),
+        round_dp(F.lit(1.0) / (_CORESET_M * qx)).cast("double").alias("cs_weight"),
     )
     return keyed.orderBy(
         F.col("sample_key").desc(), F.col("vec_id")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import tokens
+from ..functions.stable import round_dp, tokens
 from ..registry import query
 from ..runtime import checkpoint
 from ..sources.tables import load
@@ -50,7 +50,7 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.rank().over(w).alias("rnk"),
         F.dense_rank().over(w).alias("drnk"),
         F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
+        round_dp(F.percent_rank().over(w), 6).alias("pct_rank"),
     )
 
 
@@ -418,7 +418,7 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "value",
-        F.round(num / den, 9).alias("ewma"),
+        round_dp(num / den).alias("ewma"),
     )
 
 
@@ -495,7 +495,7 @@ def win_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "value",
-        F.round(acc.cast("double") / F.lit(_HOLT_DEN), 9).alias("holt_forecast"),
+        round_dp(acc.cast("double") / F.lit(_HOLT_DEN)).alias("holt_forecast"),
     )
 
 
@@ -606,7 +606,7 @@ def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean = F.col("s1") / F.col("n")
     var = (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")) / (F.col("n") - 1)
-    s = s.withColumn("z", F.round((F.col("c") - mean) / F.sqrt(var), 9))
+    s = s.withColumn("z", round_dp((F.col("c") - mean) / F.sqrt(var)))
     return s.filter(F.abs(F.col("z")) > 3.0).select(
         "event_id", "event_type", (F.col("c") / 100.0).alias("value"), "z"
     )
@@ -676,7 +676,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter((vx > 0) & (vy > 0))
         .withColumn(
             "autocorr",
-            F.round(num / F.sqrt(vx.cast("double") * vy.cast("double")), 9),
+            round_dp(num / F.sqrt(vx.cast("double") * vy.cast("double"))),
         )
         .select("event_id", "event_type", "autocorr")
     )
@@ -849,8 +849,8 @@ def win_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("event_id").alias("changepoint_event_id"),
             F.col("t").cast("bigint").alias("t_index"),
-            F.round(
-                F.abs(F.col("s_scaled")).cast("double") / F.col("n") / 100.0, 9
+            round_dp(
+                F.abs(F.col("s_scaled")).cast("double") / F.col("n") / 100.0
             ).alias("cusum_peak"),
         )
     )
@@ -933,9 +933,8 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(loss).over(w2).cast("bigint").alias("sl"),
     )
     rsi = F.when(F.col("sl") == 0, F.lit(100.0)).otherwise(
-        F.round(
+        round_dp(
             100.0 - 100.0 / (1.0 + F.col("sg").cast("double") / F.col("sl")),
-            9,
         )
     )
     return gl.filter(F.col("n_deltas") >= _RSI_PERIOD).select(
@@ -1394,10 +1393,9 @@ def agg_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
         .cast("bigint")
         .alias("n_bounces"),
-        F.round(
+        round_dp(
             F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
             / F.count(F.lit(1)),
-            9,
         )
         .cast("double")
         .alias("bounce_rate"),
@@ -1518,8 +1516,8 @@ def win_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sd = F.sqrt(var18 / 18.0)
     z = (
-        F.when(F.col("s_stat") > 0, F.round((F.col("s_stat") - 1) / sd, 9))
-        .when(F.col("s_stat") < 0, F.round((F.col("s_stat") + 1) / sd, 9))
+        F.when(F.col("s_stat") > 0, round_dp((F.col("s_stat") - 1) / sd))
+        .when(F.col("s_stat") < 0, round_dp((F.col("s_stat") + 1) / sd))
         .otherwise(F.lit(0.0))
     )
     return j.select(
@@ -1778,15 +1776,15 @@ def win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fit = slopes.groupBy("event_type").agg(
-        F.round(F.expr("percentile(sl, 0.5)") / 100.0, 9).alias(
+        round_dp(F.expr("percentile(sl, 0.5)") / 100.0).alias(
             "slope_per_day"
         )
     )
     resid = grid.join(F.broadcast(fit), "event_type").select(
         "event_type",
         "slope_per_day",
-        F.round(
-            F.col("cents") / 100.0 - F.col("slope_per_day") * F.col("d"), 9
+        round_dp(
+            F.col("cents") / 100.0 - F.col("slope_per_day") * F.col("d")
         ).alias("r"),
     )
     return (
@@ -1794,7 +1792,7 @@ def win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_days"),
             F.min("slope_per_day").alias("slope_per_day"),
-            F.round(F.expr("percentile(r, 0.5)"), 9).alias("intercept"),
+            round_dp(F.expr("percentile(r, 0.5)")).alias("intercept"),
         )
         .select(
             "event_type",
@@ -1910,12 +1908,11 @@ def win_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.select(
         "user_id",
         "n_events",
-        F.round(F.col("st.l") / 100.0, 9).cast("double").alias("level"),
-        F.round(F.col("st.b") / 100.0, 9).cast("double").alias("trend"),
-        F.round(
+        round_dp(F.col("st.l") / 100.0).cast("double").alias("level"),
+        round_dp(F.col("st.b") / 100.0).cast("double").alias("trend"),
+        round_dp(
             (F.col("st.l") + F.col("st.b") + F.element_at(F.col("st.s"), 1))
             / 100.0,
-            9,
         )
         .cast("double")
         .alias("forecast_next"),
@@ -2006,20 +2003,17 @@ def win_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sx",
         num.alias("num"),
-        F.round(
-            F.sqrt(num.cast("double")) / (F.col("n") * 100.0), 9
-        ).alias("sd"),
-        F.round(F.col("sx").cast("double") / (F.col("n") * 100.0), 9).alias(
+        round_dp(F.sqrt(num.cast("double")) / (F.col("n") * 100.0)).alias("sd"),
+        round_dp(F.col("sx").cast("double") / (F.col("n") * 100.0)).alias(
             "mid"
         ),
     )
     pct_b = F.when(F.col("num") == 0, F.lit(0.5)).otherwise(
-        F.round(
+        round_dp(
             (F.col("x") * F.col("n") - F.col("sx")).cast("double")
             / (F.col("n") * 100.0)
             / (4 * F.col("sd"))
             + 0.5,
-            9,
         )
     )
     return v.select(
@@ -2027,10 +2021,10 @@ def win_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day").cast("string").alias("day"),
         "mid",
         F.col("sd").cast("double").alias("sd"),
-        F.round(F.col("mid") + 2 * F.col("sd"), 9)
+        round_dp(F.col("mid") + 2 * F.col("sd"))
         .cast("double")
         .alias("upper_band"),
-        F.round(F.col("mid") - 2 * F.col("sd"), 9)
+        round_dp(F.col("mid") - 2 * F.col("sd"))
         .cast("double")
         .alias("lower_band"),
         pct_b.cast("double").alias("pct_b"),
@@ -2118,9 +2112,9 @@ def win_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.select(
         "user_id",
         "n_events",
-        F.round(F.col("st.x") / 100.0, 9).cast("double").alias("level"),
-        F.round(F.col("st.p"), 9).cast("double").alias("variance"),
-        F.round(F.col("st.k"), 9).cast("double").alias("last_gain"),
+        round_dp(F.col("st.x") / 100.0).cast("double").alias("level"),
+        round_dp(F.col("st.p")).cast("double").alias("variance"),
+        round_dp(F.col("st.k")).cast("double").alias("last_gain"),
     )
 
 
@@ -2289,16 +2283,14 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum",
         F.max("cum").over(w).alias("peak"),
     )
-    ddp = F.round(100.0 * (F.col("peak") - F.col("cum")) / F.col("peak"), 9)
+    ddp = round_dp(100.0 * (F.col("peak") - F.col("cum")) / F.col("peak"))
     q = F.round(ddp * ddp * F.lit(1e9), 0).cast("long")
     return (
         c.select("event_type", q.alias("q"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_days"),
-            F.round(
-                F.sqrt(F.sum("q") / (F.count(F.lit(1)) * F.lit(1e9))), 9
-            )
+            round_dp(F.sqrt(F.sum("q") / (F.count(F.lit(1)) * F.lit(1e9))))
             .cast("double")
             .alias("ulcer_index"),
         )

@@ -107,9 +107,9 @@ def test_no_bare_assert_guards_driver_collects():
 
 def test_scratch_dirs_are_per_process():
     """Concurrent suites must not share scratch trees (the r8 Derby
-    db.lck collision, generalized): the roundtrip and streaming scratch
-    paths carry a per-process uuid, so a second interpreter lands in a
-    different tree."""
+    db.lck collision, generalized): the roundtrip, streaming and bucketed
+    scratch paths carry a per-process uuid, so a second interpreter lands
+    in a different tree."""
     import subprocess
     import sys as _sys
 
@@ -117,7 +117,8 @@ def test_scratch_dirs_are_per_process():
         "import sys; sys.path.insert(0, %r); "
         "from insight_patents_spark.operators.relational import _TMP; "
         "from insight_patents_spark.streaming.queries import _STREAM_TMP; "
-        "print(_TMP); print(_STREAM_TMP)"
+        "from insight_patents_spark.operators.joins import _BUCKET_SCRATCH; "
+        "print(_TMP); print(_STREAM_TMP); print(_BUCKET_SCRATCH)"
     ) % str(REPO)
     a = subprocess.run(
         [_sys.executable, "-c", code], capture_output=True, text=True
@@ -125,9 +126,10 @@ def test_scratch_dirs_are_per_process():
     b = subprocess.run(
         [_sys.executable, "-c", code], capture_output=True, text=True
     ).stdout.splitlines()
-    assert len(a) == 2 and len(b) == 2
+    assert len(a) == 3 and len(b) == 3
     assert a[0] != b[0], "roundtrip scratch shared across processes"
     assert a[1] != b[1], "streaming scratch shared across processes"
+    assert a[2] != b[2], "bucketed scratch shared across processes"
 
 
 def test_unpartitioned_windows_are_the_disclosed_set():
@@ -180,4 +182,48 @@ def test_unpartitioned_windows_are_the_disclosed_set():
     assert found == allowed, (
         f"undisclosed unpartitioned windows: {sorted(found - allowed)}; "
         f"stale allowlist entries: {sorted(allowed - found)}"
+    )
+
+
+# Engine sites allowed to keep Spark's own round(x, k >= 1), as
+# (module, function) -> reason. Only a DECIMAL or integral input, or an
+# oracle that rounds a DuckDB DECIMAL, qualifies; none does today.
+_SPARK_ROUND_SITES: dict[tuple[str, str], str] = {}
+
+
+def test_double_rounding_goes_through_round_dp():
+    """Spark's round(x, k) rounds x's shortest decimal string half-up;
+    DuckDB rounds x * 10^k. On doubles they split (functions/stable.py),
+    so an engine F.round(..., k) with a literal k >= 1 outside stable.py
+    is a defect unless its (module, function) is in _SPARK_ROUND_SITES."""
+    import ast
+
+    pkg = REPO / "insight_patents_spark"
+    found = set()
+    for p in sorted(pkg.rglob("*.py")):
+        rel = str(p.relative_to(pkg))
+        if rel == "functions/stable.py":
+            continue
+        tree = ast.parse(p.read_text())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "round"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and len(node.args) > 1
+                and isinstance(node.args[1], ast.Constant)
+                and isinstance(node.args[1].value, int)
+                and node.args[1].value >= 1
+            ):
+                continue
+            owners = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+            owner = min(owners, key=lambda f: f.end_lineno - f.lineno, default=None)
+            found.add((rel, owner.name if owner else "<module>"))
+    allowed = set(_SPARK_ROUND_SITES)
+    assert found == allowed, (
+        f"F.round(x, k >= 1) outside stable.round_dp: {sorted(found - allowed)}; "
+        f"stale _SPARK_ROUND_SITES entries: {sorted(allowed - found)}"
     )

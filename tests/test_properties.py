@@ -150,41 +150,61 @@ def test_min_label_loop_bound_is_label_changing_rounds(
         _min_label_loop(ndf, edf, rounds - 1, "bound_test")
 
 
-def test_approx_km_rounds_like_duckdb(spark):
-    """geo_grid_join / geo_knn's approx_km == DuckDB's
-    ROUND(SQRT(d2q) * 0.00555225, 9), bit for bit. Pinned: d2q =
-    6262787269 gives x = 439.39270552749997 with x * 1e9 exactly
-    439392705527.5, where Spark's round(x, 9) (half-up on the shortest
-    decimal string) says ...527 and DuckDB ...528."""
+def test_round_dp_rounds_like_duckdb(spark):
+    """round_dp, round_dp_sql and py_round_dp == DuckDB ROUND(x, k) on
+    doubles for every k the engine rounds to (== equates DuckDB's -0.0
+    with Spark's 0.0: Spark's round has no negative zero). Spark's own
+    round(x, k) fails this: it rounds x's shortest decimal string
+    half-up, so it splits from DuckDB on exact binary halves and on
+    about 7% of the doubles in [1e6, 2e6) at k = 9. Pinned: at
+    x = 439.39270552749997, x * 1e9 is exactly 439392705527.5; Spark's
+    round(x, 9) says ...527, DuckDB ...528."""
     import random
 
     import duckdb
     import pandas as pd
 
-    from insight_patents_spark.operators.joins import _approx_km
+    from insight_patents_spark.functions.stable import (
+        py_round_dp,
+        round_dp,
+        round_dp_sql,
+    )
 
+    digits = (0, 1, 2, 4, 6, 9)
     rng = random.Random(8)
-    d2q = (
-        [6262787269.0, 0.0]
-        + [rng.uniform(0, 8.1e9) for _ in range(2000)]
-        + [float(rng.randrange(8_100_000_000)) for _ in range(2000)]
-    )
-    pdf = pd.DataFrame({"i": range(len(d2q)), "d2q": d2q})
-    got = {
-        r.i: r.approx_km
-        for r in spark.createDataFrame(pdf)
-        .select("i", _approx_km(F.col("d2q")))
+    xs = [439.39270552749997, 0.0, 2.5, -2.5, 0.5, -0.5]
+    xs += [s * 10 ** rng.uniform(-6, 9) for s in (1, -1) for _ in range(1000)]
+    xs += [s * rng.uniform(1e6, 2e6) for s in (1, -1) for _ in range(500)]
+    for k in digits:  # doubles x whose x * 10^k is exactly n + 1/2
+        for _ in range(200):
+            y = rng.choice((1, -1)) * (rng.randrange(10**7) + 0.5)
+            x = y / 10**k
+            if x * 10**k == y:
+                xs.append(x)
+    pdf = pd.DataFrame({"i": range(len(xs)), "x": xs})
+    rows = (
+        spark.createDataFrame(pdf)
+        .select(
+            "i",
+            *(round_dp("x", k).alias(f"c{k}") for k in digits),
+            *(F.expr(round_dp_sql("x", k)).alias(f"s{k}") for k in digits),
+        )
         .collect()
-    }
-    con = duckdb.connect()
-    want = dict(
-        con.execute(
-            "SELECT i, ROUND(SQRT(d2q) * 0.00555225, 9) FROM pdf"
-        ).fetchall()
     )
+    con = duckdb.connect()
+    want = {
+        r[0]: r[1:]
+        for r in con.execute(
+            f"SELECT i, {', '.join(f'ROUND(x, {k})' for k in digits)} FROM pdf"
+        ).fetchall()
+    }
     con.close()
-    assert got[0] == 439.392705528
-    assert got == want
+    assert len(rows) == len(want) == len(xs)
+    for r in rows:
+        x, exp = xs[r.i], want[r.i]
+        for k, w in zip(digits, exp):
+            assert (r[f"c{k}"], r[f"s{k}"], py_round_dp(x, k)) == (w, w, w), (x, k)
+    assert want[0][-1] == 439.392705528
 
 
 _docs = st.lists(

@@ -170,6 +170,22 @@ def test_lsh_index_follows_rewritten_embeddings(spark, sf_dir, tmp_path):
     assert not problems, "; ".join(problems)
 
 
+def test_bucketed_join_follows_rewritten_source(spark, sf_dir, tmp_path):
+    # The bucketed copies of lineitem and orders are keyed by their source
+    # stamps: after an in-place rewrite of orders the query must answer for
+    # the new file, not from the bucketed copy of the old one.
+    sf = _writable_sf0001(sf_dir, tmp_path)
+    spec = registry.load_all()["join_bucketed"]
+    spec.fn(spark, sf).toPandas()
+    _keep_even(sf, "orders", "o_orderkey")
+    got = spec.fn(spark, sf).toPandas()
+    con = duck_connect(sf)
+    want = con.execute(spec.oracle).df()
+    con.close()
+    problems = compare("join_bucketed", got, want)
+    assert not problems, "; ".join(problems)
+
+
 def test_rewritten_source_unpins_superseded_checkpoints(spark, sf_dir, tmp_path):
     # A new lineitem stamp evicts the graph tables built from the old one,
     # so their checkpoints stop being protected: the protected set must
