@@ -2211,9 +2211,11 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_anova_f",
     # One-way ANOVA F across event_type groups on exact int64 cents:
     # per-group (n, s, ss) exact moments in one hash agg; SSB/SSW built
-    # from s_g^2/n_g terms — each a double division of exact ints —
-    # folded over the <=|types| groups in ascending-type order
-    # (order-canonical); F is one arithmetic expression, rounded 9dp.
+    # from s_g^2/n_g terms — each double(s) * s / n, the same two IEEE
+    # ops in both engines (s^2 can pass 2^53, so an exact product
+    # rounded once would differ by an ulp) — folded over the <=|types|
+    # groups in ascending-type order (order-canonical); F is one
+    # arithmetic expression, rounded 9dp.
     oracle="""
     WITH g AS (
       SELECT event_type, COUNT(*) AS n,
@@ -2226,13 +2228,14 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(n) AS BIGINT) AS nt,
              CAST(SUM(s) AS BIGINT) AS st,
              CAST(SUM(ss) AS BIGINT) AS sst,
-             list_aggregate(list(s * 1.0 * s / n ORDER BY event_type), 'sum')
-               AS between_raw
+             list_aggregate(list(CAST(s AS DOUBLE) * s / n ORDER BY event_type),
+                            'sum') AS between_raw
       FROM g)
     SELECT CAST(k AS BIGINT) AS k_groups, nt AS n_total,
-           CAST(ROUND(between_raw - st * 1.0 * st / nt, 9) AS DOUBLE) AS ss_between,
+           CAST(ROUND(between_raw - CAST(st AS DOUBLE) * st / nt, 9) AS DOUBLE)
+             AS ss_between,
            CAST(ROUND(sst - between_raw, 9) AS DOUBLE) AS ss_within,
-           CAST(ROUND(((between_raw - st * 1.0 * st / nt) / (k - 1))
+           CAST(ROUND(((between_raw - CAST(st AS DOUBLE) * st / nt) / (k - 1))
                       / ((sst - between_raw) / (nt - k)), 9) AS DOUBLE) AS f_stat
     FROM t
     """,
@@ -2246,9 +2249,9 @@ def agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE map-side-combinable hash agg produces per-group
     exact int64 moments; everything after runs on the ≤|types|-row
-    group table — the s_g²/n_g float terms (each a double division of
-    exact ints) fold in ascending-type order, so the statistic is
-    bit-stable at any parallelism. s_g² demands the documented int64
+    group table — the s_g²/n_g float terms (each double(s_g)·s_g/n_g,
+    two IEEE ops on exact ints) fold in ascending-type order, so the
+    statistic is bit-stable at any parallelism. s_g² demands the documented int64
     headroom (cents² · rows < 2⁶³ — rescale units past that, same
     contract as time_acf)."""
     e = load(spark, sf_dir, "events")
@@ -2268,9 +2271,9 @@ def agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.collect_list(
                     F.struct(
                         "event_type",
-                        (F.col("s") * 1.0 * F.col("s") / F.col("n")).alias(
-                            "v"
-                        ),
+                        (
+                            F.col("s").cast("double") * F.col("s") / F.col("n")
+                        ).alias("v"),
                     )
                 )
             ),
@@ -2278,7 +2281,10 @@ def agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x["v"],
         ).alias("between_raw"),
     )
-    ssb = F.col("between_raw") - F.col("st") * 1.0 * F.col("st") / F.col("nt")
+    ssb = (
+        F.col("between_raw")
+        - F.col("st").cast("double") * F.col("st") / F.col("nt")
+    )
     ssw = F.col("sst") - F.col("between_raw")
     return t.select(
         F.col("k").cast("bigint").alias("k_groups"),

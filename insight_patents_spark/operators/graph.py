@@ -10,11 +10,24 @@ sf0.01 and sf0.1 — BASELINE.md risk item 3).
 
 Architecture (Pregel-on-dataflow, PAPERS.md VLDB'14): iterative
 algorithms are driver-side loops of join+aggregate with a
-``localCheckpoint`` every round to truncate lineage. Loops that run to a
-fixpoint take their halt values (changed labels, surviving edges) from
-that checkpoint's own job via ``runtime.checkpoint`` — Pregelix's
-in-plan halt test, not a separate ``count()`` pass. No GraphX (no
-Python API) and no external jars — pure DataFrame ops.
+``localCheckpoint`` to truncate lineage. Loops that run to a fixpoint
+take their halt values (changed labels, surviving edges) from that
+checkpoint's own job via ``runtime.checkpoint`` — Pregelix's in-plan
+halt test, not a separate ``count()`` pass. No GraphX (no Python API)
+and no external jars — pure DataFrame ops.
+
+Two mechanisms carry every min-propagation:
+
+- ``relax`` / ``relax_ctes`` — the fixed-round min-plus relaxation
+  v(keys, node) ← min(v, v(keys, src) + step), one function per engine.
+  Frontier BFS (graph_bfs_khop, graph_shortest_path, both sweeps of
+  graph_diameter_2sweep), per-seed BFS (graph_closeness,
+  graph_smallworld_sigma, graph_hyperball's exact reach), Bellman-Ford
+  (graph_sssp_weighted) and every unrolled min-label oracle (graph_cc,
+  dedup_cluster_cc) go through them. ``relax`` checkpoints after every
+  third round but never after the last, which its caller reads once.
+- ``_min_label_loop`` — min-label propagation with pointer jumping, run
+  to an observed fixpoint (graph_cc, graph_scc, graph_louvain_move).
 
 Determinism (SURVEY §5): PageRank runs a FIXED 10 iterations with rank
 state in exact int64 femto-units (RANK_SCALE) — every reduction is a
@@ -27,7 +40,7 @@ unrolled propagation oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -52,6 +65,12 @@ DAMPING = 0.85
 CC_MAX_ROUNDS = 16  # oracle unroll depth; fixpoint at 11 on driver data
 KHOP_K = 3
 SSSP_MAX_DEPTH = 6
+
+# Seed samples, read verbatim by the oracles and through F.expr by Spark.
+# 1/500: graph_bfs_khop, graph_pagerank_personalized, graph_path_count_dag.
+_SEEDS_500 = "src % 500 = 0"
+# 1/250: graph_closeness, graph_smallworld_sigma, graph_betweenness.
+_SEEDS_250 = "src % 250 = 0"
 
 # --- shared edge-builder (Spark + oracle CTE) ----------------------------
 
@@ -156,6 +175,73 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return shared(spark, sf_dir, "lineitem", "graph_edges", build)
+
+
+def relax(
+    frontier: DataFrame, edges: DataFrame, rounds: int, step: Column
+) -> DataFrame:
+    """``rounds`` min-plus relaxation rounds over ``edges`` (src, dst, …)
+    from ``frontier`` (*keys, node, value): each round joins node = src,
+    emits (keys, dst, ``step``) — ``step`` is evaluated on the joined
+    frontier and edge row — unions it with the previous round and keeps
+    the min value per (keys, node). The Spark twin of :func:`relax_ctes`.
+
+    Lineage is cut by a ``localCheckpoint`` after every third round but
+    never after the last: the caller reads the last round once, so a
+    checkpoint there is one job that saves nothing."""
+    *keys, node, value = frontier.columns
+    for r in range(1, rounds + 1):
+        stepped = frontier.join(edges, frontier[node] == edges["src"]).select(
+            *keys, F.col("dst").alias(node), step.alias(value)
+        )
+        frontier = (
+            frontier.unionByName(stepped)
+            .groupBy(*keys, node)
+            .agg(F.min(value).alias(value))
+        )
+        if r % 3 == 0 and r < rounds:
+            frontier = frontier.localCheckpoint()
+    return frontier
+
+
+def relax_ctes(
+    prefix: str,
+    rounds: int,
+    step_sql: str,
+    keys: tuple[str, ...] = (),
+    edges: str = "edges",
+    value: str = "dist",
+) -> str:
+    """The :func:`relax` rounds as DuckDB CTEs ``{prefix}1 … {prefix}R``
+    (each MATERIALIZED) on top of a ``{prefix}0(*keys, node, value)``
+    the caller defines. ``step_sql`` reads the frontier row as ``f`` and
+    the ``edges`` row (src, dst, …) as ``e``."""
+    k = "".join(f"{c}, " for c in keys)
+    fk = "".join(f"f.{c}, " for c in keys)
+    sql = ""
+    for r in range(1, rounds + 1):
+        sql += f"""
+    , {prefix}{r} AS MATERIALIZED (
+      SELECT {k}node, MIN({value}) AS {value} FROM (
+        SELECT {k}node, {value} FROM {prefix}{r - 1}
+        UNION ALL
+        SELECT {fk}e.dst AS node, {step_sql} AS {value}
+        FROM {prefix}{r - 1} f JOIN {edges} e ON e.src = f.node
+      ) GROUP BY {k}node
+    )"""
+    return sql
+
+
+def _start(
+    edges: DataFrame, pred: Column, keyed: bool = False, dtype: str = "int"
+) -> DataFrame:
+    """Round-0 frontier for :func:`relax`: every distinct ``src`` that
+    matches ``pred`` at dist 0 (of type ``dtype``), as (node, dist) — or
+    as (seed, node, dist) when ``keyed``, so each seed relaxes alone."""
+    node = edges.filter(pred).select(F.col("src").alias("node")).distinct()
+    if keyed:
+        node = node.select(F.col("node").alias("seed"), "node")
+    return node.withColumn("dist", F.lit(0).cast(dtype))
 
 
 @query(
@@ -338,17 +424,12 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_oracle() -> str:
-    sql = _EDGES_CTE + ", l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges)"
-    for r in range(1, CC_MAX_ROUNDS + 1):
-        sql += f"""
-    , l{r} AS MATERIALIZED (
-      SELECT node, MIN(lbl) AS lbl FROM (
-        SELECT node, lbl FROM l{r - 1}
-        UNION ALL
-        SELECT e.dst AS node, l.lbl FROM l{r - 1} l JOIN edges e ON e.src = l.node
-      ) GROUP BY node
-    )"""
-    return sql + f"\n    SELECT node, lbl AS component FROM l{CC_MAX_ROUNDS}"
+    return (
+        _EDGES_CTE
+        + ", l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges)"
+        + relax_ctes("l", CC_MAX_ROUNDS, "f.lbl", value="lbl")
+        + f"\n    SELECT node, lbl AS component FROM l{CC_MAX_ROUNDS}"
+    )
 
 
 # Workaround (Spark 4.1.2): Union constraint rewriting throws
@@ -538,93 +619,55 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEED_PRED = "src % 500 = 0"
-
-
-def _bfs_oracle(max_depth: int, seed_pred: str) -> str:
-    sql = _EDGES_CTE + f"""
-    , d0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges WHERE {seed_pred})"""
-    for r in range(1, max_depth + 1):
-        sql += f"""
-    , d{r} AS MATERIALIZED (
-      SELECT node, MIN(dist) AS dist FROM (
-        SELECT node, dist FROM d{r - 1}
-        UNION ALL
-        SELECT e.dst AS node, d.dist + 1 AS dist
-        FROM d{r - 1} d JOIN edges e ON e.src = d.node
-      ) GROUP BY node
-    )"""
-    return sql + f"\n    SELECT node, CAST(dist AS INTEGER) AS dist FROM d{max_depth}"
-
-
-def _bfs(spark: SparkSession, sf_dir: str, max_depth: int, seed_filter) -> DataFrame:
-    """Frontier-expansion BFS keeping min first-visit depth; one
-    join+min-agg per level, checkpointed."""
-    edges = _edges(spark, sf_dir).select("src", "dst")
-    dist = (
-        edges.filter(seed_filter)
-        .select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    for r in range(1, max_depth + 1):
-        expanded = (
-            dist.join(edges, dist.node == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if r % 3 == 0:
-            dist = dist.localCheckpoint()
-    return dist.select("node", F.col("dist").cast("int").alias("dist"))
-
-
-@query("graph_bfs_khop", oracle=_bfs_oracle(KHOP_K, _SEED_PRED))
+@query(
+    "graph_bfs_khop",
+    oracle=_EDGES_CTE
+    + f"""
+    , d0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges WHERE {_SEEDS_500})"""
+    + relax_ctes("d", KHOP_K, "f.dist + 1")
+    + f"\n    SELECT node, CAST(dist AS INTEGER) AS dist FROM d{KHOP_K}",
+)
 def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-hop neighborhood from the seed set (part keys ≡ 0 mod 500):
     every reachable vertex with its min hop distance ≤ 3 (neighborhood
     queries over the citation graph, SURVEY §0.1)."""
-    return _bfs(spark, sf_dir, KHOP_K, F.col("src") % 500 == 0)
+    edges = _edges(spark, sf_dir).select("src", "dst")
+    dist = relax(_start(edges, F.expr(_SEEDS_500)), edges, KHOP_K, F.col("dist") + 1)
+    return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 @query(
     "graph_shortest_path",
     oracle=_EDGES_CTE
-    + ", seed AS (SELECT MIN(src) AS s FROM edges)"
-    + _bfs_oracle(SSSP_MAX_DEPTH, "src = (SELECT s FROM seed)").split(_EDGES_CTE, 1)[1],
+    + """
+    , seed AS (SELECT MIN(src) AS s FROM edges)
+    , d0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges
+             WHERE src = (SELECT s FROM seed))"""
+    + relax_ctes("d", SSSP_MAX_DEPTH, "f.dist + 1")
+    + f"\n    SELECT node, CAST(dist AS INTEGER) AS dist FROM d{SSSP_MAX_DEPTH}",
 )
 def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unweighted shortest-path length from the minimum vertex id, bounded
     at depth 6 (documented bound; Cypher path-query analog)."""
-    edges = _edges(spark, sf_dir)
+    edges = _edges(spark, sf_dir).select("src", "dst")
     seed = edges.agg(F.min("src")).collect()[0][0]
-    return _bfs(spark, sf_dir, SSSP_MAX_DEPTH, F.col("src") == F.lit(seed))
+    frontier = _start(edges, F.col("src") == F.lit(seed))
+    dist = relax(frontier, edges, SSSP_MAX_DEPTH, F.col("dist") + 1)
+    return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 SSSP_W_ROUNDS = 6
 
 
-def _sssp_w_oracle() -> str:
-    sql = _EDGES_CTE + """
+@query(
+    "graph_sssp_weighted",
+    oracle=_EDGES_CTE
+    + """
     , seedw AS (SELECT MIN(src) AS s FROM edges)
     , w0 AS (SELECT s AS node, CAST(0 AS BIGINT) AS dist FROM seedw)"""
-    for r in range(1, SSSP_W_ROUNDS + 1):
-        sql += f"""
-    , w{r} AS MATERIALIZED (
-      SELECT node, MIN(dist) AS dist FROM (
-        SELECT node, dist FROM w{r - 1}
-        UNION ALL
-        SELECT e.dst AS node, d.dist + e.w AS dist
-        FROM w{r - 1} d JOIN edges e ON e.src = d.node
-      ) GROUP BY node
-    )"""
-    return sql + f"\n    SELECT node, dist FROM w{SSSP_W_ROUNDS}"
-
-
-@query("graph_sssp_weighted", oracle=_sssp_w_oracle())
+    + relax_ctes("w", SSSP_W_ROUNDS, "f.dist + e.w")
+    + f"\n    SELECT node, dist FROM w{SSSP_W_ROUNDS}",
+)
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted single-source shortest paths by Bellman-Ford relaxation,
     a FIXED 6 rounds (deterministic, oracle-unrollable): each round
@@ -639,27 +682,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver LocalRelation: a 1-row LocalRelation at the loop root makes
     # AQE re-plan every unioned stage per round (measured 20x slower);
     # a distributed origin keeps each round's plan incremental.
-    dist = (
-        edges.filter(F.col("src") == F.lit(seed))
-        .select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-    )
-    for r in range(1, SSSP_W_ROUNDS + 1):
-        relaxed = (
-            dist.join(edges, dist.node == edges.src)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if r % 3 == 0:
-            dist = dist.localCheckpoint()
+    frontier = _start(edges, F.col("src") == F.lit(seed), dtype="long")
+    dist = relax(frontier, edges, SSSP_W_ROUNDS, F.col("dist") + F.col("w"))
     return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
@@ -922,7 +946,7 @@ def _ppr_oracle() -> str:
     # integer SUM over the union — order-independent, no sorted folds.
     sql = _EDGES_CTE + f"""
     , deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-    seeds AS (SELECT DISTINCT src AS node FROM edges WHERE src % 500 = 0),
+    seeds AS (SELECT DISTINCT src AS node FROM edges WHERE {_SEEDS_500}),
     ns AS (SELECT COUNT(*) AS n FROM seeds),
     tele AS (SELECT node, (15 * {RANK_SCALE}) // (100 * ns.n) AS vq
              FROM seeds CROSS JOIN ns),
@@ -966,7 +990,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     seeds = (
-        edges.filter(F.col("src") % 500 == 0)
+        edges.filter(F.expr(_SEEDS_500))
         .select(F.col("src").alias("node"))
         .distinct()
     )
@@ -1002,32 +1026,38 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLOSENESS_SEED_PRED = "src % 250 = 0"
 _CLOSENESS_DEPTH = 3
 
 
-def _closeness_oracle() -> str:
-    sql = _EDGES_CTE + f"""
+def _closeness_ctes() -> str:
+    """c0 … c{_CLOSENESS_DEPTH}: per-seed hop distances (seed, node,
+    dist) from the 1/250 seed sample; :func:`_closeness_dist`'s twin."""
+    return f"""
     , c0 AS (SELECT DISTINCT src AS seed, src AS node, 0 AS dist
-             FROM edges WHERE {_CLOSENESS_SEED_PRED})"""
-    for r in range(1, _CLOSENESS_DEPTH + 1):
-        sql += f"""
-    , c{r} AS MATERIALIZED (
-      SELECT seed, node, MIN(dist) AS dist FROM (
-        SELECT seed, node, dist FROM c{r - 1}
-        UNION ALL
-        SELECT d.seed, e.dst AS node, d.dist + 1 AS dist
-        FROM c{r - 1} d JOIN edges e ON e.src = d.node
-      ) GROUP BY seed, node
-    )"""
-    return sql + f"""
+             FROM edges WHERE {_SEEDS_250})""" + relax_ctes(
+        "c", _CLOSENESS_DEPTH, "f.dist + 1", keys=("seed",)
+    )
+
+
+def _closeness_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(seed, node, dist): hop distances up to _CLOSENESS_DEPTH from
+    each seed of the 1/250 sample (graph_closeness and
+    graph_smallworld_sigma)."""
+    edges = _edges(spark, sf_dir).select("src", "dst")
+    frontier = _start(edges, F.expr(_SEEDS_250), keyed=True)
+    return relax(frontier, edges, _CLOSENESS_DEPTH, F.col("dist") + 1)
+
+
+@query(
+    "graph_closeness",
+    oracle=_EDGES_CTE
+    + _closeness_ctes()
+    + f"""
     SELECT node, COUNT(*) AS n_seeds_reached,
            SUM(CAST(6 / dist AS BIGINT)) / 6.0 AS harmonic
     FROM c{_CLOSENESS_DEPTH} WHERE dist > 0
-    GROUP BY node"""
-
-
-@query("graph_closeness", oracle=_closeness_oracle())
+    GROUP BY node""",
+)
 def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled harmonic closeness centrality (Eppstein–Wang estimator
     shape): per-SEED BFS to depth 3 from a deterministic ~|V|/250 seed
@@ -1038,24 +1068,9 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     harmonic sum accumulates in exact SIXTHS (6/d is an integer for
     every d ≤ 3), so the reduction is order-independent and the one
     float op is the final /6."""
-    edges = _edges(spark, sf_dir).select("src", "dst")
-    dist = (
-        edges.filter(F.expr(_CLOSENESS_SEED_PRED))
-        .select(F.col("src").alias("seed"), F.col("src").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    for r in range(1, _CLOSENESS_DEPTH + 1):
-        expanded = dist.join(edges, dist.node == edges.src).select(
-            "seed", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-        )
     return (
-        dist.filter(F.col("dist") > 0)
+        _closeness_dist(spark, sf_dir)
+        .filter(F.col("dist") > 0)
         .groupBy("node")
         .agg(
             F.count(F.lit(1)).alias("n_seeds_reached"),
@@ -1563,14 +1578,13 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BETWEENNESS_SEED_PRED = "src % 250 = 0"
 _BETWEENNESS_DEPTH = 3
 
 
 def _betweenness_oracle() -> str:
     sql = _EDGES_CTE + f"""
     , v0 AS (SELECT DISTINCT src AS seed, src AS node, CAST(1 AS BIGINT) AS sigma
-             FROM edges WHERE {_BETWEENNESS_SEED_PRED})"""
+             FROM edges WHERE {_SEEDS_250})"""
     vis = ["v0"]
     for lv in range(1, _BETWEENNESS_DEPTH + 1):
         prev = vis[-1]
@@ -1653,7 +1667,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (error ~ 1/sqrt(seeds), Brandes-Pich sampling)."""
     edges = _edges(spark, sf_dir).select("src", "dst")
     v0 = (
-        edges.filter(F.expr(_BETWEENNESS_SEED_PRED))
+        edges.filter(F.expr(_SEEDS_250))
         .select(F.col("src").alias("seed"), F.col("src").alias("node"))
         .distinct()
         .withColumn("sigma", F.lit(1).cast("bigint"))
@@ -1731,27 +1745,18 @@ DIAM_DEPTH = 8  # BFS horizon per sweep (documented bound, like SSSP's 6)
 
 
 def _diam_oracle() -> str:
-    def unroll(tag: str, seed_cte: str) -> str:
-        sql = f"\n    , {tag}0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges WHERE src = ({seed_cte}))"
-        for r in range(1, DIAM_DEPTH + 1):
-            sql += f"""
-    , {tag}{r} AS MATERIALIZED (
-      SELECT node, MIN(dist) AS dist FROM (
-        SELECT node, dist FROM {tag}{r - 1}
-        UNION ALL
-        SELECT e.dst AS node, d.dist + 1 AS dist
-        FROM {tag}{r - 1} d JOIN edges e ON e.src = d.node
-      ) GROUP BY node
-    )"""
-        return sql
-
     return (
         _EDGES_CTE
-        + unroll("a", "SELECT MIN(src) FROM edges")
+        + """
+    , a0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges
+             WHERE src = (SELECT MIN(src) FROM edges))"""
+        + relax_ctes("a", DIAM_DEPTH, "f.dist + 1")
         + f"""
     , far AS (SELECT node FROM a{DIAM_DEPTH}
-              ORDER BY dist DESC, node LIMIT 1)"""
-        + unroll("b", "SELECT node FROM far")
+              ORDER BY dist DESC, node LIMIT 1)
+    , b0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM edges
+             WHERE src = (SELECT node FROM far))"""
+        + relax_ctes("b", DIAM_DEPTH, "f.dist + 1")
         + f"""
     SELECT (SELECT MIN(src) FROM edges) AS sweep1_seed,
            (SELECT node FROM far) AS peripheral_node,
@@ -1777,14 +1782,18 @@ def graph_diameter_2sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     other graph op uses (one join + min-agg per level); the only
     driver-side values are two scalar seeds (bounded collects,
     registry-wide precedent)."""
-    edges = _edges(spark, sf_dir)
+    edges = _edges(spark, sf_dir).select("src", "dst")
+
+    def sweep(seed: int) -> DataFrame:
+        frontier = _start(edges, F.col("src") == F.lit(seed))
+        return relax(frontier, edges, DIAM_DEPTH, F.col("dist") + 1)
+
     seed = edges.agg(F.min("src")).collect()[0][0]
-    b1 = _bfs(spark, sf_dir, DIAM_DEPTH, F.col("src") == F.lit(seed))
+    b1 = sweep(seed)
     far = (
         b1.orderBy(F.col("dist").desc(), F.col("node")).limit(1).collect()[0][0]
     )
-    b2 = _bfs(spark, sf_dir, DIAM_DEPTH, F.col("src") == F.lit(far))
-    return b2.agg(
+    return sweep(far).agg(
         F.lit(seed).cast("bigint").alias("sweep1_seed"),
         F.lit(far).cast("bigint").alias("peripheral_node"),
         F.max("dist").cast("bigint").alias("diameter_lb"),
@@ -2158,19 +2167,13 @@ _HYPERBALL_RADIUS = 3
     # near-exact sparse mode — a 10% bound is ultra-conservative and
     # stable). A regression in sketch init/union/estimate flips flags
     # and fails the hash.
-    oracle=_EDGES_CTE + """
-    , d0 AS (SELECT DISTINCT src AS seed, src AS node FROM edges),
-    d1 AS MATERIALIZED (
-      SELECT seed, node FROM d0
-      UNION SELECT d.seed, e.dst FROM d0 d JOIN edges e ON e.src = d.node),
-    d2 AS MATERIALIZED (
-      SELECT seed, node FROM d1
-      UNION SELECT d.seed, e.dst FROM d1 d JOIN edges e ON e.src = d.node),
-    d3 AS MATERIALIZED (
-      SELECT seed, node FROM d2
-      UNION SELECT d.seed, e.dst FROM d2 d JOIN edges e ON e.src = d.node)
+    oracle=_EDGES_CTE
+    + """
+    , d0 AS (SELECT DISTINCT src AS seed, src AS node, 0 AS dist FROM edges)"""
+    + relax_ctes("d", _HYPERBALL_RADIUS, "f.dist + 1", keys=("seed",))
+    + f"""
     SELECT seed AS node, COUNT(*) AS exact_reach3, TRUE AS est_within_10pct
-    FROM d3 GROUP BY seed
+    FROM d{_HYPERBALL_RADIUS} GROUP BY seed
     """,
 )
 def graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2210,13 +2213,13 @@ def graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = state.select(
         "node", F.hll_sketch_estimate("sk").alias("est_reach3")
     )
-    # exact twin for the hashed in-query grounding
-    reached = nodes.select(F.col("node").alias("seed"), "node")
-    for _ in range(_HYPERBALL_RADIUS):
-        expanded = reached.join(edges, reached.node == edges.src).select(
-            "seed", F.col("dst").alias("node")
-        )
-        reached = reached.unionByName(expanded).distinct().localCheckpoint()
+    # exact twin for the hashed in-query grounding: every node a seed
+    reached = relax(
+        nodes.select(F.col("node").alias("seed"), "node", F.lit(0).alias("dist")),
+        edges,
+        _HYPERBALL_RADIUS,
+        F.col("dist") + 1,
+    )
     exact = reached.groupBy("seed").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_reach3")
     )
@@ -2234,14 +2237,13 @@ def graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PATHCOUNT_DEPTH = 3
-_PATHCOUNT_SEED_PRED = "src % 500 = 0"
 
 
 def _path_count_oracle() -> str:
     sql = _EDGES_CTE + f"""
     , dag AS (SELECT src, dst FROM edges WHERE src < dst),
     seeds AS (SELECT DISTINCT src AS node FROM dag
-              WHERE {_PATHCOUNT_SEED_PRED}),
+              WHERE {_SEEDS_500}),
     p1 AS MATERIALIZED (
       SELECT d.dst AS node, CAST(COUNT(*) AS BIGINT) AS c
       FROM dag d JOIN seeds s ON d.src = s.node GROUP BY d.dst)"""
@@ -2295,7 +2297,7 @@ def graph_path_count_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src") < F.col("dst")
     )
     seeds = (
-        edges.filter(F.expr(_PATHCOUNT_SEED_PRED))
+        edges.filter(F.expr(_SEEDS_500))
         .select(F.col("src").alias("node"))
         .distinct()
     )
@@ -2578,15 +2580,11 @@ def graph_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SW_SEED_PRED = _CLOSENESS_SEED_PRED  # reuse the closeness seed sample
-_SW_DEPTH = _CLOSENESS_DEPTH
-
-
 def _smallworld_oracle() -> str:
-    # Sampled-BFS unroll (the _closeness_oracle pattern) + integer
-    # triangle/triad counts; every double below is derived from exact
-    # integers through IDENTICAL expressions in both engines.
-    sql = _EDGES_CTE + f"""
+    # graph_closeness's per-seed distances + integer triangle/triad
+    # counts; every double below is derived from exact integers through
+    # IDENTICAL expressions in both engines.
+    return _EDGES_CTE + _closeness_ctes() + f"""
     , tri AS (
       SELECT p1.pa AS a, p1.pb AS b, p2.pb AS c
       FROM pairs p1
@@ -2598,21 +2596,9 @@ def _smallworld_oracle() -> str:
                   CAST(SUM(degree * (degree - 1)) AS BIGINT) AS triads2,
                   CAST(SUM(degree) AS BIGINT) AS degsum
            FROM deg),
-    c0 AS (SELECT DISTINCT src AS seed, src AS node, 0 AS dist
-           FROM edges WHERE {_SW_SEED_PRED})"""
-    for r in range(1, _SW_DEPTH + 1):
-        sql += f"""
-    , c{r} AS MATERIALIZED (
-      SELECT seed, node, MIN(dist) AS dist FROM (
-        SELECT seed, node, dist FROM c{r - 1}
-        UNION ALL
-        SELECT c.seed, e.dst AS node, c.dist + 1 AS dist
-        FROM c{r - 1} c JOIN edges e ON c.node = e.src
-      ) GROUP BY seed, node)"""
-    return sql + f"""
-    , l AS (SELECT CAST(SUM(dist) AS BIGINT) AS sd,
-                   CAST(COUNT(*) AS BIGINT) AS np
-            FROM c{_SW_DEPTH} WHERE dist > 0)
+    l AS (SELECT CAST(SUM(dist) AS BIGINT) AS sd,
+                 CAST(COUNT(*) AS BIGINT) AS np
+          FROM c{_CLOSENESS_DEPTH} WHERE dist > 0)
     SELECT nn.n AS n_nodes,
            CAST(nn.degsum // 2 AS BIGINT) AS n_edges,
            CAST(ROUND(2.0 * t3.tri3 / nn.triads2, 9) AS DOUBLE)
@@ -2673,22 +2659,7 @@ def graph_smallworld_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("triads2"),
         F.sum("degree").cast("bigint").alias("degsum"),
     )
-    dist = (
-        edges.filter(F.expr(_SW_SEED_PRED))
-        .select(F.col("src").alias("seed"), F.col("src").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    for _ in range(_SW_DEPTH):
-        expanded = dist.join(edges, dist.node == edges.src).select(
-            "seed", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-        )
-    l_ = dist.filter(F.col("dist") > 0).agg(
+    l_ = _closeness_dist(spark, sf_dir).filter(F.col("dist") > 0).agg(
         F.sum("dist").cast("bigint").alias("sd"),
         F.count(F.lit(1)).cast("bigint").alias("np"),
     )

@@ -30,6 +30,7 @@ from ..functions.stable import hex_int, py_tokens, round_dp, tokens
 from ..registry import query
 from ..runtime import checkpoint, shared
 from ..sources.tables import load
+from .graph import relax_ctes
 
 # Inline fixtures (FIXTURES.md §5): defined identically in both engines.
 LEXICON = [  # (token, integer weight) — integer so group sums are exact
@@ -4534,21 +4535,14 @@ def dup_cc_chain_sql() -> str:
     l{_DUP_CC_ROUNDS}(node, lbl). Appended to _MINHASH_PAIRS_CTE by
     dedup_cluster_cc's oracle and reused verbatim by
     pipeline_llm_curation_e2e's near-dup drop-list stage."""
-    sql = """
+    return """
     , e AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM pairs_out
       UNION ALL
       SELECT doc_b, doc_a FROM pairs_out),
-    l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)"""
-    for r in range(1, _DUP_CC_ROUNDS + 1):
-        sql += f"""
-    , l{r} AS MATERIALIZED (
-      SELECT node, MIN(lbl) AS lbl FROM (
-        SELECT node, lbl FROM l{r - 1}
-        UNION ALL
-        SELECT e.dst AS node, l.lbl FROM l{r - 1} l JOIN e ON e.src = l.node
-      ) GROUP BY node)"""
-    return sql
+    l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)""" + relax_ctes(
+        "l", _DUP_CC_ROUNDS, "f.lbl", edges="e", value="lbl"
+    )
 
 
 def _dup_cc_oracle() -> str:

@@ -2858,6 +2858,34 @@ def _pca_oracle() -> str:
     return sql
 
 
+def _pca_centered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, c): every embedding minus the quantized per-dim corpus
+    mean — the centered table both PCA queries iterate on, persisted
+    once per embeddings stamp."""
+
+    def build() -> DataFrame:
+        e = load(spark, sf_dir, "embeddings").select(
+            "vec_id",
+            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+        )
+        mu_row = (
+            e.select(F.posexplode("v").alias("pos0", "x"))
+            .groupBy((F.col("pos0") + 1).alias("dim"))
+            .agg(_quantized_mean(F.col("x")).alias("m"))
+            .groupBy()
+            .agg(
+                F.expr(
+                    "transform(array_sort(collect_list(struct(dim, m))), t -> t.m)"
+                ).alias("mu")
+            )
+        )
+        return e.crossJoin(F.broadcast(mu_row)).select(
+            "vec_id", F.expr("zip_with(v, mu, (x, m) -> x - m)").alias("c")
+        )
+
+    return _materialized(spark, sf_dir, "pca_centered", build)
+
+
 @query("vec_pca_project", oracle=_pca_oracle())
 def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA, top component, by power iteration — the
@@ -2883,29 +2911,7 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     component; vectors never shuffle, C (64x64) never exists. The
     persisted centered table is the only cache (persist, not
     localCheckpoint — the vec-stage SMJ-demotion note in STATE.md)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    mu_row = (
-        e.select(F.posexplode("v").alias("pos0", "x"))
-        .groupBy((F.col("pos0") + 1).alias("dim"))
-        .agg(_quantized_mean(F.col("x")).alias("m"))
-        .groupBy()
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, m))), t -> t.m)"
-            ).alias("mu")
-        )
-    )
-    cdf = (
-        e.crossJoin(F.broadcast(mu_row))
-        .select(
-            "vec_id",
-            F.expr("zip_with(v, mu, (x, m) -> x - m)").alias("c"),
-        )
-        .persist()
-    )
+    cdf = _pca_centered(spark, sf_dir)
     w_row = spark.range(1).select(
         F.expr("array_repeat(CAST(0.125 AS DOUBLE), 64)").alias("w")
     )
@@ -3116,44 +3122,26 @@ def vec_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return w_row
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    mu_row = (
-        e.select(F.posexplode("v").alias("pos0", "x"))
-        .groupBy((F.col("pos0") + 1).alias("dim"))
-        .agg(_quantized_mean(F.col("x")).alias("m"))
-        .groupBy()
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, m))), t -> t.m)"
-            ).alias("mu")
-        )
-    )
-    cdf = (
-        e.crossJoin(F.broadcast(mu_row))
-        .select(
-            "vec_id", F.expr("zip_with(v, mu, (x, m) -> x - m)").alias("c")
-        )
-        .persist()
-    )
-    w1 = power(cdf)
     dot_expr = (
         "aggregate(zip_with(c, w, (x, y) -> x * y), "
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-    scored1 = cdf.crossJoin(F.broadcast(w1)).select(
-        "vec_id",
-        "c",
-        round_dp(F.expr(dot_expr)).alias("pc1"),
-        "w",
-    )
-    c2 = scored1.select(
-        "vec_id",
-        "pc1",
-        F.expr("zip_with(c, w, (x, y) -> x - pc1 * y)").alias("c"),
-    ).persist()
+
+    def deflated() -> DataFrame:
+        cdf = _pca_centered(spark, sf_dir)
+        scored1 = cdf.crossJoin(F.broadcast(power(cdf))).select(
+            "vec_id",
+            "c",
+            round_dp(F.expr(dot_expr)).alias("pc1"),
+            "w",
+        )
+        return scored1.select(
+            "vec_id",
+            "pc1",
+            F.expr("zip_with(c, w, (x, y) -> x - pc1 * y)").alias("c"),
+        )
+
+    c2 = _materialized(spark, sf_dir, "pca_deflated", deflated)
     w2 = power(c2)
     return c2.crossJoin(F.broadcast(w2)).select(
         "vec_id",

@@ -2969,7 +2969,7 @@ def _brute_graph(spark, sf_dir):
 
 
 def _brute_bfs(adj, seeds, depth):
-    """Synchronous min-dist BFS, matching _bfs's fixed-round min-agg."""
+    """Synchronous min-dist BFS, matching relax's fixed-round min-agg."""
     dist = {s: 0 for s in seeds}
     for _ in range(depth):
         new = dict(dist)
@@ -2979,6 +2979,93 @@ def _brute_bfs(adj, seeds, depth):
                     new[u] = d + 1
         dist = new
     return dist
+
+
+# A directed path 1→…→5 into the sink 5, a 3-cycle 10→11→12→10, and a
+# weighted diamond where the 3-hop route 20→22→23→21 (cost 3) beats the
+# direct edge 20→21 (cost 10); 3→20 joins the path to the diamond.
+_RELAX_EDGES = (
+    [(1, 2, 1), (2, 3, 1), (3, 4, 1), (4, 5, 1), (3, 20, 1)]
+    + [(10, 11, 2), (11, 12, 2), (12, 10, 2)]
+    + [(20, 21, 10), (20, 22, 1), (22, 23, 1), (23, 21, 1), (21, 12, 1)]
+)
+_RELAX_NODES = sorted({v for e in _RELAX_EDGES for v in e[:2]})
+_RELAX_SEEDS = (1, 20)
+_RELAX_ROUNDS = 4  # relax checkpoints after round 3, not after round 4
+
+# case -> (round-0 rows (*keys, node, value), step as Python, as a Spark
+# expression, as SQL over frontier f and edge e, key columns, value)
+_RELAX_CASES = {
+    "hop": (
+        [(s, 0) for s in _RELAX_SEEDS],
+        lambda v, w: v + 1, "dist + 1", "f.dist + 1", (), "dist",
+    ),
+    "weighted": (
+        [(s, 0) for s in _RELAX_SEEDS],
+        lambda v, w: v + w, "dist + w", "f.dist + e.w", (), "dist",
+    ),
+    "seeded": (
+        [(s, s, 0) for s in _RELAX_SEEDS],
+        lambda v, w: v + 1, "dist + 1", "f.dist + 1", ("seed",), "dist",
+    ),
+    "label": (
+        [(v, v) for v in _RELAX_NODES],
+        lambda v, w: v, "lbl", "f.lbl", (), "lbl",
+    ),
+}
+
+
+def _relax_replay(start, rounds, step):
+    """Python replay of relax's round: every (keys, node) row steps
+    along each out-edge; the min value per (keys, node) survives."""
+    cur = {r[:-1]: r[-1] for r in start}
+    for _ in range(rounds):
+        new = dict(cur)
+        for (*keys, node), v in cur.items():
+            for src, dst, w in _RELAX_EDGES:
+                if src == node:
+                    k = (*keys, dst)
+                    new[k] = min(new.get(k, step(v, w)), step(v, w))
+        cur = new
+    return sorted((*k, v) for k, v in cur.items())
+
+
+@pytest.mark.parametrize("case", list(_RELAX_CASES))
+def test_relax_equals_sql_twin(spark, case):
+    """graph.relax and graph.relax_ctes agree row for row on a small
+    graph with a path, a cycle, a weighted diamond and a sink, and both
+    equal a Python replay of the same rounds."""
+    import duckdb
+
+    from insight_patents_spark.operators.graph import relax, relax_ctes
+
+    start, py_step, step, sql_step, keys, value = _RELAX_CASES[case]
+    cols = [*keys, "node", value]
+    schema = ", ".join(f"{c} long" for c in cols)
+    edges = spark.createDataFrame(_RELAX_EDGES, "src long, dst long, w long")
+    frontier = spark.createDataFrame(start, schema)
+    got = sorted(
+        tuple(r) for r in relax(frontier, edges, _RELAX_ROUNDS, F.expr(step))
+        .select(*cols)
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE edges AS SELECT * FROM (VALUES "
+        + ", ".join(map(str, _RELAX_EDGES))
+        + ") t(src, dst, w)"
+    )
+    sql = (
+        "WITH x0 AS (SELECT * FROM (VALUES "
+        + ", ".join(map(str, start))
+        + f") t({', '.join(cols)}))"
+        + relax_ctes("x", _RELAX_ROUNDS, sql_step, keys, value=value)
+        + f" SELECT {', '.join(cols)} FROM x{_RELAX_ROUNDS}"
+    )
+    want = sorted(con.execute(sql).fetchall())
+    con.close()
+    assert got == want
+    assert got == _relax_replay(start, _RELAX_ROUNDS, py_step)
 
 
 def test_graph_build_and_degree_match_bruteforce(spark, sf_dir):

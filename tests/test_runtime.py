@@ -154,19 +154,20 @@ def _keep_even(sf: str, table: str, col: str) -> None:
     pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t[col], 1), 0)), path)
 
 
-def test_lsh_index_follows_rewritten_embeddings(spark, sf_dir, tmp_path):
-    # The persisted LSH tables are keyed by the embeddings stamp: after an
-    # in-place rewrite the query must answer for the new file, not serve
-    # the index built from the old one.
+@pytest.mark.parametrize("name", ["vec_ann_lsh", "vec_pca_project", "vec_pca_top2"])
+def test_lsh_index_follows_rewritten_embeddings(spark, sf_dir, tmp_path, name):
+    # The persisted LSH tables and PCA centered/deflated tables are keyed
+    # by the embeddings stamp: after an in-place rewrite the query must
+    # answer for the new file, not serve the table built from the old one.
     sf = _writable_sf0001(sf_dir, tmp_path)
-    spec = registry.load_all()["vec_ann_lsh"]
+    spec = registry.load_all()[name]
     spec.fn(spark, sf).toPandas()
     _keep_even(sf, "embeddings", "vec_id")
     got = spec.fn(spark, sf).toPandas()
     con = duck_connect(sf)
     want = con.execute(spec.oracle).df()
     con.close()
-    problems = compare("vec_ann_lsh", got, want)
+    problems = compare(name, got, want)
     assert not problems, "; ".join(problems)
 
 
