@@ -1,6 +1,6 @@
 """The determinism contract's shared definitions (SURVEY §5).
 
-Spark and the DuckDB oracle must agree, byte for byte, on four things;
+Spark and the DuckDB oracle must agree, byte for byte, on five things;
 each is defined here once and every engine kernel imports it.
 
 **Hash → integer.** ``hex_int(digest, width, start)`` reads ``width`` hex
@@ -26,9 +26,25 @@ through exact decimal arithmetic instead:
 Both engines then produce bit-identical doubles. Averages reuse the exact
 sum divided by COUNT (double/bigint IEEE division is deterministic).
 
-Order-statistic and merge-based aggregates (stddev/corr/percentile) stay
-double but are computed over small-magnitude columns and rounded (see
-individual queries).
+Only ``agg_stats`` keeps Spark's merge-based double aggregates
+(stddev/var/corr/covar); it computes them over small-magnitude columns and
+rounds them to 6 decimals. Every other covariance, correlation and slope
+is built from exact moments (below).
+
+**Moments.** Covariance, Pearson r and the OLS slope all rest on the
+co-moment ``n·Σab − Σa·Σb``. ``moment_sums(cols, wide)`` is the ONE
+mergeable hash aggregate of exact integer moments: ``n``, ``s_<a>`` per
+column and ``s_<a>_<b>`` per pair (names in sorted order, so ``s_x_y``
+serves both (x, y) and (y, x)), summed in bigint, or in ``decimal(38,0)``
+(HUGEINT in the oracle) when ``wide``, for sites whose cross products pass
+2^63. ``comoment(a, b)`` forms the co-moment from those columns exactly,
+BEFORE any cast to double; ``cov_samp``, ``ols_slope`` and ``pearson`` are
+the three fixed-order double compositions of it. Each has a ``*_sql``
+twin. Casting first, ``double(n·Σab) − double(Σa·Σb)``, would cancel
+catastrophically whenever the sums are large and the spread is small.
+Sites whose sums are not plain moment sums (window frames, nano-quantized
+or ordered float folds, weighted counts) name their columns the same way
+and call ``comoment`` and the compositions on them.
 
 **Rounding.** DuckDB rounds a DOUBLE to ``k`` decimals as
 ``std::round(x * 10^k) / 10^k``. Spark's ``round(x, k)`` instead rounds
@@ -51,6 +67,7 @@ engine value comes near.)
 from __future__ import annotations
 
 import decimal
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -128,3 +145,108 @@ def sql_dsum(expr: str) -> str:
 
 def sql_davg(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(22,6))) AS DOUBLE) / COUNT({expr})"
+
+
+def _named(cols: Mapping[str, Column | str] | Sequence[str]) -> dict:
+    """``{name: expression}`` of a moment column list: a bare name is its
+    own expression."""
+    return dict(cols) if isinstance(cols, Mapping) else {c: c for c in cols}
+
+
+def _cross(a: str, b: str) -> str:
+    """Name of the cross-moment column of ``a`` and ``b``: ``s_<a>_<b>``
+    with the names in sorted order."""
+    return f"s_{a}_{b}" if a <= b else f"s_{b}_{a}"
+
+
+def moment_sums(
+    cols: Mapping[str, Column | str] | Sequence[str], wide: bool = False
+) -> list[Column]:
+    """Aggregate columns ``n``, ``s_<a>`` for each column ``a`` and
+    ``s_<a>_<b>`` for each pair a <= b, exact integer sums of the integral
+    columns ``cols`` (names, or ``{name: column}``): bigint, or
+    ``decimal(38,0)`` when ``wide``. Twin: ``moment_sums_sql``."""
+    acc = "decimal(38,0)" if wide else "bigint"
+    named = [
+        (a, F.col(c) if isinstance(c, str) else c) for a, c in _named(cols).items()
+    ]
+    return (
+        [F.count(F.lit(1)).alias("n")]
+        + [F.sum(c.cast(acc)).alias(f"s_{a}") for a, c in named]
+        + [
+            F.sum(ca.cast(acc) * cb).alias(_cross(a, b))
+            for i, (a, ca) in enumerate(named)
+            for b, cb in named[i:]
+        ]
+    )
+
+
+def moment_sums_sql(
+    cols: Mapping[str, str] | Sequence[str], wide: bool = False
+) -> str:
+    """DuckDB twin of ``moment_sums``: a select list for a GROUP BY."""
+    acc = "HUGEINT" if wide else "BIGINT"
+    named = list(_named(cols).items())
+    return ",\n           ".join(
+        ["CAST(COUNT(*) AS BIGINT) AS n"]
+        + [f"CAST(SUM(CAST({e} AS {acc})) AS {acc}) AS s_{a}" for a, e in named]
+        + [
+            f"CAST(SUM(CAST({ea} AS {acc}) * ({eb})) AS {acc}) AS {_cross(a, b)}"
+            for i, (a, ea) in enumerate(named)
+            for b, eb in named[i:]
+        ]
+    )
+
+
+def comoment(a: str, b: str, n: str = "n") -> Column:
+    """``n·s_a_b − s_a·s_b``, exact in the moments' own type (never cast
+    here). ``n`` names the count column. Twin: ``comoment_sql``."""
+    return F.col(n) * F.col(_cross(a, b)) - F.col(f"s_{a}") * F.col(f"s_{b}")
+
+
+def comoment_sql(a: str, b: str, n: str = "n") -> str:
+    return f"({n} * {_cross(a, b)} - s_{a} * s_{b})"
+
+
+def cov_samp(a: str, b: str) -> Column:
+    """Sample covariance ``double(comoment) / (double(n)·(n − 1))``."""
+    n = F.col("n")
+    return comoment(a, b).cast("double") / (n.cast("double") * (n - 1))
+
+
+def cov_samp_sql(a: str, b: str) -> str:
+    return f"(CAST({comoment_sql(a, b)} AS DOUBLE) / (CAST(n AS DOUBLE) * (n - 1)))"
+
+
+def ols_slope(x: str, y: str) -> Column:
+    """OLS slope of ``y`` on ``x``: ``double(comoment(x, y)) /
+    double(comoment(x, x))``."""
+    return comoment(x, y).cast("double") / comoment(x, x).cast("double")
+
+
+def ols_slope_sql(x: str, y: str) -> str:
+    return (
+        f"(CAST({comoment_sql(x, y)} AS DOUBLE)"
+        f" / CAST({comoment_sql(x, x)} AS DOUBLE))"
+    )
+
+
+def pearson(x: str, y: str) -> Column:
+    """Pearson r, ``comoment(x, y) / sqrt(double(cm_xx)·double(cm_yy))``,
+    or 0.0 when either variance is 0."""
+    vx, vy = comoment(x, x), comoment(y, y)
+    return F.when(
+        (vx > 0) & (vy > 0),
+        comoment(x, y).cast("double")
+        / F.sqrt(vx.cast("double") * vy.cast("double")),
+    ).otherwise(F.lit(0.0))
+
+
+def pearson_sql(x: str, y: str) -> str:
+    vx, vy = comoment_sql(x, x), comoment_sql(y, y)
+    return (
+        f"(CASE WHEN {vx} > 0 AND {vy} > 0\n"
+        f"      THEN CAST({comoment_sql(x, y)} AS DOUBLE)\n"
+        f"           / SQRT(CAST({vx} AS DOUBLE) * CAST({vy} AS DOUBLE))\n"
+        "      ELSE 0.0 END)"
+    )

@@ -16,7 +16,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import davg, dsum, hex_int, round_dp, sql_davg, sql_dsum
+from ..functions.stable import (
+    comoment,
+    comoment_sql,
+    cov_samp,
+    cov_samp_sql,
+    davg,
+    dsum,
+    hex_int,
+    moment_sums,
+    moment_sums_sql,
+    ols_slope,
+    ols_slope_sql,
+    round_dp,
+    sql_davg,
+    sql_dsum,
+)
 from ..registry import query
 from ..sources.tables import load
 
@@ -1484,7 +1499,7 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every product (n·Sxy, Sx², n·Sxx) stays within int64 at sf0.1
     # scale (epoch seconds would overflow n·Sxy); the two divisions at
     # the end are the only float ops.
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT event_type,
              CAST(FLOOR(epoch(ts)) AS BIGINT) AS xs,
@@ -1494,15 +1509,13 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type, (xs - MIN(xs) OVER (PARTITION BY event_type)) // 60 AS x, y
       FROM e),
     m AS (
-      SELECT event_type, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-             SUM(x*x) AS sxx, SUM(x*y) AS sxy
+      SELECT event_type, {moment_sums_sql(["x", "y"])}
       FROM b GROUP BY event_type)
     SELECT event_type, CAST(n AS BIGINT) AS n,
-           round(CAST(n*sxy - sx*sy AS DOUBLE)
-                 / CAST(n*sxx - sx*sx AS DOUBLE) / 100.0, 9) AS slope_per_min,
-           round((CAST(sy AS DOUBLE) / n
-                  - (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE))
-                    * (CAST(sx AS DOUBLE) / n)) / 100.0, 9) AS intercept
+           round({ols_slope_sql("x", "y")} / 100.0, 9) AS slope_per_min,
+           round((CAST(s_y AS DOUBLE) / n
+                  - {ols_slope_sql("x", "y")} * (CAST(s_x AS DOUBLE) / n)) / 100.0, 9)
+             AS intercept
     FROM m
     """,
 )
@@ -1521,19 +1534,11 @@ def agg_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("y"),
     )
     b = e.withColumn("x", F.expr("(xs - min(xs) OVER (PARTITION BY event_type)) div 60"))
-    m = b.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    slope = num / den
+    m = b.groupBy("event_type").agg(*moment_sums(["x", "y"]))
+    slope = ols_slope("x", "y")
     intercept = (
-        F.col("sy").cast("double") / F.col("n")
-        - slope * (F.col("sx").cast("double") / F.col("n"))
+        F.col("s_y").cast("double") / F.col("n")
+        - slope * (F.col("s_x").cast("double") / F.col("n"))
     )
     return m.select(
         "event_type",
@@ -3091,15 +3096,12 @@ def _treated() -> F.Column:
              CAST(round(value * 100, 0) AS BIGINT) AS c
       FROM events),
     cells AS (
-      SELECT event_type, treated, post,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(c) AS HUGEINT) AS s,
-             CAST(SUM(CAST(c AS HUGEINT) * c) AS HUGEINT) AS sxx
+      SELECT event_type, treated, post, {moment_sums_sql(["c"], wide=True)}
       FROM e GROUP BY 1, 2, 3),
     m AS (
       SELECT event_type, treated, post, n,
-             ROUND(CAST(s AS DOUBLE) / (100.0 * n), 9) AS mean_v,
-             CAST(n * sxx - s * s AS DOUBLE)
+             ROUND(CAST(s_c AS DOUBLE) / (100.0 * n), 9) AS mean_v,
+             CAST({comoment_sql("c", "c")} AS DOUBLE)
                / (CAST(n AS DOUBLE) * (n - 1) * n) AS vn
       FROM cells),
     p AS (
@@ -3150,22 +3152,19 @@ def agg_causal_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("post"),
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("c"),
     )
-    cd = F.col("c").cast("decimal(38,0)")
     cells = e.groupBy("event_type", "treated", "post").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(cd).alias("s"),
-        F.sum(cd * F.col("c")).alias("sxx"),
+        *moment_sums(["c"], wide=True)
     )
     m = cells.select(
         "event_type",
         "treated",
         "post",
         "n",
-        round_dp(F.col("s").cast("double") / (100.0 * F.col("n"))).alias(
+        round_dp(F.col("s_c").cast("double") / (100.0 * F.col("n"))).alias(
             "mean_v"
         ),
         (
-            (F.col("n") * F.col("sxx") - F.col("s") * F.col("s")).cast("double")
+            comoment("c", "c").cast("double")
             / (F.col("n").cast("double") * (F.col("n") - 1) * F.col("n"))
         ).alias("vn"),
     )
@@ -3220,38 +3219,22 @@ def agg_causal_did(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS BIGINT) AS y
       FROM events WHERE event_type = 'purchase'
       GROUP BY user_id),
-    g AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-             CAST(SUM(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-      FROM u),
+    g AS (SELECT {moment_sums_sql(["x", "y"], wide=True)} FROM u),
     th AS (
       SELECT n AS n_all,
-             CAST(n * sxy - sx * sy AS DOUBLE)
-               / CAST(n * sxx - sx * sx AS DOUBLE) AS theta,
-             CAST(sx AS DOUBLE) / n AS mx_all
+             {ols_slope_sql("x", "y")} AS theta,
+             CAST(s_x AS DOUBLE) / n AS mx_all
       FROM g),
     gg AS (
-      SELECT treated,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-             CAST(SUM(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
+      SELECT treated, {moment_sums_sql(["x", "y"], wide=True)}
       FROM u GROUP BY treated),
     v AS (
       SELECT treated, n,
-             CAST(sy AS DOUBLE) / n AS my,
-             CAST(sx AS DOUBLE) / n AS mx,
-             CAST(n * syy - sy * sy AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS vy,
-             CAST(n * sxx - sx * sx AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS vx,
-             CAST(n * sxy - sx * sy AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS cxy
+             CAST(s_y AS DOUBLE) / n AS my,
+             CAST(s_x AS DOUBLE) / n AS mx,
+             {cov_samp_sql("y", "y")} AS vy,
+             {cov_samp_sql("x", "x")} AS vx,
+             {cov_samp_sql("x", "y")} AS cxy
       FROM gg)
     SELECT v.treated,
            v.n AS n_users,
@@ -3299,50 +3282,20 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y"),
     ).select(_treated(), "x", "y")
-    xd = F.col("x").cast("decimal(38,0)")
-    yd = F.col("y").cast("decimal(38,0)")
-    g = u.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * F.col("x")).alias("sxx"),
-        F.sum(xd * F.col("y")).alias("sxy"),
-    )
+    g = u.agg(*moment_sums(["x", "y"], wide=True))
     th = g.select(
-        (
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-                "double"
-            )
-        ).alias("theta"),
-        (F.col("sx").cast("double") / F.col("n")).alias("mx_all"),
+        ols_slope("x", "y").alias("theta"),
+        (F.col("s_x").cast("double") / F.col("n")).alias("mx_all"),
     )
-    gg = u.groupBy("treated").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * F.col("x")).alias("sxx"),
-        F.sum(yd * F.col("y")).alias("syy"),
-        F.sum(xd * F.col("y")).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
+    gg = u.groupBy("treated").agg(*moment_sums(["x", "y"], wide=True))
     v = gg.select(
         "treated",
         "n",
-        (F.col("sy").cast("double") / F.col("n")).alias("my"),
-        (F.col("sx").cast("double") / F.col("n")).alias("mx"),
-        (
-            (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("vy"),
-        (
-            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("vx"),
-        (
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("cxy"),
+        (F.col("s_y").cast("double") / F.col("n")).alias("my"),
+        (F.col("s_x").cast("double") / F.col("n")).alias("mx"),
+        cov_samp("y", "y").alias("vy"),
+        cov_samp("x", "x").alias("vx"),
+        cov_samp("x", "y").alias("cxy"),
     )
     vc = (
         F.col("vy")
@@ -3387,16 +3340,12 @@ _POWER_REL_MDE = 0.01  # target relative effect for the sample-size column
       SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS c
       FROM events),
     g AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(c AS HUGEINT)) AS HUGEINT) AS s,
-             CAST(SUM(CAST(c AS HUGEINT) * c) AS HUGEINT) AS sxx
+      SELECT event_type, {moment_sums_sql(["c"], wide=True)}
       FROM e GROUP BY event_type),
     v AS (
       SELECT event_type, n,
-             CAST(s AS DOUBLE) / n AS mean_c,
-             CAST(n * sxx - s * s AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS var_c
+             CAST(s_c AS DOUBLE) / n AS mean_c,
+             {cov_samp_sql("c", "c")} AS var_c
       FROM g)
     SELECT event_type, n AS n_events,
            CAST(ROUND(mean_c / 100.0, 9) AS DOUBLE) AS mean_value,
@@ -3430,17 +3379,9 @@ def agg_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("c"),
     )
-    cd = F.col("c").cast("decimal(38,0)")
-    g = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(cd).alias("s"),
-        F.sum(cd * F.col("c")).alias("sxx"),
-    )
-    mean_c = F.col("s").cast("double") / F.col("n")
-    var_c = (
-        (F.col("n") * F.col("sxx") - F.col("s") * F.col("s")).cast("double")
-        / (F.col("n").cast("double") * (F.col("n") - 1))
-    )
+    g = e.groupBy("event_type").agg(*moment_sums(["c"], wide=True))
+    mean_c = F.col("s_c").cast("double") / F.col("n")
+    var_c = cov_samp("c", "c")
     v = g.select(
         "event_type",
         F.col("n").alias("n_events"),
@@ -3485,7 +3426,7 @@ def agg_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nano-quantized int64 -> decimal/HUGEINT sum (order-independent);
     # beta and r2 are fixed-order compositions of those exact integers
     # with single divisions, 9dp.
-    oracle="""
+    oracle=f"""
     WITH li AS (
       SELECT p.p_brand AS brand,
              ROUND(LN(CAST(round(l.l_extendedprice * 100, 0) AS BIGINT)
@@ -3505,21 +3446,16 @@ def agg_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM li),
     g AS (
       SELECT brand, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(qa AS HUGEINT)) AS HUGEINT) AS sa,
-             CAST(SUM(CAST(qb AS HUGEINT)) AS HUGEINT) AS sb,
-             CAST(SUM(CAST(qab AS HUGEINT)) AS HUGEINT) AS sab,
-             CAST(SUM(CAST(qaa AS HUGEINT)) AS HUGEINT) AS saa,
-             CAST(SUM(CAST(qbb AS HUGEINT)) AS HUGEINT) AS sbb
+             CAST(SUM(CAST(qa AS HUGEINT)) AS HUGEINT) AS s_a,
+             CAST(SUM(CAST(qb AS HUGEINT)) AS HUGEINT) AS s_b,
+             CAST(SUM(CAST(qab AS HUGEINT)) AS HUGEINT) AS s_a_b,
+             CAST(SUM(CAST(qaa AS HUGEINT)) AS HUGEINT) AS s_a_a,
+             CAST(SUM(CAST(qbb AS HUGEINT)) AS HUGEINT) AS s_b_b
       FROM q GROUP BY brand)
     SELECT brand, n AS n_lines,
-           CAST(ROUND(CAST(n * sab - sa * sb AS DOUBLE)
-                      / CAST(n * saa - sa * sa AS DOUBLE), 9) AS DOUBLE)
-             AS elasticity,
-           CAST(ROUND((CAST(n * sab - sa * sb AS DOUBLE)
-                       / CAST(n * saa - sa * sa AS DOUBLE))
-                      * (CAST(n * sab - sa * sb AS DOUBLE)
-                         / CAST(n * sbb - sb * sb AS DOUBLE)), 9) AS DOUBLE)
-             AS r_squared
+           CAST(ROUND({ols_slope_sql("a", "b")}, 9) AS DOUBLE) AS elasticity,
+           CAST(ROUND({ols_slope_sql("a", "b")} * {ols_slope_sql("b", "a")}, 9)
+                AS DOUBLE) AS r_squared
     FROM g
     """,
 )
@@ -3567,20 +3503,17 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = j.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(nano(F.col("a"))).alias("sa"),
-        F.sum(nano(F.col("b"))).alias("sb"),
-        F.sum(nano(F.col("a") * F.col("b"))).alias("sab"),
-        F.sum(nano(F.col("a") * F.col("a"))).alias("saa"),
-        F.sum(nano(F.col("b") * F.col("b"))).alias("sbb"),
+        F.sum(nano(F.col("a"))).alias("s_a"),
+        F.sum(nano(F.col("b"))).alias("s_b"),
+        F.sum(nano(F.col("a") * F.col("b"))).alias("s_a_b"),
+        F.sum(nano(F.col("a") * F.col("a"))).alias("s_a_a"),
+        F.sum(nano(F.col("b") * F.col("b"))).alias("s_b_b"),
     )
-    num = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")).cast("double")
-    dena = (F.col("n") * F.col("saa") - F.col("sa") * F.col("sa")).cast("double")
-    denb = (F.col("n") * F.col("sbb") - F.col("sb") * F.col("sb")).cast("double")
     return g.select(
         "brand",
         F.col("n").alias("n_lines"),
-        round_dp(num / dena).cast("double").alias("elasticity"),
-        round_dp((num / dena) * (num / denb))
+        round_dp(ols_slope("a", "b")).cast("double").alias("elasticity"),
+        round_dp(ols_slope("a", "b") * ols_slope("b", "a"))
         .cast("double")
         .alias("r_squared"),
     )
@@ -3609,24 +3542,15 @@ _Z975 = 1.959963985  # z_{0.975}, pre-rounded 9dp literal
                AS BIGINT) AS y
       FROM events GROUP BY user_id),
     g AS (
-      SELECT treated,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-             CAST(SUM(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
+      SELECT treated, {moment_sums_sql(["x", "y"], wide=True)}
       FROM u WHERE 1 GROUP BY treated),
     v AS (
       SELECT treated, n,
-             CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r,
-             CAST(sy AS DOUBLE) / n AS my,
-             CAST(n * sxx - sx * sx AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS vx,
-             CAST(n * syy - sy * sy AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS vy,
-             CAST(n * sxy - sx * sy AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS cxy
+             CAST(s_x AS DOUBLE) / CAST(s_y AS DOUBLE) AS r,
+             CAST(s_y AS DOUBLE) / n AS my,
+             {cov_samp_sql("x", "x")} AS vx,
+             {cov_samp_sql("y", "y")} AS vy,
+             {cov_samp_sql("x", "y")} AS cxy
       FROM g),
     se AS (
       SELECT treated, n, r, my,
@@ -3671,34 +3595,15 @@ def agg_delta_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y"),
     ).select(_treated(), "x", "y")
-    xd = F.col("x").cast("decimal(38,0)")
-    yd = F.col("y").cast("decimal(38,0)")
-    g = u.groupBy("treated").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * F.col("x")).alias("sxx"),
-        F.sum(yd * F.col("y")).alias("syy"),
-        F.sum(xd * F.col("y")).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
+    g = u.groupBy("treated").agg(*moment_sums(["x", "y"], wide=True))
     v = g.select(
         "treated",
         "n",
-        (F.col("sx").cast("double") / F.col("sy").cast("double")).alias("r"),
-        (F.col("sy").cast("double") / F.col("n")).alias("my"),
-        (
-            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("vx"),
-        (
-            (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("vy"),
-        (
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / (nd * (F.col("n") - 1))
-        ).alias("cxy"),
+        (F.col("s_x").cast("double") / F.col("s_y").cast("double")).alias("r"),
+        (F.col("s_y").cast("double") / F.col("n")).alias("my"),
+        cov_samp("x", "x").alias("vx"),
+        cov_samp("y", "y").alias("vy"),
+        cov_samp("x", "y").alias("cxy"),
     )
     s = F.sqrt(
         (
@@ -3858,33 +3763,24 @@ _COV_VARS = (
 )
 
 
+def _cov_pairs() -> list[tuple[str, str]]:
+    """The matrix's 10 cells (a, b), a at or before b in ``_COV_VARS``."""
+    names = [nm for nm, _ in _COV_VARS]
+    return [(a, b) for i, a in enumerate(names) for b in names[i:]]
+
+
 def _cov_oracle() -> str:
-    sums = ", ".join(
-        f"CAST(SUM(CAST({e} AS HUGEINT)) AS HUGEINT) AS s_{n}"
-        for n, e in _COV_VARS
-    )
-    crosses = ", ".join(
-        f"CAST(SUM(CAST({ea} AS HUGEINT) * ({eb})) AS HUGEINT) AS s_{na}_{nb}"
-        for i, (na, ea) in enumerate(_COV_VARS)
-        for nb, eb in _COV_VARS[i:]
-    )
     pair_rows = "\n    UNION ALL\n    ".join(
-        f"""SELECT '{na}' AS var_a, '{nb}' AS var_b,
-           ROUND(CAST(n * s_{na}_{nb} - s_{na} * s_{nb} AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * (n - 1)), 4) AS cov,
-           ROUND((CAST(n * s_{na}_{nb} - s_{na} * s_{nb} AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * (n - 1)))
-                 / SQRT((CAST(n * s_{na}_{na} - s_{na} * s_{na} AS DOUBLE)
-                         / (CAST(n AS DOUBLE) * (n - 1)))
-                        * (CAST(n * s_{nb}_{nb} - s_{nb} * s_{nb} AS DOUBLE)
-                           / (CAST(n AS DOUBLE) * (n - 1)))), 9) AS corr
+        f"""SELECT '{a}' AS var_a, '{b}' AS var_b,
+           ROUND({cov_samp_sql(a, b)}, 4) AS cov,
+           ROUND({cov_samp_sql(a, b)}
+                 / SQRT({cov_samp_sql(a, a)} * {cov_samp_sql(b, b)}), 9) AS corr
     FROM g"""
-        for i, (na, _) in enumerate(_COV_VARS)
-        for nb, _2 in _COV_VARS[i:]
+        for a, b in _cov_pairs()
     )
     return f"""
     WITH g AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n, {sums}, {crosses}
+      SELECT {moment_sums_sql(dict(_COV_VARS), wide=True)}
       FROM lineitem)
     SELECT var_a, var_b, CAST(cov AS DOUBLE) AS cov,
            CAST(corr AS DOUBLE) AS corr
@@ -3908,43 +3804,24 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     large mixed units; corr 9dp, dimensionless). Scale shape: one
     map-side-combinable agg; the matrix itself is 10 rows."""
     li = load(spark, sf_dir, "lineitem")
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for nm, ex in _COV_VARS:
-        aggs.append(
-            F.sum(F.expr(ex).cast("decimal(38,0)")).alias(f"s_{nm}")
-        )
-    for i, (na, ea) in enumerate(_COV_VARS):
-        for nb, eb in _COV_VARS[i:]:
-            aggs.append(
-                F.sum(
-                    F.expr(ea).cast("decimal(38,0)") * F.expr(eb)
-                ).alias(f"s_{na}_{nb}")
-            )
     # materialize the ONE moment row: the 10-cell union below selects
     # from g ten times, and without this the full lineitem moment agg
     # re-ran once per cell (10 scans; guide §1.2 — don't compute
     # things twice). The checkpoint is a 1-row frame.
-    g = li.agg(*aggs).localCheckpoint()
-    nd = F.col("n").cast("double")
-
-    def cov(a, b):
-        return (
-            F.col("n") * F.col(f"s_{a}_{b}") - F.col(f"s_{a}") * F.col(f"s_{b}")
-        ).cast("double") / (nd * (F.col("n") - 1))
-
-    parts = []
-    for i, (na, _) in enumerate(_COV_VARS):
-        for nb, _2 in _COV_VARS[i:]:
-            parts.append(
-                g.select(
-                    F.lit(na).alias("var_a"),
-                    F.lit(nb).alias("var_b"),
-                    round_dp(cov(na, nb), 4).cast("double").alias("cov"),
-                    round_dp(cov(na, nb) / F.sqrt(cov(na, na) * cov(nb, nb)))
-                    .cast("double")
-                    .alias("corr"),
-                )
-            )
+    g = li.agg(
+        *moment_sums({nm: F.expr(ex) for nm, ex in _COV_VARS}, wide=True)
+    ).localCheckpoint()
+    parts = [
+        g.select(
+            F.lit(a).alias("var_a"),
+            F.lit(b).alias("var_b"),
+            round_dp(cov_samp(a, b), 4).cast("double").alias("cov"),
+            round_dp(cov_samp(a, b) / F.sqrt(cov_samp(a, a) * cov_samp(b, b)))
+            .cast("double")
+            .alias("corr"),
+        )
+        for a, b in _cov_pairs()
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

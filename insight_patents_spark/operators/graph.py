@@ -44,7 +44,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import hex_int, round_dp
+from ..functions.stable import (
+    hex_int,
+    moment_sums,
+    moment_sums_sql,
+    pearson,
+    pearson_sql,
+    round_dp,
+)
 from ..registry import query
 from ..runtime import checkpoint, shared
 from ..session import conf_scope
@@ -1809,26 +1816,16 @@ def graph_diameter_2sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int64; all five moments are exact int64 sums over edges; r is one
     # double expression of the exact moments, sqrt rounded 9dp.
     oracle=_EDGES_CTE
-    + """
+    + f"""
     , deg AS (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY src),
     de AS (
       SELECT da.d AS x, db.d AS y
       FROM edges e
       JOIN deg da ON e.src = da.node
       JOIN deg db ON e.dst = db.node),
-    m AS (
-      SELECT COUNT(*) AS n,
-             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-             CAST(SUM(x * y) AS BIGINT) AS sxy,
-             CAST(SUM(x * x) AS BIGINT) AS sxx,
-             CAST(SUM(y * y) AS BIGINT) AS syy
-      FROM de)
+    m AS (SELECT {moment_sums_sql(["x", "y"])} FROM de)
     SELECT CAST(n AS BIGINT) AS n_edges,
-           CAST(CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-                THEN ROUND((n * sxy - sx * sy) /
-                     SQRT(CAST(n * sxx - sx * sx AS DOUBLE) *
-                          CAST(n * syy - sy * sy AS DOUBLE)), 9)
-                ELSE 0.0 END AS DOUBLE) AS assortativity
+           CAST(ROUND({pearson_sql("x", "y")}, 9) AS DOUBLE) AS assortativity
     FROM m
     """,
 )
@@ -1860,26 +1857,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("x", "y")
     )
-    m = de.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    r = round_dp(
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / F.sqrt(vx.cast("double") * vy.cast("double")),
-    )
+    m = de.agg(*moment_sums(["x", "y"]))
     return m.select(
         F.col("n").cast("bigint").alias("n_edges"),
-        F.when((vx > 0) & (vy > 0), r)
-        .otherwise(F.lit(0.0))
-        .cast("double")
-        .alias("assortativity"),
+        round_dp(pearson("x", "y")).cast("double").alias("assortativity"),
     )
 
 

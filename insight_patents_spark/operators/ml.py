@@ -20,7 +20,10 @@ over the full corpus, not in a training framework):
 Each of the two scores — the hashed-LR classifier (``_lr_docs``) and
 the TTR bin (``_ttr_docs``) — is defined once per engine below: a Spark
 builder over a ``documents`` frame with its DuckDB CTE twin beside it.
-Every query and oracle here that scores documents calls these.
+Every query and oracle here that scores documents calls these. The
+descending cumulative TTR-bin grid that the threshold sweeps read
+(ml_pr_curve, ml_lift_gains, ml_average_precision, ml_threshold_opt) is
+one builder too, ``_ttr_cum`` with its twin ``_ttr_cum_cte``.
 
 Determinism: logits are exact int64 weight-dot-products divided once;
 sigmoid/F1 are single transcendental/divisions of bit-identical inputs,
@@ -33,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import hex_int, round_dp, tokens
+from ..functions.stable import comoment, comoment_sql, hex_int, round_dp, tokens
 from ..registry import query
 from ..sources.tables import load
 
@@ -172,6 +175,56 @@ def _ttr_docs_cte(by_source: bool = False) -> str:
       GROUP BY d.doc_id)"""
 
 
+def _ttr_cum(per_doc: DataFrame) -> DataFrame:
+    """Cumulative TTR-bin grid, by descending bin: ``(bin, n, pos, neg,
+    cum_n, tp, fp, tot_n, p)``. Per bin: its documents n, positives pos
+    and negatives neg; cum_n, tp and fp are the same counts over every
+    bin >= this one; tot_n and p are the corpus totals. The corpus
+    collapses to the <=101-row cell grid first, and the windows see only
+    that grid. Twin: ``_ttr_cum_cte``."""
+    cells = per_doc.groupBy("bin").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
+        F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
+    )
+    w_cum = Window.orderBy(F.col("bin").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_all = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return cells.select(
+        "bin",
+        "n",
+        "pos",
+        "neg",
+        F.sum("n").over(w_cum).alias("cum_n"),
+        F.sum("pos").over(w_cum).alias("tp"),
+        F.sum("neg").over(w_cum).alias("fp"),
+        F.sum("n").over(w_all).alias("tot_n"),
+        F.sum("pos").over(w_all).alias("p"),
+    )
+
+
+def _ttr_cum_cte() -> str:
+    """SQL twin of ``_ttr_cum``: ``per_doc``, ``cells`` and the ``cum``
+    CTE."""
+    return _ttr_docs_cte() + """,
+    cells AS (
+      SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
+             CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS neg
+      FROM per_doc GROUP BY bin),
+    cum AS (
+      SELECT bin, n, pos, neg,
+             SUM(n) OVER (ORDER BY bin DESC) AS cum_n,
+             SUM(pos) OVER (ORDER BY bin DESC) AS tp,
+             SUM(neg) OVER (ORDER BY bin DESC) AS fp,
+             SUM(n) OVER () AS tot_n,
+             SUM(pos) OVER () AS p
+      FROM cells)"""
+
+
 @query(
     "ml_lr_inference",
     # Logistic scoring over hashed features. Weights derive from md5 of
@@ -221,19 +274,8 @@ def ml_lr_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold bin t are DESCENDING cumulative window sums over the
     # occupied-bin grid; precision/recall/F1 are single divisions of
     # exact ints, rounded 9dp.
-    oracle=_ttr_docs_cte()
-    + """,
-    cells AS (
-      SELECT bin,
-             CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-             CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS neg
-      FROM per_doc GROUP BY bin),
-    cum AS (
-      SELECT bin,
-             SUM(pos) OVER (ORDER BY bin DESC) AS tp,
-             SUM(neg) OVER (ORDER BY bin DESC) AS fp,
-             SUM(pos) OVER () AS p
-      FROM cells)
+    oracle=_ttr_cum_cte()
+    + """
     SELECT CAST(bin AS BIGINT) AS threshold_bin,
            CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
            CAST(ROUND(tp * 1.0 / (tp + fp), 9) AS DOUBLE) AS precision_at,
@@ -256,23 +298,7 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10⁹-row corpus cannot do; Spark ML bins for the same reason).
     Swapping the score for a real model column changes nothing
     downstream."""
-    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
-    cells = per_doc.groupBy("bin").agg(
-        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
-        F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
-    )
-    w_cum = Window.orderBy(F.col("bin").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cells.select(
-        "bin",
-        F.sum("pos").over(w_cum).alias("tp"),
-        F.sum("neg").over(w_cum).alias("fp"),
-        F.sum("pos").over(w_all).alias("p"),
-    )
+    cum = _ttr_cum(_ttr_docs(load(spark, sf_dir, "documents")))
     return cum.select(
         F.col("bin").cast("bigint").alias("threshold_bin"),
         F.col("tp").cast("bigint").alias("tp"),
@@ -553,25 +579,14 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # captures 45% of positives, lift 2.2x"). Same integer-bin
     # histogram as ml_pr_curve; depth/gain/lift are single divisions of
     # exact int64 cumulative counts, rounded 9dp.
-    oracle=_ttr_docs_cte()
-    + """,
-    cells AS (
-      SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos
-      FROM per_doc GROUP BY bin),
-    cum AS (
-      SELECT bin,
-             SUM(n) OVER (ORDER BY bin DESC) AS cum_n,
-             SUM(pos) OVER (ORDER BY bin DESC) AS cum_pos,
-             SUM(n) OVER () AS tot_n,
-             SUM(pos) OVER () AS tot_pos
-      FROM cells)
+    oracle=_ttr_cum_cte()
+    + """
     SELECT CAST(bin AS BIGINT) AS threshold_bin,
            CAST(cum_n AS BIGINT) AS cum_n,
-           CAST(cum_pos AS BIGINT) AS cum_pos,
+           CAST(tp AS BIGINT) AS cum_pos,
            CAST(ROUND(cum_n * 1.0 / tot_n, 9) AS DOUBLE) AS depth,
-           CAST(ROUND(cum_pos * 1.0 / tot_pos, 9) AS DOUBLE) AS gain,
-           CAST(ROUND(cum_pos * 1.0 * tot_n / (cum_n * tot_pos), 9)
+           CAST(ROUND(tp * 1.0 / p, 9) AS DOUBLE) AS gain,
+           CAST(ROUND(tp * 1.0 * tot_n / (cum_n * p), 9)
                 AS DOUBLE) AS lift
     FROM cum
     """,
@@ -587,37 +602,17 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell agg, cumulative windows over the bin grid only. gain·depth
     arithmetic cross-multiplies exact int64 counts (cum_pos·tot_n
     stays < 2⁶³ up to 3·10⁹ rows) — no intermediate ratios."""
-    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
-    cells = per_doc.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
-    )
-    w_cum = Window.orderBy(F.col("bin").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cells.select(
-        "bin",
-        F.sum("n").over(w_cum).alias("cum_n"),
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("n").over(w_all).alias("tot_n"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-    )
+    cum = _ttr_cum(_ttr_docs(load(spark, sf_dir, "documents")))
     return cum.select(
         F.col("bin").cast("bigint").alias("threshold_bin"),
         F.col("cum_n").cast("bigint").alias("cum_n"),
-        F.col("cum_pos").cast("bigint").alias("cum_pos"),
+        F.col("tp").cast("bigint").alias("cum_pos"),
         round_dp(F.col("cum_n") / F.col("tot_n"))
         .cast("double")
         .alias("depth"),
-        round_dp(F.col("cum_pos") / F.col("tot_pos"))
-        .cast("double")
-        .alias("gain"),
+        round_dp(F.col("tp") / F.col("p")).cast("double").alias("gain"),
         round_dp(
-            F.col("cum_pos") * F.col("tot_n")
-            / (F.col("cum_n") * F.col("tot_pos")),
+            F.col("tp") * F.col("tot_n") / (F.col("cum_n") * F.col("p")),
         )
         .cast("double")
         .alias("lift"),
@@ -866,19 +861,8 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bin, term = pos_b * tp_b / (P * (tp_b + fp_b)) — exact int64
     # numerator, ONE division, 9dp; the total nano-quantizes rounded
     # terms so the window sum is order-independent.
-    oracle=_ttr_docs_cte()
+    oracle=_ttr_cum_cte()
     + """,
-    cells AS (
-      SELECT bin,
-             CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-             CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS neg
-      FROM per_doc GROUP BY bin),
-    cum AS (
-      SELECT bin, pos,
-             SUM(pos) OVER (ORDER BY bin DESC) AS tp,
-             SUM(neg) OVER (ORDER BY bin DESC) AS fp,
-             SUM(pos) OVER () AS p
-      FROM cells),
     term AS (
       SELECT bin, tp, fp,
              CAST(ROUND(tp * 1.0 / (tp + fp), 9) AS DOUBLE) AS precision_at,
@@ -906,23 +890,9 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to ml_pr_curve — per-doc hash agg, bin-grid
     cells, cumulative windows over ≤101 rows. The corpus is never
     sorted by score."""
-    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
-    cells = per_doc.groupBy("bin").agg(
-        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
-        F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
-    )
-    w_cum = Window.orderBy(F.col("bin").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    cum = _ttr_cum(_ttr_docs(load(spark, sf_dir, "documents")))
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cells.select(
-        "bin",
-        "pos",
-        F.sum("pos").over(w_cum).alias("tp"),
-        F.sum("neg").over(w_cum).alias("fp"),
-        F.sum("pos").over(w_all).alias("p"),
     )
     term = cum.select(
         "bin",
@@ -1061,7 +1031,7 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (documented bound; beyond that the moments widen to DOUBLE). One
     # sqrt + two additions at the end, 9dp.
     oracle=_ttr_docs_cte()
-    + """,
+    + f""",
     cells AS (
       SELECT bin,
              CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS p,
@@ -1079,19 +1049,19 @@ def ml_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cells),
     m AS (
       SELECT CAST(MAX(np) AS BIGINT) AS np, CAST(MAX(nq) AS BIGINT) AS nq,
-             CAST(SUM(p * (2 * q_below + q)) AS BIGINT) AS spa,
+             CAST(SUM(p * (2 * q_below + q)) AS BIGINT) AS s_a,
              CAST(SUM(p * (2 * q_below + q) * (2 * q_below + q))
-                  AS BIGINT) AS spa2,
-             CAST(SUM(q * (2 * p_above + p)) AS BIGINT) AS sqb,
+                  AS BIGINT) AS s_a_a,
+             CAST(SUM(q * (2 * p_above + p)) AS BIGINT) AS s_b,
              CAST(SUM(q * (2 * p_above + p) * (2 * p_above + p))
-                  AS BIGINT) AS sqb2
+                  AS BIGINT) AS s_b_b
       FROM cum),
     st AS (
       SELECT np, nq,
-             ROUND(spa * 1.0 / (2 * np * nq), 9) AS auc,
-             (np * spa2 - spa * spa) * 1.0
+             ROUND(s_a * 1.0 / (2 * np * nq), 9) AS auc,
+             {comoment_sql("a", "a", n="np")} * 1.0
                / (4.0 * nq * nq * np * GREATEST(np - 1, 1)) AS v10,
-             (nq * sqb2 - sqb * sqb) * 1.0
+             {comoment_sql("b", "b", n="nq")} * 1.0
                / (4.0 * np * np * nq * GREATEST(nq - 1, 1)) AS v01
       FROM m)
     SELECT np AS n_pos, nq AS n_neg,
@@ -1145,17 +1115,17 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = cum.agg(
         F.max("np").cast("bigint").alias("np"),
         F.max("nq").cast("bigint").alias("nq"),
-        F.sum(F.col("p") * a).cast("bigint").alias("spa"),
-        F.sum(F.col("p") * a * a).cast("bigint").alias("spa2"),
-        F.sum(F.col("q") * b).cast("bigint").alias("sqb"),
-        F.sum(F.col("q") * b * b).cast("bigint").alias("sqb2"),
+        F.sum(F.col("p") * a).cast("bigint").alias("s_a"),
+        F.sum(F.col("p") * a * a).cast("bigint").alias("s_a_a"),
+        F.sum(F.col("q") * b).cast("bigint").alias("s_b"),
+        F.sum(F.col("q") * b * b).cast("bigint").alias("s_b_b"),
     )
     np_, nq = F.col("np"), F.col("nq")
-    auc = round_dp(F.col("spa") / (2 * np_ * nq))
-    v10 = (np_ * F.col("spa2") - F.col("spa") * F.col("spa")) / (
+    auc = round_dp(F.col("s_a") / (2 * np_ * nq))
+    v10 = comoment("a", "a", n="np") / (
         4.0 * nq * nq * np_ * F.greatest(np_ - 1, F.lit(1))
     )
-    v01 = (nq * F.col("sqb2") - F.col("sqb") * F.col("sqb")) / (
+    v01 = comoment("b", "b", n="nq") / (
         4.0 * np_ * np_ * nq * F.greatest(nq - 1, F.lit(1))
     )
     se = round_dp(F.sqrt(v10 / np_ + v01 / nq))
@@ -1716,25 +1686,15 @@ _FBETA_NUM_DEN = ((0.5, 1, 4), (1.0, 4, 4), (2.0, 16, 4))
     # (deterministic in both engines). The corpus is never sorted by
     # score — ml_pr_curve's binned-sweep posture, reduced to the
     # decision output.
-    oracle=_ttr_docs_cte()
+    oracle=_ttr_cum_cte()
     + f""",
-    cells AS (
-      SELECT bin,
-             CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-             CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS neg
-      FROM per_doc GROUP BY bin),
-    cum AS (
-      SELECT bin,
-             SUM(pos) OVER (ORDER BY bin DESC) AS tp,
-             SUM(neg) OVER (ORDER BY bin DESC) AS fp,
-             SUM(pos) OVER () - SUM(pos) OVER (ORDER BY bin DESC) AS fn
-      FROM cells),
+    cf AS (SELECT bin, tp, fp, p - tp AS fn FROM cum),
     scored AS (
-      SELECT b.beta, b.n4b2, cum.bin, cum.tp, cum.fp, cum.fn,
-             ROUND((4 + b.n4b2) * cum.tp * 1.0
-                   / ((4 + b.n4b2) * cum.tp + 4 * cum.fp + b.n4b2 * cum.fn),
+      SELECT b.beta, b.n4b2, cf.bin, cf.tp, cf.fp, cf.fn,
+             ROUND((4 + b.n4b2) * cf.tp * 1.0
+                   / ((4 + b.n4b2) * cf.tp + 4 * cf.fp + b.n4b2 * cf.fn),
                    9) AS fbeta
-      FROM cum CROSS JOIN (VALUES {", ".join(f"({b}, {n})" for b, n, _ in _FBETA_NUM_DEN)})
+      FROM cf CROSS JOIN (VALUES {", ".join(f"({b}, {n})" for b, n, _ in _FBETA_NUM_DEN)})
            AS b(beta, n4b2)),
     ranked AS (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY beta
@@ -1763,22 +1723,8 @@ def ml_threshold_opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one per-doc hash agg + one <=101-row cell agg +
     windows on the (3 x grid) cross — identical cost to ml_pr_curve
     regardless of corpus size."""
-    per_doc = _ttr_docs(load(spark, sf_dir, "documents"))
-    cells = per_doc.groupBy("bin").agg(
-        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("pos"),
-        F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("bigint").alias("neg"),
-    )
-    w_cum = Window.orderBy(F.col("bin").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cells.select(
-        "bin",
-        F.sum("pos").over(w_cum).alias("tp"),
-        F.sum("neg").over(w_cum).alias("fp"),
-        (F.sum("pos").over(w_all) - F.sum("pos").over(w_cum)).alias("fn"),
+    cum = _ttr_cum(_ttr_docs(load(spark, sf_dir, "documents"))).select(
+        "bin", "tp", "fp", (F.col("p") - F.col("tp")).alias("fn")
     )
     betas = spark.createDataFrame(
         [(b, n) for b, n, _ in _FBETA_NUM_DEN], "beta double, n4b2 long"

@@ -20,7 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import py_round_dp, round_dp, round_dp_sql
+from ..functions.stable import (
+    moment_sums,
+    moment_sums_sql,
+    pearson,
+    pearson_sql,
+    py_round_dp,
+    round_dp,
+    round_dp_sql,
+)
 from ..registry import query
 from ..sources.tables import load
 
@@ -728,7 +736,69 @@ def agg_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ACF_MAX_LAG = 7
+_ACF_LAGS = 7  # lags 1..7, time_acf's and time_pacf's
+
+# SQL twin of ``_acf_r``: the ``acf`` CTE (event_type, lag, n, r).
+_ACF_CTE = f"""
+    WITH grid AS (
+      SELECT event_type, CAST(ts AS DATE) AS day,
+             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events GROUP BY event_type, CAST(ts AS DATE)),
+    lags AS (SELECT unnest(range(1, {_ACF_LAGS + 1})) AS lag),
+    pairs AS (
+      SELECT a.event_type, l.lag, a.cents AS x, b.cents AS y
+      FROM grid a CROSS JOIN lags l
+      JOIN grid b ON b.event_type = a.event_type
+                 AND b.day = a.day + CAST(l.lag AS INT)),
+    m AS (
+      SELECT event_type, lag, {moment_sums_sql(["x", "y"])}
+      FROM pairs GROUP BY event_type, lag),
+    acf AS (
+      SELECT event_type, lag, n, ROUND({pearson_sql("x", "y")}, 9) AS r
+      FROM m)"""
+
+
+def _acf_r(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lag-k autocorrelation of daily revenue per event_type:
+    ``(event_type, lag, n, r)`` for k = 1..``_ACF_LAGS``, r the 9dp
+    Pearson r of (cents(day), cents(day + k)) from exact int64 moments
+    (0.0 for a flat series). The fact collapses to the (type, day) grid
+    first; lagged pairs come from the grid crossed with the broadcast
+    lag range, hash-joined back to the grid on (type, day + lag).
+    Twin: ``_ACF_CTE``."""
+    e = load(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    grid = e.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(F.sum(cents).cast("bigint").alias("cents"))
+    lagtab = spark.range(1, _ACF_LAGS + 1).select(
+        F.col("id").cast("int").alias("lag")
+    )
+    a = grid.alias("a")
+    b = grid.select(
+        F.col("event_type").alias("bt"),
+        F.col("day").alias("bday"),
+        F.col("cents").alias("y"),
+    )
+    pairs = (
+        a.crossJoin(F.broadcast(lagtab))
+        .join(
+            b,
+            (F.col("bt") == F.col("a.event_type"))
+            & (F.col("bday") == F.expr("date_add(a.day, lag)")),
+        )
+        .select(
+            F.col("a.event_type").alias("event_type"),
+            "lag",
+            F.col("a.cents").alias("x"),
+            "y",
+        )
+    )
+    m = pairs.groupBy("event_type", "lag").agg(*moment_sums(["x", "y"]))
+    return m.select(
+        "event_type", "lag", "n", round_dp(pearson("x", "y")).alias("r")
+    )
 
 
 @query(
@@ -739,32 +809,11 @@ _ACF_MAX_LAG = 7
     # on (type, day + lag); Pearson r per (type, lag) runs entirely on
     # exact int64 moment sums (n, Sx, Sy, Sxy, Sxx, Syy) with ONE
     # double expression at the end, sqrt rounded 9dp.
-    oracle=f"""
-    WITH grid AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events GROUP BY event_type, CAST(ts AS DATE)),
-    lags AS (SELECT unnest(range(1, {_ACF_MAX_LAG + 1})) AS lag),
-    pairs AS (
-      SELECT a.event_type, l.lag, a.cents AS x, b.cents AS y
-      FROM grid a CROSS JOIN lags l
-      JOIN grid b ON b.event_type = a.event_type
-                 AND b.day = a.day + CAST(l.lag AS INT)),
-    m AS (
-      SELECT event_type, lag, COUNT(*) AS n,
-             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-             CAST(SUM(x * y) AS BIGINT) AS sxy,
-             CAST(SUM(x * x) AS BIGINT) AS sxx,
-             CAST(SUM(y * y) AS BIGINT) AS syy
-      FROM pairs GROUP BY event_type, lag)
+    oracle=_ACF_CTE
+    + """
     SELECT event_type, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n,
-           CAST(CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-                THEN ROUND((n * sxy - sx * sy) /
-                     SQRT(CAST(n * sxx - sx * sx AS DOUBLE) *
-                          CAST(n * syy - sy * sy AS DOUBLE)), 9)
-                ELSE 0.0 END AS DOUBLE) AS acf
-    FROM m
+           CAST(r AS DOUBLE) AS acf
+    FROM acf
     """,
 )
 def time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -774,60 +823,18 @@ def time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combinable hash agg collapses the fact to
     the (type, day) grid (≤|types|·|days| rows — thousands at any SF);
-    every downstream op (lag explode, grid self-join on (type, day+lag),
+    every downstream op (7-row lag cross join, grid self-join on (type, day+lag),
     moment agg) runs on the grid only, so cost is agg-dominated and the
     fact shuffles exactly once. Pearson r per (type, lag) uses exact
     int64 moment sums — order-independent, no float accumulation — and
     one final double expression (sqrt rounded 9dp). Int64 headroom:
     daily-cents² · |days| must stay < 2⁶³; at larger SF rescale to whole
     currency units (same contract as win_rolling_corr)."""
-    e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    grid = (
-        e.groupBy(
-            "event_type", F.col("ts").cast("date").alias("day")
-        )
-        .agg(F.sum(cents).cast("bigint").alias("cents"))
-    )
-    lags = grid.select(
-        "event_type",
-        "day",
-        F.col("cents").alias("x"),
-        F.explode(
-            F.sequence(F.lit(1), F.lit(_ACF_MAX_LAG))
-        ).alias("lag"),
-    ).withColumn("day_y", F.date_add(F.col("day"), F.col("lag")))
-    b = grid.select(
-        F.col("event_type").alias("et_b"),
-        F.col("day").alias("day_b"),
-        F.col("cents").alias("y"),
-    )
-    pairs = lags.join(
-        b,
-        (F.col("event_type") == F.col("et_b"))
-        & (F.col("day_y") == F.col("day_b")),
-    )
-    m = pairs.groupBy("event_type", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    r = round_dp(
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / F.sqrt(vx.cast("double") * vy.cast("double")),
-    )
-    return m.select(
+    return _acf_r(spark, sf_dir).select(
         "event_type",
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").cast("bigint").alias("n"),
-        F.when((vx > 0) & (vy > 0), r).otherwise(F.lit(0.0))
-        .cast("double")
-        .alias("acf"),
+        F.col("r").cast("double").alias("acf"),
     )
 
 
@@ -2118,50 +2125,21 @@ def time_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("pri", "o_orderpriority")
 
 
-_PACF_K = 7  # matches time_acf's lag range
-
-
 def _pacf_oracle() -> str:
     # Unrolled Durbin-Levinson over the per-type acf vector r[1..7]
-    # (exact-moment Pearson, 9dp — identical to time_acf). Every phi
-    # coefficient rounds 9dp per step in BOTH engines, and every inner
-    # sum is an ascending-j left-to-right fold, so the recursions track
-    # each other step for step.
-    sql = f"""
-    WITH grid AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS cents
-      FROM events GROUP BY event_type, CAST(ts AS DATE)),
-    lags AS (SELECT unnest(range(1, {_PACF_K + 1})) AS lag),
-    pairs AS (
-      SELECT a.event_type, l.lag, a.cents AS x, b.cents AS y
-      FROM grid a CROSS JOIN lags l
-      JOIN grid b ON b.event_type = a.event_type
-                 AND b.day = a.day + CAST(l.lag AS INT)),
-    m AS (
-      SELECT event_type, lag, COUNT(*) AS n,
-             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-             CAST(SUM(x * y) AS BIGINT) AS sxy,
-             CAST(SUM(x * x) AS BIGINT) AS sxx,
-             CAST(SUM(y * y) AS BIGINT) AS syy
-      FROM pairs GROUP BY event_type, lag),
-    acf AS (
-      SELECT event_type, lag,
-             CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-             THEN ROUND((n * sxy - sx * sy) /
-                  SQRT(CAST(n * sxx - sx * sx AS DOUBLE) *
-                       CAST(n * syy - sy * sy AS DOUBLE)), 9)
-             ELSE 0.0 END AS r
-      FROM m),
+    # (``_ACF_CTE``, time_acf's own r). Every phi coefficient rounds 9dp
+    # per step in BOTH engines, and every inner sum is an ascending-j
+    # left-to-right fold, so the recursions track each other step for
+    # step.
+    sql = _ACF_CTE + f""",
     rv AS (
       SELECT event_type,
              list_transform(list_sort(list({{'l': lag, 'r': r}})),
                             s -> s.r) AS r
       FROM acf GROUP BY event_type
-      HAVING COUNT(*) = {_PACF_K}),
+      HAVING COUNT(*) = {_ACF_LAGS}),
     p1 AS (SELECT event_type, r, [ROUND(r[1], 9)] AS phi FROM rv)"""
-    for k in range(2, _PACF_K + 1):
+    for k in range(2, _ACF_LAGS + 1):
         sql += f"""
     , p{k} AS (
       SELECT event_type, r,
@@ -2179,11 +2157,11 @@ def _pacf_oracle() -> str:
                      i -> phi[CAST(i AS INT)] * r[CAST(i AS INT)]))), 9)) AS phi
       FROM p{k - 1})"""
     pacf_cols = ",\n           ".join(
-        f"p{k}.phi[{k}]" for k in range(1, _PACF_K + 1)
+        f"p{k}.phi[{k}]" for k in range(1, _ACF_LAGS + 1)
     )
     joins = " ".join(
         f"JOIN p{k} ON p{k}.event_type = p1.event_type"
-        for k in range(2, _PACF_K + 1)
+        for k in range(2, _ACF_LAGS + 1)
     )
     return sql + f"""
     , wide AS (
@@ -2191,7 +2169,7 @@ def _pacf_oracle() -> str:
       FROM p1 {joins})
     SELECT event_type, CAST(u.i AS BIGINT) AS lag,
            CAST(pacf[CAST(u.i AS INT)] AS DOUBLE) AS pacf
-    FROM wide, unnest(range(1, {_PACF_K + 1})) AS u(i)
+    FROM wide, unnest(range(1, {_ACF_LAGS + 1})) AS u(i)
     """
 
 
@@ -2206,57 +2184,12 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence (the recursive-fold determinism argument with per-step
     re-rounding).
 
-    Scale shape: the acf vector comes from the same grid moments as
-    time_acf (one fact shuffle, grid-sized joins); the entire
+    Scale shape: the acf vector is time_acf's own (``_acf_r``: one fact
+    shuffle, grid-sized joins); the entire
     recursion is ONE in-row fold over a 7-element array per type —
     nothing after the moment agg scales with data."""
-    e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    grid = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(cents).cast("bigint").alias("cents"))
-    lagtab = spark.range(1, _PACF_K + 1).select(
-        F.col("id").cast("int").alias("lag")
-    )
-    a = grid.alias("a")
-    b = grid.select(
-        F.col("event_type").alias("bt"),
-        F.col("day").alias("bday"),
-        F.col("cents").alias("y"),
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(lagtab))
-        .join(
-            b,
-            (F.col("bt") == F.col("a.event_type"))
-            & (F.col("bday") == F.expr("date_add(a.day, lag)")),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            "lag",
-            F.col("a.cents").alias("x"),
-            "y",
-        )
-    )
-    m = pairs.groupBy("event_type", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    racf = F.when(
-        (vx > 0) & (vy > 0),
-        round_dp(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / F.sqrt(vx.cast("double") * vy.cast("double")),
-        ),
-    ).otherwise(F.lit(0.0))
     rv = (
-        m.select("event_type", "lag", racf.alias("r"))
+        _acf_r(spark, sf_dir)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("nlags"),
@@ -2264,7 +2197,7 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(array_sort(collect_list(struct(lag, r))), s -> s.r)"
             ).alias("r"),
         )
-        .filter(F.col("nlags") == _PACF_K)
+        .filter(F.col("nlags") == _ACF_LAGS)
     )
     # Durbin-Levinson expressions are generated (balanced by
     # construction): dots are ascending-i left-to-right folds, the new
@@ -2294,7 +2227,7 @@ def time_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fold: Spark's sequence(2, 1) is DESCENDING [2, 1] (the r8
     # short-doc gotcha class) — it is the base case directly.
     pacf_k = (
-        f"transform(sequence(1, {_PACF_K}), kk -> "
+        f"transform(sequence(1, {_ACF_LAGS}), kk -> "
         f"IF(kk = 1, {r1}, "
         f"element_at({_fold('kk')}, kk)))"
     )

@@ -26,7 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.stable import hex_int, py_tokens, round_dp, tokens
+from ..functions.stable import (
+    hex_int,
+    ols_slope,
+    ols_slope_sql,
+    py_tokens,
+    round_dp,
+    tokens,
+)
 from ..registry import query
 from ..runtime import checkpoint, shared
 from ..sources.tables import load
@@ -3609,7 +3616,7 @@ def text_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounded 9dp at birth; the four OLS moment sums fold the <=|vocab|
     # cells in ascending-rank order (order-canonical float folds), and
     # the slope is one arithmetic expression of those four doubles.
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents),
     freq AS (
@@ -3624,14 +3631,13 @@ def text_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM freq),
     m AS (
       SELECT lang, COUNT(*) AS n,
-             list_aggregate(list(x ORDER BY r), 'sum') AS sx,
-             list_aggregate(list(y ORDER BY r), 'sum') AS sy,
-             list_aggregate(list(x * y ORDER BY r), 'sum') AS sxy,
-             list_aggregate(list(x * x ORDER BY r), 'sum') AS sxx
+             list_aggregate(list(x ORDER BY r), 'sum') AS s_x,
+             list_aggregate(list(y ORDER BY r), 'sum') AS s_y,
+             list_aggregate(list(x * y ORDER BY r), 'sum') AS s_x_y,
+             list_aggregate(list(x * x ORDER BY r), 'sum') AS s_x_x
       FROM ranked GROUP BY lang)
     SELECT lang, CAST(n AS BIGINT) AS n_vocab,
-           CAST(ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9)
-                AS DOUBLE) AS zipf_slope
+           CAST(ROUND({ols_slope_sql("x", "y")}, 9) AS DOUBLE) AS zipf_slope
     FROM m
     """,
 )
@@ -3670,20 +3676,15 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = ranked.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n"),
-        fold(F.col("x")).alias("sx"),
-        fold(F.col("y")).alias("sy"),
-        fold(F.col("x") * F.col("y")).alias("sxy"),
-        fold(F.col("x") * F.col("x")).alias("sxx"),
+        fold(F.col("x")).alias("s_x"),
+        fold(F.col("y")).alias("s_y"),
+        fold(F.col("x") * F.col("y")).alias("s_x_y"),
+        fold(F.col("x") * F.col("x")).alias("s_x_x"),
     )
     return m.select(
         "lang",
         F.col("n").cast("bigint").alias("n_vocab"),
-        round_dp(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
-        )
-        .cast("double")
-        .alias("zipf_slope"),
+        round_dp(ols_slope("x", "y")).cast("double").alias("zipf_slope"),
     )
 
 

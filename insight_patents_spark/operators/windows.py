@@ -17,7 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.stable import round_dp, tokens
+from ..functions.stable import (
+    comoment,
+    comoment_sql,
+    pearson,
+    pearson_sql,
+    round_dp,
+    tokens,
+)
 from ..registry import query
 from ..runtime import checkpoint
 from ..sources.tables import load
@@ -552,22 +559,22 @@ def win_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_anomaly_zscore",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT event_id, event_type, ts,
                       CAST(round(value*100,0) AS BIGINT) AS c FROM events),
     w AS (
       SELECT event_id, event_type, c,
              count(c) OVER win AS n,
-             sum(c) OVER win AS s1,
-             sum(c*c) OVER win AS s2
+             sum(c) OVER win AS s_c,
+             sum(c*c) OVER win AS s_c_c
       FROM e
       WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id
                      ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
     )
     SELECT event_id, event_type, c/100.0 AS value,
-           round((c - s1/n) / sqrt((s2 - s1*s1/n) / (n-1)), 9) AS z
-    FROM w WHERE n >= 10 AND n*s2 - s1*s1 > 0
-      AND abs(round((c - s1/n) / sqrt((s2 - s1*s1/n) / (n-1)), 9)) > 3.0
+           round((c - s_c/n) / sqrt((s_c_c - s_c*s_c/n) / (n-1)), 9) AS z
+    FROM w WHERE n >= 10 AND {comoment_sql("c", "c")} > 0
+      AND abs(round((c - s_c/n) / sqrt((s_c_c - s_c*s_c/n) / (n-1)), 9)) > 3.0
     """,
 )
 def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -595,17 +602,19 @@ def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("ts", "event_id").rowsBetween(-20, -1)
     s = (
         e.withColumn("n", F.count("c").over(w))
-        .withColumn("s1", F.sum("c").over(w))
-        .withColumn("s2", F.sum("c2").over(w))
+        .withColumn("s_c", F.sum("c").over(w))
+        .withColumn("s_c_c", F.sum("c2").over(w))
         .filter(F.col("n") >= 10)
         # zero-variance guard (EXACT integer test — a flat 20-event frame
         # would make sqrt(var)=0 and throw DIVIDE_BY_ZERO under ANSI mode
         # while the oracle silently NULLs; win_rolling_corr guards the
         # same way)
-        .filter(F.col("n") * F.col("s2") - F.col("s1") * F.col("s1") > 0)
+        .filter(comoment("c", "c") > 0)
     )
-    mean = F.col("s1") / F.col("n")
-    var = (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")) / (F.col("n") - 1)
+    mean = F.col("s_c") / F.col("n")
+    var = (
+        F.col("s_c_c") - F.col("s_c") * F.col("s_c") / F.col("n")
+    ) / (F.col("n") - 1)
     s = s.withColumn("z", round_dp((F.col("c") - mean) / F.sqrt(var)))
     return s.filter(F.abs(F.col("z")) > 3.0).select(
         "event_id", "event_type", (F.col("c") / 100.0).alias("value"), "z"
@@ -614,7 +623,7 @@ def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_rolling_corr",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT event_id, event_type, ts,
                       CAST(round(value*100,0) AS BIGINT) AS x FROM events),
     l AS (SELECT event_id, event_type, ts, x,
@@ -623,19 +632,16 @@ def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     w AS (
       SELECT event_id, event_type, x, y,
              count(*) OVER win AS n,
-             sum(x) OVER win AS sx, sum(y) OVER win AS sy,
-             sum(x*x) OVER win AS sxx, sum(y*y) OVER win AS syy,
-             sum(x*y) OVER win AS sxy
+             sum(x) OVER win AS s_x, sum(y) OVER win AS s_y,
+             sum(x*x) OVER win AS s_x_x, sum(y*y) OVER win AS s_y_y,
+             sum(x*y) OVER win AS s_x_y
       FROM l WHERE y IS NOT NULL
       WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id
                      ROWS BETWEEN 29 PRECEDING AND CURRENT ROW)
     )
-    SELECT event_id, event_type,
-           round((n*sxy - sx*sy) /
-                 sqrt(CAST(n*sxx - sx*sx AS DOUBLE) * CAST(n*syy - sy*sy AS DOUBLE)),
-                 9) AS autocorr
+    SELECT event_id, event_type, round({pearson_sql("x", "y")}, 9) AS autocorr
     FROM w
-    WHERE n >= 30 AND (n*sxx - sx*sx) > 0 AND (n*syy - sy*sy) > 0
+    WHERE n >= 30 AND {comoment_sql("x", "x")} > 0 AND {comoment_sql("y", "y")} > 0
     """,
 )
 def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,22 +668,16 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("ts", "event_id").rowsBetween(-29, 0)
     s = (
         l.withColumn("n", F.count("x").over(w))
-        .withColumn("sx", F.sum("x").over(w))
-        .withColumn("sy", F.sum("y").over(w))
-        .withColumn("sxx", F.sum("xx").over(w))
-        .withColumn("syy", F.sum("yy").over(w))
-        .withColumn("sxy", F.sum("xy").over(w))
+        .withColumn("s_x", F.sum("x").over(w))
+        .withColumn("s_y", F.sum("y").over(w))
+        .withColumn("s_x_x", F.sum("xx").over(w))
+        .withColumn("s_y_y", F.sum("yy").over(w))
+        .withColumn("s_x_y", F.sum("xy").over(w))
         .filter(F.col("n") >= 30)
     )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     return (
-        s.filter((vx > 0) & (vy > 0))
-        .withColumn(
-            "autocorr",
-            round_dp(num / F.sqrt(vx.cast("double") * vy.cast("double"))),
-        )
+        s.filter((comoment("x", "x") > 0) & (comoment("y", "y") > 0))
+        .withColumn("autocorr", round_dp(pearson("x", "y")))
         .select("event_id", "event_type", "autocorr")
     )
 
@@ -1940,24 +1940,24 @@ _BOLL_DAYS = 20  # Bollinger frame length (trading-day convention)
     fr AS (
       SELECT event_type, day, x,
              COUNT(*) OVER w AS n,
-             SUM(CAST(x AS HUGEINT)) OVER w AS sx,
-             SUM(CAST(x AS HUGEINT) * x) OVER w AS sx2
+             SUM(CAST(x AS HUGEINT)) OVER w AS s_x,
+             SUM(CAST(x AS HUGEINT) * x) OVER w AS s_x_x
       FROM grid
       WINDOW w AS (PARTITION BY event_type ORDER BY day
                    ROWS BETWEEN {_BOLL_DAYS - 1} PRECEDING AND CURRENT ROW)),
     v AS (
-      SELECT event_type, day, x, n, sx,
-             n * sx2 - sx * sx AS num,
-             ROUND(SQRT(CAST(n * sx2 - sx * sx AS DOUBLE)) / (n * 100.0), 9)
+      SELECT event_type, day, x, n, s_x,
+             {comoment_sql("x", "x")} AS num,
+             ROUND(SQRT(CAST({comoment_sql("x", "x")} AS DOUBLE)) / (n * 100.0), 9)
                AS sd,
-             ROUND(CAST(sx AS DOUBLE) / (n * 100.0), 9) AS mid
+             ROUND(CAST(s_x AS DOUBLE) / (n * 100.0), 9) AS mid
       FROM fr WHERE n = {_BOLL_DAYS})
     SELECT event_type, CAST(day AS VARCHAR) AS day, mid,
            CAST(sd AS DOUBLE) AS sd,
            CAST(ROUND(mid + 2 * sd, 9) AS DOUBLE) AS upper_band,
            CAST(ROUND(mid - 2 * sd, 9) AS DOUBLE) AS lower_band,
            CAST(CASE WHEN num = 0 THEN 0.5
-                ELSE ROUND(CAST(x * n - sx AS DOUBLE) / (n * 100.0)
+                ELSE ROUND(CAST(x * n - s_x AS DOUBLE) / (n * 100.0)
                            / (4 * sd) + 0.5, 9) END AS DOUBLE) AS pct_b
     FROM v
     """,
@@ -1992,25 +1992,25 @@ def win_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "x",
         F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(xd).over(w).alias("sx"),
-        F.sum(xd * F.col("x")).over(w).alias("sx2"),
+        F.sum(xd).over(w).alias("s_x"),
+        F.sum(xd * F.col("x")).over(w).alias("s_x_x"),
     ).filter(F.col("n") == _BOLL_DAYS)
-    num = F.col("n") * F.col("sx2") - F.col("sx") * F.col("sx")
+    num = comoment("x", "x")
     v = fr.select(
         "event_type",
         "day",
         "x",
         "n",
-        "sx",
+        "s_x",
         num.alias("num"),
         round_dp(F.sqrt(num.cast("double")) / (F.col("n") * 100.0)).alias("sd"),
-        round_dp(F.col("sx").cast("double") / (F.col("n") * 100.0)).alias(
+        round_dp(F.col("s_x").cast("double") / (F.col("n") * 100.0)).alias(
             "mid"
         ),
     )
     pct_b = F.when(F.col("num") == 0, F.lit(0.5)).otherwise(
         round_dp(
-            (F.col("x") * F.col("n") - F.col("sx")).cast("double")
+            (F.col("x") * F.col("n") - F.col("s_x")).cast("double")
             / (F.col("n") * 100.0)
             / (4 * F.col("sd"))
             + 0.5,

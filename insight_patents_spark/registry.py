@@ -101,12 +101,12 @@ def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
 #          STATE.md.
 #   r9:    50 of the 95 never-checked after r8 (complement of the union
 #          of CORRECTNESS_r01-r08 keys, recomputed this round): the 18
-#          _POST_PREFIX_HEAD entries that were positioned to lead this
+#          post-prefix entries that were positioned to lead this
 #          gate (new-in-r8, never externally checked), then the 18-op
 #          block the r8 late wave displaced (fn_* battery + the vec/dedup
 #          ANN family), then 14 more cross-family backlog entries.
-#          New-in-r9 queries registered in _POST_PREFIX_HEAD — see git
-#          history for the full r9 list.
+#          New-in-r9 queries were registered right after the prefix —
+#          see git history for the full r9 list.
 #   r10:   the set below CLOSES THE LEDGER: exactly the 50 operators with
 #          no green row in any CORRECTNESS_r01–r09 record (recomputed this
 #          round as registry − union of record keys; matches STATE.md's
@@ -161,10 +161,6 @@ _SHOWCASE_50 = (
 
 # The r12 gate's 50-name prefix was retired with the r13 rotation above
 # (git history has the list; CORRECTNESS_r12.json is 50/50 green on it).
-# _POST_PREFIX_HEAD is empty this round because every changed-in-r13
-# query sits INSIDE the r13 prefix (placed last, warm-session rule) —
-# the r14 rotation rebuilds both from that round's change set.
-_POST_PREFIX_HEAD: tuple[str, ...] = ()
 
 
 def load_all() -> dict[str, QuerySpec]:
@@ -172,11 +168,9 @@ def load_all() -> dict[str, QuerySpec]:
     showcase-ordered (see _SHOWCASE_50)."""
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
-    missing = [
-        n for n in _SHOWCASE_50 + _POST_PREFIX_HEAD if n not in _REGISTRY
-    ]
+    missing = [n for n in _SHOWCASE_50 if n not in _REGISTRY]
     assert not missing, f"showcase names not registered: {missing}"
-    ordered = {n: _REGISTRY[n] for n in _SHOWCASE_50 + _POST_PREFIX_HEAD}
+    ordered = {n: _REGISTRY[n] for n in _SHOWCASE_50}
     ordered.update((n, s) for n, s in _REGISTRY.items() if n not in ordered)
     return ordered
 

@@ -42,11 +42,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CODEGEN_CACHE_ENTRIES = 1024
 
 
+def _quarter_ram() -> str:
+    """A quarter of physical RAM, in MiB, as a Spark memory string."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 4 // 2**20}m"
+
+
 def session_confs() -> dict[str, str]:
     """The confs of every session the engine builds (``get_spark``,
-    ``tools/cpu_probe.py``), master included."""
+    ``tools/cpu_probe.py``), master included. Cores and driver heap come
+    from ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``, else from the
+    machine: every core this process may run on, and a quarter of
+    physical RAM (the driver of ``local[*]`` also hosts the executors)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     return {
-        "spark.master": f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        "spark.master": f"local[{cpus}]",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.shuffle.partitions": "64",
@@ -55,7 +65,8 @@ def session_confs() -> dict[str, str]:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _quarter_ram(),
     }
 
 

@@ -17,7 +17,6 @@ SF_DIR = os.environ.get("IPS_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("ips-tests")
     yield s
     s.stop()

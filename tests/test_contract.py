@@ -148,12 +148,11 @@ def test_unpartitioned_windows_are_the_disclosed_set():
         ("operators/aggregates.py", "agg_ks_test"),  # occupied cent grid
         ("operators/aggregates.py", "agg_mann_whitney"),  # cent grid
         ("operators/aggregates.py", "agg_pareto"),  # 10 deciles
-        ("operators/ml.py", "ml_pr_curve"),  # <=101 score bins
-        ("operators/ml.py", "ml_lift_gains"),  # <=101 score bins
-        ("operators/ml.py", "ml_average_precision"),  # <=101 score bins
-        ("operators/ml.py", "ml_ks_separation"),  # <=101 score bins
-        ("operators/ml.py", "ml_auc_delong_ci"),  # <=101 score bins
-        ("operators/ml.py", "ml_threshold_opt"),  # <=101 score bins
+        # <=101 score bins (_ttr_cum serves ml_pr_curve, ml_lift_gains,
+        # ml_average_precision and ml_threshold_opt):
+        ("operators/ml.py", "_ttr_cum"),
+        ("operators/ml.py", "ml_ks_separation"),
+        ("operators/ml.py", "ml_auc_delong_ci"),
         ("operators/ml.py", "ml_calibration_isotonic"),  # PAVA bin grid
         ("operators/sequences.py", "agg_survival_curve"),  # lifetime grid
         ("operators/sequences.py", "agg_survival_km"),  # lifetime grid
@@ -227,3 +226,49 @@ def test_double_rounding_goes_through_round_dp():
         f"F.round(x, k >= 1) outside stable.round_dp: {sorted(found - allowed)}; "
         f"stale _SPARK_ROUND_SITES entries: {sorted(allowed - found)}"
     )
+
+
+# A hand-written co-moment n·Σab − Σa·Σb: a count-named term times a
+# sum-named term minus the product of two sum-named terms, as SQL text
+# (``n * s_x_y - s_x * s_y``) or F.col terms. Lookahead, so overlapping
+# candidates are all tried.
+_TERM = r'(?:F\.col\(\s*"([A-Za-z_][\w{}]*)"\s*\)|\b([A-Za-z_][\w{}]*))'
+_COMOMENT = re.compile(
+    rf"(?={_TERM}\s*\*\s*{_TERM}\s*-\s*{_TERM}\s*\*\s*{_TERM})"
+)
+
+
+def test_comoments_go_through_stable():
+    """Covariances, Pearson r and OLS slopes form n·Σab − Σa·Σb exactly,
+    before any cast to double, in ONE place: stable.comoment and its SQL
+    twin. A copy written by hand anywhere else in the engine fails here."""
+    pkg = REPO / "insight_patents_spark"
+    found = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = str(p.relative_to(pkg))
+        if rel == "functions/stable.py":
+            continue
+        src = p.read_text()
+        for m in _COMOMENT.finditer(src):
+            n, *sums = (m.group(i) or m.group(i + 1) for i in (1, 3, 5, 7))
+            if n.startswith("n") and all(t.startswith("s") for t in sums):
+                found.append(f"{rel}:{src.count(chr(10), 0, m.start()) + 1}")
+    assert not found, f"co-moments outside stable.comoment: {found}"
+
+
+def test_session_defaults_fit_the_machine(monkeypatch):
+    """Without SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM the engine's
+    session takes the cores this process may run on and at most a quarter
+    of physical RAM for the driver heap, which in local mode also holds
+    the executors' work."""
+    import os
+
+    from insight_patents_spark.session import session_confs
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    confs = session_confs()
+    assert confs["spark.master"] == f"local[{len(os.sched_getaffinity(0))}]"
+    mem = confs["spark.driver.memory"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert mem.endswith("m") and 0 < int(mem[:-1]) <= ram_mb // 4, mem

@@ -983,13 +983,22 @@ def test_pr_curve_aggs_before_window(spark, sf_dir):
 
 def test_acf_fact_shuffles_once_then_grid_only(spark, sf_dir):
     # The events fact is aggregated to the (type, day) grid first; the
-    # lag self-join and moment agg run on grids — no CartesianProduct,
-    # and the join keys on event_type/day equality.
-    from insight_patents_spark.operators.sequences import time_acf
+    # lag self-join and moment agg run on grids. The one nested-loop join
+    # crosses the grid with the broadcast lag range (1.._ACF_LAGS); the
+    # self-join keys on event_type/day equality. time_pacf reads the same
+    # acf builder.
+    from insight_patents_spark.operators.sequences import (
+        _ACF_LAGS,
+        time_acf,
+        time_pacf,
+    )
 
-    plan = formatted_plan(time_acf(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for fn in (time_acf, time_pacf):
+        plan = formatted_plan(fn(spark, sf_dir))
+        assert "CartesianProduct" not in plan
+        assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
+        assert len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", plan, re.M)) == 1
+        assert f"Range (1, {_ACF_LAGS + 1}, step=1" in plan
 
 
 def test_benford_single_fact_agg(spark, sf_dir):

@@ -207,6 +207,105 @@ def test_round_dp_rounds_like_duckdb(spark):
     assert want[0][-1] == 439.392705528
 
 
+# (g, x, y) groups for the co-moment kernel: mixed signs; a flat y
+# (zero variance, so pearson is 0.0); and a large-mean, small-spread
+# group whose sums are big but whose co-moments are small, where casting
+# before the subtraction loses every significant digit. Its mean is
+# 5e7 for bigint sums (n·Σxy passes 2^53) and 3.1e9 for the wide sums
+# (each x·y, and so Σx·y, passes 2^63).
+_COMOMENT_MEAN = {"narrow": 50_000_000, "wide": 3_100_000_000}
+
+
+def _comoment_rows(mean):
+    mixed = [(-5, 3), (2, -7), (4, 4), (-1, 0), (9, -2)]
+    flat = [(-3, 6), (8, 6), (1, 6)]
+    big = [(mean + dx, mean - 1_000 + dy) for dx, dy in
+           [(0, 2), (7, -5), (-3, 13), (11, 1)]]
+    return [(g, x, y) for g, grp in enumerate((mixed, flat, big)) for x, y in grp]
+
+
+def _comoment_replay(rows):
+    """Exact-integer reference: (g, comoment(x, y), cov_samp(x, y),
+    cov_samp(x, x), ols_slope(x, y), pearson(x, y)) per group."""
+    import math
+
+    out = []
+    for g in sorted({r[0] for r in rows}):
+        xs = [x for gg, x, _ in rows if gg == g]
+        ys = [y for gg, _, y in rows if gg == g]
+        n = len(xs)
+
+        def cm(a, b):
+            return n * sum(p * q for p, q in zip(a, b)) - sum(a) * sum(b)
+
+        cxy, cxx, cyy = cm(xs, ys), cm(xs, xs), cm(ys, ys)
+        r = float(cxy) / math.sqrt(float(cxx) * float(cyy)) if cxx > 0 and cyy > 0 else 0.0
+        out.append((
+            g, cxy, float(cxy) / (float(n) * (n - 1)),
+            float(cxx) / (float(n) * (n - 1)), float(cxy) / float(cxx), r,
+        ))
+    return out
+
+
+@pytest.mark.parametrize("width", ["narrow", "wide"])
+def test_comoment_kernel_equals_sql_twin(spark, width):
+    """stable.moment_sums + comoment/cov_samp/ols_slope/pearson and their
+    DuckDB twins agree with == per group, and both equal an exact-integer
+    Python replay. The large-mean group fails any kernel that casts to
+    double before forming n·Σxy − Σx·Σy."""
+    import duckdb
+
+    from insight_patents_spark.functions.stable import (
+        comoment,
+        comoment_sql,
+        cov_samp,
+        cov_samp_sql,
+        moment_sums,
+        moment_sums_sql,
+        ols_slope,
+        ols_slope_sql,
+        pearson,
+        pearson_sql,
+    )
+
+    wide = width == "wide"
+    rows = _comoment_rows(_COMOMENT_MEAN[width])
+    if wide:
+        assert sum(x * y for g, x, y in rows if g == 2) > 2**63
+    got = sorted(
+        (r[0], int(r[1]), *r[2:])
+        for r in spark.createDataFrame(rows, "g long, x long, y long")
+        .groupBy("g")
+        .agg(*moment_sums(["x", "y"], wide=wide))
+        .select(
+            "g",
+            comoment("x", "y"),
+            cov_samp("x", "y"),
+            cov_samp("x", "x"),
+            ols_slope("x", "y"),
+            pearson("x", "y"),
+        )
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g BIGINT, x BIGINT, y BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    want = sorted(
+        (r[0], int(r[1]), *r[2:])
+        for r in con.execute(
+            f"""SELECT g, {comoment_sql("x", "y")}, {cov_samp_sql("x", "y")},
+                   {cov_samp_sql("x", "x")}, {ols_slope_sql("x", "y")},
+                   {pearson_sql("x", "y")}
+            FROM (SELECT g, {moment_sums_sql(["x", "y"], wide=wide)}
+                  FROM t GROUP BY g)"""
+        ).fetchall()
+    )
+    con.close()
+    assert got == want
+    assert got == _comoment_replay(rows)
+    assert got[1][-1] == 0.0
+
+
 _docs = st.lists(
     st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=12).map(
         lambda toks: " ".join(toks)
@@ -8148,7 +8247,7 @@ def test_pacf_matches_python_durbin_levinson(spark, sf_dir):
     lag-1 ACF by definition."""
     from collections import defaultdict
 
-    from insight_patents_spark.operators.sequences import _PACF_K, time_pacf
+    from insight_patents_spark.operators.sequences import _ACF_LAGS, time_pacf
     from insight_patents_spark.operators.sequences import time_acf
 
     acf = defaultdict(dict)
@@ -8158,13 +8257,13 @@ def test_pacf_matches_python_durbin_levinson(spark, sf_dir):
     for r in time_pacf(spark, sf_dir).collect():
         rows[r.event_type][r.lag] = r.pacf
     for typ, rmap in acf.items():
-        if len(rmap) < _PACF_K:
+        if len(rmap) < _ACF_LAGS:
             assert typ not in rows
             continue
-        rv = [rmap[k] for k in range(1, _PACF_K + 1)]
+        rv = [rmap[k] for k in range(1, _ACF_LAGS + 1)]
         phi = [round(rv[0], 9)]
         want = {1: round(rv[0], 9)}
-        for k in range(2, _PACF_K + 1):
+        for k in range(2, _ACF_LAGS + 1):
             num = rv[k - 1] - sum(
                 phi[i - 1] * rv[k - i - 1] for i in range(1, k)
             )
